@@ -2506,14 +2506,13 @@ def _parquet_col_minmax(path: str, col: str):
                 + td.microseconds
             )
         return x
-    lo, hi = min(map(_as_int, los), default=None), max(
-        map(_as_int, his), default=None
-    )
-    if lo is None or hi is None or any(
-        _as_int(x) is None for x in los + his
-    ):
+
+    # convert first: min/max over raw statistics raises TypeError on
+    # types _as_int rejects (floats mixed with None, strings)
+    los, his = [_as_int(x) for x in los], [_as_int(x) for x in his]
+    if not los or any(x is None for x in los + his):
         return None
-    return lo, hi
+    return min(los), max(his)
 
 
 def _det_range_shuffle(df, n: int, key, lo: int, hi: int):
@@ -2523,7 +2522,9 @@ def _det_range_shuffle(df, n: int, key, lo: int, hi: int):
     (distinct Murmur3 pmod class per bucket). Integer arithmetic
     throughout — exact, ANSI-safe for any epoch-micros span."""
     span = hi - lo + 1
-    b = F.floor(((key - F.lit(lo)) * F.lit(n)) / F.lit(span)).cast("int")
+    b = F.call_function(
+        "div", (key - F.lit(lo)) * F.lit(n), F.lit(span)
+    ).cast("int")
     b = F.least(F.lit(n - 1), F.greatest(F.lit(0), b))
     probes = _partition_probe_values(n)
     probe = F.element_at(

@@ -78,6 +78,13 @@ def register_fourmc(spark: SparkSession) -> None:
        runs other Python data sources whose pushdown you need off,
        re-set the conf after registration.
 
+    Each source is registered as a subclass that carries the session's
+    ``defaultParallelism`` (the total task slots, as read now), which
+    scan planning packs small files against — about one partition per
+    slot, the way Spark's own file sources size ``FilePartition``. The
+    planner runs in a Python process with no session, so the value is
+    taken here; call again after the cluster grows or shrinks.
+
     Also enables Python-datasource filter pushdown on the *passed* session:
     FourMcDataSourceReader / FourMcProtoReader implement pushFilters(),
     which Spark 4.x rejects at reader init unless
@@ -96,7 +103,19 @@ def register_fourmc(spark: SparkSession) -> None:
         # without the flag) doesn't gate pushFilters() either
         pass
 
+    try:
+        cores = spark.sparkContext.defaultParallelism
+    except Exception:
+        # Spark Connect has no SparkContext: the planner falls back to
+        # the CPUs it may run on
+        cores = None
     for ds in (FourMcDataSource, FourMcProtoDataSource):
+        # same name and module: cloudpickle ships this subclass (and its
+        # parallelism) by value to the planning process
+        ds = type(ds.__name__, (ds,), {
+            "parallelism": cores, "__module__": ds.__module__,
+            "__doc__": ds.__doc__,
+        })
         try:
             spark.dataSource.register(ds)
         except Exception:

@@ -9,9 +9,21 @@ formats (SURVEY.md §2.1 S1-S8 / K1-K3):
   ``maxPartitionBytes`` are aligned to block boundaries with the
   reference's arithmetic (`FourMcBlockIndex.java:142-173`).  Planning cost
   is O(files), never O(bytes) — the 100 TB posture.
-* **scan** (executors): each partition streams its block range directly
-  (blocks are self-delimiting), verifies xxh32 per block, decompresses
-  with native lz4/zstd, splits lines with Hadoop LineRecordReader
+* **packing** (driver): the kept slices are then packed into about one
+  partition per core, so small files share a task instead of each
+  paying a Python worker's fixed per-task cost. Target compressed bytes
+  per partition = ``min(maxpartitionbytes, max(4 MiB, ceil(kept bytes /
+  cores)))``, where cores is the session's ``defaultParallelism`` when
+  the source was registered with :func:`fourmc_spark.session.register_fourmc`
+  (else the CPUs usable by the planning process). Consecutive slices in
+  plan order share a partition, so rows keep file and block order, and
+  a partition never passes ``maxpartitionbytes`` or
+  ``maxblockspersplit`` — never larger than a single-file split. O(slices),
+  no option: packing only regroups slices, and the streaming reader
+  plans each micro-batch with the same planner (see :func:`pack_slices`).
+* **scan** (executors): each partition streams its slices' block ranges
+  directly (blocks are self-delimiting), verifies xxh32 per block,
+  decompresses with native lz4/zstd, splits lines with Hadoop LineRecordReader
   ownership semantics, and yields Arrow record batches
   (zero-copy into Spark's columnar pipeline).
 * **sink**: per-task writers produce independent .4mc/.4mz files
@@ -21,7 +33,7 @@ formats (SURVEY.md §2.1 S1-S8 / K1-K3):
 
 Usage::
 
-    spark.dataSource.register(FourMcDataSource)
+    register_fourmc(spark)   # fourmc_spark.session; carries the slot count
     df = spark.read.format("fourmc").load("/data/logs")        # offset, value
     df.write.format("fourmc").option("codec", "zstd") \
         .option("level", "medium").save("/data/out")
@@ -33,7 +45,7 @@ import json as _json
 import os
 import uuid
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -96,23 +108,105 @@ def _list_files(path: str) -> list[str]:
     return out
 
 
-@dataclass
-class FourMcInputPartition(InputPartition):
-    """One block-aligned slice of one file. Carries no block list — the
-    reader streams self-delimiting blocks, so partition metadata stays O(1)
-    regardless of file size."""
+class Slice(NamedTuple):
+    """One block-aligned byte range of one file. Carries no block list —
+    the reader streams self-delimiting blocks, so slice metadata stays
+    O(1) regardless of file size."""
 
     path: str
     codec: str
     start: int
     end: int
-    # True for the partition holding the file's FIRST data block — the one
+    # True for the slice holding the file's FIRST data block — the one
     # that owns the file's first line (drives header skip: skipfirstline)
     head: bool = False
 
 
+@dataclass
+class FourMcInputPartition(InputPartition):
+    """One task's work: one or more slices, possibly of different files.
+    The first slice is held inline (``path`` .. ``head``, the fields of
+    :class:`Slice`); ``more`` holds the slices packed after it and is
+    empty when nothing was packed. ``path == ""`` is the no-op partition
+    an empty plan still needs."""
+
+    path: str
+    codec: str
+    start: int
+    end: int
+    head: bool = False
+    more: tuple = ()
+
+    def slices(self) -> tuple[Slice, ...]:
+        if not self.path:
+            return ()
+        first = Slice(self.path, self.codec, self.start, self.end, self.head)
+        return (first, *self.more)
+
+
+def iter_slices(parts) -> Iterator[Slice]:
+    """Every slice of every planned partition, in partition order."""
+    for p in parts:
+        yield from p.slices()
+
+
+def _usable_cores() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platforms without CPU affinity
+        return os.cpu_count() or 1
+
+
+def pack_slices(
+    sized: list[tuple[Slice, int]],
+    max_bytes: int,
+    max_blocks: int,
+    cores: int | None = None,
+) -> list[FourMcInputPartition]:
+    """Pack ``(slice, block count)`` pairs into about one partition per
+    core, so small files share a task instead of each paying the fixed
+    per-task cost of a Python worker.
+
+    The target is ``min(max_bytes, max(one block, ceil(total / cores)))``
+    compressed bytes per partition (the shape of Spark's own
+    ``FilePartition.maxSplitBytes``, with the 4 MiB block as the open
+    cost), which splits the kept bytes into ``ceil(total / target)``
+    even shares. One pass in plan order puts each slice with the share
+    holding its midpoint, and starts a new partition at a share boundary
+    or where the slice would pass ``max_bytes`` or ``max_blocks`` — so
+    partitions are runs of consecutive slices (rows keep file and block
+    order), a packed partition is never larger than a single-file split
+    could already be, and packing costs O(slices)."""
+    from fourmc_spark.format.core import MAX_BLOCK_SIZE
+
+    if not sized:
+        return [FourMcInputPartition("", "lz4", 0, 0)]
+    total = sum(s.end - s.start for s, _ in sized)
+    per_core = -(-total // (cores or _usable_cores()))
+    shares = -(-total // min(max(max_bytes, 1), max(MAX_BLOCK_SIZE, per_core)))
+    groups: list[list[Slice]] = []
+    done = share = load = blocks = 0
+    for s, nb in sized:
+        size = s.end - s.start
+        mid_share = (2 * done + size) * shares // (2 * total)
+        done += size
+        if (not groups or mid_share != share or load + size > max_bytes
+                or blocks + nb > max_blocks):
+            groups.append([])
+            share, load, blocks = mid_share, 0, 0
+        groups[-1].append(s)
+        load += size
+        blocks += nb
+    return [FourMcInputPartition(*g[0], more=tuple(g[1:])) for g in groups]
+
+
 class FourMcDataSource(DataSource):
     """name: ``fourmc``; schema: ``offset bigint, value string``."""
+
+    # the session's default parallelism, the cores split packing aims
+    # at; register_fourmc registers a subclass that sets it (None: the
+    # planner falls back to the CPUs it may run on)
+    parallelism: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -157,7 +251,7 @@ class FourMcDataSource(DataSource):
         return StructType(fields)
 
     def reader(self, schema: StructType) -> "FourMcDataSourceReader":
-        return FourMcDataSourceReader(self.options, schema)
+        return FourMcDataSourceReader(self.options, schema, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> "FourMcDataSourceWriter":
         return FourMcDataSourceWriter(self.options, schema, overwrite)
@@ -165,7 +259,7 @@ class FourMcDataSource(DataSource):
     def streamReader(self, schema: StructType):
         from fourmc_spark.sources.stream import FourMcStreamReader
 
-        return FourMcStreamReader(self.options, schema)
+        return FourMcStreamReader(self.options, schema, self.parallelism)
 
     def streamWriter(self, schema: StructType, overwrite: bool):
         from fourmc_spark.sources.stream import FourMcStreamWriter
@@ -174,7 +268,10 @@ class FourMcDataSource(DataSource):
 
 
 class FourMcDataSourceReader(DataSourceReader):
-    def __init__(self, options, schema: StructType) -> None:
+    def __init__(
+        self, options, schema: StructType, cores: int | None = None
+    ) -> None:
+        self.cores = cores
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fourmc source requires a path")
@@ -476,11 +573,6 @@ class FourMcDataSourceReader(DataSourceReader):
         return filters
 
     def partitions(self) -> list[FourMcInputPartition]:
-        # driver-side planning: one footer read per file (S1/X6)
-        from fourmc_spark.format import core
-        from fourmc_spark.format.reader import scan_file_info
-
-        parts: list[FourMcInputPartition] = []
         # provably-unsatisfiable conjunctions plan NOTHING: point sets
         # intersected to empty (doc_id = 1 AND doc_id = 2, disjoint IN
         # lists) or a column required both null and not-null. Spark
@@ -488,7 +580,28 @@ class FourMcDataSourceReader(DataSourceReader):
         unsat = any(not s for s in self._point.values()) or any(
             len(r) > 1 for r in self._nullreq.values()
         )
-        paths = [] if unsat else _list_files(self.path)
+        return self.plan([] if unsat else _list_files(self.path))
+
+    def plan(self, paths: list[str]) -> list[FourMcInputPartition]:
+        """Slices of ``paths`` after every pruning tier, packed into
+        about one partition per core (the batch and streaming readers'
+        one split planner)."""
+        return pack_slices(
+            self._plan_slices(paths),
+            self.max_partition_bytes,
+            self.max_blocks_per_split,
+            self.cores,
+        )
+
+    def _plan_slices(self, paths: list[str]) -> list[tuple[Slice, int]]:
+        """Block-aligned slices of each file with their block counts:
+        partition-path, zone-map, null-count and bloom pruning per file
+        and per block, offset bisect, then block grouping."""
+        # driver-side planning: one footer read per file (S1/X6)
+        from fourmc_spark.format import core
+        from fourmc_spark.format.reader import scan_file_info
+
+        sized: list[tuple[Slice, int]] = []
         for path in paths:
             if self._pcol_allowed:
                 pvals = _partition_values_from_path(
@@ -530,9 +643,7 @@ class FourMcDataSourceReader(DataSourceReader):
             if path.endswith(".zst"):
                 fsize = os.path.getsize(path)
                 if fsize:
-                    parts.append(
-                        FourMcInputPartition(path, "zst", 0, fsize, head=True)
-                    )
+                    sized.append((Slice(path, "zst", 0, fsize, True), 1))
                 continue
             if path.endswith(_HADOOP_EXTS):
                 from fourmc_spark.format.hadoop_stream import hadoop_ext_info
@@ -540,10 +651,8 @@ class FourMcDataSourceReader(DataSourceReader):
                 fsize = os.path.getsize(path)
                 if fsize:
                     hcodec = hadoop_ext_info(path)[0]
-                    parts.append(
-                        FourMcInputPartition(
-                            path, f"hadoop-{hcodec}", 0, fsize, head=True
-                        )
+                    sized.append(
+                        (Slice(path, f"hadoop-{hcodec}", 0, fsize, True), 1)
                     )
                 continue
             codec, fsize, offsets = scan_file_info(path)
@@ -593,22 +702,15 @@ class FourMcDataSourceReader(DataSourceReader):
                 astart = max(offsets[i], core.HEADER_SIZE)
                 aend = offsets[j] if j < n else fsize
                 if astart < aend:
-                    parts.append(
-                        FourMcInputPartition(
-                            path, codec, astart, aend, head=(i == 0),
-                        )
+                    sized.append(
+                        (Slice(path, codec, astart, aend, i == 0), j - i)
                     )
                 i = j
-        if not parts:
-            # empty dataset still needs one no-op partition
-            parts.append(FourMcInputPartition("", "lz4", 0, 0))
-        return parts
+        return sized
 
     def read(self, partition: FourMcInputPartition):
         import pyarrow as pa
 
-        if not partition.path:
-            return
         typed = self.json_schema is not None
         want_offset = "offset" in self.columns and (
             not typed or self.with_offset
@@ -621,13 +723,8 @@ class FourMcDataSourceReader(DataSourceReader):
         # hive partition columns wanted in the output: constant per file
         want_pcols = [c for c in self.pcols if c in self.columns]
         want_file = self.with_file and "_file" in self.columns
-        pvals = (
-            _partition_values_from_path(partition.path, want_pcols)
-            if want_pcols
-            else {}
-        )
 
-        def _with_pcols(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+        def _with_pcols(batch: "pa.RecordBatch", path: str, pvals: dict):
             if not want_pcols and not want_file:
                 return batch
             arrays = list(batch.columns)
@@ -642,7 +739,7 @@ class FourMcDataSourceReader(DataSourceReader):
                 names.append(c)
             if want_file:
                 arrays.append(
-                    pa.array([partition.path] * len(batch), type=pa.string())
+                    pa.array([path] * len(batch), type=pa.string())
                 )
                 names.append("_file")
             return pa.RecordBatch.from_arrays(arrays, names=names)
@@ -680,105 +777,119 @@ class FourMcDataSourceReader(DataSourceReader):
                     [v.as_py().decode("utf-8", "replace") for v in arr]
                 )
 
-        if partition.codec == "zst" or partition.codec.startswith("hadoop-"):
-            # non-splittable streaming codecs: row iterator + batch buffer
-            from fourmc_spark.format.reader import (
-                iter_lines_hadoop,
-                iter_lines_zst,
-            )
+        def _slice_batches(sl: Slice):
+            if sl.codec == "zst" or sl.codec.startswith("hadoop-"):
+                # non-splittable streaming codecs: row iterator + batch buffer
+                from fourmc_spark.format.reader import (
+                    iter_lines_hadoop,
+                    iter_lines_zst,
+                )
 
-            batch_rows = 16384
-            offsets: list[int] = []
-            lines: list[bytes] = []
+                batch_rows = 16384
+                offsets: list[int] = []
+                lines: list[bytes] = []
 
-            def flush():
-                if typed:
-                    # empty lines (the sink writes NULL values that way)
-                    # must parse as all-null rows like from_json('') /
-                    # from_csv('') — Arrow's readers would skip or
-                    # reject them
-                    ph = empty_line.encode()
-                    return _typed_batch(
-                        b"\n".join(ln if ln else ph for ln in lines),
-                        offs=list(offsets),
-                    )
-                arrays, names = [], []
-                if want_offset:
-                    arrays.append(pa.array(offsets, type=pa.int64()))
-                    names.append("offset")
-                if want_value:
-                    arrays.append(_cast_lines(pa.array(lines, type=pa.binary())))
-                    names.append("value")
-                return pa.RecordBatch.from_arrays(arrays, names=names)
+                def flush():
+                    if typed:
+                        # empty lines (the sink writes NULL values that way)
+                        # must parse as all-null rows like from_json('') /
+                        # from_csv('') — Arrow's readers would skip or
+                        # reject them
+                        ph = empty_line.encode()
+                        return _typed_batch(
+                            b"\n".join(ln if ln else ph for ln in lines),
+                            offs=list(offsets),
+                        )
+                    arrays, names = [], []
+                    if want_offset:
+                        arrays.append(pa.array(offsets, type=pa.int64()))
+                        names.append("offset")
+                    if want_value:
+                        arrays.append(
+                            _cast_lines(pa.array(lines, type=pa.binary()))
+                        )
+                        names.append("value")
+                    return pa.RecordBatch.from_arrays(arrays, names=names)
 
-            drop_first = self.skip_first and partition.head
-            with open(partition.path, "rb") as f:
-                if partition.codec.startswith("hadoop-"):
-                    it = iter_lines_hadoop(
-                        f, partition.codec.split("-", 1)[1]
-                    )
-                else:
-                    it = iter_lines_zst(f)
-                for owner, line in it:
-                    if drop_first:
+                drop_first = self.skip_first and sl.head
+                with open(sl.path, "rb") as f:
+                    if sl.codec.startswith("hadoop-"):
+                        it = iter_lines_hadoop(
+                            f, sl.codec.split("-", 1)[1]
+                        )
+                    else:
+                        it = iter_lines_zst(f)
+                    for owner, line in it:
+                        if drop_first:
+                            drop_first = False
+                            continue
+                        offsets.append(owner)
+                        lines.append(line)
+                        if len(lines) >= batch_rows:
+                            yield flush()
+                            offsets.clear()
+                            lines.clear()
+                if lines or offsets:
+                    yield flush()
+                return
+
+            # 4mc/4mz: vectorized per-block batches — line splitting runs in
+            # Arrow compute kernels, never a per-line Python loop
+            from fourmc_spark.format.reader import iter_line_batches_for_split
+
+            drop_first = self.skip_first and sl.head
+            with open(sl.path, "rb") as f:
+                for offs_np, lines_arr in iter_line_batches_for_split(
+                    f, sl.codec, sl.start, sl.end,
+                    verify=self.verify,
+                ):
+                    if drop_first and len(lines_arr) > 0:
                         drop_first = False
+                        offs_np = offs_np[1:]
+                        lines_arr = lines_arr.slice(1)
+                        if len(lines_arr) == 0:
+                            continue
+                    if typed:
+                        # join the Arrow line array into one NDJSON buffer
+                        # (C-side: one-list binary_join), then parse — no
+                        # per-line Python. Empty lines become '{}' first so
+                        # they parse as all-null rows exactly like
+                        # from_json('') in value mode (Arrow's reader would
+                        # silently skip them, losing the NULL rows the sink
+                        # itself writes as empty lines)
+                        import pyarrow.compute as pc
+
+                        strs = lines_arr.cast(pa.string())
+                        strs = pc.if_else(
+                            pc.equal(pc.binary_length(strs), 0),
+                            pa.scalar(empty_line),
+                            strs,
+                        )
+                        la = pa.ListArray.from_arrays(
+                            pa.array([0, len(strs)], type=pa.int32()), strs
+                        )
+                        nd = pc.binary_join(la, "\n")[0].as_buffer()
+                        yield _typed_batch(nd, offs=offs_np)
                         continue
-                    offsets.append(owner)
-                    lines.append(line)
-                    if len(lines) >= batch_rows:
-                        yield _with_pcols(flush())
-                        offsets.clear()
-                        lines.clear()
-            if lines or offsets:
-                yield _with_pcols(flush())
-            return
+                    arrays, names = [], []
+                    if want_offset:
+                        arrays.append(pa.array(offs_np, type=pa.int64()))
+                        names.append("offset")
+                    if want_value:
+                        arrays.append(_cast_lines(lines_arr))
+                        names.append("value")
+                    yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-        # 4mc/4mz: vectorized per-block batches — line splitting runs in
-        # Arrow compute kernels, never a per-line Python loop
-        from fourmc_spark.format.reader import iter_line_batches_for_split
-
-        drop_first = self.skip_first and partition.head
-        with open(partition.path, "rb") as f:
-            for offs_np, lines_arr in iter_line_batches_for_split(
-                f, partition.codec, partition.start, partition.end,
-                verify=self.verify,
-            ):
-                if drop_first and len(lines_arr) > 0:
-                    drop_first = False
-                    offs_np = offs_np[1:]
-                    lines_arr = lines_arr.slice(1)
-                    if len(lines_arr) == 0:
-                        continue
-                if typed:
-                    # join the Arrow line array into one NDJSON buffer
-                    # (C-side: one-list binary_join), then parse — no
-                    # per-line Python. Empty lines become '{}' first so
-                    # they parse as all-null rows exactly like
-                    # from_json('') in value mode (Arrow's reader would
-                    # silently skip them, losing the NULL rows the sink
-                    # itself writes as empty lines)
-                    import pyarrow.compute as pc
-
-                    strs = lines_arr.cast(pa.string())
-                    strs = pc.if_else(
-                        pc.equal(pc.binary_length(strs), 0),
-                        pa.scalar(empty_line),
-                        strs,
-                    )
-                    la = pa.ListArray.from_arrays(
-                        pa.array([0, len(strs)], type=pa.int32()), strs
-                    )
-                    nd = pc.binary_join(la, "\n")[0].as_buffer()
-                    yield _with_pcols(_typed_batch(nd, offs=offs_np))
-                    continue
-                arrays, names = [], []
-                if want_offset:
-                    arrays.append(pa.array(offs_np, type=pa.int64()))
-                    names.append("offset")
-                if want_value:
-                    arrays.append(_cast_lines(lines_arr))
-                    names.append("value")
-                yield _with_pcols(pa.RecordBatch.from_arrays(arrays, names=names))
+        # a packed partition spans files: the hive values, _file and the
+        # skipfirstline head flag are per slice
+        for sl in partition.slices():
+            pvals = (
+                _partition_values_from_path(sl.path, want_pcols)
+                if want_pcols
+                else {}
+            )
+            for batch in _slice_batches(sl):
+                yield _with_pcols(batch, sl.path, pvals)
 
 
 def _partition_col_opt(options) -> list[str]:

@@ -55,6 +55,9 @@ def _schema_from_options(options) -> tuple[ProtoField, ...]:
 class FourMcProtoDataSource(DataSource):
     """name: ``fourmcproto``; schema derived from the proto field list."""
 
+    # the cores split packing aims at, as on FourMcDataSource
+    parallelism: int | None = None
+
     @classmethod
     def name(cls) -> str:
         return "fourmcproto"
@@ -63,13 +66,13 @@ class FourMcProtoDataSource(DataSource):
         return spark_struct(_schema_from_options(self.options))
 
     def reader(self, schema: StructType) -> "FourMcProtoReader":
-        return FourMcProtoReader(self.options, schema)
+        return FourMcProtoReader(self.options, schema, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> "FourMcProtoWriter":
         return FourMcProtoWriter(self.options, schema, overwrite)
 
     def streamReader(self, schema: StructType):
-        return FourMcProtoStreamReader(self.options, schema)
+        return FourMcProtoStreamReader(self.options, schema, self.parallelism)
 
     def streamWriter(self, schema: StructType, overwrite: bool):
         return FourMcProtoStreamWriter(self.options, schema, overwrite)
@@ -79,7 +82,10 @@ class FourMcProtoReader(FourMcDataSourceReader):
     """Reuses the text source's block-aligned planning (S1/X4-X6); only the
     record loop differs: EB sync-marker resync instead of newline."""
 
-    def __init__(self, options, schema: StructType) -> None:
+    def __init__(
+        self, options, schema: StructType, cores: int | None = None
+    ) -> None:
+        self.cores = cores
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fourmcproto source requires a path")
@@ -119,8 +125,6 @@ class FourMcProtoReader(FourMcDataSourceReader):
 
         from fourmc_spark.format.protobuf import iter_eb_records_for_split
 
-        if not partition.path:
-            return
         wanted = [f for f in self.proto_schema if f.name in self.columns]
         arrow_schema = _arrow_schema(wanted)
         batch_rows = 8192
@@ -134,23 +138,26 @@ class FourMcProtoReader(FourMcDataSourceReader):
             return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         n = 0
-        with open(partition.path, "rb") as f:
-            for _, rec in iter_eb_records_for_split(
-                f,
-                partition.codec,
-                partition.start,
-                partition.end,
-                self.proto_schema,
-                verify=self.verify,
-            ):
-                for fld in wanted:
-                    cols[fld.name].append(rec[fld.name])
-                n += 1
-                if n >= batch_rows:
-                    yield flush()
-                    n = 0
-                    for v in cols.values():
-                        v.clear()
+        # a packed partition spans files; no proto column depends on the
+        # slice, so one batch may hold records of several
+        for sl in partition.slices():
+            with open(sl.path, "rb") as f:
+                for _, rec in iter_eb_records_for_split(
+                    f,
+                    sl.codec,
+                    sl.start,
+                    sl.end,
+                    self.proto_schema,
+                    verify=self.verify,
+                ):
+                    for fld in wanted:
+                        cols[fld.name].append(rec[fld.name])
+                    n += 1
+                    if n >= batch_rows:
+                        yield flush()
+                        n = 0
+                        for v in cols.values():
+                            v.clear()
         if n:
             yield flush()
 
@@ -265,8 +272,8 @@ class FourMcProtoStreamReader(FourMcStreamReader):
     machinery (monotone high-water mark, maxfilespertrigger,
     orderednames) over the EB-protobuf record model."""
 
-    def _make_batch_reader(self, options, schema: StructType):
-        return FourMcProtoReader(options, schema)
+    def _make_batch_reader(self, options, schema: StructType, cores):
+        return FourMcProtoReader(options, schema, cores)
 
 
 class FourMcProtoStreamWriter(FourMcStreamWriter):

@@ -10,10 +10,11 @@ granularity, exactly like Spark's built-in FileStreamSource:
   engine). Spark's own FileStreamSource keeps the same seen-files log
   (compacted); at 100 TB the per-file cost is O(name), not O(bytes),
   and planning reads only each new file's footer.
-* each micro-batch plans the *new* files into block-aligned partitions
-  with the identical arithmetic the batch reader uses
-  (FourMcBlockIndex.java:142-173), so a single huge file still fans out
-  across the cluster.
+* each micro-batch plans the *new* files with the batch reader's own
+  split planner (block-aligned slices, FourMcBlockIndex.java:142-173,
+  packed into about one partition per core), so a single huge file
+  still fans out across the cluster and a batch of many small files
+  shares a few tasks.
 
 The stream writer emits one sealed .4mc/.4mz file per task per
 micro-batch into `_temporary/`, and the driver-side commit(batchId)
@@ -35,50 +36,15 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 
-def _plan_file(path: str, max_partition_bytes: int, max_blocks: int = 0):
-    """Block-aligned partitions for one sealed file (S1/X4/X5 semantics,
-    same dual bound as the batch planner: compressed span + block count)."""
-    from fourmc_spark.format import core
-    from fourmc_spark.format.reader import scan_file_info
-    from fourmc_spark.sources.datasource import (
-        DEFAULT_MAX_BLOCKS_PER_SPLIT,
-        FourMcInputPartition,
-    )
-
-    codec, fsize, offsets = scan_file_info(path)
-    parts = []
-    if not offsets:
-        return parts
-    step = max(max_partition_bytes, 1)
-    maxb = max(max_blocks or DEFAULT_MAX_BLOCKS_PER_SPLIT, 1)
-    n = len(offsets)
-    i = 0
-    while i < n:
-        j = i + 1
-        while j < n and j - i < maxb and offsets[j] - offsets[i] < step:
-            j += 1
-        astart = max(offsets[i], core.HEADER_SIZE)
-        aend = offsets[j] if j < n else fsize
-        if astart < aend:
-            parts.append(
-                FourMcInputPartition(path, codec, astart, aend, head=(i == 0))
-            )
-        i = j
-    return parts
-
-
 class FourMcStreamReader(DataSourceStreamReader):
     """Micro-batch reader: new sealed files since the last offset."""
 
-    def __init__(self, options, schema: StructType) -> None:
-        from fourmc_spark.sources.datasource import DEFAULT_MAX_PARTITION_BYTES
-
+    def __init__(
+        self, options, schema: StructType, cores: int | None = None
+    ) -> None:
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fourmc stream source requires a path")
-        self.max_partition_bytes = int(
-            options.get("maxpartitionbytes", DEFAULT_MAX_PARTITION_BYTES)
-        )
         # maxfilespertrigger: bound each micro-batch to N files ARRIVING
         # AFTER a reader instance's first offset (the FileStreamSource
         # rate-limit analog for steady-state drains). SCOPE — unlike the
@@ -147,12 +113,12 @@ class FourMcStreamReader(DataSourceStreamReader):
         # delegate row production to the batch reader (same Arrow
         # batches); subclasses swap in a different record model (e.g.
         # the EB-protobuf reader) while keeping the offset machinery
-        self._batch_reader = self._make_batch_reader(options, schema)
+        self._batch_reader = self._make_batch_reader(options, schema, cores)
 
-    def _make_batch_reader(self, options, schema: StructType):
+    def _make_batch_reader(self, options, schema: StructType, cores):
         from fourmc_spark.sources.datasource import FourMcDataSourceReader
 
-        return FourMcDataSourceReader(options, schema)
+        return FourMcDataSourceReader(options, schema, cores)
 
 
     def _list(self) -> list[str]:
@@ -293,20 +259,7 @@ class FourMcStreamReader(DataSourceStreamReader):
             seen = set(json.loads(start.get("seen", "[]")))
             target = json.loads(end.get("seen", "[]"))
             new_files = [f for f in target if f not in seen]
-        parts = []
-        for path in new_files:
-            parts.extend(
-                _plan_file(
-                    path,
-                    self.max_partition_bytes,
-                    self._batch_reader.max_blocks_per_split,
-                )
-            )
-        if not parts:
-            from fourmc_spark.sources.datasource import FourMcInputPartition
-
-            parts.append(FourMcInputPartition("", "lz4", 0, 0))
-        return parts
+        return self._batch_reader.plan(new_files)
 
     def read(self, partition) -> Iterator:
         yield from self._batch_reader.read(partition)

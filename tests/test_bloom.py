@@ -23,6 +23,7 @@ from fourmc_spark.sources.datasource import (
     FourMcDataSourceReader,
     _bloom_file_pruned,
     _parse_flat_ddl,
+    iter_slices,
 )
 
 _DDL = "k bigint, name string, v double"
@@ -47,7 +48,8 @@ def _planned(d, filters):
     opts = CaseInsensitiveDict({"path": d, "jsonschema": _DDL})
     rd = FourMcDataSourceReader(opts, schema)
     list(rd.pushFilters(filters))
-    return {os.path.basename(p.path) for p in rd.partitions() if p.path}
+    return {os.path.basename(p.path)
+            for p in iter_slices(rd.partitions()) if p.path}
 
 
 def _ids_per_file(spark, d):
@@ -339,7 +341,7 @@ def test_block_tier_blooms_prune_within_files(spark, tmp_path):
     def n_parts(filters):
         rd = FourMcDataSourceReader(opts, schema)
         list(rd.pushFilters(filters))
-        return len([p for p in rd.partitions() if p.path])
+        return len([p for p in iter_slices(rd.partitions()) if p.path])
 
     full = n_parts([])
     probed = n_parts([EqualTo(("k",), 57)])
@@ -682,7 +684,7 @@ def test_proto_block_tier_blooms(spark, tmp_path):
 
         rd = FourMcProtoReader(opts, spark_struct(fields))
         list(rd.pushFilters(filters))
-        return len([p for p in rd.partitions() if p.path])
+        return len([p for p in iter_slices(rd.partitions()) if p.path])
 
     full = n_parts([])
     probed = n_parts([EqualTo(("k",), 1234)])

@@ -7,6 +7,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from fourmc_spark.sources.datasource import iter_slices
+
 
 def _write_read(spark, tmp_path, codec, level, n=20000, block_size=8192,
                 max_part=64 * 1024):
@@ -337,17 +339,18 @@ def test_offset_filter_pushdown_prunes_blocks(spark, tmp_path):
         [StructField("offset", LongType()), StructField("value", StringType())]
     )
     opts = CaseInsensitiveDict({"path": d, "maxpartitionbytes": "32768"})
-    full = len(FourMcDataSourceReader(opts, schema).partitions())
+    full = len([*iter_slices(
+        FourMcDataSourceReader(opts, schema).partitions())])
     rng = FourMcDataSourceReader(opts, schema)
     list(rng.pushFilters([GreaterThanOrEqual(("offset",), mid)]))
-    assert 0 < len(rng.partitions()) < full
+    assert 0 < len([*iter_slices(rng.partitions())]) < full
     eq = FourMcDataSourceReader(opts, schema)
     list(eq.pushFilters([EqualTo(("offset",), mid)]))
-    assert len(eq.partitions()) == 1
+    assert len([*iter_slices(eq.partitions())]) == 1
     lt = FourMcDataSourceReader(opts, schema)
     list(lt.pushFilters([LessThan(("offset",), offs[0])]))
     # nothing below the first block: planner emits only the no-op partition
-    assert [p for p in lt.partitions() if p.path] == []
+    assert [p for p in iter_slices(lt.partitions()) if p.path] == []
 
 
 def test_partition_column_filter_prunes_files(spark, tmp_path):
@@ -376,13 +379,14 @@ def test_partition_column_filter_prunes_files(spark, tmp_path):
         ]
     )
     opts = CaseInsensitiveDict({"path": d, "partitioncolumns": "src"})
-    full = len(FourMcDataSourceReader(opts, schema).partitions())
+    full = len([*iter_slices(
+        FourMcDataSourceReader(opts, schema).partitions())])
     one = FourMcDataSourceReader(opts, schema)
     list(one.pushFilters([EqualTo(("src",), "1")]))
-    n_one = len(one.partitions())
+    n_one = len([*iter_slices(one.partitions())])
     two = FourMcDataSourceReader(opts, schema)
     list(two.pushFilters([In(("src",), ("0", "2"))]))
-    n_two = len(two.partitions())
+    n_two = len([*iter_slices(two.partitions())])
     assert n_one < n_two < full
 
 
@@ -414,14 +418,14 @@ def test_file_pruned_scan_layout_zero_partitions(spark, tmp_path):
         ]
     )
     opts = CaseInsensitiveDict({"path": d, "partitioncolumns": "bucket"})
-    full = FourMcDataSourceReader(opts, schema).partitions()
+    full = [*iter_slices(FourMcDataSourceReader(opts, schema).partitions())]
     assert {p.path.split("bucket=")[1].split("/")[0] for p in full} == {
         str(b) for b in range(8)
     }
     kept = ("1", "3", "5", "7")
     rd = FourMcDataSourceReader(opts, schema)
     list(rd.pushFilters([In(("bucket",), kept)]))
-    parts = rd.partitions()
+    parts = [*iter_slices(rd.partitions())]
     assert parts, "pruned plan must still scan the matching files"
     got = {p.path.split("bucket=")[1].split("/")[0] for p in parts}
     assert got == set(kept)  # zero partitions reference a pruned file
@@ -627,13 +631,14 @@ def test_analyze_stats_sidecars_and_zone_pruning(spark, tmp_path):
 
     schema = _parse_flat_ddl(_ZM_DDL)
     opts = CaseInsensitiveDict({"path": d, "jsonschema": _ZM_DDL})
-    full_files = {p.path for p in FourMcDataSourceReader(opts, schema).partitions()}
+    full_files = {p.path for p in iter_slices(
+        FourMcDataSourceReader(opts, schema).partitions())}
     assert len(full_files) == 4
 
     def planned(filters):
         rd = FourMcDataSourceReader(opts, schema)
         list(rd.pushFilters(filters))
-        return {p.path for p in rd.partitions() if p.path}
+        return {p.path for p in iter_slices(rd.partitions()) if p.path}
 
     # range predicate keeps only overlapping files
     mid = planned([GreaterThanOrEqual(("k",), 150), LessThan(("k",), 250)])
@@ -674,7 +679,8 @@ def test_zone_pruning_is_conservative(spark, tmp_path):
     def planned(filters):
         rd = FourMcDataSourceReader(opts, schema)
         list(rd.pushFilters(filters))
-        return {os.path.basename(p.path) for p in rd.partitions() if p.path}
+        return {os.path.basename(p.path)
+                for p in iter_slices(rd.partitions()) if p.path}
 
     # no sidecars yet: nothing pruned
     assert planned([GreaterThanOrEqual(("k",), 100)]) == {"a.4mz", "b.4mz"}
@@ -752,7 +758,8 @@ def test_nullness_pushdown_prunes(spark, tmp_path):
     def planned(filters):
         rd = FourMcDataSourceReader(opts, schema)
         list(rd.pushFilters(filters))
-        return {os.path.basename(p.path) for p in rd.partitions() if p.path}
+        return {os.path.basename(p.path)
+                for p in iter_slices(rd.partitions()) if p.path}
 
     assert planned([IsNotNull(("k",))]) == {"nonull.4mz"}
     assert planned([IsNull(("k",))]) == {"allnull.4mz"}
@@ -802,7 +809,8 @@ def test_prefix_pushdown_prunes(spark, tmp_path):
     def planned(filters):
         rd = FourMcDataSourceReader(opts, schema)
         list(rd.pushFilters(filters))
-        return {os.path.basename(p.path) for p in rd.partitions() if p.path}
+        return {os.path.basename(p.path)
+                for p in iter_slices(rd.partitions()) if p.path}
 
     assert planned([StringStartsWith(("name",), "z")]) == {"high.4mz"}
     assert planned([StringStartsWith(("name",), "a")]) == {"low.4mz"}
@@ -1083,12 +1091,13 @@ def test_block_zone_maps_prune_within_file(spark, tmp_path):
     opts = CaseInsensitiveDict(
         {"path": d, "jsonschema": _ZM_DDL, "maxblockspersplit": "1"}
     )
-    full = [p for p in FourMcDataSourceReader(opts, schema).partitions()
+    full = [p for p in iter_slices(
+        FourMcDataSourceReader(opts, schema).partitions())
             if p.path]
     rd = FourMcDataSourceReader(opts, schema)
     list(rd.pushFilters([GreaterThanOrEqual(("k",), 1000),
                          LessThan(("k",), 1200)]))
-    pruned = [p for p in rd.partitions() if p.path]
+    pruned = [p for p in iter_slices(rd.partitions()) if p.path]
     # one file is zone-pruned entirely; inside the other only the few
     # blocks whose [min,max] overlaps [1000,1200) survive
     assert 0 < len(pruned) <= len(full) // 4, (len(pruned), len(full))
@@ -1152,14 +1161,15 @@ def test_zone_maps_compose_with_hive_partition_pruning(spark, tmp_path):
     opts = CaseInsensitiveDict(
         {"path": d, "jsonschema": _ZM_DDL, "partitioncolumns": "side"}
     )
-    full = [p for p in FourMcDataSourceReader(opts, schema).partitions()
+    full = [p for p in iter_slices(
+        FourMcDataSourceReader(opts, schema).partitions())
             if p.path]
     rd = FourMcDataSourceReader(opts, schema)
     list(rd.pushFilters([
         EqualTo(("side",), "1"),
         GreaterThanOrEqual(("k",), 500), LessThan(("k",), 1000),
     ]))
-    pruned = [p for p in rd.partitions() if p.path]
+    pruned = [p for p in iter_slices(rd.partitions()) if p.path]
     assert pruned and len(pruned) < len(full)
     assert all("side=1" in p.path for p in pruned)
     # the real query through both prunings stays exact
@@ -1463,7 +1473,7 @@ def _tzm_planned(d, filters):
         _parse_flat_ddl(_TZM_DDL),
     )
     list(rd.pushFilters(filters))
-    return {p.path for p in rd.partitions() if p.path}
+    return {p.path for p in iter_slices(rd.partitions()) if p.path}
 
 
 def test_typed_scan_temporal_and_special_float_matches_from_json(
@@ -1788,7 +1798,7 @@ def test_zone_ts_block_pruning_within_file(spark, tmp_path):
     def planned(filters):
         rd = FourMcDataSourceReader(opts, schema)
         list(rd.pushFilters(filters))
-        return [p for p in rd.partitions() if p.path]
+        return [p for p in iter_slices(rd.partitions()) if p.path]
 
     full = planned([])
     utc = dt.timezone.utc

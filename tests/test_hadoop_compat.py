@@ -38,6 +38,27 @@ def test_split_maxsize_conf_maps_to_partitions(spark, mc_file):
     assert many > few  # splittable: smaller max split -> more partitions
 
 
+def test_rows_keep_file_order_across_files(spark, tmp_path):
+    # small files share partitions, yet the RDD yields lines in file and
+    # block order, as Hadoop's splits do
+    want = []
+    for i in range(8):
+        lines = [f"f{i} line {j}" for j in range(3000)]
+        want += lines
+        write_file(str(tmp_path / f"part-{i:02d}.4mc"),
+                   ("\n".join(lines) + "\n").encode(), codec="lz4",
+                   block_size=4096)
+    packed = new_api_hadoop_file(spark, str(tmp_path))
+    assert packed.getNumPartitions() < 8
+    assert packed.map(lambda kv: kv[1]).collect() == want
+    split = new_api_hadoop_file(
+        spark, str(tmp_path),
+        conf={"mapreduce.input.fileinputformat.split.maxsize": "8192"},
+    )
+    assert split.getNumPartitions() > 8
+    assert split.map(lambda kv: kv[1]).collect() == want
+
+
 def test_unknown_input_format_rejected(spark, mc_file):
     path, _ = mc_file
     with pytest.raises(ValueError, match="unsupported input format"):

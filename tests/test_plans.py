@@ -458,7 +458,9 @@ def test_sql_4mc_pruned_scan_prunes_blocks(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from fourmc_spark.format.reader import scan_file_info
-    from fourmc_spark.sources.datasource import FourMcDataSourceReader
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSourceReader, iter_slices,
+    )
 
     d = str(tmp_path / "pruned4mc")
     n = 2048  # 16 blocks of 128 fixed-width 32-byte lines
@@ -485,10 +487,11 @@ def test_sql_4mc_pruned_scan_prunes_blocks(spark, tmp_path):
         [StructField("offset", LongType()), StructField("value", StringType())]
     )
     opts = CaseInsensitiveDict({"path": d, "maxpartitionbytes": "4096"})
-    full = len(FourMcDataSourceReader(opts, schema).partitions())
+    full = len([*iter_slices(
+        FourMcDataSourceReader(opts, schema).partitions())])
     rd = FourMcDataSourceReader(opts, schema)
     list(rd.pushFilters([GreaterThanOrEqual(("offset",), cutoff)]))
-    pruned = len(rd.partitions())
+    pruned = len([*iter_slices(rd.partitions())])
     assert 0 < pruned < full  # blocks below the cutoff left the PLAN
 
     # and the surviving rows are exactly ids > jcut*128 (Hadoop-style

@@ -21,6 +21,7 @@ from fourmc_spark.format.protobuf import (
     iter_eb_records_for_split,
 )
 from fourmc_spark.format.writer import FourMcWriter
+from fourmc_spark.sources.datasource import iter_slices
 
 
 def _users(n):
@@ -307,7 +308,7 @@ def _proto_planned(d, filters, schema=None):
     sch = schema or spark_struct(USER_SCHEMA)
     rd = FourMcProtoReader(CaseInsensitiveDict({"path": d}), sch)
     list(rd.pushFilters(filters))
-    return [p for p in rd.partitions() if p.path]
+    return [p for p in iter_slices(rd.partitions()) if p.path]
 
 
 def test_proto_analyze_stats_and_zone_pruning(spark, tmp_path):

@@ -88,6 +88,31 @@ def test_parquet_col_minmax_reads_footer(tmp_path, spark, sf_dir):
     assert _parquet_col_minmax(str(tmp_path / "missing.parquet"), "x") is None
 
 
+def test_parquet_col_minmax_out_of_scope_types_fall_back(tmp_path):
+    """Float and string statistics over several row groups return None
+    (the sampling fallback) instead of raising TypeError from a min/max
+    over unconverted values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fourmc_spark.queries import _parquet_col_minmax
+
+    p = str(tmp_path / "mixed.parquet")
+    pq.write_table(
+        pa.table({
+            "f": [0.5 * i for i in range(30)],
+            "s": [f"k{i:03d}" for i in range(30)],
+            "i": list(range(30)),
+        }),
+        p,
+        row_group_size=10,
+    )
+    assert pq.ParquetFile(p).metadata.num_row_groups == 3
+    assert _parquet_col_minmax(p, "f") is None
+    assert _parquet_col_minmax(p, "s") is None
+    assert _parquet_col_minmax(p, "i") == (0, 29)
+
+
 def test_range_partition_fixture_falls_back_without_stats(spark, tmp_path):
     """Bounds unavailable -> the sampled repartitionByRange path, which
     still yields a correct (just sampled) range layout."""

@@ -16,6 +16,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from fourmc_spark.sources.datasource import iter_slices
 from fourmc_spark.streaming import (
     dedup_within_watermark,
     distinct_users_hourly,
@@ -526,7 +527,7 @@ def test_stream_source_max_files_per_trigger(tmp_path):
     assert seen(nxt) <= seen(final) and len(seen(final)) == 10
     # partitions between consecutive offsets touch only the new files
     parts = r.partitions(first, nxt)
-    assert len({p.path for p in parts if p.path}) == 2
+    assert len({p.path for p in iter_slices(parts) if p.path}) == 2
 
 
 def test_stream_source_ordered_names_o1_offsets(tmp_path):
@@ -565,7 +566,7 @@ def test_stream_source_ordered_names_o1_offsets(tmp_path):
     nxt = r.latestOffset()
     assert nxt["hwm"].endswith("b004.4mc")  # 2 of the 5 new
     parts = r.partitions(first, nxt)
-    assert len({p.path for p in parts if p.path}) == 2
+    assert len({p.path for p in iter_slices(parts) if p.path}) == 2
     assert r.latestOffset()["hwm"].endswith("b006.4mc")
     r.commit(nxt)  # async old commit must not regress the mark
     assert r.latestOffset()["hwm"].endswith("b007.4mc")
@@ -608,7 +609,8 @@ def test_stream_source_startafter_two_phase_backfill(spark, tmp_path):
     assert init == {"hwm": "b002.4mc", "n": 3}
     first = r.latestOffset()
     parts = r.partitions(init, first)
-    assert sorted(os.path.basename(p.path) for p in parts if p.path) == [
+    assert sorted(os.path.basename(p.path)
+                  for p in iter_slices(parts) if p.path) == [
         "b003.4mc", "b004.4mc"
     ]
     # empty/fully-backfilled listing: the seed must HOLD at the cut —
@@ -673,7 +675,7 @@ def test_stream_source_ordered_names_restart_stray_detected(tmp_path):
     # with the stray gone the same replay plans exactly the late file
     os.remove(os.path.join(d, "a999.4mc"))
     parts = r2.partitions(start, end)
-    assert [os.path.basename(p.path) for p in parts if p.path] == [
+    assert [os.path.basename(p.path) for p in iter_slices(parts) if p.path] == [
         "b002.4mc"
     ]
 
@@ -918,7 +920,7 @@ def test_stream_source_ordered_names_composes_with_partitionby(tmp_path):
     assert first["hwm"] < nxt["hwm"]  # no ValueError, mark advanced
     parts = r.partitions(first, nxt)
     new_dirs = {p.path.split("bucket=")[1].split("/")[0]
-                for p in parts if p.path}
+                for p in iter_slices(parts) if p.path}
     assert new_dirs == {"0"}  # exactly the late batch's files
 
 

@@ -447,7 +447,7 @@ BLOOM_ELIGIBLE_TYPES = {"string": "str", "int64": "int", "int32": "int"}
 
 def bloom_eligible_fields(schema: tuple[ProtoField, ...]) -> dict[str, str]:
     """name -> probe type family ('int' | 'str') for the fields bloom
-    sidecars can prune on (sources/datasource._bloom_file_pruned)."""
+    sidecars can prune on (sources/datasource._excluded)."""
     return {
         f.name: BLOOM_ELIGIBLE_TYPES[f.type]
         for f in schema

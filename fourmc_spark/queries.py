@@ -3007,7 +3007,7 @@ def proto_4mc_bloom_scan_q(spark, sf):
     # them), and analyze_stats_proto seals per-file bloom bitmaps IN
     # THE SAME decode pass (bloom_columns: xxh64(str(value)) seed 42 —
     # byte-identical to the NDJSON tier's JVM CAST-AS-STRING contract,
-    # so the shared _bloom_file_pruned probe needs no proto-specific
+    # so the shared bloom probe (_excluded) needs no proto-specific
     # path). The reader's pushFilters turns the IN-list into point
     # probes and drops files whose bloom proves all ids absent. Poison
     # proof: a garbage container with an all-zero bloom under the real

@@ -9,6 +9,9 @@ formats (SURVEY.md §2.1 S1-S8 / K1-K3):
   ``maxPartitionBytes`` are aligned to block boundaries with the
   reference's arithmetic (`FourMcBlockIndex.java:142-173`).  Planning cost
   is O(files), never O(bytes) — the 100 TB posture.
+* **pruning** (driver): one rule per sidecar kind (zone map, null
+  count, bloom), applied to the sidecar's file summary, then to each
+  block summary (:func:`_excluded`); conservative on any doubt.
 * **packing** (driver): the kept slices are then packed into about one
   partition per core, so small files share a task instead of each
   paying a Python worker's fixed per-task cost. Target compressed bytes
@@ -41,6 +44,7 @@ Usage::
 
 from __future__ import annotations
 
+import datetime as _dt
 import json as _json
 import os
 import uuid
@@ -54,7 +58,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType, LongType, ShortType, StringType, StructField, StructType,
+)
 
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 # Cap on blocks per split: bounds a partition's UNCOMPRESSED size at
@@ -268,20 +274,13 @@ class FourMcDataSource(DataSource):
 
 
 class FourMcDataSourceReader(DataSourceReader):
+    #: the format name option errors report
+    source_name = "fourmc"
+
     def __init__(
         self, options, schema: StructType, cores: int | None = None
     ) -> None:
-        self.cores = cores
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("fourmc source requires a path")
-        self.max_partition_bytes = int(
-            options.get("maxpartitionbytes", DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.max_blocks_per_split = int(
-            options.get("maxblockspersplit", DEFAULT_MAX_BLOCKS_PER_SPLIT)
-        )
-        self.verify = str(options.get("verify", "true")).lower() != "false"
+        self._init_split_options(options, cores)
         # drop the first line of each FILE (header rows); resolved per
         # head-partition in the reader, so it is split-plan invariant
         self.skip_first = (
@@ -319,26 +318,59 @@ class FourMcDataSourceReader(DataSourceReader):
             str(options.get("withoffset", "false")).lower() == "true"
         )
         self.columns = [f.name for f in schema.fields]
-        self._init_pruning_state(options)
+        # the offset pseudo-column prunes blocks only in the (offset,
+        # value) mode; in typed mode routing it there would prune by
+        # COMPRESSED BYTE offsets against record values
+        self.offset_is_pseudo = self.json_schema is None
+        # value zone-map constraints apply to the typed scan's declared
+        # fields; bloom probes to its int and string ones (analyze_bloom's
+        # eligibility: the column's CAST AS STRING must equal the
+        # probe's str())
+        typed = self.json_schema.fields if self.json_schema is not None else []
+        families = {}
+        for f in typed:
+            if isinstance(f.dataType, (LongType, IntegerType, ShortType)):
+                families[f.name] = "int"
+            elif isinstance(f.dataType, StringType):
+                families[f.name] = "str"
+        self._init_pruning_state(options, [f.name for f in typed], families)
 
-    def _init_pruning_state(self, options) -> None:
+    def _init_split_options(self, options, cores: int | None) -> None:
+        """The options every 4mc reader (this one and the protobuf
+        reader) plans and decodes with."""
+        self.cores = cores
+        self.path = options.get("path")
+        if not self.path:
+            raise ValueError(f"{self.source_name} source requires a path")
+        self.max_partition_bytes = int(
+            options.get("maxpartitionbytes", DEFAULT_MAX_PARTITION_BYTES)
+        )
+        self.max_blocks_per_split = int(
+            options.get("maxblockspersplit", DEFAULT_MAX_BLOCKS_PER_SPLIT)
+        )
+        self.verify = str(options.get("verify", "true")).lower() != "false"
+
+    def _init_pruning_state(
+        self, options, zone_cols, bloom_typemap: dict[str, str]
+    ) -> None:
         """Planning-time pruning state, filled by pushFilters(): an
         inclusive [lo, hi] constraint on the offset pseudo-column
         (hi=None = unbounded), per-partition-column allowed value sets,
-        and — in typed (jsonschema) mode — per-column zone constraints
-        checked against analyze_stats() sidecars. Subclasses with their
-        own __init__ (the protobuf reader) MUST call this so the
-        inherited pushFilters()/partitions() find every attribute they
-        touch — and must set offset_is_pseudo=False when their schema's
-        'offset' (if any) is a PAYLOAD field, not the scan's
-        compressed-block-offset column."""
+        and per-column zone constraints, null-ness requirements and
+        point sets on ``zone_cols``, checked against analyze_stats()
+        sidecars. ``bloom_typemap`` maps the bloom-probe-able columns to
+        their type family ('int' | 'str'); columns absent from it are
+        never bloom-probed. Subclasses with their own __init__ (the
+        protobuf reader) call this after setting ``pcols`` and
+        ``offset_is_pseudo``, the rest of the state pushFilters()
+        reads."""
         self._off_lo: int = 0
         self._off_hi: int | None = None
         self._pcol_allowed: dict[str, set] = {}
         # col -> [lo_value, lo_inclusive, hi_value, hi_inclusive]
         self._zone: dict[str, list] = {}
         # col -> intersected set of EqualTo/In point values, probed
-        # against analyze_bloom sidecar bitmaps (file tier)
+        # against analyze_bloom sidecar bitmaps
         self._point: dict[str, set] = {}
         # col -> {"null", "notnull"} requirements (IsNull / IsNotNull /
         # null-safe equality), pruned via sidecar null counts
@@ -346,34 +378,8 @@ class FourMcDataSourceReader(DataSourceReader):
         self.pushdown_enabled = (
             str(options.get("pushdown", "true")).lower() != "false"
         )
-        self.offset_is_pseudo = True
-        if not hasattr(self, "pcols"):
-            self.pcols = []
-        if not hasattr(self, "json_schema"):
-            self.json_schema = None
-        # columns eligible for value zone-map constraints: the typed
-        # NDJSON scan's declared fields here; the protobuf reader
-        # overrides with its scalar payload fields
-        self._zone_cols: frozenset = (
-            frozenset(f.name for f in self.json_schema.fields)
-            if self.json_schema is not None else frozenset()
-        )
-        # bloom-probe type families (analyze_bloom's eligibility: the
-        # column's CAST AS STRING must equal the probe's str()). Columns
-        # absent here are never bloom-probed — the proto reader leaves
-        # this empty until it grows its own bloom pass.
-        from pyspark.sql import types as _T
-
-        self._bloom_typemap: dict[str, str] = {}
-        if self.json_schema is not None:
-            for f in self.json_schema.fields:
-                if isinstance(
-                    f.dataType,
-                    (_T.LongType, _T.IntegerType, _T.ShortType),
-                ):
-                    self._bloom_typemap[f.name] = "int"
-                elif isinstance(f.dataType, _T.StringType):
-                    self._bloom_typemap[f.name] = "str"
+        self._zone_cols = frozenset(zone_cols)
+        self._bloom_typemap = dict(bloom_typemap)
 
     def pushFilters(self, filters):
         """Planning-time pruning, the query-side payoff of the footer
@@ -403,27 +409,18 @@ class FourMcDataSourceReader(DataSourceReader):
                 continue
             col = attr[0]
             # the offset pseudo-column exists only in the text source's
-            # (offset, value) mode; in typed mode — and in the protobuf
-            # source, whose user-defined schema may legally hold a
-            # payload field named "offset" — routing it here would
-            # prune blocks by COMPRESSED BYTE offsets against record
-            # values
-            if (col == "offset" and self.offset_is_pseudo
-                    and self.json_schema is None):
+            # (offset, value) mode; the protobuf source's user-defined
+            # schema may legally hold a payload field named "offset"
+            if col == "offset" and self.offset_is_pseudo:
                 v = getattr(flt, "value", None)
                 if not isinstance(v, int) or isinstance(v, bool):
                     continue
-                if isinstance(flt, EqualTo):
-                    self._off_lo = max(self._off_lo, v)
-                    self._off_hi = v if self._off_hi is None else min(self._off_hi, v)
-                elif isinstance(flt, GreaterThan):
-                    self._off_lo = max(self._off_lo, v + 1)
-                elif isinstance(flt, GreaterThanOrEqual):
-                    self._off_lo = max(self._off_lo, v)
-                elif isinstance(flt, LessThan):
-                    self._off_hi = v - 1 if self._off_hi is None else min(self._off_hi, v - 1)
-                elif isinstance(flt, LessThanOrEqual):
-                    self._off_hi = v if self._off_hi is None else min(self._off_hi, v)
+                if isinstance(flt, (EqualTo, GreaterThan, GreaterThanOrEqual)):
+                    lo = v + isinstance(flt, GreaterThan)
+                    self._off_lo = max(self._off_lo, lo)
+                if isinstance(flt, (EqualTo, LessThan, LessThanOrEqual)):
+                    hi = v - isinstance(flt, LessThan)
+                    self._off_hi = hi if self._off_hi is None else min(self._off_hi, hi)
             elif col in self.pcols:
                 if isinstance(flt, EqualTo) and isinstance(flt.value, str):
                     vals = {flt.value}
@@ -447,8 +444,6 @@ class FourMcDataSourceReader(DataSourceReader):
                 # and are compared against PARSED sidecar ISO strings
                 # (see _zone_pair), so sidecar text-format drift can
                 # never flip an ordering.
-                import datetime as _dt
-
                 def _is_point(x):
                     # bloom-probe-able point value: int (not bool) or str
                     return (
@@ -480,15 +475,10 @@ class FourMcDataSourceReader(DataSourceReader):
                     if not isinstance(v, str) or not v:
                         continue
                     z = self._zone.setdefault(col, [None, True, None, True])
-                    if isinstance(z[0], (str, type(None))) and (
-                        z[0] is None or v > z[0]
-                    ):
-                        z[0], z[1] = v, True
+                    _tighten(z, 0, v, True)
                     hi = _next_prefix(v)
-                    if hi is not None and isinstance(
-                        z[2], (str, type(None))
-                    ) and (z[2] is None or hi < z[2]):
-                        z[2], z[3] = hi, False
+                    if hi is not None:
+                        _tighten(z, 2, hi, False)
                     continue
                 if isinstance(flt, EqualNullSafe):
                     # col <=> NULL matches exactly the null rows: that is
@@ -504,30 +494,16 @@ class FourMcDataSourceReader(DataSourceReader):
                     # Same-class int or str lists only (mixed/temporal
                     # lists stay unpruned — conservative).
                     vals = list(flt.value)
-                    if not vals:
-                        continue
-                    all_int = all(
-                        isinstance(x, int) and not isinstance(x, bool)
-                        for x in vals
-                    )
-                    all_str = all(isinstance(x, str) for x in vals)
-                    if not (all_int or all_str):
+                    if not (
+                        vals
+                        and all(map(_is_point, vals))
+                        and len(set(map(_cls, vals))) == 1
+                    ):
                         continue
                     _take_points(set(vals))
-                    lo_hi = [(min(vals), True, 0), (max(vals), True, 2)]
-                    for v, inc, slot in lo_hi:
-                        z = self._zone.setdefault(
-                            col, [None, True, None, True]
-                        )
-                        old = z[slot]
-                        same = old is None or (
-                            isinstance(old, str) == isinstance(v, str)
-                            and not isinstance(old, _dt.date)
-                        )
-                        if slot == 0 and same and (old is None or v > old):
-                            z[0], z[1] = v, True
-                        if slot == 2 and same and (old is None or v < old):
-                            z[2], z[3] = v, True
+                    z = self._zone.setdefault(col, [None, True, None, True])
+                    _tighten(z, 0, min(vals), True)
+                    _tighten(z, 2, max(vals), True)
                     continue
 
                 v = getattr(flt, "value", None)
@@ -538,38 +514,16 @@ class FourMcDataSourceReader(DataSourceReader):
                         v.astimezone(_dt.timezone.utc)
                         - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
                     ) // _dt.timedelta(microseconds=1)
-                is_num = isinstance(v, (int, float)) and not isinstance(v, bool)
-                if not (is_num or isinstance(v, (str, _dt.date))):
+                if not (_is_num(v) or isinstance(v, (str, _dt.date))):
                     continue  # (datetime is a date subclass: both pass)
                 z = self._zone.setdefault(col, [None, True, None, True])
-
-                def _cls(x):
-                    if isinstance(x, _dt.datetime):
-                        return "ts"
-                    if isinstance(x, _dt.date):
-                        return "date"
-                    return isinstance(x, str)
-
-                def _num_str_cmp_ok(old):
-                    return old is None or _cls(old) == _cls(v)
-
                 if isinstance(flt, (EqualTo, EqualNullSafe)):
-                    if _num_str_cmp_ok(z[0]) and (z[0] is None or v > z[0]):
-                        z[0], z[1] = v, True
-                    if _num_str_cmp_ok(z[2]) and (z[2] is None or v < z[2]):
-                        z[2], z[3] = v, True
+                    _tighten(z, 0, v, True)
+                    _tighten(z, 2, v, True)
                 elif isinstance(flt, (GreaterThan, GreaterThanOrEqual)):
-                    inc = isinstance(flt, GreaterThanOrEqual)
-                    if _num_str_cmp_ok(z[0]) and (
-                        z[0] is None or v > z[0] or (v == z[0] and not inc)
-                    ):
-                        z[0], z[1] = v, inc
+                    _tighten(z, 0, v, isinstance(flt, GreaterThanOrEqual))
                 elif isinstance(flt, (LessThan, LessThanOrEqual)):
-                    inc = isinstance(flt, LessThanOrEqual)
-                    if _num_str_cmp_ok(z[2]) and (
-                        z[2] is None or v < z[2] or (v == z[2] and not inc)
-                    ):
-                        z[2], z[3] = v, inc
+                    _tighten(z, 2, v, isinstance(flt, LessThanOrEqual))
         return filters
 
     def partitions(self) -> list[FourMcInputPartition]:
@@ -602,6 +556,7 @@ class FourMcDataSourceReader(DataSourceReader):
         from fourmc_spark.format.reader import scan_file_info
 
         sized: list[tuple[Slice, int]] = []
+        probes = _bloom_probes(self._point, self._bloom_typemap)
         for path in paths:
             if self._pcol_allowed:
                 pvals = _partition_values_from_path(
@@ -612,34 +567,15 @@ class FourMcDataSourceReader(DataSourceReader):
                     for c, allowed in self._pcol_allowed.items()
                 ):
                     continue  # file pruned by partition-column predicate
-            dropped_blocks: frozenset = frozenset()
-            if self._zone or self._point or self._nullreq:
+            dropped_blocks = frozenset()
+            if self._zone or self._nullreq or probes:
                 meta = _load_zone_sidecar(path)
                 if meta is not None:
-                    if self._zone and _zone_file_pruned(meta, self._zone):
-                        continue  # file pruned by analyze_stats zone map
-                    if self._nullreq and _null_file_pruned(
-                        meta, self._nullreq
-                    ):
-                        continue  # null-ness requirement unsatisfiable
-                    if self._point and _bloom_file_pruned(
-                        meta, self._point, self._bloom_typemap
-                    ):
-                        continue  # file pruned by analyze_bloom bitmap
-                    if self._zone:
-                        dropped_blocks = _zone_dropped_blocks(
-                            meta, self._zone
-                        )
-                    if self._nullreq:
-                        dropped_blocks = dropped_blocks | (
-                            _null_dropped_blocks(meta, self._nullreq)
-                        )
-                    if self._point:
-                        dropped_blocks = dropped_blocks | (
-                            _bloom_dropped_blocks(
-                                meta, self._point, self._bloom_typemap
-                            )
-                        )
+                    dropped_blocks = _sidecar_dropped(
+                        meta, self._zone, self._nullreq, probes
+                    )
+                    if dropped_blocks is None:
+                        continue  # the file summary is excluded
             if path.endswith(".zst"):
                 fsize = os.path.getsize(path)
                 if fsize:
@@ -1222,16 +1158,17 @@ class _TypedCsvParser:
 STATS_SUFFIX = ".stats.json"
 
 
+def _is_num(x) -> bool:
+    return isinstance(x, (int, float)) and not isinstance(x, bool)
+
+
 def _zone_comparable(a, b) -> bool:
     """Same-ordering check for two SIDECAR values (JSON primitives):
     number vs number, str vs str. Used by the compaction stats carry to
     refuse min/max across inputs analyzed under different DDLs. (Bound
     vs sidecar comparisons go through _zone_pair, which also parses
     temporal ISO strings.)"""
-    def _num(x):
-        return isinstance(x, (int, float)) and not isinstance(x, bool)
-
-    return (_num(a) and _num(b)) or (
+    return (_is_num(a) and _is_num(b)) or (
         isinstance(a, str) and isinstance(b, str)
     )
 
@@ -1250,12 +1187,7 @@ def _zone_pair(stat, bv):
     A TimestampType bound against an OLD sidecar's wall-clock string is
     deliberately incomparable — those strings are session-timezone
     wall times with no zone recorded; re-ANALYZE writes micros."""
-    import datetime as _dt
-
-    def _num(x):
-        return isinstance(x, (int, float)) and not isinstance(x, bool)
-
-    if _num(stat) and _num(bv):
+    if _is_num(stat) and _is_num(bv):
         return stat, bv
     if isinstance(bv, _dt.datetime):  # naive NTZ bound (aware→micros already)
         if isinstance(stat, str):
@@ -1277,6 +1209,33 @@ def _zone_pair(stat, bv):
     if isinstance(stat, str) and isinstance(bv, str):
         return stat, bv
     return None
+
+
+def _cls(x):
+    """Ordering class of a pushed bound value: numbers (False),
+    strings (True), timestamps, dates. Only same-class values compare."""
+    if isinstance(x, _dt.datetime):
+        return "ts"
+    if isinstance(x, _dt.date):
+        return "date"
+    return isinstance(x, str)
+
+
+def _tighten(bound: list, side: int, v, inclusive: bool) -> None:
+    """Narrow one side of a zone bound ``[lo, lo_inc, hi, hi_inc]``
+    (``side`` 0 = lo, 2 = hi) to *v* when *v* is tighter: larger for lo,
+    smaller for hi, or equal and exclusive. A *v* whose ordering class
+    differs from the bound it would replace leaves the bound as it is
+    (conservative: a looser bound prunes less)."""
+    old = bound[side]
+    if old is not None and _cls(old) != _cls(v):
+        return
+    if (
+        old is None
+        or (v > old if side == 0 else v < old)
+        or (v == old and not inclusive)
+    ):
+        bound[side], bound[side + 1] = v, inclusive
 
 
 #: parsed-sidecar cache — the SAME freshness contract as the
@@ -1365,44 +1324,6 @@ def _range_excluded(mn, mx, bound) -> bool:
     return False
 
 
-def _zone_file_pruned(meta: dict, zone: dict[str, list]) -> bool:
-    """True iff the sidecar PROVES no row in the file can satisfy the
-    conjunction of pushed bounds. Conservative everywhere: missing
-    column or incomparable types => NOT pruned. Spark re-applies every
-    filter post-scan, so pruning can only remove provably-empty work."""
-    cols = meta.get("columns", {})
-    for col, bound in zone.items():
-        if bound[0] is None and bound[2] is None:
-            continue
-        st = cols.get(col)
-        if not isinstance(st, dict):
-            continue
-        if _range_excluded(st.get("min"), st.get("max"), bound):
-            return True
-    return False
-
-
-def _zone_dropped_blocks(meta: dict, zone: dict[str, list]) -> frozenset:
-    """Block offsets whose per-block stats (sidecar ``blocks`` entries,
-    keyed by the compressed block offset that the scan's ``offset``
-    column exposes) prove the block owns no matching line. Blocks
-    absent from the sidecar are kept — same conservative contract as
-    the file tier."""
-    dropped = set()
-    for b in meta.get("blocks") or ():
-        c = b.get("c", {})
-        for col, bound in zone.items():
-            if bound[0] is None and bound[2] is None:
-                continue
-            st = c.get(col)
-            if not isinstance(st, (list, tuple)) or len(st) < 2:
-                continue
-            if _range_excluded(st[0], st[1], bound):
-                dropped.add(b.get("o"))
-                break
-    return frozenset(dropped)
-
-
 #: bloom sidecar hash contract (shared with operators/maintenance.
 #: analyze_bloom, which imports these): xxhash64(CAST(col AS STRING)
 #: UTF-8 bytes) with Spark's fixed seed 42, double-hashed into k
@@ -1429,46 +1350,6 @@ def _next_prefix(v: str) -> str | None:
         if nxt <= 0x10FFFF:
             return v[:i] + chr(nxt)
     return None
-
-
-def _null_file_pruned(meta: dict, nullreq: dict[str, set]) -> bool:
-    """True iff some null-ness requirement is provably unsatisfiable in
-    this file: IsNotNull against a column with NO non-null values
-    (min and max both null — includes the zero-row case, vacuously
-    empty), or IsNull against a column whose recorded null count is 0.
-    Conservative: missing column stats never prune."""
-    cols = meta.get("columns", {})
-    for col, req in nullreq.items():
-        st = cols.get(col)
-        if not isinstance(st, dict):
-            continue
-        if (
-            "notnull" in req
-            and st.get("min") is None
-            and st.get("max") is None
-        ):
-            return True
-        if "null" in req and st.get("nulls") == 0:
-            return True
-    return False
-
-
-def _null_dropped_blocks(meta: dict, nullreq: dict[str, set]) -> frozenset:
-    """Block offsets whose per-block stats prove the null-ness
-    requirements unsatisfiable — same rules as the file tier."""
-    dropped = set()
-    for b in meta.get("blocks") or ():
-        c = b.get("c", {})
-        for col, req in nullreq.items():
-            st = c.get(col)
-            if not isinstance(st, (list, tuple)) or len(st) < 3:
-                continue
-            if ("notnull" in req and st[0] is None and st[1] is None) or (
-                "null" in req and st[2] == 0
-            ):
-                dropped.add(b.get("o"))
-                break
-    return frozenset(dropped)
 
 
 def bloom_positions(h: int, k: int, bits: int):
@@ -1532,160 +1413,167 @@ def validate_bloom_geometry(
         raise ValueError(f"{what}: k must be in [1, 16], got {k}")
 
 
-def _decode_bloom_spec(spec, fam: str):
-    """(bitmap bytes, bits, k) when *spec* is a well-formed bloom under
-    the recognized contract AND was built for type family *fam*; None
-    on any doubt (the file is scanned). Decoded ONCE per (file, column)
-    — probing an IN-list reuses the decoded bitmap."""
-    import base64
+class _Summary(NamedTuple):
+    """What a sidecar states about the rows of one file or one block.
+    ``stats``: col -> (min, max, nulls); min and max both None means no
+    non-null value, nulls None means unknown. ``blooms``: col ->
+    (base64 bitmap, bits, k), already matched against the bloom
+    contract tag, its geometry and the read schema's type family; the
+    bitmap is decoded only when probed. A column a summary does not
+    state never excludes it."""
 
-    if (
-        not isinstance(spec, dict)
-        or spec.get("algo") != BLOOM_ALGO
-        or spec.get("seed") != BLOOM_SEED
-        or spec.get("fam") != fam
-    ):
-        return None
-    try:
-        bits, k = spec["bits"], spec["k"]
-        bm = base64.b64decode(spec["b64"], validate=True)
-    except (KeyError, TypeError, ValueError):
-        return None
-    if (
-        not isinstance(bits, int)
-        or not isinstance(k, int)
-        or isinstance(bits, bool)
-        or isinstance(k, bool)
-        or bits <= 0
-        or not 1 <= k <= 64
-        or len(bm) * 8 != bits
-    ):
-        return None
-    return bm, bits, k
+    stats: dict
+    blooms: dict
 
 
-def _bloom_canon(v, fam: str):
-    """Canonical probe text for *v* under type family *fam*, or None
-    when the value's type doesn't match (can't prove absence)."""
-    if fam == "int" and isinstance(v, int) and not isinstance(v, bool):
-        return str(v)
-    if fam == "str" and isinstance(v, str):
-        return v
-    return None
-
-
-def _bloom_dropped_blocks(
-    meta: dict, points: dict[str, set], typemap: dict[str, str]
-) -> frozenset:
-    """Block offsets whose BLOCK-tier bloom (sidecar ``bloom_blocks``:
-    shared geometry header + per-block per-column base64 bitmaps)
-    proves every probed value absent — the within-file complement of
-    the file tier: a kept 256 MB file scans only the blocks that may
-    hold the probed id. Conservative on every doubt: foreign tag,
-    geometry/bitmap-length mismatch, family drift, missing column or
-    block entry => the block is kept."""
-    import base64
-
+def _bloom_probes(
+    points: dict[str, set], typemap: dict[str, str]
+) -> dict[str, tuple[str, list[int]]]:
+    """col -> (type family, xxh64 of each point value's canonical text),
+    hashed once per plan. A column outside the typemap, or with any
+    value outside its family ('int' | 'str' — the value's str() could
+    differ from CAST AS STRING), is never probed."""
     from fourmc_spark.format.native import xxh64
 
-    bb = meta.get("bloom_blocks")
-    if not isinstance(bb, dict) or bb.get("algo") != BLOOM_ALGO or (
-        bb.get("seed") != BLOOM_SEED
-    ):
-        return frozenset()
-    bits, k = bb.get("bits"), bb.get("k")
-    fams = bb.get("fam")
-    if (
-        not isinstance(bits, int)
-        or not isinstance(k, int)
-        or isinstance(bits, bool)
-        or isinstance(k, bool)
-        or bits <= 0
-        or bits % 8
-        or not 1 <= k <= 64
-        or not isinstance(fams, dict)
-    ):
-        return frozenset()
-    # positions per probed column computed ONCE, reused for every block
-    col_pos: dict[str, list[list[int]] | None] = {}
+    probes = {}
     for col, vals in points.items():
         fam = typemap.get(col)
-        if fam is None or fams.get(col) != fam:
-            continue
-        pos_lists = []
-        for v in vals:
-            canon = _bloom_canon(v, fam)
-            if canon is None:
-                pos_lists = None  # un-probeable value: skip the column
-                break
-            h = xxh64(canon.encode("utf-8"), BLOOM_SEED)
-            pos_lists.append(list(bloom_positions(h, k, bits)))
-        if pos_lists:
-            col_pos[col] = pos_lists
-    if not col_pos:
-        return frozenset()
-    dropped = set()
-    for b in bb.get("blocks") or ():
-        c = b.get("c")
-        if not isinstance(c, dict):
-            continue
-        for col, pos_lists in col_pos.items():
-            b64 = c.get(col)
-            if not isinstance(b64, str):
-                continue
-            try:
-                bm = base64.b64decode(b64, validate=True)
-            except (TypeError, ValueError):
-                continue
-            if len(bm) * 8 != bits:
-                continue
-            if not any(
-                all((bm[p >> 3] >> (p & 7)) & 1 for p in pl)
-                for pl in pos_lists
-            ):
-                dropped.add(b.get("o"))
-                break
-    return frozenset(dropped)
+        if fam == "int":
+            ok = all(
+                isinstance(v, int) and not isinstance(v, bool) for v in vals
+            )
+        else:
+            ok = fam == "str" and all(isinstance(v, str) for v in vals)
+        if ok:
+            probes[col] = (
+                fam,
+                [xxh64(str(v).encode("utf-8"), BLOOM_SEED) for v in vals],
+            )
+    return probes
 
 
-def _bloom_file_pruned(
-    meta: dict, points: dict[str, set], typemap: dict[str, str]
-) -> bool:
-    """True iff some probed column's bloom proves EVERY point value
-    absent from the file. Conservative everywhere: missing bloom,
-    foreign algo/seed tag, build-vs-read type-family mismatch, value
-    whose type doesn't match the declared column family (its canonical
-    text could differ from CAST AS STRING) => NOT pruned."""
-    from fourmc_spark.format.native import xxh64
-
-    blooms = meta.get("bloom")
-    if not isinstance(blooms, dict):
+def _bloom_contract(spec) -> bool:
+    """A bloom spec or ``bloom_blocks`` header sealed under the
+    recognized tag, with a usable geometry."""
+    if not isinstance(spec, dict):
         return False
-    for col, vals in points.items():
-        fam = typemap.get(col)
-        if fam is None:
+    bits, k = spec.get("bits"), spec.get("k")
+    return (
+        (spec.get("algo"), spec.get("seed")) == (BLOOM_ALGO, BLOOM_SEED)
+        and type(bits) is int  # (a JSON bool is no geometry)
+        and type(k) is int
+        and bits > 0
+        and bits % 8 == 0
+        and 1 <= k <= 64
+    )
+
+
+def _summaries(
+    meta: dict, cols, probes: dict
+) -> Iterator[tuple[int | None, _Summary]]:
+    """Normalize a sidecar into summaries: first ``(None, file summary)``
+    from ``columns`` and ``bloom``, then ``(offset, block summary)`` per
+    block from ``blocks[].c`` and ``bloom_blocks.blocks[].c``. Reads the
+    stats of ``cols`` and the blooms of the probed columns only; a
+    malformed entry, a foreign bloom tag or geometry, or a bloom built
+    for another type family than the read schema's (spec ``fam`` at the
+    file tier, header ``fam`` map at the block tier) is left out. Lazy:
+    block entries are read only if the file summary was kept."""
+    fams = {col: fam for col, (fam, _) in probes.items()}
+    stats, blooms = {}, {}
+    columns = meta.get("columns")
+    if isinstance(columns, dict):
+        for col in cols:
+            st = columns.get(col)
+            if isinstance(st, dict):
+                stats[col] = (st.get("min"), st.get("max"), st.get("nulls"))
+    specs = meta.get("bloom")
+    if isinstance(specs, dict):
+        for col, fam in fams.items():
+            spec = specs.get(col)
+            if _bloom_contract(spec) and spec.get("fam") == fam:
+                blooms[col] = (spec.get("b64"), spec["bits"], spec["k"])
+    yield None, _Summary(stats, blooms)
+
+    blocks: dict = {}
+
+    def entries(bs):
+        for b in bs or ():
+            c = b.get("c") if isinstance(b, dict) else None
+            if isinstance(c, dict):
+                yield blocks.setdefault(b.get("o"), _Summary({}, {})), c
+
+    for s, c in entries(meta.get("blocks")):
+        for col in cols:
+            st = c.get(col)
+            if isinstance(st, (list, tuple)) and len(st) >= 2:
+                s.stats[col] = (st[0], st[1], st[2] if len(st) > 2 else None)
+    bb = meta.get("bloom_blocks")
+    if _bloom_contract(bb) and isinstance(bb.get("fam"), dict):
+        bcols = [col for col, fam in fams.items() if bb["fam"].get(col) == fam]
+        for s, c in entries(bb.get("blocks")):
+            for col in bcols:
+                if isinstance(c.get(col), str):
+                    s.blooms[col] = (c[col], bb["bits"], bb["k"])
+    yield from blocks.items()
+
+
+def _excluded(
+    s: _Summary, zone: dict[str, list], nullreq: dict[str, set], probes: dict
+) -> bool:
+    """True iff summary *s* proves that none of its rows can satisfy the
+    pushed conjunction: a zone bound its [min, max] excludes, a null-ness
+    requirement its counts rule out (IsNotNull on a column with no
+    non-null value, IsNull on one with no nulls), or a bloom that misses
+    every point value. Zone, then null, then bloom, stopping at the
+    first exclusion, so a bitmap is decoded only when the stats kept
+    the summary. Spark re-applies every filter post-scan, so an
+    exclusion can only remove provably-empty work."""
+    import base64
+
+    for col, bound in zone.items():
+        st = s.stats.get(col)
+        if (
+            st is not None
+            and (bound[0] is not None or bound[2] is not None)
+            and _range_excluded(st[0], st[1], bound)
+        ):
+            return True
+    for col, req in nullreq.items():
+        st = s.stats.get(col)
+        if st is not None and (
+            ("notnull" in req and st[0] is None and st[1] is None)
+            or ("null" in req and st[2] == 0)
+        ):
+            return True
+    for col, (_, hashes) in probes.items():
+        if col not in s.blooms:
             continue
-        decoded = _decode_bloom_spec(blooms.get(col), fam)
-        if decoded is None:
+        b64, bits, k = s.blooms[col]
+        try:
+            bm = base64.b64decode(b64, validate=True)
+        except (TypeError, ValueError):
             continue
-        bm, bits, k = decoded
-        any_hit = False
-        provable = True
-        for v in vals:
-            canon = _bloom_canon(v, fam)
-            if canon is None:
-                provable = False
-                break
-            h = xxh64(canon.encode("utf-8"), BLOOM_SEED)
-            if all(
-                (bm[p >> 3] >> (p & 7)) & 1
-                for p in bloom_positions(h, k, bits)
-            ):
-                any_hit = True
-                break
-        if provable and not any_hit:
+        if len(bm) * 8 == bits and not any(
+            all(bm[p >> 3] >> (p & 7) & 1 for p in bloom_positions(h, k, bits))
+            for h in hashes
+        ):
             return True
     return False
+
+
+def _sidecar_dropped(
+    meta: dict, zone: dict[str, list], nullreq: dict[str, set], probes: dict
+) -> frozenset | None:
+    """One rule for both tiers: None when the file summary is excluded
+    (the file is skipped), else the offsets of the excluded blocks —
+    the compressed block offsets the scan's ``offset`` column exposes."""
+    summaries = _summaries(meta, zone.keys() | nullreq.keys(), probes)
+    if _excluded(next(summaries)[1], zone, nullreq, probes):
+        return None
+    return frozenset(
+        o for o, s in summaries if _excluded(s, zone, nullreq, probes)
+    )
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"

@@ -82,43 +82,37 @@ class FourMcProtoReader(FourMcDataSourceReader):
     """Reuses the text source's block-aligned planning (S1/X4-X6); only the
     record loop differs: EB sync-marker resync instead of newline."""
 
+    source_name = "fourmcproto"
+
     def __init__(
         self, options, schema: StructType, cores: int | None = None
     ) -> None:
-        self.cores = cores
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("fourmcproto source requires a path")
-        self.max_partition_bytes = int(
-            options.get("maxpartitionbytes", 128 * 1024 * 1024)
-        )
-        from fourmc_spark.sources.datasource import DEFAULT_MAX_BLOCKS_PER_SPLIT
-
-        self.max_blocks_per_split = int(
-            options.get("maxblockspersplit", DEFAULT_MAX_BLOCKS_PER_SPLIT)
-        )
-        self.verify = str(options.get("verify", "true")).lower() != "false"
+        self._init_split_options(options, cores)
         self.proto_schema = _schema_from_options(options)
         self.columns = [f.name for f in schema.fields]
         # shared pruning state consumed by the inherited pushFilters()/
         # partitions(); every proto column is a PAYLOAD field from the
         # user's schema — including one legally named "offset", which
         # must never route into the compressed-block-offset pruning
-        # (it zone-prunes by VALUE like any other payload field)
-        self._init_pruning_state(options)
+        # (it zone-prunes by VALUE like any other payload field) — and
+        # the source has no hive partition columns
         self.offset_is_pseudo = False
+        self.pcols = []
         # value zone-map constraints (analyze_stats_proto sidecars) on
         # the scalar orderable payload fields; bool/bytes/repeated have
-        # no shared ordering with JSON stats and stay unpruned
+        # no shared ordering with JSON stats and stay unpruned. Bloom
+        # probes on scalar int/string payload fields: the decoded
+        # Python value's str() is the canonical text analyze_stats_proto
+        # hashed at build time (bloom_columns=...)
         from fourmc_spark.format.protobuf import (
             bloom_eligible_fields, zone_eligible_fields,
         )
 
-        self._zone_cols = frozenset(zone_eligible_fields(self.proto_schema))
-        # bloom probes on scalar int/string payload fields: the decoded
-        # Python value's str() is the canonical text analyze_stats_proto
-        # hashed at build time (bloom_columns=...)
-        self._bloom_typemap = bloom_eligible_fields(self.proto_schema)
+        self._init_pruning_state(
+            options,
+            zone_eligible_fields(self.proto_schema),
+            bloom_eligible_fields(self.proto_schema),
+        )
 
     def read(self, partition: FourMcInputPartition):
         import pyarrow as pa

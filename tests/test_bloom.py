@@ -21,8 +21,9 @@ from fourmc_spark.sources.datasource import (
     BLOOM_ALGO,
     BLOOM_SEED,
     FourMcDataSourceReader,
-    _bloom_file_pruned,
+    _bloom_probes,
     _parse_flat_ddl,
+    _sidecar_dropped,
     iter_slices,
 )
 
@@ -50,6 +51,12 @@ def _planned(d, filters):
     list(rd.pushFilters(filters))
     return {os.path.basename(p.path)
             for p in iter_slices(rd.partitions()) if p.path}
+
+
+def _file_pruned(meta, points, typemap) -> bool:
+    """The planner's file-tier decision for a bloom-only conjunction."""
+    probes = _bloom_probes(points, typemap)
+    return _sidecar_dropped(meta, {}, {}, probes) is None
 
 
 def _ids_per_file(spark, d):
@@ -240,25 +247,25 @@ def test_bloom_conservative_matrix(spark, tmp_path):
     assert _planned(d, [EqualTo(("k",), 999)]) == {"a.4mz"}
     # value type vs column family: str probe on a bigint column can't
     # prove absence (its canonical text may differ from CAST AS STRING)
-    assert not _bloom_file_pruned(
+    assert not _file_pruned(
         meta, {"k": {"0123"}}, {"k": "int", "name": "str"}
     )
     # ...while the matching family with an absent value does
-    assert _bloom_file_pruned(
+    assert _file_pruned(
         meta, {"k": {999}}, {"k": "int", "name": "str"}
     )
     # a column missing from the typemap is never probed
-    assert not _bloom_file_pruned(meta, {"k": {999}}, {})
+    assert not _file_pruned(meta, {"k": {999}}, {})
     # BUILD-vs-READ family drift: the spec was sealed for an int column,
     # a read schema declaring it string must not trust the bitmap (the
     # build could have hashed different canonical text for the same
     # data) — and a legacy spec with no fam at all is never probed
-    assert not _bloom_file_pruned(
+    assert not _file_pruned(
         meta, {"k": {"zzz"}}, {"k": "str", "name": "str"}
     )
     nofam = _json.loads(_json.dumps(meta))
     del nofam["bloom"]["k"]["fam"]
-    assert not _bloom_file_pruned(
+    assert not _file_pruned(
         nofam, {"k": {999}}, {"k": "int", "name": "str"}
     )
 
@@ -357,6 +364,79 @@ def test_block_tier_blooms_prune_within_files(spark, tmp_path):
         ).load(d)  # fresh relation per filter set (readInfo cache)
 
 
+def test_block_bloom_conservative_matrix(spark, tmp_path):
+    """The block tier's conservative matrix: a foreign algo or seed in
+    the bloom_blocks header, bits not a multiple of 8, one block's
+    bitmap of the wrong length, header fam drift against the read
+    schema, or a non-dict block entry => the block is SCANNED."""
+    from pyspark.sql.datasource import CaseInsensitiveDict, EqualTo
+
+    from fourmc_spark.operators.maintenance import analyze_bloom
+    from fourmc_spark.sources import datasource
+
+    d = str(tmp_path / "blcons")
+    df = spark.range(2000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("n"), F.col("id") % 7).alias("name"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+    (df.coalesce(1)
+       .select(F.to_json(F.struct("k", "name", "v")).alias("value"))
+       .write.format("fourmc").option("codec", "zstd")
+       .option("blocksize", 16 * 1024)
+       .mode("overwrite").save(d))
+    analyze_bloom(
+        spark, d, _DDL, ["k"], bits=1 << 14, k=5,
+        block_bits=1 << 12, block_k=4,
+    )
+    sc = sorted(_glob.glob(f"{d}/*.stats.json"))[0]
+    meta = _json.load(open(sc))
+    schema = _parse_flat_ddl(_DDL)
+    opts = CaseInsensitiveDict(
+        {"path": d, "jsonschema": _DDL, "maxblockspersplit": "1"}
+    )
+
+    def starts(filters):
+        datasource._SIDECAR_CACHE.clear()
+        rd = FourMcDataSourceReader(opts, schema)
+        list(rd.pushFilters(filters))
+        return {s.start for s in iter_slices(rd.partitions())}
+
+    def rewrite(mutate):
+        m = _json.loads(_json.dumps(meta))
+        mutate(m["bloom_blocks"])
+        with open(sc, "w") as f:
+            _json.dump(m, f)
+
+    probe = [EqualTo(("k",), 57)]
+    full = starts([])
+    kept = starts(probe)
+    assert 1 <= len(kept) < len(full)  # the block tier drops blocks
+    # the first block entry the probe dropped
+    i, victim = next(
+        (i, b["o"]) for i, b in enumerate(meta["bloom_blocks"]["blocks"])
+        if b["o"] not in kept
+    )
+    # header mutations: no block of the file is dropped
+    for mutate in (
+        lambda bb: bb.update({"algo": "sha1-str"}),
+        lambda bb: bb.update({"seed": 0}),
+        lambda bb: bb.update({"bits": bb["bits"] - 4}),
+        lambda bb: bb["fam"].update({"k": "str"}),
+    ):
+        rewrite(mutate)
+        assert starts(probe) == full
+    # block mutations: exactly that block comes back
+    for mutate in (
+        lambda bb: bb["blocks"][i]["c"].update({"k": "AAAA"}),
+        lambda bb: bb["blocks"][i].update({"c": [bb["blocks"][i]["c"]]}),
+    ):
+        rewrite(mutate)
+        assert starts(probe) == kept | {victim}
+    rewrite(lambda bb: None)
+    assert starts(probe) == kept
+
+
 def test_compact_carries_block_blooms(spark, tmp_path):
     """compact_blocks carries bloom_blocks by offset remap with the
     text seam rule; probes over the compacted tree stay exact."""
@@ -433,7 +513,7 @@ def test_bloom_never_false_negative_property():
 
     from fourmc_spark.format.native import xxh64
     from fourmc_spark.sources.datasource import (
-        _bloom_file_pruned, bloom_positions, seal_bloom_spec,
+        bloom_positions, seal_bloom_spec,
     )
 
     @settings(max_examples=150, deadline=None)
@@ -467,7 +547,7 @@ def test_bloom_never_false_negative_property():
             }
             for v in sub:
                 # a sealed value must NEVER prune its own file
-                assert not _bloom_file_pruned(
+                assert not _file_pruned(
                     meta, {"c": {v}}, {"c": fam}
                 )
 

@@ -291,7 +291,8 @@ def test_bloom_carry_or_merge_preserves_membership(sets):
     from fourmc_spark.format.native import xxh64
     from fourmc_spark.operators.maintenance import _merge_carried_blooms
     from fourmc_spark.sources.datasource import (
-        BLOOM_SEED, _bloom_file_pruned, bloom_positions, seal_bloom_spec,
+        BLOOM_SEED, _bloom_probes, _sidecar_dropped, bloom_positions,
+        seal_bloom_spec,
     )
 
     bits, k = 1 << 10, 3
@@ -309,7 +310,8 @@ def test_bloom_carry_or_merge_preserves_membership(sets):
     meta = {"bloom": merged}
     for vals in sets:
         for v in vals:
-            assert not _bloom_file_pruned(meta, {"c": {v}}, {"c": "int"})
+            probes = _bloom_probes({"c": {v}}, {"c": "int"})
+            assert _sidecar_dropped(meta, {}, {}, probes) is not None
 
 
 @given(v=st.text(min_size=1, max_size=12))
@@ -326,3 +328,103 @@ def test_next_prefix_is_exclusive_upper_bound(v):
     for suffix in ("", "a", "\x00", "\U0010ffff" * 2, v):
         assert v + suffix < hi
     assert v < hi
+
+
+_PT_INT = st.one_of(st.none(), st.integers(-6, 6))
+_PT_STR = st.one_of(st.none(), st.text("abc", max_size=3))
+
+
+def _pt_bound(vals):
+    side = st.one_of(st.none(), vals)
+    return st.tuples(side, st.booleans(), side, st.booleans()).map(list)
+
+
+@given(
+    rows=st.lists(st.tuples(_PT_INT, _PT_STR), max_size=12),
+    zone_a=st.one_of(st.none(), _pt_bound(st.integers(-6, 6))),
+    zone_b=st.one_of(st.none(), _pt_bound(st.text("abc", max_size=3))),
+    null_a=st.sets(st.sampled_from(["null", "notnull"])),
+    null_b=st.sets(st.sampled_from(["null", "notnull"])),
+    pts_a=st.one_of(st.none(), st.sets(st.integers(-6, 6), max_size=3)),
+    pts_b=st.one_of(
+        st.none(), st.sets(st.text("abc", max_size=3), max_size=3)
+    ),
+    bits=st.sampled_from([64, 128, 1024]),
+    k=st.integers(1, 4),
+)
+@settings(max_examples=300, deadline=None)
+def test_sidecar_tiers_agree_and_exclusion_is_sound(
+    rows, zone_a, zone_b, null_a, null_b, pts_a, pts_b, bits, k
+):
+    """A sidecar whose file summary and single block summary describe
+    the same values gets the same decision at both tiers, under any
+    mix of zone bounds, null-ness requirements and bloom point sets —
+    and an exclusion means no row satisfies the conjunction (a false
+    exclusion is silent row loss)."""
+    import base64
+
+    from fourmc_spark.format.native import xxh64
+    from fourmc_spark.sources.datasource import (
+        BLOOM_SEED, _bloom_probes, _excluded, _sidecar_dropped,
+        _summaries, bloom_positions, seal_bloom_blocks_header,
+        seal_bloom_spec,
+    )
+
+    fams = {"a": "int", "b": "str"}
+    cols = {"a": [r[0] for r in rows], "b": [r[1] for r in rows]}
+    columns, block_stats, blooms, block_blooms = {}, {}, {}, {}
+    for col, vals in cols.items():
+        present = [v for v in vals if v is not None]
+        mn = min(present) if present else None
+        mx = max(present) if present else None
+        nulls = len(vals) - len(present)
+        columns[col] = {"min": mn, "max": mx, "nulls": nulls}
+        block_stats[col] = [mn, mx, nulls]
+        bm = bytearray(bits // 8)
+        for v in present:
+            h = xxh64(str(v).encode("utf-8"), BLOOM_SEED)
+            for p in bloom_positions(h, k, bits):
+                bm[p >> 3] |= 1 << (p & 7)
+        blooms[col] = seal_bloom_spec(bytes(bm), bits, k, fams[col])
+        block_blooms[col] = base64.b64encode(bytes(bm)).decode("ascii")
+    meta = {
+        "columns": columns,
+        "blocks": [{"o": 4, "c": block_stats}],
+        "bloom": blooms,
+        "bloom_blocks": seal_bloom_blocks_header(
+            bits, k, fams, [{"o": 4, "c": block_blooms}]
+        ),
+    }
+    zone = {c: z for c, z in (("a", zone_a), ("b", zone_b)) if z}
+    nullreq = {c: r for c, r in (("a", null_a), ("b", null_b)) if r}
+    points = {c: p for c, p in (("a", pts_a), ("b", pts_b)) if p is not None}
+    probes = _bloom_probes(points, fams)
+
+    (_, whole), (off, block) = _summaries(meta, ["a", "b"], probes)
+    assert off == 4
+    file_out = _excluded(whole, zone, nullreq, probes)
+    assert file_out == _excluded(block, zone, nullreq, probes)
+    dropped = _sidecar_dropped(meta, zone, nullreq, probes)
+    assert (dropped is None) == file_out and dropped in (None, frozenset())
+
+    def satisfies(row):
+        for col, v in zip(("a", "b"), row):
+            if col in zone:
+                lo, lo_inc, hi, hi_inc = zone[col]
+                if v is None and (lo is not None or hi is not None):
+                    return False
+                if lo is not None and (v < lo or (v == lo and not lo_inc)):
+                    return False
+                if hi is not None and (v > hi or (v == hi and not hi_inc)):
+                    return False
+            req = nullreq.get(col, ())
+            if ("null" in req and v is not None) or (
+                "notnull" in req and v is None
+            ):
+                return False
+            if col in points and v not in points[col]:
+                return False
+        return True
+
+    if file_out:
+        assert not any(satisfies(r) for r in rows)

@@ -14,6 +14,13 @@ the physical plans Catalyst should pick at 100 TB (see PLANS.md).
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import json
+import os
+import shutil
+import tempfile
+import uuid
 from typing import Callable
 
 import pandas as pd
@@ -2827,6 +2834,223 @@ def stream_sessionize_q(spark, sf):
             spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
+# ---------------------------------------------------------------------
+# Shared steps of the sealed-log lifecycle queries (sql_4mc_*,
+# proto_4mc_*, maintenance_compact_*, stream_4mc_*, stream_proto_sink).
+# Each query stages events as sealed 4mc/4mz containers in a scratch dir,
+# optionally seals sidecars (ANALYZE or write-time stats) and plants a
+# poison file, then reads the dir back through the fourmc / fourmcproto
+# scan and aggregates. Every query is a straight-line sequence of these
+# steps, so each Spark action it takes stays visible in its own body.
+# ---------------------------------------------------------------------
+
+# the event columns every lifecycle fixture carries: as the typed-scan
+# DDL (jsonschema / csvschema / statsschema) and as the protobuf field
+# list of the fourmcproto twins
+_EV_COLS = ("event_id", "user_id", "event_type", "value")
+_EV_DDL = "event_id bigint, user_id bigint, event_type string, value double"
+_EV_PROTO_FIELDS = [
+    {"number": 1, "name": "event_id", "type": "int64"},
+    {"number": 2, "name": "user_id", "type": "int64"},
+    {"number": 3, "name": "event_type", "type": "string"},
+    {"number": 4, "name": "value", "type": "double"},
+]
+_EV_PROTO_JSON = json.dumps(_EV_PROTO_FIELDS)
+
+# the 4mc stream-source gate queries: events ride as JSON lines in sealed
+# .4mz files (ts as a formatted string so from_json rebuilds exact
+# micros), then come back as a typed stream
+_EV_JSON_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+                   "event_type STRING, value DOUBLE")
+
+
+@contextlib.contextmanager
+def _scratch_dir(spark, prefix: str):
+    """Register the fourmc sources (idempotent — a caller's session may
+    not have gone through get_spark) and yield a fresh temp dir, removed
+    when the block exits, whether it returns or raises."""
+    from fourmc_spark.session import register_fourmc
+
+    register_fourmc(spark)
+    d = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _events(spark, sf: str, *cols) -> DataFrame:
+    """The events table narrowed to ``cols`` (default ``_EV_COLS``)."""
+    return _t(spark, sf, "events").select(*(cols or _EV_COLS))
+
+
+def _ts_text():
+    # ts at FULL microsecond precision (to_json renders millis), so a
+    # parse back hash-matches the parquet oracle
+    return F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts")
+
+
+def _id_ranges(spark, sf: str, n: int) -> DataFrame:
+    """The events range-partitioned on event_id into n disjoint
+    partitions — one sealed file each on write."""
+    return _range_partition_fixture(
+        _events(spark, sf), n, "event_id", f"{sf}/events.parquet"
+    )
+
+
+def _lines(df: DataFrame, encode=F.to_json) -> DataFrame:
+    """One text line per row: ``encode`` (to_json / to_csv) of every
+    column, as the ``value`` column the fourmc sink writes."""
+    return df.select(encode(F.struct(*df.columns)).alias("value"))
+
+
+def _from_json(df: DataFrame, schema: str = _EV_JSON_SCHEMA) -> DataFrame:
+    return df.select(F.from_json("value", schema).alias("_r")).select("_r.*")
+
+
+def _save(
+    df: DataFrame, path: str, proto: bool = False, level: str = "medium",
+    **options,
+) -> None:
+    """Overwrite ``path`` with ``df`` as zstd sealed containers: text
+    lines through fourmc, or the event columns as protobuf records
+    through fourmcproto."""
+    if proto:
+        w = df.write.format("fourmcproto").option("fields", _EV_PROTO_JSON)
+    else:
+        w = df.write.format("fourmc")
+    (w.option("codec", "zstd").option("level", level).options(**options)
+     .mode("overwrite").save(path))
+
+
+def _scan(spark, path: str, model: str = "json") -> DataFrame:
+    """Typed scan of the event columns: ``json`` or ``csv`` lines in
+    fourmc containers, or ``proto`` records through fourmcproto."""
+    if model == "proto":
+        r = spark.read.format("fourmcproto").option("fields", _EV_PROTO_JSON)
+    else:
+        r = spark.read.format("fourmc").option(f"{model}schema", _EV_DDL)
+    return r.load(path)
+
+
+def _stream_events(spark, sf: str, root: str, proto: bool = False,
+                   **options) -> str:
+    """Stream the event columns from parquet through writeStream into
+    sealed zstd files — JSON lines through fourmc, protobuf records
+    through fourmcproto — drain with availableNow, and return the
+    output dir (``root``/out; the checkpoint is ``root``/ckpt)."""
+    from fourmc_spark.streaming import read_events_stream
+
+    sdf = read_events_stream(spark, f"{sf}/events.parquet").select(*_EV_COLS)
+    if proto:
+        w = sdf.writeStream.format("fourmcproto").option(
+            "fields", _EV_PROTO_JSON
+        )
+    else:
+        w = _lines(sdf).writeStream.format("fourmc")
+    out_dir = f"{root}/out"
+    q = (
+        w.option("codec", "zstd").option("level", "medium")
+        .options(**options)
+        .option("path", out_dir).option("checkpointLocation", f"{root}/ckpt")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return out_dir
+
+
+def _analyze_proto(spark, path: str, **kw) -> None:
+    """analyze_stats_proto over the fourmcproto event fields."""
+    from fourmc_spark.format.protobuf import ProtoField
+    from fourmc_spark.operators.maintenance import analyze_stats_proto
+
+    analyze_stats_proto(
+        spark, path,
+        fields=tuple(ProtoField(**f) for f in _EV_PROTO_FIELDS), **kw,
+    )
+
+
+def _compact(spark, staged: str, out: str, n: int) -> dict:
+    """compact_blocks ``staged`` into ``out`` with a target of 1/n of the
+    staged bytes per output; returns its stats."""
+    from fourmc_spark.operators.maintenance import compact_blocks
+
+    total = sum(os.path.getsize(p) for p in glob.glob(f"{staged}/part-*.4mz"))
+    return compact_blocks(spark, staged, out, target_bytes=max(1, total // n))
+
+
+def _plant_poison(
+    d: str, columns: dict | None = None, bloom: tuple[int, int] | None = None,
+    version: int = 2,
+) -> None:
+    """Plant ``poison.4mz`` in ``d``: garbage bytes that are no 4mc
+    container, sealed with a valid, size-matching sidecar that excludes
+    them — zone maps ``columns`` (default: event_id in [10^9, 2*10^9],
+    disjoint from every lifecycle predicate), or with ``bloom=(bits, k)``
+    an all-zero event_id bitmap under the real contract tag, so every
+    probe tests absent. Planning that ever opened the file would throw
+    BadHeaderError: a query over ``d`` succeeds only if the sidecar
+    pruned the file before any footer read."""
+    from fourmc_spark.sources.datasource import STATS_SUFFIX, seal_bloom_spec
+
+    poison = os.path.join(d, "poison.4mz")
+    with open(poison, "wb") as f:
+        f.write(b"NOT-A-4MC-CONTAINER" * 16)
+    meta = {"version": version, "size": os.path.getsize(poison)}
+    if bloom is not None:
+        bits, k = bloom
+        meta["bloom"] = {
+            # all-zero bitmap: every probe provably absent
+            "event_id": seal_bloom_spec(bytes(bits // 8), bits, k, "int"),
+        }
+    else:
+        meta["rows"] = 1
+        meta["columns"] = columns or {
+            "event_id": {"min": 10**9, "max": 2 * 10**9, "nulls": 0}
+        }
+    with open(poison + STATS_SUFFIX, "w") as f:
+        json.dump(meta, f)
+
+
+def _event_totals(
+    df: DataFrame, key: str = "event_type", value_sum: bool = True
+) -> DataFrame:
+    """Per-``key`` row count, user_id sum, optional rounded value sum and
+    event_id range, ordered by ``key``."""
+    aggs = [
+        F.count("*").cast("long").alias("cnt"),
+        F.sum("user_id").cast("long").alias("user_sum"),
+    ]
+    if value_sum:
+        aggs.append(F.round(F.sum("value"), 2).alias("value_sum"))
+    aggs += [
+        F.min("event_id").cast("long").alias("min_event"),
+        F.max("event_id").cast("long").alias("max_event"),
+    ]
+    return df.groupBy(key).agg(*aggs).orderBy(key)
+
+
+def _event_rows(df: DataFrame, ids: list[int]) -> DataFrame:
+    """The event columns of the rows whose event_id is in ``ids`` (a
+    pushed IN-list: the scan turns it into bloom point probes)."""
+    return (
+        df.where(F.col("event_id").isin(ids))
+        .select(*_EV_COLS).orderBy("event_id")
+    )
+
+
+def _stage_events_4mz(spark, sf: str, d: str, n_files: int) -> None:
+    ev = _events(spark, sf, "event_id", _ts_text(), "user_id", "event_type",
+                 "value")
+    _save(_lines(ev).repartition(n_files), d, level="fast")
+
+
+def _events_json_stream(spark, path: str, **options) -> DataFrame:
+    return _from_json(
+        spark.readStream.format("fourmc").options(**options).load(path)
+    )
+
+
 @query(
     "proto_4mc_roundtrip",
     """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
@@ -2844,51 +3068,9 @@ def proto_4mc_roundtrip_q(spark, sf):
     # aggregated; the result must equal the batch oracle exactly, so a
     # varint/zigzag/field-framing bug anywhere in the round trip breaks
     # the hash match.
-    import json as _json
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    fields = _json.dumps(
-        [
-            {"number": 1, "name": "event_id", "type": "int64"},
-            {"number": 2, "name": "user_id", "type": "int64"},
-            {"number": 3, "name": "event_type", "type": "string"},
-            {"number": 4, "name": "value", "type": "double"},
-        ]
-    )
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-proto-rt-")
-    try:
-        (
-            ev.write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-proto-rt-") as d:
+        _save(_events(spark, sf), d, proto=True)
+        return _detach(_event_totals(_scan(spark, d, "proto")))
 
 
 @query(
@@ -2913,83 +3095,14 @@ def proto_4mc_zonemap_scan_q(spark, sf):
     # scalar payload fields. Same poison proof as the text twins: a
     # garbage container with a valid out-of-range sidecar is planted —
     # green iff file pruning engaged before any footer read.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    register_fourmc(spark)
-    field_list = [
-        {"number": 1, "name": "event_id", "type": "int64"},
-        {"number": 2, "name": "user_id", "type": "int64"},
-        {"number": 3, "name": "event_type", "type": "string"},
-        {"number": 4, "name": "value", "type": "double"},
-    ]
-    fields = _json.dumps(field_list)
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-proto-zm-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
+    with _scratch_dir(spark, "fourmc-proto-zm-") as d:
+        _save(_id_ranges(spark, sf, 6), d, proto=True)
+        _analyze_proto(spark, d)
+        _plant_poison(d)
+        back = _scan(spark, d, "proto").where(
+            F.col("event_id").between(1500, 3099)
         )
-        from fourmc_spark.format.protobuf import ProtoField
-
-        analyze_stats_proto(
-            spark, d,
-            fields=tuple(
-                ProtoField(f["number"], f["name"], f["type"])
-                for f in field_list
-            ),
-        )
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-            .where(F.col("event_id").between(1500, 3099))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -3013,76 +3126,15 @@ def proto_4mc_bloom_scan_q(spark, sf):
     # proof: a garbage container with an all-zero bloom under the real
     # contract tag — green iff the probe pruned it before any footer
     # read.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
-
-    register_fourmc(spark)
-    field_list = [
-        {"number": 1, "name": "event_id", "type": "int64"},
-        {"number": 2, "name": "user_id", "type": "int64"},
-        {"number": 3, "name": "event_type", "type": "string"},
-        {"number": 4, "name": "value", "type": "double"},
-    ]
-    fields = _json.dumps(field_list)
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
     bits, k = 1 << 18, 6
-    d = tempfile.mkdtemp(prefix="fourmc-proto-bloom-")
-    try:
-        (
-            ev.repartition(6)  # UNCLUSTERED: the zone tier keeps every file
-            .write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
+    with _scratch_dir(spark, "fourmc-proto-bloom-") as d:
+        # UNCLUSTERED: the zone tier keeps every file
+        _save(_events(spark, sf).repartition(6), d, proto=True)
+        _analyze_proto(
+            spark, d, bloom_columns=["event_id"], bloom_bits=bits, bloom_k=k
         )
-        from fourmc_spark.format.protobuf import ProtoField
-
-        analyze_stats_proto(
-            spark, d,
-            fields=tuple(
-                ProtoField(f["number"], f["name"], f["type"])
-                for f in field_list
-            ),
-            bloom_columns=["event_id"], bloom_bits=bits, bloom_k=k,
-        )
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-            .where(F.col("event_id").isin([9, 230, 615]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(back)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        _plant_poison(d, bloom=(bits, k))
+        return _detach(_event_rows(_scan(spark, d, "proto"), [9, 230, 615]))
 
 
 @query(
@@ -3108,68 +3160,16 @@ def proto_4mc_zonemap_blocks_scan_q(spark, sf):
     # container block must still complete (split spillover), and
     # records OWNED by a dropped block must not survive via their
     # spill bytes.
-    import json as _json
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    field_list = [
-        {"number": 1, "name": "event_id", "type": "int64"},
-        {"number": 2, "name": "user_id", "type": "int64"},
-        {"number": 3, "name": "event_type", "type": "string"},
-        {"number": 4, "name": "value", "type": "double"},
-    ]
-    fields = _json.dumps(field_list)
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-proto-zmb-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 2, "event_id", f"{sf}/events.parquet"
-            )
-            .sortWithinPartitions("event_id")
-            .write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 8 * 1024)
-            .option("recordsperblock", 25)
-            .mode("overwrite").save(d)
+    with _scratch_dir(spark, "fourmc-proto-zmb-") as d:
+        _save(
+            _id_ranges(spark, sf, 2).sortWithinPartitions("event_id"), d,
+            proto=True, blocksize=8 * 1024, recordsperblock=25,
         )
-        from fourmc_spark.format.protobuf import ProtoField
-
-        analyze_stats_proto(
-            spark, d,
-            fields=tuple(
-                ProtoField(f["number"], f["name"], f["type"])
-                for f in field_list
-            ),
-            blocks=True,
+        _analyze_proto(spark, d, blocks=True)
+        back = _scan(spark, d, "proto").where(
+            F.col("event_id").between(900, 2499)
         )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-            .where(F.col("event_id").between(900, 2499))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -3193,56 +3193,9 @@ def stream_proto_sink_q(spark, sf):
     # stream_4mc_sink the way proto_4mc_roundtrip twins
     # stream_4mc_tumbling. Scale shape: one sealed file per task per
     # micro-batch, no driver data path.
-    import json as _json
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    fields = _json.dumps(
-        [
-            {"number": 1, "name": "event_id", "type": "int64"},
-            {"number": 2, "name": "user_id", "type": "int64"},
-            {"number": 3, "name": "event_type", "type": "string"},
-            {"number": 4, "name": "value", "type": "double"},
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="fourmc-proto-stream-")
-    out_dir, ckpt = f"{root}/out", f"{root}/ckpt"
-    try:
-        from fourmc_spark.streaming import read_events_stream
-
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        q = (
-            sdf.writeStream.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(out_dir)
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-proto-stream-") as root:
+        out_dir = _stream_events(spark, sf, root, proto=True)
+        return _detach(_event_totals(_scan(spark, out_dir, "proto")))
 
 
 @query(
@@ -3284,14 +3237,8 @@ def sql_4mc_pruned_scan_q(spark, sf):
     # (maxpartitionbytes splits), and the cutoff is a FOOTER-ONLY read
     # (scan_file_info: one tail read, no data scan), the same metadata
     # any reader of the file holds.
-    import glob as _glob
-    import shutil
-    import tempfile
-
     from fourmc_spark.format.reader import scan_file_info
-    from fourmc_spark.session import register_fourmc
 
-    register_fourmc(spark)
     ev = _t(spark, sf, "events")
     lines = ev.select(
         F.concat_ws(
@@ -3302,15 +3249,11 @@ def sql_4mc_pruned_scan_q(spark, sf):
         ).alias("value"),
         "event_id",
     )
-    d = tempfile.mkdtemp(prefix="fourmc-sql-scan-")
-    try:
-        (
+    with _scratch_dir(spark, "fourmc-sql-scan-") as d:
+        _save(
             lines.repartition(1).sortWithinPartitions("event_id")
-            .select("value")
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 4096)
-            .mode("overwrite").save(d)
+            .select("value"),
+            d, blocksize=4096,
         )
         n = ev.count()
         # skip floor of 128: at skip=0 the Spark filter would keep line 0
@@ -3318,7 +3261,7 @@ def sql_4mc_pruned_scan_q(spark, sf):
         # `event_id > 0` drops it; clamping to one full block keeps the
         # two sides equivalent at ANY table size (<=128 rows -> both empty)
         skip = max(128, ((n + 127) // 128) // 2 * 128)
-        (path,) = _glob.glob(f"{d}/part-*.4mz")
+        (path,) = glob.glob(f"{d}/part-*.4mz")
         _, fsize, offsets = scan_file_info(path)  # footer-only tail read
         jcut = skip // 128
         cutoff = offsets[jcut] if jcut < len(offsets) else fsize
@@ -3327,24 +3270,12 @@ def sql_4mc_pruned_scan_q(spark, sf):
             .option("maxpartitionbytes", 65536).load(d)
             .where(F.col("offset") >= cutoff)  # pushed -> blocks pruned
         )
-        out = (
-            back.select(
-                F.substring("value", 1, 10).cast("long").alias("event_id"),
-                F.substring("value", 12, 10).cast("long").alias("user_id"),
-                F.trim(F.substring("value", 23, 9)).alias("event_type"),
-            )
-            .groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
+        parsed = back.select(
+            F.substring("value", 1, 10).cast("long").alias("event_id"),
+            F.substring("value", 12, 10).cast("long").alias("user_id"),
+            F.trim(F.substring("value", 23, 9)).alias("event_type"),
         )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(parsed, value_sum=False))
 
 
 @query(
@@ -3382,12 +3313,6 @@ def sql_4mc_file_pruned_scan_q(spark, sf):
     # Scale shape: pruning cost is O(files) path-string checks on the
     # driver — no data read, no footer read for pruned files; the kept
     # files still split by maxpartitionbytes, so the scan stays parallel.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
     ev = _t(spark, sf, "events")
     n = ev.count()
     step = (n + 7) // 8
@@ -3396,38 +3321,20 @@ def sql_4mc_file_pruned_scan_q(spark, sf):
         F.expr(f"CAST(pmod((event_id - 1) DIV {step}, 8) AS STRING)")
         .alias("bucket"),
     )
-    d = tempfile.mkdtemp(prefix="fourmc-file-prune-")
-    try:
-        (
-            lines.write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("partitionby", "bucket")
-            .mode("overwrite").save(d)
-        )
+    with _scratch_dir(spark, "fourmc-file-prune-") as d:
+        _save(lines, d, partitionby="bucket")
         back = (
             spark.read.format("fourmc")
             .option("partitioncolumns", "bucket").load(d)
             # pushed In filter -> even-bucket files pruned at planning
             .where(F.col("bucket").isin(["1", "3", "5", "7"]))
         )
-        out = (
-            back.select(
-                F.col("bucket").cast("long").alias("bucket"),
-                F.split("value", ",").getItem(0).cast("long").alias("event_id"),
-                F.split("value", ",").getItem(1).cast("long").alias("user_id"),
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("bucket")
+        parsed = back.select(
+            F.col("bucket").cast("long").alias("bucket"),
+            F.split("value", ",").getItem(0).cast("long").alias("event_id"),
+            F.split("value", ",").getItem(1).cast("long").alias("user_id"),
         )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(parsed, "bucket", value_sum=False))
 
 
 @query(
@@ -3459,68 +3366,14 @@ def sql_4mc_zonemap_scan_q(spark, sf):
     # succeeds iff the zone map excluded it before any footer read.
     # Conservative-safety twin pins live in
     # tests/test_datasource.py (stale/missing sidecars never prune).
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
 
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-zonemap-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        analyze_stats(spark, d, ddl)
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 1,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").between(1200, 2799))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-zonemap-") as d:
+        _save(_lines(_id_ranges(spark, sf, 6)), d)
+        analyze_stats(spark, d, _EV_DDL)
+        _plant_poison(d, version=1)
+        back = _scan(spark, d).where(F.col("event_id").between(1200, 2799))
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -3547,50 +3400,14 @@ def sql_4mc_zonemap_blocks_scan_q(spark, sf):
     # complete (split spillover), and a line OWNED by a dropped block
     # must not survive via its spill bytes. Partition-count pins:
     # tests/test_datasource.py::test_block_zone_maps_prune_within_file.
-    import shutil
-    import tempfile
-
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
 
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-zonemap-blk-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 2, "event_id", f"{sf}/events.parquet"
-            )
-            .sortWithinPartitions("event_id")
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 16 * 1024)
-            .mode("overwrite").save(d)
-        )
-        analyze_stats(spark, d, ddl, blocks=True)
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").between(800, 1999))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-zonemap-blk-") as d:
+        ev = _id_ranges(spark, sf, 2).sortWithinPartitions("event_id")
+        _save(_lines(ev), d, blocksize=16 * 1024)
+        analyze_stats(spark, d, _EV_DDL, blocks=True)
+        back = _scan(spark, d).where(F.col("event_id").between(800, 1999))
+        return _detach(_event_totals(back))
 
 
 def _bpe_learn_sql(n_merges: int) -> str:
@@ -5045,38 +4862,6 @@ def stream_cdc_apply_q(spark, sf):
         shutil.rmtree(d, ignore_errors=True)
 
 
-# shared scaffold of the 4mc stream-source gate queries: events ride as
-# JSON lines in sealed .4mz files (ts as a formatted string so from_json
-# rebuilds exact micros), then come back as a typed stream
-_EV_JSON_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-                   "event_type STRING, value DOUBLE")
-
-
-def _stage_events_4mz(spark, sf: str, d: str, n_files: int) -> None:
-    ev = _t(spark, sf, "events").select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id", "event_type", "value",
-    )
-    (
-        ev.select(F.to_json(F.struct(*ev.columns)).alias("value"))
-        .repartition(n_files)
-        .write.format("fourmc").option("codec", "zstd")
-        .option("level", "fast").mode("overwrite").save(d)
-    )
-
-
-def _events_json_stream(spark, path: str, **options) -> DataFrame:
-    reader = spark.readStream.format("fourmc")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return (
-        reader.load(path)
-        .select(F.from_json("value", _EV_JSON_SCHEMA).alias("_r"))
-        .select("_r.*")
-    )
-
-
 @query(
     "stream_4mc_tumbling",
     """SELECT date_trunc('hour', ts) AS win_start, event_type,
@@ -5091,24 +4876,15 @@ def stream_4mc_tumbling_q(spark, sf):
     # must equal the batch oracle exactly, proving the stream source
     # loses/duplicates nothing and the whole JSON+timestamp round trip
     # is value-exact.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import tumbling_counts
 
-    register_fourmc(spark)  # idempotent — the driver's session may not
-    # have gone through get_spark
-    d = tempfile.mkdtemp(prefix="fourmc-stream4mc-")
-    try:
+    with _scratch_dir(spark, "fourmc-stream4mc-") as d:
         _stage_events_4mz(spark, sf, d, n_files=3)
         sdf = _events_json_stream(spark, d)
         out = _run_stream(
             tumbling_counts(sdf, window="1 hour"), src=d
         ).orderBy("win_start", "event_type")
         return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -5133,67 +4909,11 @@ def sql_4mc_sinkstats_scan_q(spark, sf):
     # both hash-match the batch oracle (sink-computed stats that were
     # too NARROW would prune real rows and break the hash) and survive
     # the poison (proving pruning engaged before any footer read).
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-sinkstats-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("statsschema", ddl)
-            .mode("overwrite").save(d)
-        )
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").between(400, 1599))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-sinkstats-") as d:
+        _save(_lines(_id_ranges(spark, sf, 6)), d, statsschema=_EV_DDL)
+        _plant_poison(d)
+        back = _scan(spark, d).where(F.col("event_id").between(400, 1599))
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -5227,60 +4947,31 @@ def sql_4mc_zonemap_ts_scan_q(spark, sf):
     # any footer read. ts serializes at FULL microsecond precision
     # (date_format pattern, not to_json's millis default) so the
     # typed-scan values hash-match the parquet oracle exactly.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
 
-    register_fourmc(spark)
     ddl = ("ts timestamp, event_id bigint, user_id bigint, "
            "event_type string, value double")
-    ev = _t(spark, sf, "events").select(
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "event_id", "user_id", "event_type", "value",
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-zonemap-ts-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "ts", f"{sf}/events.parquet",
-                # the frame carries ts as a FORMATTED STRING; bucket on
-                # its instant micros (exact integer math), bounds from
-                # the footer's timestamp stats. Non-UTC parse would
-                # only shift bucket edges, never results.
-                key=F.unix_micros(F.to_timestamp("ts")),
-            )
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
+    with _scratch_dir(spark, "fourmc-zonemap-ts-") as d:
+        ev = _range_partition_fixture(
+            _events(spark, sf, _ts_text(), *_EV_COLS),
+            6, "ts", f"{sf}/events.parquet",
+            # the frame carries ts as a FORMATTED STRING; bucket on
+            # its instant micros (exact integer math), bounds from
+            # the footer's timestamp stats. Non-UTC parse would
+            # only shift bucket edges, never results.
+            key=F.unix_micros(F.to_timestamp("ts")),
         )
+        _save(_lines(ev), d)
         analyze_stats(spark, d, ddl)
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        # 2030-01-01 .. 2030-01-02 as epoch micros:
-                        # disjoint from the Jan-2024 predicate window
-                        "ts": {
-                            "min": 1893456000000000,
-                            "max": 1893542400000000,
-                            "nulls": 0,
-                        }
-                    },
-                },
-                f,
-            )
+        _plant_poison(d, columns={
+            # 2030-01-01 .. 2030-01-02 as epoch micros:
+            # disjoint from the Jan-2024 predicate window
+            "ts": {
+                "min": 1893456000000000,
+                "max": 1893542400000000,
+                "nulls": 0,
+            }
+        })
         back = (
             spark.read.format("fourmc")
             .option("jsonschema", ddl).load(d)
@@ -5289,20 +4980,7 @@ def sql_4mc_zonemap_ts_scan_q(spark, sf):
                 & (F.col("ts") < "2024-01-20 00:00:00")
             )
         )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -5328,79 +5006,18 @@ def maintenance_compact_zonemap_q(spark, sf):
     # block offset, or an over-merged file tier breaks the hash. A
     # poison file (garbage bytes + valid out-of-range sidecar) planted
     # in the compacted dir proves file-tier pruning engages end-to-end.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
+    from fourmc_spark.operators.maintenance import analyze_stats
 
-    from fourmc_spark.operators.maintenance import analyze_stats, compact_blocks
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    root = tempfile.mkdtemp(prefix="fourmc-compact-zm-")
-    staged, out = f"{root}/staged", f"{root}/compact"
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .sortWithinPartitions("event_id")
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 16 * 1024)
-            .mode("overwrite").save(staged)
-        )
-        analyze_stats(spark, staged, ddl)
-        import glob as _glob
-        total = sum(
-            os.path.getsize(p) for p in _glob.glob(f"{staged}/part-*.4mz")
-        )
-        stats = compact_blocks(
-            spark, staged, out, target_bytes=max(1, total // 2)
-        )
+    with _scratch_dir(spark, "fourmc-compact-zm-") as root:
+        staged, out = f"{root}/staged", f"{root}/compact"
+        ev = _id_ranges(spark, sf, 6).sortWithinPartitions("event_id")
+        _save(_lines(ev), staged, blocksize=16 * 1024)
+        analyze_stats(spark, staged, _EV_DDL)
+        stats = _compact(spark, staged, out, 2)
         assert stats["stats_carried"] == stats["outputs"], stats
-        poison = os.path.join(out, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out)
-            .where(F.col("event_id").between(2000, 3599))
-        )
-        agg = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(agg)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        _plant_poison(out)
+        back = _scan(spark, out).where(F.col("event_id").between(2000, 3599))
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -5433,60 +5050,15 @@ def sql_4mc_bloom_scan_q(spark, sf):
     # red. Conservative-safety twins (missing/foreign-tagged blooms
     # never prune; type-mismatched values never prune) live in
     # tests/test_bloom.py.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
     from fourmc_spark.operators.maintenance import analyze_bloom
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
 
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
     bits, k = 1 << 18, 6
-    d = tempfile.mkdtemp(prefix="fourmc-bloom-")
-    try:
-        (
-            ev.repartition(6)  # UNCLUSTERED: zone maps cannot prune this
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        analyze_bloom(spark, d, ddl, ["event_id"], bits=bits, k=k)
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        out = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").isin([3, 17, 411, 888]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-bloom-") as d:
+        # UNCLUSTERED: zone maps cannot prune this
+        _save(_lines(_events(spark, sf).repartition(6)), d)
+        analyze_bloom(spark, d, _EV_DDL, ["event_id"], bits=bits, k=k)
+        _plant_poison(d, bloom=(bits, k))
+        return _detach(_event_rows(_scan(spark, d), [3, 17, 411, 888]))
 
 
 @query(
@@ -5511,68 +5083,16 @@ def sql_4mc_csv_zonemap_scan_q(spark, sf):
     # Same in-gate poison proof: a garbage container with a valid
     # out-of-range sidecar is planted — green iff file pruning engaged
     # before any footer read.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
 
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-csv-zm-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .select(F.to_csv(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
+    with _scratch_dir(spark, "fourmc-csv-zm-") as d:
+        _save(_lines(_id_ranges(spark, sf, 6), F.to_csv), d)
+        analyze_stats(spark, d, _EV_DDL, record_format="csv")
+        _plant_poison(d)
+        back = _scan(spark, d, "csv").where(
+            F.col("event_id").between(1100, 2699)
         )
-        analyze_stats(spark, d, ddl, record_format="csv")
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("csvschema", ddl).load(d)
-            .where(F.col("event_id").between(1100, 2699))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -5594,41 +5114,15 @@ def sql_4mc_bloom_blocks_scan_q(spark, sf):
     # partition), so the oracle hash pins BOTH ownership seams across
     # many block boundaries on an UNCLUSTERED layout — the
     # parquet-page economics for point lookups, no clustering needed.
-    import shutil
-    import tempfile
-
     from fourmc_spark.operators.maintenance import analyze_bloom
-    from fourmc_spark.session import register_fourmc
 
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-bloom-blocks-")
-    try:
-        (
-            ev.coalesce(1)
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 16 * 1024)
-            .mode("overwrite").save(d)
-        )
+    with _scratch_dir(spark, "fourmc-bloom-blocks-") as d:
+        _save(_lines(_events(spark, sf).coalesce(1)), d, blocksize=16 * 1024)
         analyze_bloom(
-            spark, d, ddl, ["event_id"],
+            spark, d, _EV_DDL, ["event_id"],
             bits=1 << 16, k=5, block_bits=1 << 12, block_k=4,
         )
-        out = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").isin([21, 433, 777]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_rows(_scan(spark, d), [21, 433, 777]))
 
 
 @query(
@@ -5650,69 +5144,17 @@ def maintenance_compact_bloom_q(spark, sf):
     # bit (false absence) would lose a row and break the hash; a poison
     # file planted in the compacted dir (garbage bytes + all-zero
     # bloom) proves the probe path engages before any footer read.
-    import glob as _glob
-    import json as _json
-    import os
-    import shutil
-    import tempfile
+    from fourmc_spark.operators.maintenance import analyze_bloom
 
-    from fourmc_spark.operators.maintenance import analyze_bloom, compact_blocks
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
     bits, k = 1 << 18, 6
-    root = tempfile.mkdtemp(prefix="fourmc-compact-bloom-")
-    staged, out = f"{root}/staged", f"{root}/compact"
-    try:
-        (
-            ev.repartition(6)
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(staged)
-        )
-        analyze_bloom(spark, staged, ddl, ["event_id"], bits=bits, k=k)
-        total = sum(
-            os.path.getsize(p) for p in _glob.glob(f"{staged}/part-*.4mz")
-        )
-        stats = compact_blocks(
-            spark, staged, out, target_bytes=max(1, total // 2)
-        )
+    with _scratch_dir(spark, "fourmc-compact-bloom-") as root:
+        staged, out = f"{root}/staged", f"{root}/compact"
+        _save(_lines(_events(spark, sf).repartition(6)), staged)
+        analyze_bloom(spark, staged, _EV_DDL, ["event_id"], bits=bits, k=k)
+        stats = _compact(spark, staged, out, 2)
         assert stats["stats_carried"] == stats["outputs"], stats
-        poison = os.path.join(out, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out)
-            .where(F.col("event_id").isin([5, 240, 777]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(back)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        _plant_poison(out, bloom=(bits, k))
+        return _detach(_event_rows(_scan(spark, out), [5, 240, 777]))
 
 
 @query(
@@ -5737,25 +5179,16 @@ def stream_4mc_multibatch_q(spark, sf):
     # Trigger.AvailableNow, so this drains via processAllAvailable; the
     # >=6-batch structure itself is pinned in
     # tests/test_streaming.py::test_stream_4mc_multibatch_takes_n_batches.)
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import tumbling_counts
 
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-stream-mb-")
-    staged, live = f"{root}/staged", f"{root}/live"
-    try:
+    with _scratch_dir(spark, "fourmc-stream-mb-") as root:
+        staged, live = f"{root}/staged", f"{root}/live"
         _stage_events_4mz(spark, sf, staged, n_files=6)
-        files = sorted(_glob.glob(f"{staged}/part-*.4mz"))
-        _os.makedirs(live)
-        _os.rename(files[0], f"{live}/{_os.path.basename(files[0])}")
+        files = sorted(glob.glob(f"{staged}/part-*.4mz"))
+        os.makedirs(live)
+        os.rename(files[0], f"{live}/{os.path.basename(files[0])}")
         sdf = _events_json_stream(spark, live, maxfilespertrigger=1)
-        name = f"qstream_{_uuid.uuid4().hex[:12]}"
+        name = f"qstream_{uuid.uuid4().hex[:12]}"
         q = (
             tumbling_counts(sdf, window="1 hour")
             .writeStream.format("memory").queryName(name)
@@ -5764,15 +5197,13 @@ def stream_4mc_multibatch_q(spark, sf):
         try:
             q.processAllAvailable()  # batch 0: the seed file
             for f in files[1:]:  # late arrivals: sealed files appear
-                _os.rename(f, f"{live}/{_os.path.basename(f)}")
+                os.rename(f, f"{live}/{os.path.basename(f)}")
             q.processAllAvailable()  # one micro-batch per late file
         finally:
             q.stop()
             q.awaitTermination()
         out = spark.table(name).orderBy("win_start", "event_type")
         return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -5797,43 +5228,12 @@ def maintenance_compact_4mc_q(spark, sf):
     # bin boundary, or a glued line at an unterminated file seam breaks
     # the hash. Structural pins (output count, block arithmetic, CLI
     # seal verification) live in tests/test_maintenance.py.
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import compact_blocks
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-compact-")
-    staged, out = f"{root}/staged", f"{root}/compact"
-    try:
+    with _scratch_dir(spark, "fourmc-compact-") as root:
+        staged, out = f"{root}/staged", f"{root}/compact"
         _stage_events_4mz(spark, sf, staged, n_files=24)
-        total = sum(
-            _os.path.getsize(p)
-            for p in _glob.glob(f"{staged}/part-*.4mz")
-        )
-        compact_blocks(spark, staged, out, target_bytes=max(1, total // 3))
-        back = (
-            spark.read.format("fourmc").load(out)
-            .select(F.from_json("value", _EV_JSON_SCHEMA).alias("_r"))
-            .select("_r.*")
-        )
-        agg = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(agg)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        _compact(spark, staged, out, 3)
+        back = _from_json(spark.read.format("fourmc").load(out))
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -5862,29 +5262,16 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
     # aggregate must equal the batch oracle exactly: a file skipped below
     # the mark, double-ingested on hwm regression, or split across a
     # batch boundary breaks the hash.
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import tumbling_counts
 
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-stream-omb-")
-    staged, live_in = f"{root}/staged", f"{root}/in"
-    sink_out, ckpt = f"{root}/out", f"{root}/ckpt"
-    try:
+    with _scratch_dir(spark, "fourmc-stream-omb-") as root:
+        staged, live_in = f"{root}/staged", f"{root}/in"
+        sink_out, ckpt = f"{root}/out", f"{root}/ckpt"
         _stage_events_4mz(spark, sf, staged, n_files=4)
-        files = sorted(_glob.glob(f"{staged}/part-*.4mz"))
-        _os.makedirs(live_in)
-        _os.makedirs(sink_out)
-
-        def _feed(f: str) -> None:
-            _os.rename(f, f"{live_in}/{_os.path.basename(f)}")
-
-        _feed(files[0])
+        files = sorted(glob.glob(f"{staged}/part-*.4mz"))
+        os.makedirs(live_in)
+        os.makedirs(sink_out)
+        os.rename(files[0], f"{live_in}/{os.path.basename(files[0])}")
         # producer: one fed file per processAllAvailable drain = one sink
         # micro-batch; the hive column is payload-derived (so it is
         # redundant with the JSON the consumer parses) and kept at
@@ -5904,7 +5291,7 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        name = f"qstream_{_uuid.uuid4().hex[:12]}"
+        name = f"qstream_{uuid.uuid4().hex[:12]}"
         cons = None
         try:
             prod.processAllAvailable()  # sink batch 0 (part-b0000000000-…)
@@ -5918,7 +5305,7 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
             )
             cons.processAllAvailable()  # catch-up: all batch-0 files
             for f in files[1:]:
-                _feed(f)
+                os.rename(f, f"{live_in}/{os.path.basename(f)}")
                 prod.processAllAvailable()  # sink batch N, names above hwm
             # one barrier drains every late file, still ONE per trigger
             # under the cap (the engine triggers continuously; the
@@ -5932,8 +5319,6 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
             prod.awaitTermination()
         out = spark.table(name).orderBy("win_start", "event_type")
         return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -5962,53 +5347,10 @@ def stream_4mc_sink_q(spark, sf):
     # prebuilt binary. Scale shape: one sealed file per task per
     # micro-batch, no driver data path; ts stays out of the payload
     # (the aggregate doesn't need it), so no timezone rendering.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.streaming import read_events_stream
-
-    register_fourmc(spark)
-    d = tempfile.mkdtemp(prefix="fourmc-stream-sink-")
-    out_dir, ckpt = f"{d}/out", f"{d}/ckpt"
-    try:
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("value")
-        )
-        q = (
-            sdf.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        back = (
-            spark.read.format("fourmc").load(out_dir)
-            .select(
-                F.from_json(
-                    "value",
-                    "event_id BIGINT, user_id BIGINT, event_type STRING, "
-                    "value DOUBLE",
-                ).alias("_r")
-            )
-            .select("_r.*")
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with _scratch_dir(spark, "fourmc-stream-sink-") as d:
+        out_dir = _stream_events(spark, sf, d)
+        back = _from_json(spark.read.format("fourmc").load(out_dir), _EV_DDL)
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -6036,69 +5378,13 @@ def stream_4mc_sinkstats_scan_q(spark, sf):
     # seals its own sidecar executor-side — at 100 TB of daily ingest
     # the stats tier costs one Arrow parse per written batch, no
     # second pass over the data, and the driver never sees a row.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-    from fourmc_spark.streaming import read_events_stream
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    d = tempfile.mkdtemp(prefix="fourmc-stream-sinkstats-")
-    out_dir, ckpt = f"{d}/out", f"{d}/ckpt"
-    try:
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("value")
+    with _scratch_dir(spark, "fourmc-stream-sinkstats-") as d:
+        out_dir = _stream_events(spark, sf, d, statsschema=_EV_DDL)
+        _plant_poison(out_dir)
+        back = _scan(spark, out_dir).where(
+            F.col("event_id").between(600, 2399)
         )
-        q = (
-            sdf.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("statsschema", ddl)
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        poison = os.path.join(out_dir, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out_dir)
-            .where(F.col("event_id").between(600, 2399))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return _detach(_event_totals(back))
 
 
 @query(
@@ -6121,65 +5407,16 @@ def stream_4mc_bloomsink_scan_q(spark, sf):
     # a real row and break the hash). Combined with the statsschema
     # zone tier and compaction's OR-merge carry, the steady-state
     # pipeline prunes ranges AND point probes from ingest onward.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
-    from fourmc_spark.streaming import read_events_stream
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
     bits, k = 1 << 18, 6
-    d = tempfile.mkdtemp(prefix="fourmc-stream-bloomsink-")
-    out_dir, ckpt = f"{d}/out", f"{d}/ckpt"
-    try:
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("value")
+    with _scratch_dir(spark, "fourmc-stream-bloomsink-") as d:
+        out_dir = _stream_events(
+            spark, sf, d, statsschema=_EV_DDL, bloomcolumns="event_id",
+            bloombits=str(bits), bloomk=str(k),
         )
-        q = (
-            sdf.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("statsschema", ddl)
-            .option("bloomcolumns", "event_id")
-            .option("bloombits", str(bits)).option("bloomk", str(k))
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
+        _plant_poison(out_dir, bloom=(bits, k))
+        return _detach(
+            _event_rows(_scan(spark, out_dir), [7, 133, 501, 952])
         )
-        q.awaitTermination()
-        poison = os.path.join(out_dir, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out_dir)
-            .where(F.col("event_id").isin([7, 133, 501, 952]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(back)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 _PROFILE_COLS = ["doc_id", "lang", "n_chars", "source", "text"]

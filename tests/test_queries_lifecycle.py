@@ -6,7 +6,14 @@ partitions through HashPartitioning, so silent hash drift against a
 future Spark would quietly degrade fixture layout — and (b) actually
 produce the range-disjoint n-partition layout the zone-map demos rely
 on. Results are layout-invariant either way (oracle-pinned); these
-tests keep the LAYOUT claim honest."""
+tests keep the LAYOUT claim honest.
+
+Also pins the shared lifecycle steps every such query runs through:
+the poison planter behind the in-gate pruning proofs must really
+poison, and the scratch dir must never outlive the query."""
+
+import datetime as dt
+import os
 
 import pytest
 
@@ -123,3 +130,114 @@ def test_range_partition_fixture_falls_back_without_stats(spark, tmp_path):
         df, 4, "k", str(tmp_path / "does-not-exist.parquet")
     )
     assert out.count() == 100
+
+
+# ---------------------------------------------------------------------
+# Shared lifecycle steps: the poison planter behind the in-gate pruning
+# proofs and the scratch dir every lifecycle query stages into
+# ---------------------------------------------------------------------
+
+_TS_DDL = ("ts timestamp, event_id bigint, user_id bigint, "
+           "event_type string, value double")
+_TS_POISON = {"ts": {"min": 1893456000000000, "max": 1893542400000000,
+                     "nulls": 0}}
+
+
+def _poison_cases():
+    from pyspark.sql.datasource import (
+        GreaterThanOrEqual, In, LessThan, LessThanOrEqual,
+    )
+
+    ids = [GreaterThanOrEqual(("event_id",), 1200),
+           LessThanOrEqual(("event_id",), 2799)]
+    probes = [In(("event_id",), (3, 17, 411, 888))]
+    # aware-UTC bounds: what VariantVal.toPython yields for TimestampType
+    utc = dt.timezone.utc
+    ts = [GreaterThanOrEqual(("ts",), dt.datetime(2024, 1, 10, tzinfo=utc)),
+          LessThan(("ts",), dt.datetime(2024, 1, 20, tzinfo=utc))]
+    bloom = (1 << 18, 6)
+    return [
+        pytest.param("json", {}, ids, id="zone"),
+        pytest.param("json", {"version": 1}, ids, id="zone-v1"),
+        pytest.param("ts", {"columns": _TS_POISON}, ts, id="zone-ts"),
+        pytest.param("json", {"bloom": bloom}, probes, id="bloom"),
+        pytest.param("proto", {}, ids, id="proto-zone"),
+        pytest.param("proto", {"bloom": bloom}, probes, id="proto-bloom"),
+    ]
+
+
+def _poison_reader(model: str, d: str):
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from fourmc_spark.queries import _EV_DDL, _EV_PROTO_JSON
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSourceReader, _parse_flat_ddl,
+    )
+    from fourmc_spark.sources.protobuf import FourMcProtoReader
+
+    if model == "proto":
+        opts = CaseInsensitiveDict({"path": d, "fields": _EV_PROTO_JSON})
+        return FourMcProtoReader(opts, _parse_flat_ddl(_EV_DDL))
+    ddl = _TS_DDL if model == "ts" else _EV_DDL
+    opts = CaseInsensitiveDict({"path": d, "jsonschema": ddl})
+    return FourMcDataSourceReader(opts, _parse_flat_ddl(ddl))
+
+
+@pytest.mark.parametrize("model, kw, filters", _poison_cases())
+def test_plant_poison_really_poisons(spark, tmp_path, model, kw, filters):
+    """A directory holding only the planted poison file: an unpredicated
+    read fails loudly (the planner opens the garbage container), and the
+    predicate its sidecar excludes plans zero slices. Both halves are
+    what the lifecycle queries' in-gate pruning proofs rely on."""
+    from fourmc_spark.format.core import BadHeaderError
+    from fourmc_spark.queries import _plant_poison, _scan
+    from fourmc_spark.sources.datasource import iter_slices
+
+    d = str(tmp_path / "poisoned")
+    os.makedirs(d)
+    _plant_poison(d, **kw)
+    assert sorted(os.listdir(d)) == ["poison.4mz", "poison.4mz.stats.json"]
+
+    with pytest.raises(BadHeaderError):
+        _poison_reader(model, d).partitions()
+    scan = (_scan(spark, d, model) if model != "ts" else
+            spark.read.format("fourmc").option("jsonschema", _TS_DDL).load(d))
+    with pytest.raises(Exception, match="BadHeaderError"):
+        scan.count()
+
+    rd = _poison_reader(model, d)
+    list(rd.pushFilters(filters))  # value filters come back: re-applied
+    assert list(iter_slices(rd.partitions())) == []
+
+
+def test_scratch_dir_removed_on_return_and_on_raise(spark):
+    from fourmc_spark.queries import _scratch_dir
+
+    with _scratch_dir(spark, "fourmc-scratch-test-") as d:
+        with open(os.path.join(d, "f"), "w") as f:
+            f.write("x")
+        assert os.path.isdir(d)
+    assert not os.path.exists(d)
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with _scratch_dir(spark, "fourmc-scratch-test-") as d2:
+            os.makedirs(os.path.join(d2, "nested"))
+            raise RuntimeError("body failed")
+    assert not os.path.exists(d2)
+
+
+def test_lifecycle_query_leaves_no_scratch(spark, sf_dir, tmp_path,
+                                           monkeypatch):
+    """A lifecycle query stages, poisons and reads in its scratch dir and
+    returns a detached result: nothing stays behind in the temp root."""
+    import tempfile
+
+    from fourmc_spark.queries import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = QUERIES["sql_4mc_sinkstats_scan"](spark, sf_dir).toPandas()
+    assert list(out.columns) == [
+        "event_type", "cnt", "user_sum", "value_sum", "min_event",
+        "max_event",
+    ]
+    assert os.listdir(tmp_path) == []

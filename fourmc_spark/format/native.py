@@ -33,6 +33,7 @@ __all__ = [
     "xxh32",
     "xxh32_at",
     "xxh64",
+    "xxh64_array",
     "lz4_compress",
     "lz4_decompress",
     "lz4_decompress_at",
@@ -193,11 +194,127 @@ if xxh32 is None:  # pragma: no cover
 
 # ---------------------------------------------------------------------------
 # XXH64 — the hash behind Spark's JVM-side `xxhash64` expression (seed 42),
-# verified bit-identical in tests/test_native.py. The bloom sidecar tier
+# verified bit-identical in tests/test_bloom.py. The bloom sidecar tier
 # (operators/maintenance.analyze_bloom) builds bitmaps with the JVM
-# expression at scan speed; the planner (sources/datasource.py) reproduces
-# the same hash here to probe membership at pruning time.
+# expression at scan speed; the Python builders (the sink's bloomcolumns,
+# analyze_stats_proto) hash whole Arrow arrays with `xxh64_array`, and the
+# planner (sources/datasource.py) hashes its few probe values with `xxh64`.
 # ---------------------------------------------------------------------------
+
+_P64_1 = 0x9E3779B185EBCA87
+_P64_2 = 0xC2B2AE3D27D4EB4F
+_P64_3 = 0x165667B19E3779F9
+_P64_4 = 0x85EBCA77C2B2AE63
+_P64_5 = 0x27D4EB2F165667C5
+_M64 = 0xFFFFFFFFFFFFFFFF
+
+
+def xxh64_array(arr, seed: int = 0) -> "np.ndarray":
+    """XXH64 of every value of an Arrow string/binary array (nulls hash
+    their slot's bytes, so callers drop them first), as ``uint64``.
+
+    Computed in numpy from the array's offsets and data buffers with no
+    per-value Python: all values advance in lockstep under length masks
+    through the 32-byte stripes, the 8-byte lanes, the 4-byte lane, the
+    single bytes and the avalanche. uint64 arithmetic wraps, exactly as
+    the C reference's does."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = arr.type
+    if pa.types.is_large_string(t) or pa.types.is_large_binary(t):
+        off_dtype = np.int64
+    elif pa.types.is_string(t) or pa.types.is_binary(t):
+        off_dtype = np.int32
+    else:
+        raise TypeError(f"xxh64_array: string or binary array expected, got {t}")
+    n = len(arr)
+    if n == 0:
+        return np.empty(0, dtype=np.uint64)
+    _, obuf, dbuf = arr.buffers()
+    offs = np.frombuffer(obuf, dtype=off_dtype, count=arr.offset + n + 1)
+    offs = offs[arr.offset:].astype(np.int64)
+    base, stop = int(offs[0]), int(offs[-1])
+    data = (
+        np.frombuffer(dbuf, dtype=np.uint8)[base:stop]
+        if dbuf is not None else np.empty(0, dtype=np.uint8)
+    )
+    pos = offs[:-1] - base  # each value's read cursor, advanced per lane
+    lens = offs[1:] - offs[:-1]
+
+    # the little-endian 8- and 4-byte word starting at EVERY byte offset,
+    # as overlapping unaligned views (reads stay inside their value)
+    def words(width: int, dtype: str) -> "np.ndarray":
+        return np.ndarray(
+            shape=(max(len(data) - width + 1, 0),), dtype=dtype,
+            buffer=data, strides=(1,),
+        )
+
+    w64, w32 = words(8, "<u8"), words(4, "<u4")
+    u = np.uint64
+    p1, p2, p3, p4, p5 = u(_P64_1), u(_P64_2), u(_P64_3), u(_P64_4), u(_P64_5)
+
+    def rotl(x, r: int):
+        return (x << u(r)) | (x >> u(64 - r))
+
+    def rnd(acc, inp):
+        return rotl(acc + inp * p2, 31) * p1
+
+    h = np.full(n, (seed + _P64_5) & _M64, dtype=np.uint64)
+    big = np.nonzero(lens >= 32)[0]
+    if big.size:
+        # longest first, so the values still striping at step s are a
+        # prefix of `order` and each step touches only those
+        stripes = lens[big] // 32
+        sort = np.argsort(-stripes, kind="stable")
+        order, stripes = big[sort], stripes[sort]
+        m = len(order)
+        v1 = np.full(m, (seed + _P64_1 + _P64_2) & _M64, dtype=np.uint64)
+        v2 = np.full(m, (seed + _P64_2) & _M64, dtype=np.uint64)
+        v3 = np.full(m, seed & _M64, dtype=np.uint64)
+        v4 = np.full(m, (seed - _P64_1) & _M64, dtype=np.uint64)
+        cur = pos[order]
+        neg = -stripes
+        for s in range(int(stripes[0])):
+            a = int(np.searchsorted(neg, -s, side="left"))
+            q = cur[:a] + 32 * s
+            v1[:a] = rnd(v1[:a], w64[q])
+            v2[:a] = rnd(v2[:a], w64[q + 8])
+            v3[:a] = rnd(v3[:a], w64[q + 16])
+            v4[:a] = rnd(v4[:a], w64[q + 24])
+        acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
+        for v in (v1, v2, v3, v4):
+            acc = (acc ^ rnd(u(0), v)) * p1 + p4
+        h[order] = acc
+        pos[order] += 32 * stripes
+    h += lens.astype(np.uint64)
+    rest = lens % 32
+    for _ in range(3):  # 8-byte lanes
+        i = np.nonzero(rest >= 8)[0]
+        if not i.size:
+            break
+        h[i] = rotl(h[i] ^ rnd(u(0), w64[pos[i]]), 27) * p1 + p4
+        pos[i] += 8
+        rest[i] -= 8
+    i = np.nonzero(rest >= 4)[0]  # the 4-byte lane
+    if i.size:
+        h[i] = rotl(h[i] ^ (w32[pos[i]].astype(np.uint64) * p1), 23) * p2 + p3
+        pos[i] += 4
+        rest[i] -= 4
+    for _ in range(3):  # single bytes
+        i = np.nonzero(rest >= 1)[0]
+        if not i.size:
+            break
+        h[i] = rotl(h[i] ^ (data[pos[i]].astype(np.uint64) * p5), 11) * p1
+        pos[i] += 1
+        rest[i] -= 1
+    h ^= h >> u(33)
+    h *= p2
+    h ^= h >> u(29)
+    h *= p3
+    h ^= h >> u(32)
+    return h
+
 
 if _xxh is not None:
     _xxh.XXH64.restype = ctypes.c_uint64
@@ -208,73 +325,13 @@ if _xxh is not None:
         return int(_xxh.XXH64(bytes(data), len(data), seed))
 
 else:  # pragma: no cover - exercised only without libxxhash
-    xxh64 = None  # assigned below after the pure-Python impl
 
-# Pure-Python XXH64 (same public reference algorithm as XXH32 above; kept
-# for environments without libxxhash and as a cross-check in tests).
-_P64_1 = 0x9E3779B185EBCA87
-_P64_2 = 0xC2B2AE3D27D4EB4F
-_P64_3 = 0x165667B19E3779F9
-_P64_4 = 0x85EBCA77C2B2AE63
-_P64_5 = 0x27D4EB2F165667C5
-_M64 = 0xFFFFFFFFFFFFFFFF
+    def xxh64(data: bytes, seed: int = 0) -> int:
+        """64-bit xxHash of *data* (unsigned): the array kernel on a
+        one-element array."""
+        import pyarrow as pa
 
-
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxh64_round(acc: int, inp: int) -> int:
-    return (_rotl64((acc + inp * _P64_2) & _M64, 31) * _P64_1) & _M64
-
-
-def xxh64_py(data: bytes, seed: int = 0) -> int:
-    """Pure-Python XXH64; bit-identical to ``XXH64`` from libxxhash."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P64_1 + _P64_2) & _M64
-        v2 = (seed + _P64_2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P64_1) & _M64
-        mv = memoryview(data)
-        limit = n - 32
-        while i <= limit:
-            v1 = _xxh64_round(v1, int.from_bytes(mv[i : i + 8], "little"))
-            v2 = _xxh64_round(v2, int.from_bytes(mv[i + 8 : i + 16], "little"))
-            v3 = _xxh64_round(v3, int.from_bytes(mv[i + 16 : i + 24], "little"))
-            v4 = _xxh64_round(v4, int.from_bytes(mv[i + 24 : i + 32], "little"))
-            i += 32
-        h = (
-            _rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)
-        ) & _M64
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ _xxh64_round(0, v)) * _P64_1 + _P64_4) & _M64
-    else:
-        h = (seed + _P64_5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h ^= _xxh64_round(0, int.from_bytes(data[i : i + 8], "little"))
-        h = (_rotl64(h, 27) * _P64_1 + _P64_4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _P64_1) & _M64
-        h = (_rotl64(h, 23) * _P64_2 + _P64_3) & _M64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P64_5) & _M64
-        h = (_rotl64(h, 11) * _P64_1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _P64_2) & _M64
-    h ^= h >> 29
-    h = (h * _P64_3) & _M64
-    h ^= h >> 32
-    return h
-
-
-if xxh64 is None:  # pragma: no cover
-    xxh64 = xxh64_py
+        return int(xxh64_array(pa.array([bytes(data)], pa.binary()), seed)[0])
 
 # ---------------------------------------------------------------------------
 # LZ4 raw blocks

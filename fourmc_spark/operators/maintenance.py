@@ -744,8 +744,9 @@ def analyze_stats_proto(
     JVM ``CAST AS STRING`` path) into ``bloom_bits``/``bloom_k``
     positions; the ``fourmcproto`` reader probes EqualTo/In point
     predicates against them at planning time, pruning point lookups on
-    unclustered fields the zone tier cannot touch. Range merges union
-    the position sets (exact — same rows, same hashes).
+    unclustered fields the zone tier cannot touch. Each block's values
+    hash in one array call; range merges OR the bitmaps (exact — same
+    rows, same hashes).
     ``bloom_block_bits`` additionally seals the per-BLOCK bloom tier
     (keyed by the sync-marker-owner block offset — the same ownership
     rule the proto split reader enforces), so point probes inside kept
@@ -828,37 +829,55 @@ def analyze_stats_proto(
     want_blocks = blocks
 
     def _range_stats(task) -> tuple:
-        """(file, (per-block stats, bloom position sets)) for one
-        block-aligned range — per-block ownership is the marker-start
-        block, so ranges never share a block key; bloom sets union
-        exactly across ranges."""
+        """(file, (per-block stats, file bloom bitmaps, per-block bloom
+        bitmaps)) for one block-aligned range — per-block ownership is
+        the marker-start block, so ranges never share a block key; file
+        bitmaps OR exactly across ranges."""
         fpath, codec, start, end = task
 
-        from fourmc_spark.format.native import xxh64
+        import numpy as np
+        import pyarrow as pa
+
+        from fourmc_spark.format.native import xxh64_array
         from fourmc_spark.format.protobuf import iter_eb_records_for_split
-        from fourmc_spark.sources.datasource import BLOOM_SEED, bloom_positions
+        from fourmc_spark.sources.datasource import BLOOM_SEED, bloom_set_bits
 
         if codec is None:  # whole file: resolve the footer executor-side
             from fourmc_spark.format.reader import scan_file_info
 
             codec, end, _offs = scan_file_info(fpath)
         per_block: dict[int, dict] = {}
-        bl: dict[str, set] = {c: set() for c in bl_cols}
-        bl_blocks: dict[int, dict[str, set]] = {}
+        bl = {c: np.zeros(bloom_bits // 8, np.uint8) for c in bl_cols}
+        bl_blocks: dict[int, dict[str, np.ndarray]] = {}
         if start >= end:
             return fpath, (per_block, bl, bl_blocks)
+
+        def _hash_block(owner: int, by_col: dict) -> None:
+            # one block's non-null str(value)s: hashed once, set into the
+            # file bitmap and the block bitmap from the same hashes
+            for c, vals in by_col.items():
+                h = xxh64_array(pa.array(vals, pa.string()), BLOOM_SEED)
+                bloom_set_bits(bl[c], h, bloom_k, bloom_bits)
+                if bloom_block_bits is not None:
+                    bm = bl_blocks.setdefault(owner, {}).setdefault(
+                        c, np.zeros(bloom_block_bits // 8, np.uint8)
+                    )
+                    bloom_set_bits(bm, h, bk, bloom_block_bits)
+
+        cur, texts = None, {}  # the block being decoded, its bloom values
         with open(fpath, "rb") as f:
             for owner, rec in iter_eb_records_for_split(
                 f, codec, start, end, schema
             ):
+                if owner != cur:
+                    _hash_block(cur, texts)
+                    cur, texts = owner, {c: [] for c in bl_cols}
                 b = per_block.get(owner)
                 if b is None:
                     b = per_block[owner] = {
                         "rows": 0,
                         "c": {c: [None, None, 0, False] for c in cols},
                     }
-                    if bloom_block_bits is not None:
-                        bl_blocks[owner] = {c: set() for c in bl_cols}
                 b["rows"] += 1
                 for c in cols:
                     v = rec.get(c)
@@ -877,20 +896,15 @@ def analyze_stats_proto(
                         st[1] = v
                 for c in bl_cols:
                     v = rec.get(c)
-                    if v is None:
-                        continue
-                    h = xxh64(str(v).encode("utf-8"), BLOOM_SEED)
-                    bl[c].update(bloom_positions(h, bloom_k, bloom_bits))
-                    if bloom_block_bits is not None:
-                        bl_blocks[owner][c].update(
-                            bloom_positions(h, bk, bloom_block_bits)
-                        )
+                    if v is not None:
+                        texts[c].append(str(v))
+        _hash_block(cur, texts)
         return fpath, (per_block, bl, bl_blocks)
 
     def _merge_pb(a: tuple, b: tuple) -> tuple:
         a[0].update(b[0])  # block keys disjoint across ranges
-        for c, s in b[1].items():
-            a[1][c] |= s  # bloom positions union exactly
+        for c, bm in b[1].items():
+            a[1][c] |= bm  # bloom bitmaps OR exactly
         a[2].update(b[2])  # block-bloom keys disjoint too
         return a
 
@@ -934,16 +948,9 @@ def analyze_stats_proto(
                 seal_bloom_blocks_header, seal_bloom_spec,
             )
 
-            def _bitset(positions, n_bits: int) -> bytes:
-                bm = bytearray(n_bits // 8)
-                for p in positions:
-                    bm[p >> 3] |= 1 << (p & 7)
-                return bytes(bm)
-
             meta["bloom"] = {
                 c: seal_bloom_spec(
-                    _bitset(bl[c], bloom_bits), bloom_bits, bloom_k,
-                    bl_fams[c],
+                    bl[c].tobytes(), bloom_bits, bloom_k, bl_fams[c],
                 )
                 for c in bl_cols
             }
@@ -953,7 +960,7 @@ def analyze_stats_proto(
                         "o": o,
                         "c": {
                             c: _b64.b64encode(
-                                _bitset(bl_blocks[o][c], bloom_block_bits)
+                                bl_blocks[o][c].tobytes()
                             ).decode("ascii")
                             for c in bl_cols
                         },

@@ -2661,14 +2661,11 @@ def stream_distinct_users_q(spark, sf):
     # window; the sentinel's own window stays held back forever and never
     # appears in the result.
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from fourmc_spark.streaming import distinct_users_hourly, read_events_stream
 
-    tmp = tempfile.mkdtemp(prefix="fourmc-musers-")
-    try:
+    with _scratch_dir(spark, "fourmc-musers-") as tmp:
         shutil.copy(f"{sf}/events.parquet", os.path.join(tmp, "part-0.parquet"))
         sdf = distinct_users_hourly(read_events_stream(spark, tmp))
         name = f"qstream_{uuid.uuid4().hex[:12]}"
@@ -2691,8 +2688,6 @@ def stream_distinct_users_q(spark, sf):
         finally:
             q.stop()
         return spark.table(name).orderBy("win_start", "event_type")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -3724,21 +3719,16 @@ def stream_heavy_hitters_q(spark, sf):
     # as text_heavy_hitters, the batch twin.
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
     import uuid as _uuid
 
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import (
         heavy_hitters_finalize, heavy_hitters_sketch_stream,
         pinned_shuffle_width,
     )
 
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-stream-hh-")
-    staged, live, ckpt = f"{root}/staged", f"{root}/live", f"{root}/ckpt"
     ddl = "doc_id bigint, text string"
-    try:
+    with _scratch_dir(spark, "fourmc-stream-hh-") as root:
+        staged, live, ckpt = f"{root}/staged", f"{root}/live", f"{root}/ckpt"
         (
             _t(spark, sf, "documents").select("doc_id", "text")
             .repartition(3)
@@ -3799,8 +3789,6 @@ def stream_heavy_hitters_q(spark, sf):
             spark.table(name), corpus, phi=0.002
         )
         return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _rp_oracle() -> str:
@@ -4779,8 +4767,6 @@ def stream_dedup_ingest_q(spark, sf):
     # driver-green at sf0.01 since r01 — proves banding recovers every
     # true J>=0.8 pair on this corpus, so the gap cannot bite the gate.
     import os
-    import shutil
-    import tempfile
 
     from fourmc_spark.streaming import dedup_ingest_stream, read_dedup_state
 
@@ -4791,8 +4777,7 @@ def stream_dedup_ingest_q(spark, sf):
         .option("pathGlobFilter", os.path.basename(path))
         .parquet(os.path.dirname(path))
     )
-    d = tempfile.mkdtemp(prefix="fourmc-ingest-")
-    try:
+    with _scratch_dir(spark, "fourmc-ingest-") as d:
         q = dedup_ingest_stream(sdf, d).trigger(availableNow=True).start()
         q.awaitTermination()
         out = (
@@ -4801,8 +4786,6 @@ def stream_dedup_ingest_q(spark, sf):
             .orderBy("doc_id")
         )
         return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -4824,9 +4807,6 @@ def stream_cdc_apply_q(spark, sf):
     # must equal the batch latest-per-key election
     # (streaming/ops.cdc_apply_stream — micro-batch twin of
     # operators/timeseries.apply_changes).
-    import shutil
-    import tempfile
-
     from fourmc_spark.streaming import (
         cdc_apply_stream,
         read_cdc_state,
@@ -4839,8 +4819,7 @@ def stream_cdc_apply_q(spark, sf):
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    d = tempfile.mkdtemp(prefix="fourmc-cdc-")
-    try:
+    with _scratch_dir(spark, "fourmc-cdc-") as d:
         q = (
             cdc_apply_stream(ev, d, ["user_id"], ["ts", "event_id"])
             .trigger(availableNow=True)
@@ -4858,8 +4837,6 @@ def stream_cdc_apply_q(spark, sf):
         )
         # materialize before the state dir disappears (bounded detach)
         return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(

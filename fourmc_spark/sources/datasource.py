@@ -1353,10 +1353,11 @@ def _next_prefix(v: str) -> str | None:
 
 
 def bloom_positions(h: int, k: int, bits: int):
-    """THE position derivation, shared by every Python bloom builder and
-    the probe (the JVM builder in analyze_bloom mirrors it as SQL
-    expressions, pinned equivalent by tests): double hashing with
-    h1 = low 32 bits, h2 = high 32 bits | 1, position_i =
+    """THE position derivation, walked by the probe per value (the
+    Python builders apply it to whole hash arrays through
+    :func:`bloom_set_bits`, and the JVM builder in analyze_bloom mirrors
+    it as SQL expressions, both pinned equivalent by tests): double
+    hashing with h1 = low 32 bits, h2 = high 32 bits | 1, position_i =
     (h1 + i*h2) mod bits. Any drift between a builder and the probe
     would silently mis-prune under the same contract tag — this helper
     exists so there is exactly one derivation to drift."""
@@ -1364,6 +1365,27 @@ def bloom_positions(h: int, k: int, bits: int):
     h2 = (h >> 32) | 1
     for i in range(k):
         yield (h1 + i * h2) % bits
+
+
+def bloom_set_bits(bitmap: "np.ndarray", hashes: "np.ndarray", k: int,
+                   bits: int) -> None:
+    """:func:`bloom_positions` for a whole ``uint64`` hash array at once:
+    sets bit ``(h1 + i*h2) % bits`` for every hash and every ``i < k``
+    in the packed ``uint8`` bitmap (bit p at byte p >> 3, mask
+    1 << (p & 7)), in place. Pinned equal to the scalar derivation by a
+    property test."""
+    import numpy as np
+
+    u = np.uint64
+    h1 = hashes & u(0xFFFFFFFF)
+    h2 = (hashes >> u(32)) | u(1)
+    for i in range(k):
+        # h1 + i*h2 < 17 * 2^32: no uint64 wrap for any legal k
+        p = (h1 + u(i) * h2) % u(bits)
+        np.bitwise_or.at(
+            bitmap, (p >> u(3)).astype(np.intp),
+            np.left_shift(1, p & u(7)).astype(np.uint8),
+        )
 
 
 def seal_bloom_spec(bitmap: bytes, bits: int, k: int, fam: str) -> dict:
@@ -1753,13 +1775,15 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         # bloomcolumns=c1[,c2...]: ALSO seal write-time bloom bitmaps for
         # the named statsschema fields (int/string only — the same
         # eligibility as analyze_bloom, whose sidecars these match
-        # bit-for-bit). Values canonicalize through Arrow's int->string
-        # cast (decimal text == the probe's str()), dedup per batch with
-        # pc.unique, and hash via ctypes XXH64 — the only Python-side
-        # per-value work in the sink, opt-in and proportional to the
-        # batch's DISTINCT values. With statsschema + bloomcolumns a
-        # sealed log prunes ranges AND point lookups with no ANALYZE
-        # job ever; compaction carries both tiers.
+        # bit-for-bit, pinned by a test). Values canonicalize through
+        # Arrow's int->string cast (decimal text == the probe's str()),
+        # dedup per batch with pc.unique, hash in one numpy XXH64 call
+        # over the Arrow buffers (xxh64_array) and OR their k positions
+        # into one packed bitmap per column per open file
+        # (bloom_set_bits) — no per-value Python anywhere in the sink.
+        # With statsschema + bloomcolumns a sealed log prunes ranges AND
+        # point lookups with no ANALYZE job ever; compaction carries
+        # both tiers.
         bc = options.get("bloomcolumns", "")
         self.bloom_cols = [c.strip() for c in bc.split(",") if c.strip()]
         self.bloom_bits = int(options.get("bloombits", 1 << 20))
@@ -1812,9 +1836,11 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                 )
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> FourMcCommitMessage:
+        import numpy as np
         import pyarrow as pa  # noqa: F811
 
         from fourmc_spark.format.hadoop_stream import HADOOP_EXTS
+        from fourmc_spark.format.native import xxh64_array
         from fourmc_spark.format.writer import (
             FourMcWriter,
             HadoopBlockWriter,
@@ -1875,11 +1901,12 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     f, codec=codec, level=self.level, block_size=self.block_size
                 )
             acc = (
-                # per column: [min, max, nulls, has_nan]; bloom: set of
-                # bit positions per bloomcolumns field
+                # per column: [min, max, nulls, has_nan]; bloom: packed
+                # bitmap per bloomcolumns field
                 {"rows": 0,
                  "cols": {c: [None, None, 0, False] for c in stat_cols},
-                 "bloom": {c: set() for c in self.bloom_cols}}
+                 "bloom": {c: np.zeros(self.bloom_bits // 8, np.uint8)
+                           for c in self.bloom_cols}}
                 if self.stats_schema is not None else None
             )
             streams[reldir] = (f, w, staged, acc)
@@ -1936,14 +1963,11 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     if st[1] is None or mx > st[1]:
                         st[1] = mx
                 if c in acc["bloom"]:
-                    from fourmc_spark.format.native import xxh64
-
                     uniq = pc.unique(pc.drop_null(col.cast(pa.string())))
-                    pos = acc["bloom"][c]
-                    bits, k = self.bloom_bits, self.bloom_k
-                    for v in uniq:
-                        h = xxh64(v.as_py().encode("utf-8"), BLOOM_SEED)
-                        pos.update(bloom_positions(h, k, bits))
+                    bloom_set_bits(
+                        acc["bloom"][c], xxh64_array(uniq, BLOOM_SEED),
+                        self.bloom_k, self.bloom_bits,
+                    )
 
         def _seal_sidecar(f, staged: str, acc) -> None:
             if acc is None:
@@ -1995,15 +2019,13 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     if isinstance(f2.dataType, T.StringType) else "int"
                     for f2 in self.stats_schema.fields
                 }
-                bitmaps = {}
-                for c in self.bloom_cols:
-                    bm = bytearray(self.bloom_bits // 8)
-                    for p in acc["bloom"][c]:
-                        bm[p >> 3] |= 1 << (p & 7)
-                    bitmaps[c] = seal_bloom_spec(
-                        bytes(bm), self.bloom_bits, self.bloom_k, fams[c]
+                meta["bloom"] = {
+                    c: seal_bloom_spec(
+                        acc["bloom"][c].tobytes(), self.bloom_bits,
+                        self.bloom_k, fams[c],
                     )
-                meta["bloom"] = bitmaps
+                    for c in self.bloom_cols
+                }
             with open(staged + STATS_SUFFIX, "w") as sf:
                 _json.dump(meta, sf)
 

@@ -74,17 +74,26 @@ def _ids_per_file(spark, d):
 # ---------------------------------------------------------------------------
 
 def test_xxh64_py_matches_native():
-    """Pure-Python XXH64 is bit-identical to libxxhash across every
-    length class (empty / <4 / <8 / <32 / striped / tail mixes)."""
+    """The Python-side XXH64 (the numpy array kernel every Python bloom
+    builder hashes with) is bit-identical to libxxhash across every
+    length class (empty / <4 / <8 / <32 / striped / tail mixes): value
+    by value, as one mixed-length array, and as a sliced array."""
     import random
 
-    from fourmc_spark.format.native import xxh64, xxh64_py
+    import pyarrow as pa
+
+    from fourmc_spark.format.native import xxh64, xxh64_array
 
     rng = random.Random(1013)
-    for ln in (0, 1, 3, 4, 5, 7, 8, 9, 15, 16, 31, 32, 33, 63, 64, 100, 1000):
-        data = bytes(rng.randrange(256) for _ in range(ln))
-        for seed in (0, 42, (1 << 64) - 5):
-            assert xxh64(data, seed) == xxh64_py(data, seed)
+    lens = (0, 1, 3, 4, 5, 7, 8, 9, 15, 16, 31, 32, 33, 63, 64, 100, 1000)
+    datas = [bytes(rng.randrange(256) for _ in range(ln)) for ln in lens]
+    for seed in (0, 42, (1 << 64) - 5):
+        want = [xxh64(d, seed) for d in datas]
+        for d, h in zip(datas, want):
+            assert xxh64_array(pa.array([d], pa.binary()), seed)[0] == h
+        arr = pa.array(datas, pa.binary())
+        assert xxh64_array(arr, seed).tolist() == want
+        assert xxh64_array(arr.slice(3, 11), seed).tolist() == want[3:14]
 
 
 def test_xxh64_matches_spark_expression(spark):
@@ -649,6 +658,54 @@ def test_sink_bloomcolumns_seals_and_prunes(spark, tmp_path):
         (base.write.format("fourmc").option("statsschema", _DDL)
          .option("bloomcolumns", "v")
          .mode("overwrite").save(str(tmp_path / "x3")))
+
+
+def test_sink_blooms_equal_analyze_bloom_bitmaps(spark, tmp_path):
+    """The sink's write-time bitmaps are bit-for-bit the ones the JVM
+    builder (analyze_bloom: xxhash64 over CAST AS STRING) computes over
+    the same files with the same geometry — negative ints, "", non-ASCII
+    text, values of 32+ bytes (the XXH64 stripe path) and NULLs, each
+    file fed by several batches, with maxfilebytes rolling under
+    partitionby."""
+    from fourmc_spark.operators.maintenance import analyze_bloom
+
+    d = str(tmp_path / "contract")
+    ddl = "k bigint, s string"
+    bits, k = 1 << 16, 5
+    i = F.col("id")
+    df = spark.range(30000).select(
+        F.when(i % 11 == 0, None).otherwise((i - 15000) * 7919).alias("k"),
+        F.when(i % 13 == 0, None)
+        .when(i % 17 == 0, F.lit(""))
+        .when(i % 3 == 0, F.concat(F.lit("ünïcødé ✓ "), i))
+        .when(i % 3 == 1, F.concat(F.lit("y" * 40), F.sha1(i.cast("string"))))
+        .otherwise(F.concat(F.lit("s"), i)).alias("s"),
+        (i % 3).alias("p"),
+    )
+    (df.coalesce(2)
+       .select("p", F.to_json(F.struct("k", "s")).alias("value"))
+       .write.format("fourmc").option("codec", "zstd")
+       .option("statsschema", ddl).option("bloomcolumns", "k,s")
+       .option("bloombits", str(bits)).option("bloomk", str(k))
+       .option("partitionby", "p")
+       .option("blocksize", 4096).option("maxfilebytes", 48 * 1024)
+       .mode("overwrite").save(d))
+    stats = sorted(_glob.glob(f"{d}/p=*/*.stats.json"))
+    sink = {p: _json.load(open(p)) for p in stats}
+    # rolled: more files than (task, partition dir) pairs; and some file
+    # holds more rows than one 4096-row sub-batch gives a partition dir
+    assert len(stats) > 6
+    assert max(m["rows"] for m in sink.values()) > 4096 // 3 + 1
+    assert sum(m["rows"] for m in sink.values()) == 30000
+    analyze_bloom(spark, d, ddl, ["k", "s"], bits=bits, k=k)
+    for p, m in sink.items():
+        jvm = _json.load(open(p))["bloom"]
+        for c in ("k", "s"):
+            assert m["bloom"][c] == jvm[c], (p, c)
+            set_bits = int.from_bytes(
+                base64.b64decode(jvm[c]["b64"]), "little"
+            ).bit_count()
+            assert 0 < set_bits < bits // 2  # neither empty nor saturated
 
 
 def test_analyze_stats_proto_bloom_tier(spark, tmp_path):

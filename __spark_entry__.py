@@ -50,10 +50,10 @@ sys.path.insert(0, _HERE)
 
 # The driver's correctness gate runs queries in dict order and caps the
 # number it checks per round. Queries already driver-verified in a prior
-# round (verified_queries.json, updated from each CORRECTNESS_r*.json)
-# rotate to the BACK so every round's window lands on still-unverified
-# surface. _PRIORITY pins this round's most important unverified queries
-# to the very front.
+# round (verified_queries.json, which `python scripts/merge_verified.py`
+# updates from each CORRECTNESS_r*.json) rotate to the BACK so every
+# round's window lands on still-unverified surface. _PRIORITY pins this
+# round's most important unverified queries to the very front.
 _PRIORITY: list[str] = [
     # round 9: 163/170 driver-verified (CORRECTNESS_r01-r08 union, all
     # green); the round-9 additions (stream_4mc_ordered_multibatch,

@@ -11,9 +11,20 @@ Binds the *same* C libraries the reference uses through JNI
   ``native/4mc.c:311``, ``FourMcOutputStream.java:74``).
 
 When a shared library is unavailable we fall back to ``pyarrow``
-codecs (``lz4_raw``/``zstd``) and a pure-Python XXH32 — slower but
-bit-identical.  Level semantics mirror ``native/4mc.c:243-253`` and
-the zstd level table in ``Readme.md:30-33``:
+codecs (``lz4_raw``/``zstd``) and pure-Python/numpy xxHash. The
+fallbacks are slower, and only decoding is interchangeable with the
+native path:
+
+* decoding is cross-compatible — each side reads the other's output,
+  and the checksums are the same hashes;
+* the lz4 fallback ignores the level: pyarrow's ``lz4_raw`` has no HC
+  mode, so every level writes what ``fast`` writes;
+* the zstd fallback's output bytes differ from libzstd's at every
+  level (both are valid frames).
+
+Level semantics below are the native path's; they mirror
+``native/4mc.c:243-253`` and the zstd level table in
+``Readme.md:30-33``:
 
 * lz4:  fast = LZ4 default, medium = LZ4HC-2 (the reference's custom
   LZ4MC mode is an unreleased lz4 fork; reading is unaffected since

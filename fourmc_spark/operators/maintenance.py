@@ -62,7 +62,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from fourmc_spark.format import core
 from fourmc_spark.format.reader import iter_block_payloads, scan_file_info
 from fourmc_spark.format.writer import FourMcWriter, normalize_codec
-from fourmc_spark.sources.datasource import _list_files, _load_zone_sidecar
+from fourmc_spark.sources.datasource import (
+    STATS_SUFFIX, _list_files, _load_zone_sidecar, land, retire, write_atomic,
+)
 
 __all__ = [
     "analyze_stats",
@@ -107,8 +109,6 @@ def sidecar_health(path: str) -> dict:
     operator needs to decide when to re-ANALYZE (or whether write-time
     ``statsschema``/``bloomcolumns`` is doing its job). Metadata-only:
     one os.stat + one small JSON read per file, no data bytes."""
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
     files = [p for p in _list_files(path) if not p.endswith(STATS_SUFFIX)]
     out = {
         "n_files": len(files),
@@ -392,6 +392,7 @@ def compact_group(
     block_entries: list[dict] = []
     bloom_block_entries: list[dict] = []
     tmp = f"{out_path}.inprogress"
+    retire([tmp])  # a crashed earlier run may have sealed a sidecar
     with open(tmp, "wb") as out_f:
         out_f.write(core.encode_header(magic))
         for src in plan.inputs:
@@ -424,16 +425,16 @@ def compact_group(
                 fixes += 1
         out_f.write(core.encode_eos())
         out_f.write(core.encode_footer(magic, offsets))
-    os.replace(tmp, out_path)
     if carry:
         _write_carried_sidecar(
-            out_path,
+            tmp,
             [metas[s] for s in plan.inputs],
             block_entries,
             bloom_block_entries,
         )
-    else:
-        _drop_stale_sidecar(out_path)
+    # a rerun into the same out_dir lands on the same compact-NNNNNN
+    # name: land() evicts the previous run's sidecar before the data
+    land(tmp, out_path)
     return {
         "out": out_path,
         "inputs": len(plan.inputs),
@@ -459,19 +460,6 @@ def _or_bit_positions(bm, positions) -> None:
     np.bitwise_or.at(
         bm, positions >> 3, np.left_shift(1, positions & 7).astype(np.uint8)
     )
-
-
-def _drop_stale_sidecar(out_path: str) -> None:
-    """A rerun into the same out_dir writes deterministic compact-NNNNNN
-    names: when the new output carries no stats, a sidecar left by an
-    earlier run must not survive next to it — the size check alone
-    could accept it if the byte sizes happen to collide."""
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    try:
-        os.remove(out_path + STATS_SUFFIX)
-    except OSError:
-        pass
 
 
 def _write_carried_sidecar(
@@ -539,12 +527,7 @@ def _write_carried_sidecar(
             meta["bloom_blocks"] = dict(
                 {f: head[f] for f in keys}, blocks=bloom_block_entries
             )
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    tmp = out_path + STATS_SUFFIX + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    os.replace(tmp, out_path + STATS_SUFFIX)
+    write_atomic(out_path + STATS_SUFFIX, _json.dumps(meta))
 
 
 def _merge_carried_blooms(metas: list[dict]) -> dict:
@@ -610,6 +593,7 @@ def _recompress_group(
     the 4 MiB bound, so many tiny input blocks also coalesce. Applies
     the same text terminator fix as the raw-copy path."""
     tmp = f"{out_path}.inprogress"
+    retire([tmp])  # a crashed raw copy may have sealed a sidecar there
     fixes = 0
     with open(tmp, "wb") as out_f:
         w = FourMcWriter(out_f, codec=codec, level=level, workers=workers)
@@ -625,8 +609,7 @@ def _recompress_group(
                 w.write(b"\n")
                 fixes += 1
         w.close()
-    os.replace(tmp, out_path)
-    _drop_stale_sidecar(out_path)  # recompression invalidates zone maps
+    land(tmp, out_path)  # evicts the old sidecar: zone maps are stale
     return {
         "out": out_path,
         "inputs": len(plan.inputs),
@@ -777,7 +760,6 @@ def analyze_stats_proto(
     from fourmc_spark.format.protobuf import (
         USER_SCHEMA, bloom_eligible_fields, zone_eligible_fields,
     )
-    from fourmc_spark.sources.datasource import STATS_SUFFIX, _list_files
 
     schema = tuple(fields) if fields else USER_SCHEMA
     eligible = zone_eligible_fields(schema)
@@ -981,10 +963,7 @@ def analyze_stats_proto(
                 }
                 for o, b in sorted(per_block.items())
             ]
-        tmp = fpath + STATS_SUFFIX + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        _os.replace(tmp, fpath + STATS_SUFFIX)
+        write_atomic(fpath + STATS_SUFFIX, _json.dumps(meta))
         return {"file": fpath, "rows": rows, "n_blocks": len(per_block)}
 
     # plan tasks: files at or under split_bytes (the common sealed-log
@@ -1152,7 +1131,7 @@ def analyze_stats(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from fourmc_spark.sources.datasource import STATS_SUFFIX, _parse_flat_ddl
+    from fourmc_spark.sources.datasource import _parse_flat_ddl
 
     st = _parse_flat_ddl(schema_ddl)  # same surface the typed scan takes
     cols = list(columns) if columns else [f.name for f in st.fields]
@@ -1274,10 +1253,7 @@ def analyze_stats(
                 }
                 for _, r in pdf.iterrows()
             ]
-        tmp = fpath + STATS_SUFFIX + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        os.replace(tmp, fpath + STATS_SUFFIX)
+        write_atomic(fpath + STATS_SUFFIX, _json.dumps(meta))
         return pd.DataFrame(
             {"file": [fpath], "rows": [int(pdf["__rows"].sum())],
              "n_blocks": [len(pdf)]}
@@ -1368,9 +1344,7 @@ def analyze_bloom(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, _parse_flat_ddl, seal_bloom_spec,
-    )
+    from fourmc_spark.sources.datasource import _parse_flat_ddl, seal_bloom_spec
 
     from fourmc_spark.sources.datasource import validate_bloom_geometry
 
@@ -1618,10 +1592,7 @@ def analyze_bloom(
             meta["bloom_blocks"] = seal_bloom_blocks_header(
                 block_bits, bk, fams, entries
             )
-        tmp = fpath + STATS_SUFFIX + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        os.replace(tmp, fpath + STATS_SUFFIX)
+        write_atomic(fpath + STATS_SUFFIX, _json.dumps(meta))
         return pd.DataFrame({"file": [fpath], "set_bits": [set_bits]})
 
     summaries = (

@@ -1700,11 +1700,90 @@ class FourMcCommitMessage(WriterCommitMessage):
     files: tuple
 
 
+# The one landing path for sealed files: the batch, proto and stream
+# sinks and compaction all commit through these. Invariants, each step
+# a single rename or unlink: a sidecar never outlives or precedes its
+# data file, and an overwrite removes nothing until every new file has
+# landed — a crash leaves the old files plus some new ones (duplicates,
+# never loss) until the write is rerun. Concurrent readers may list a
+# mixture; there is no reader-side commit point.
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Small-file write (sidecar, marker) readers see whole or not at all."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def land(staged: str, final: str) -> None:
+    """Move a sealed file to *final*, then its staged sidecar if one was
+    sealed. Any old sidecar at *final* goes first: it describes the
+    previous occupant, and the size check alone could re-adopt it."""
+    _remove(final + STATS_SUFFIX)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    os.replace(staged, final)
+    if os.path.exists(staged + STATS_SUFFIX):
+        os.replace(staged + STATS_SUFFIX, final + STATS_SUFFIX)
+
+
+def retire(paths) -> None:
+    """Remove files, each sidecar before its data file."""
+    for p in paths:
+        _remove(p + STATS_SUFFIX)
+        _remove(p)
+
+
+def _snapshot(root: str) -> list[str]:
+    """What an overwrite of *root* replaces: every listed data file
+    (nested dirs included) plus ``_SUCCESS``."""
+    if not os.path.isdir(root):
+        return []
+    return _list_files(root) + [os.path.join(root, "_SUCCESS")]
+
+
+def _sweep_staging(root: str) -> None:
+    try:
+        os.rmdir(os.path.join(root, "_temporary"))
+    except OSError:
+        pass
+
+
+def _staged_pairs(messages) -> list[tuple[str, str]]:
+    return [pair for m in messages or () if m is not None for pair in m.files]
+
+
+def publish(root: str, messages, replaced=()) -> None:
+    """Batch commit: land every staged file, only then retire the
+    overwrite snapshot *replaced*, then mark ``_SUCCESS``."""
+    for staged, final in _staged_pairs(messages):
+        land(staged, final)
+    retire(replaced)
+    _sweep_staging(root)
+    with open(os.path.join(root, "_SUCCESS"), "w"):
+        pass
+
+
+def discard(root: str, messages) -> None:
+    """Abort: drop every staged file and sidecar."""
+    retire(staged for staged, _final in _staged_pairs(messages))
+    _sweep_staging(root)
+
+
 class FourMcDataSourceWriter(DataSourceArrowWriter):
     """Arrow-batch sink: writes each task's rows as one .4mc/.4mz file.
 
-    Mirrors FourMcOutputStream (K1/K2) per task; commit() promotes staged
-    files, abort() discards them (FileCommitProtocol-style atomicity).
+    Mirrors FourMcOutputStream (K1/K2) per task. Tasks stage files (and
+    sealed sidecars) under ``_temporary/``; commit() is :func:`publish`
+    — every staged file lands before an overwrite retires the old ones —
+    and abort() is :func:`discard`.
     """
 
     def __init__(self, options, schema: StructType, overwrite: bool) -> None:
@@ -1732,15 +1811,10 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         for c in self.partition_cols:
             if c not in names:
                 raise ValueError(f"partitionby column {c!r} not in schema {names}")
-        # snapshot pre-existing output (driver side, plan time); on commit
-        # with overwrite these are removed *after* staged files are ready,
-        # so failed jobs never destroy existing data
-        self.existing: list[str] = []
-        if overwrite and self.path and os.path.isdir(self.path):
-            self.existing = _list_files(self.path)
-            succ = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(succ):
-                self.existing.append(succ)
+        # snapshot pre-existing output (driver side, plan time); publish()
+        # retires it only after every staged file has landed, so a failed
+        # job never destroys existing data
+        self.existing = _snapshot(self.path) if overwrite else []
         # statsschema=<flat ddl>: the task computes file-tier zone maps
         # (min/max/null-count per declared column) from the NDJSON value
         # lines WHILE writing, and seals a .stats.json sidecar next to
@@ -2084,44 +2158,7 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         return FourMcCommitMessage(files=tuple(files))
 
     def commit(self, messages) -> None:
-        if self.overwrite:
-            for old in self.existing:
-                # the data file's sidecar must not outlive it: a later
-                # file landing on the same name with a colliding byte
-                # size would re-adopt stats for different content
-                for p in (old, old + STATS_SUFFIX):
-                    try:
-                        os.remove(p)
-                    except FileNotFoundError:
-                        pass
-        for m in messages:
-            if m is not None:
-                for staged, final in m.files:
-                    os.makedirs(os.path.dirname(final), exist_ok=True)
-                    os.replace(staged, final)
-                    # statsschema sidecar rides along with its data
-                    # file; a stats-less file landing over a previous
-                    # occupant must also evict that occupant's sidecar
-                    # (mirrors maintenance._drop_stale_sidecar)
-                    if os.path.exists(staged + STATS_SUFFIX):
-                        os.replace(staged + STATS_SUFFIX, final + STATS_SUFFIX)
-                    else:
-                        try:
-                            os.remove(final + STATS_SUFFIX)
-                        except FileNotFoundError:
-                            pass
-        staging = os.path.join(self.path, "_temporary")
-        try:
-            os.rmdir(staging)
-        except OSError:
-            pass
-        with open(os.path.join(self.path, "_SUCCESS"), "w"):
-            pass
+        publish(self.path, messages, self.existing)
 
     def abort(self, messages) -> None:
-        for m in messages or []:
-            if m is not None:
-                for staged, _ in m.files:
-                    for p in (staged, staged + STATS_SUFFIX):
-                        if os.path.exists(p):
-                            os.remove(p)
+        discard(self.path, messages)

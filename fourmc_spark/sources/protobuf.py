@@ -30,7 +30,10 @@ from pyspark.sql.types import StructType
 
 from fourmc_spark.format.protobuf import ProtoField, USER_SCHEMA, spark_struct
 
-from .datasource import FourMcCommitMessage, FourMcDataSourceReader, FourMcInputPartition
+from .datasource import (
+    FourMcCommitMessage, FourMcDataSourceReader, FourMcInputPartition,
+    _snapshot, discard, publish,
+)
 from .stream import FourMcStreamReader, FourMcStreamWriter
 
 DEFAULT_CLASS_NAME = "com.fing.fourmc.protobuf.USER$User"
@@ -178,7 +181,8 @@ def _arrow_schema(fields: tuple[ProtoField, ...] | list[ProtoField]):
 
 class FourMcProtoWriter(DataSourceArrowWriter):
     """Per-task sink: rows -> proto blobs -> EB blocks -> framed 4mc/4mz
-    file (K4 over K1), staged then atomically promoted on commit."""
+    file (K4 over K1), staged, then landed by the text sink's
+    :func:`publish` (or dropped by :func:`discard`)."""
 
     def __init__(self, options, schema: StructType, overwrite: bool) -> None:
         self.path = options.get("path")
@@ -196,13 +200,8 @@ class FourMcProtoWriter(DataSourceArrowWriter):
         self.overwrite = overwrite
         self.proto_schema = _schema_from_options(options)
         self.field_names = [f.name for f in schema.fields]
-        self.existing: list[str] = []
-        if overwrite and self.path and os.path.isdir(self.path):
-            self.existing = [
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith((".4mc", ".4mz")) or f == "_SUCCESS"
-            ]
+        # the text sink's overwrite snapshot: nested files included
+        self.existing = _snapshot(self.path) if overwrite else []
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
         from fourmc_spark.format.protobuf import encode_eb_block, encode_message
@@ -230,35 +229,10 @@ class FourMcProtoWriter(DataSourceArrowWriter):
         return FourMcCommitMessage(files=((staged, final),))
 
     def commit(self, messages) -> None:
-        if self.overwrite:
-            from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-            for old in self.existing:
-                # an analyze_stats_proto sidecar must not outlive its
-                # data file (same eviction rule as the text sink)
-                for p in (old, old + STATS_SUFFIX):
-                    try:
-                        os.remove(p)
-                    except FileNotFoundError:
-                        pass
-        for m in messages:
-            if m is not None:
-                for staged, final in m.files:
-                    os.makedirs(os.path.dirname(final), exist_ok=True)
-                    os.replace(staged, final)
-        try:
-            os.rmdir(os.path.join(self.path, "_temporary"))
-        except OSError:
-            pass
-        with open(os.path.join(self.path, "_SUCCESS"), "w"):
-            pass
+        publish(self.path, messages, self.existing)
 
     def abort(self, messages) -> None:
-        for m in messages or []:
-            if m is not None:
-                for staged, _ in m.files:
-                    if os.path.exists(staged):
-                        os.remove(staged)
+        discard(self.path, messages)
 
 
 class FourMcProtoStreamReader(FourMcStreamReader):

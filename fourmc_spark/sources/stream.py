@@ -18,8 +18,10 @@ granularity, exactly like Spark's built-in FileStreamSource:
 
 The stream writer emits one sealed .4mc/.4mz file per task per
 micro-batch into `_temporary/`, and the driver-side commit(batchId)
-promotes them — idempotent per batch id, so replayed batches after a
-failure do not double-write.
+lands them under deterministic names through the batch sinks' shared
+helpers (``land``/``retire``/``discard`` in ``datasource``) —
+idempotent per batch id, so replayed batches after a failure do not
+double-write.
 """
 
 from __future__ import annotations
@@ -34,6 +36,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from fourmc_spark.sources.datasource import (
+    FourMcDataSourceReader, FourMcDataSourceWriter, _list_files,
+    _staged_pairs, _sweep_staging, discard, land, retire, write_atomic,
+)
 
 
 class FourMcStreamReader(DataSourceStreamReader):
@@ -116,14 +123,10 @@ class FourMcStreamReader(DataSourceStreamReader):
         self._batch_reader = self._make_batch_reader(options, schema, cores)
 
     def _make_batch_reader(self, options, schema: StructType, cores):
-        from fourmc_spark.sources.datasource import FourMcDataSourceReader
-
         return FourMcDataSourceReader(options, schema, cores)
 
 
     def _list(self) -> list[str]:
-        from fourmc_spark.sources.datasource import _list_files
-
         return _list_files(self.path) if os.path.exists(self.path) else []
 
     def initialOffset(self) -> dict:
@@ -290,7 +293,8 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
     sealed), and every codec family (4mc/4mz, straight Hadoop block
     codecs, ``.zst`` streaming frames).
 
-    Idempotence: commit() renames staged files to DETERMINISTIC names
+    Idempotence: commit() lands staged files (with their sidecars,
+    through the batch sinks' :func:`land`) at DETERMINISTIC names
     keyed by (batchId, task index, file index), so a micro-batch
     replayed after a failure between sink commit and checkpoint commit
     cannot duplicate its own output — the poor man's version of
@@ -310,7 +314,7 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
     duplicates under fresh above-the-hwm names whenever the replay
     re-plans into a different task/file split. Only a batch above DONE
     but at or below HWB — a crash mid-rename, where the first attempt
-    is partial on disk — pays the supersede path: commit() sweeps
+    is partial on disk — pays the supersede path: commit() retires
     part-b{batchId} files from every dir the new attempt writes into
     (same dir union as the prior attempt for deterministic input) and
     renames fresh. Steady-state commits skip both and stay O(batch),
@@ -331,8 +335,6 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
         self.path = self._w.path
 
     def _make_batch_writer(self, options, schema: StructType):
-        from fourmc_spark.sources.datasource import FourMcDataSourceWriter
-
         return FourMcDataSourceWriter(options, schema, overwrite=False)
 
     def write(self, iterator) -> WriterCommitMessage:
@@ -341,21 +343,6 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
         # its own deterministic final names
         return self._w.write(iterator)
 
-    def _discard_staging(self, messages) -> None:
-        from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-        for m in messages or []:
-            if m is None:
-                continue
-            for staged, _final in m.files:
-                for p in (staged, staged + STATS_SUFFIX if staged else None):
-                    if p and os.path.exists(p):
-                        os.remove(p)
-        try:
-            os.rmdir(os.path.join(self.path, "_temporary"))
-        except OSError:
-            pass
-
     @staticmethod
     def _read_marker(path: str) -> tuple[int, bool]:
         try:
@@ -363,13 +350,6 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
                 return int(f.read().strip()), True
         except (OSError, ValueError):
             return -1, False  # no marker yet (first commit / pre-r9 output)
-
-    @staticmethod
-    def _write_marker(path: str, batch_id: int) -> None:
-        tmpm = f"{path}.tmp"
-        with open(tmpm, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmpm, path)
 
     def commit(self, messages, batchId: int) -> None:
         # See the class docstring for the marker protocol. Ordering per
@@ -382,7 +362,7 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
         done, _ = self._read_marker(done_marker)
         if batchId <= done:
             # first attempt fully committed: it stands; discard replay
-            self._discard_staging(messages)
+            discard(self.path, messages)
             return
         marker = os.path.join(self.path, "_fourmc_sink_hwb")
         last, known = self._read_marker(marker)
@@ -395,20 +375,15 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
             # dirs this attempt writes into suffices — steady-state
             # commits never list dirs and stay O(batch).
             prefix = f"part-b{batchId:010d}-"
-            dirs = {
-                os.path.dirname(final)
-                for m in messages if m is not None
-                for _staged, final in m.files
-            }
-            for d in dirs:
-                if not os.path.isdir(d):
-                    continue
-                for name in os.listdir(d):
-                    if name.startswith(prefix):
-                        os.remove(os.path.join(d, name))
+            dirs = {os.path.dirname(f) for _s, f in _staged_pairs(messages)}
+            retire(
+                os.path.join(d, name)
+                for d in dirs if os.path.isdir(d)
+                for name in os.listdir(d) if name.startswith(prefix)
+            )
         if batchId > last:
             os.makedirs(self.path, exist_ok=True)
-            self._write_marker(marker, batchId)
+            write_atomic(marker, str(batchId))
         for ti, m in enumerate(messages):
             if m is None:
                 continue
@@ -418,32 +393,11 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
                 # id with batch-scoped deterministic coordinates
                 d = os.path.dirname(final)
                 ext = os.path.splitext(final)[1]
-                os.makedirs(d, exist_ok=True)
-                newname = os.path.join(
+                land(staged, os.path.join(
                     d, f"part-b{batchId:010d}-{ti:05d}-{fi:03d}{ext}"
-                )
-                os.replace(staged, newname)
-                from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-                if os.path.exists(staged + STATS_SUFFIX):
-                    # statsschema sidecar follows its sealed file
-                    os.replace(staged + STATS_SUFFIX, newname + STATS_SUFFIX)
-                else:
-                    # a stats-less file landing over a pre-existing
-                    # deterministic name (markers removed by hand,
-                    # checkpoint rebuilt into a kept output dir) must
-                    # evict the previous occupant's sidecar — the
-                    # size check alone could re-adopt it on collision
-                    try:
-                        os.remove(newname + STATS_SUFFIX)
-                    except FileNotFoundError:
-                        pass
-        self._write_marker(done_marker, batchId)
-        staging = os.path.join(self.path, "_temporary")
-        try:
-            os.rmdir(staging)
-        except OSError:
-            pass
+                ))
+        write_atomic(done_marker, str(batchId))
+        _sweep_staging(self.path)
 
     def abort(self, messages, batchId: int) -> None:
-        self._discard_staging(messages)
+        discard(self.path, messages)

@@ -454,6 +454,28 @@ def test_proto_overwrite_evicts_sidecars(spark, tmp_path):
     assert glob.glob(f"{d}/*.stats.json") == []
 
 
+def test_proto_overwrite_replaces_nested_files(spark, tmp_path):
+    """An overwrite replaces everything the recursive reader lists, not
+    just the top level: an older d/sub/part-* must not survive."""
+    d = str(tmp_path / "pnest")
+    cols = ("userId string, name string, type string, birthDate long, "
+            "tags array<string>")
+
+    def frame(users):
+        return spark.createDataFrame(
+            [(u["userId"], u["name"], u["type"], u["birthDate"], u["tags"])
+             for u in users], cols,
+        ).coalesce(1)
+
+    old, new = _users(30)[:10], _users(30)[10:]
+    frame(old).write.format("fourmcproto").mode("overwrite").save(
+        os.path.join(d, "sub"))
+    frame(new).write.format("fourmcproto").mode("overwrite").save(d)
+    back = spark.read.format("fourmcproto").load(d)
+    assert sorted(r["userId"] for r in back.collect()) == sorted(
+        u["userId"] for u in new)
+
+
 def test_proto_compact_carries_zone_maps_exactly(spark, tmp_path):
     """compact_protobuf carries analyze_stats_proto zone maps through
     the raw block copy with NO seam drops (sync-marker ownership is

@@ -2,9 +2,9 @@
 
 The driver testdata has shipped ``events.ts`` in two physical forms:
 
-* parquet TIMESTAMP(NANOS) — Spark's vectorized reader rejects it unless
+* parquet TIMESTAMP(NANOS) — Spark's schema inference rejects it unless
   ``spark.sql.legacy.parquet.nanosAsLong=true``, under which the column
-  arrives as a raw int64 of nanoseconds;
+  arrives as a raw int64 of nanoseconds (the scan itself needs no flag);
 * plain microsecond TIMESTAMP (current driver output) — read natively as
   TIMESTAMP / TIMESTAMP_NTZ depending on the parquet logical-type flag.
 
@@ -19,6 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+
+from fourmc_spark.session import _scoped_conf
+
+#: the legacy parquet flag under which TIMESTAMP(NANOS) reads as int64
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -39,5 +44,7 @@ def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 def load_events(spark: SparkSession, path: str) -> DataFrame:
     """Batch read of an events parquet file/dir with ts normalized."""
     # Harmless when ts is already a timestamp; required for NANOS files.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_events_ts(spark.read.parquet(path))
+    # Spark reads the flag when it infers the file schema, not when the
+    # scan runs, so it is set for this read only.
+    with _scoped_conf(spark, {NANOS_AS_LONG: "true"}):
+        return normalize_events_ts(spark.read.parquet(path))

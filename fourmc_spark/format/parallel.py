@@ -77,15 +77,44 @@ def _parse_blocks(
     return blocks
 
 
+def _alloc_output(blocks) -> tuple[object, list[int]]:
+    """The output buffer for *blocks* and each block's offset in it.
+
+    Uninitialized: every byte is written by exactly one block decode, so
+    bytearray's mandatory zero-fill is a pure second pass over the whole
+    output (~35% of single-thread decode time).
+    """
+    out_offs = []
+    total = 0
+    for b in blocks:
+        out_offs.append(total)
+        total += b[1]
+    try:
+        import numpy as _np
+
+        return _np.empty(total, dtype=_np.uint8), out_offs
+    except ImportError:  # pragma: no cover
+        return bytearray(total), out_offs
+
+
+def _as_result(out):
+    # memoryview: bytes-like (len/slice/== bytes) without copying; callers
+    # needing an owned copy take bytes(result)
+    return out if isinstance(out, bytearray) else memoryview(out)
+
+
 def _decode_blocks_into(
     src,
     blocks: list[tuple[int, int, int, int, bool]],
-    out: bytearray,
+    out,
     out_offs: list[int],
     codec: str,
-    pool: ThreadPoolExecutor,
+    pool: ThreadPoolExecutor | None,
     verify: bool,
 ) -> None:
+    """Decode every block into its slice of *out*: on *pool*, or in a
+    plain loop when *pool* is None (no executor dispatch)."""
+
     def work(i: int) -> None:
         poff, usize, csize, checksum, raw = blocks[i]
         if verify and xxh32_at(src, poff, csize) != checksum:
@@ -103,8 +132,12 @@ def _decode_blocks_into(
         except ValueError as e:
             raise core.BadBlockError(str(e)) from e
 
-    # pool.map propagates the first worker exception
-    list(pool.map(work, range(len(blocks))))
+    if pool is None:
+        for i in range(len(blocks)):
+            work(i)
+    else:
+        # pool.map propagates the first worker exception
+        list(pool.map(work, range(len(blocks))))
 
 
 def decompress_file_parallel(
@@ -131,48 +164,13 @@ def decompress_file_parallel(
     if data[eos_start : eos_start + core.BLOCK_HEADER_SIZE] != core.EOS_MARKER:
         raise core.BadBlockError("missing EOS marker before footer")
     blocks = _parse_blocks(data, offsets, ends, base=0)
-    out_offs = [0] * len(blocks)
-    total = 0
-    for i, b in enumerate(blocks):
-        out_offs[i] = total
-        total += b[1]
-    # uninitialized output buffer: every byte is written by exactly one
-    # block decode, so bytearray's mandatory zero-fill is a pure second
-    # pass over the whole output (~35% of single-thread decode time)
-    try:
-        import numpy as _np
-
-        out = _np.empty(total, dtype=_np.uint8)
-    except ImportError:  # pragma: no cover
-        out = bytearray(total)
-    if blocks:
-        if threads <= 1:
-            # sequential twin of the pool path — same zero-copy decode
-            # into the preallocated buffer, no executor dispatch
-            for i in range(len(blocks)):
-                poff, usize, csize, checksum, raw = blocks[i]
-                if verify and xxh32_at(data, poff, csize) != checksum:
-                    raise core.BadBlockError("block checksum mismatch")
-                ooff = out_offs[i]
-                try:
-                    if raw:
-                        out[ooff : ooff + usize] = memoryview(data)[
-                            poff : poff + csize
-                        ]
-                    elif codec == "lz4":
-                        lz4_decompress_at(data, poff, csize, out, ooff, usize)
-                    else:
-                        zstd_decompress_at(data, poff, csize, out, ooff, usize)
-                except core.FourMcFormatError:
-                    raise
-                except ValueError as e:
-                    raise core.BadBlockError(str(e)) from e
-        else:
-            with ThreadPoolExecutor(max_workers=min(threads, len(blocks))) as pool:
-                _decode_blocks_into(data, blocks, out, out_offs, codec, pool, verify)
-    # memoryview: bytes-like (len/slice/== bytes) without copying; callers
-    # needing an owned copy take bytes(result)
-    return memoryview(out) if not isinstance(out, bytearray) else out
+    out, out_offs = _alloc_output(blocks)
+    if threads <= 1 or len(blocks) <= 1:  # no pool for 0 or 1 block
+        _decode_blocks_into(data, blocks, out, out_offs, codec, None, verify)
+    else:
+        with ThreadPoolExecutor(max_workers=min(threads, len(blocks))) as pool:
+            _decode_blocks_into(data, blocks, out, out_offs, codec, pool, verify)
+    return _as_result(out)
 
 
 def iter_decoded_windows(
@@ -212,17 +210,7 @@ def iter_decoded_windows(
             if len(buf) != stop - start:
                 raise core.BadBlockError("truncated block span")
             blocks = _parse_blocks(buf, offsets[i:j], ends[i:j], base=start)
-            out_offs = [0] * len(blocks)
-            total = 0
-            for k, b in enumerate(blocks):
-                out_offs[k] = total
-                total += b[1]
-            try:
-                import numpy as _np
-
-                out = _np.empty(total, dtype=_np.uint8)  # no zero-fill pass
-            except ImportError:  # pragma: no cover
-                out = bytearray(total)
+            out, out_offs = _alloc_output(blocks)
             _decode_blocks_into(buf, blocks, out, out_offs, codec, pool, verify)
-            yield memoryview(out) if not isinstance(out, bytearray) else out
+            yield _as_result(out)
             i = j

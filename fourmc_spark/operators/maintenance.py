@@ -63,7 +63,9 @@ from fourmc_spark.format import core
 from fourmc_spark.format.reader import iter_block_payloads, scan_file_info
 from fourmc_spark.format.writer import FourMcWriter, normalize_codec
 from fourmc_spark.sources.datasource import (
-    STATS_SUFFIX, _list_files, _load_zone_sidecar, land, retire, write_atomic,
+    _NAN_SPAN, STATS_SUFFIX, _bloom_block_entries, _list_files,
+    _load_zone_sidecar, _zone_comparable, bloom_family, land, retire,
+    seal_bloom_blocks_header, seal_bloom_spec, seal_sidecar, zone_merge,
 )
 
 __all__ = [
@@ -474,33 +476,24 @@ def _write_carried_sidecar(
     BLOOM entries carry only when every input's ``bloom_blocks`` header
     (algo/seed/bits/k/fam) is identical — a geometry or family mismatch
     would probe one input's bitmaps under another's derivation."""
-    import json as _json
-
-    from fourmc_spark.sources.datasource import _zone_comparable
-
     common = set(metas[0].get("columns", {}))
     for m in metas[1:]:
         common &= set(m.get("columns", {}))
     file_cols = {}
     for c in sorted(common):
-        stats = [m["columns"][c] for m in metas]
-        mns = [s.get("min") for s in stats if s.get("min") is not None]
-        mxs = [s.get("max") for s in stats if s.get("max") is not None]
-        vals = mns + mxs
+        spans = [
+            (s.get("min"), s.get("max"), s.get("nulls"))
+            for s in (m["columns"][c] for m in metas)
+        ]
+        vals = [v for span in spans for v in span[:2] if v is not None]
         if any(not _zone_comparable(vals[0], v) for v in vals[1:]):
             # inputs analyzed under different DDLs for this column:
             # min()/max() across mixed types would raise, and even a
             # successful mix could understate the range — skip it
             # (conservative: the column never file-prunes)
             continue
-        file_cols[c] = {
-            "min": _zone_min(mns),
-            "max": _zone_max(mxs),
-            "nulls": sum(int(s.get("nulls") or 0) for s in stats),
-        }
-    meta = {
-        "version": 2,
-        "size": os.path.getsize(out_path),
+        file_cols[c] = zone_merge(spans)
+    fields = {
         "rows": sum(int(m.get("rows") or 0) for m in metas),
         "columns": file_cols,
         "blocks": block_entries,
@@ -508,26 +501,29 @@ def _write_carried_sidecar(
     }
     blooms = _merge_carried_blooms(metas)
     if blooms:
-        meta["bloom"] = blooms
-    if bloom_block_entries:
-        heads = [m.get("bloom_blocks") for m in metas]
-        head = heads[0]
-        keys = ("algo", "seed", "bits", "k", "fam")
-        if (
-            isinstance(head, dict)
-            # every header field PRESENT (a vacuous None == None match
-            # must not reach the seal below and KeyError the task)
-            and all(f in head for f in keys)
-            and all(
-                isinstance(h, dict)
-                and all(h.get(f) == head.get(f) for f in keys)
-                for h in heads
-            )
-        ):
-            meta["bloom_blocks"] = dict(
-                {f: head[f] for f in keys}, blocks=bloom_block_entries
-            )
-    write_atomic(out_path + STATS_SUFFIX, _json.dumps(meta))
+        fields["bloom"] = blooms
+    heads = [m.get("bloom_blocks") for m in metas]
+    if bloom_block_entries and _one_contract(heads):
+        fields["bloom_blocks"] = dict(
+            {f: heads[0][f] for f in _CONTRACT}, blocks=bloom_block_entries
+        )
+    seal_sidecar(out_path, fields)
+
+
+#: the fields two bloom specs (or ``bloom_blocks`` headers) must share
+#: for one's bitmaps to be read under the other's derivation
+_CONTRACT = ("algo", "seed", "bits", "k", "fam")
+
+
+def _one_contract(specs: list) -> bool:
+    """True iff every spec is a dict stating every contract field, each
+    equal to the first spec's."""
+    head = specs[0]
+    return isinstance(head, dict) and all(
+        isinstance(s, dict)
+        and all(f in s and s[f] == head[f] for f in _CONTRACT)
+        for s in specs
+    )
 
 
 def _merge_carried_blooms(metas: list[dict]) -> dict:
@@ -535,7 +531,7 @@ def _merge_carried_blooms(metas: list[dict]) -> dict:
     UNION of its inputs', and a bloom of a union is the bitwise OR of
     the blooms — exact, no re-hash. A column carries only when EVERY
     input has a bloom for it under the IDENTICAL contract (algo, seed,
-    bits, k, bitmap length); any gap or mismatch drops that column
+    bits, k, fam, bitmap length); any gap or mismatch drops that column
     (conservative: it simply never bloom-prunes). Seam-block text
     ownership shifts are irrelevant here — the OR covers every input
     row, and extra coverage only adds false positives, never false
@@ -552,16 +548,7 @@ def _merge_carried_blooms(metas: list[dict]) -> dict:
     merged = {}
     for c in sorted(common):
         specs = [b[c] for b in all_blooms]
-        head = specs[0]
-        if not all(
-            isinstance(s, dict)
-            and s.get("algo") == head.get("algo")
-            and s.get("seed") == head.get("seed")
-            and s.get("bits") == head.get("bits")
-            and s.get("k") == head.get("k")
-            and s.get("fam") == head.get("fam")
-            for s in specs
-        ):
+        if not _one_contract(specs):
             continue
         try:
             bms = [_b64.b64decode(s["b64"], validate=True) for s in specs]
@@ -573,7 +560,7 @@ def _merge_carried_blooms(metas: list[dict]) -> dict:
         for bm in bms:
             acc |= int.from_bytes(bm, "little")
         merged[c] = dict(
-            head,
+            specs[0],
             b64=_b64.b64encode(
                 acc.to_bytes(len(bms[0]), "little")
             ).decode("ascii"),
@@ -754,7 +741,6 @@ def analyze_stats_proto(
     reduceByKey (block keys are disjoint across ranges by the
     ownership rule) and the reducer task writes the sidecar; the
     driver sees one summary row per file."""
-    import json as _json
     import math
 
     from fourmc_spark.format.protobuf import (
@@ -892,78 +878,38 @@ def analyze_stats_proto(
 
     def _finalize(kv) -> dict:
         fpath, (per_block, bl, bl_blocks) = kv
-        import os as _os
-
-        def _mnmx(st):
-            mn, mx = st[0], st[1]
-            if st[3]:  # NaN present: Spark's greatest double
-                mx = float("nan")
-                if mn is None:
-                    mn = float("nan")
-            return mn, mx
-
-        file_cols = {}
-        for c in cols:
-            mns, mxs, nulls = [], [], 0
-            for b in per_block.values():
-                mn, mx = _mnmx(b["c"][c])
-                if mn is not None:
-                    mns.append(mn)
-                if mx is not None:
-                    mxs.append(mx)
-                nulls += b["c"][c][2]
-            file_cols[c] = {
-                "min": _zone_min(mns), "max": _zone_max(mxs),
-                "nulls": nulls,
-            }
+        # per block: [min, max, nulls, NaN seen] -> its zone
+        zones = {
+            o: {c: zone_merge([st[:3]] + ([_NAN_SPAN] if st[3] else []))
+                for c, st in b["c"].items()}
+            for o, b in per_block.items()
+        }
         rows = sum(b["rows"] for b in per_block.values())
-        meta = {
-            "version": 2,
-            "size": _os.path.getsize(fpath),
+        fields = {
             "rows": rows,
-            "columns": file_cols,
+            "columns": {
+                c: zone_merge(tuple(z[c].values()) for z in zones.values())
+                for c in cols
+            },
         }
         if bl_cols:
-            import base64 as _b64
-
-            from fourmc_spark.sources.datasource import (
-                seal_bloom_blocks_header, seal_bloom_spec,
-            )
-
-            meta["bloom"] = {
+            fields["bloom"] = {
                 c: seal_bloom_spec(
                     bl[c].tobytes(), bloom_bits, bloom_k, bl_fams[c],
                 )
                 for c in bl_cols
             }
             if bloom_block_bits is not None:
-                entries = [
-                    {
-                        "o": o,
-                        "c": {
-                            c: _b64.b64encode(
-                                bl_blocks[o][c].tobytes()
-                            ).decode("ascii")
-                            for c in bl_cols
-                        },
-                    }
-                    for o in sorted(bl_blocks)
-                ]
-                meta["bloom_blocks"] = seal_bloom_blocks_header(
-                    bloom_block_bits, bk, bl_fams, entries
+                fields["bloom_blocks"] = seal_bloom_blocks_header(
+                    bloom_block_bits, bk, bl_fams,
+                    _bloom_block_entries(bl_blocks, bl_cols, bloom_block_bits),
                 )
         if want_blocks:
-            meta["blocks"] = [
-                {
-                    "o": o,
-                    "c": {
-                        c: list(_mnmx(b["c"][c])) + [b["c"][c][2]]
-                        for c in cols
-                    },
-                }
-                for o, b in sorted(per_block.items())
+            fields["blocks"] = [
+                {"o": o, "c": {c: list(zones[o][c].values()) for c in cols}}
+                for o in sorted(zones)
             ]
-        write_atomic(fpath + STATS_SUFFIX, _json.dumps(meta))
+        seal_sidecar(fpath, fields)
         return {"file": fpath, "rows": rows, "n_blocks": len(per_block)}
 
     # plan tasks: files at or under split_bytes (the common sealed-log
@@ -1008,32 +954,6 @@ def analyze_stats_proto(
         "bloom_columns": bl_cols,
         "tasks": len(tasks),
     }
-
-
-def _zone_min(vals):
-    """min over stat values with Spark's NaN ordering (NaN greatest):
-    NaN contributes to min only when EVERY value is NaN. Python's bare
-    min/max are order-dependent with NaN ([nan,1]→nan but [1,nan]→1),
-    which could record a max below a real NaN row — a conservativeness
-    violation for x >= k predicates."""
-    import math
-
-    if not vals:
-        return None
-    real = [v for v in vals
-            if not (isinstance(v, float) and math.isnan(v))]
-    return min(real) if real else float("nan")
-
-
-def _zone_max(vals):
-    """max over stat values with Spark's NaN ordering (NaN greatest)."""
-    import math
-
-    if not vals:
-        return None
-    if any(isinstance(v, float) and math.isnan(v) for v in vals):
-        return float("nan")
-    return max(vals)
 
 
 def _json_stat_value(v):
@@ -1126,8 +1046,6 @@ def analyze_stats(
     only one summary row per file — the O(files) it already pays to
     plan splits.
     """
-    import json as _json
-
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1145,10 +1063,7 @@ def analyze_stats(
     # Arrow->pandas turns int64-with-nulls into float64, which silently
     # rounds values above 2^53 — a zone map rounded DOWN can wrongly
     # prune a file holding the true max (conservativeness violation)
-    integral = {
-        c for c in cols
-        if isinstance(types.get(c), (T.LongType, T.IntegerType, T.ShortType))
-    }
+    integral = {c for c in cols if bloom_family(types.get(c)) == "int"}
     # instant-typed (TimestampType) stats are recorded as EPOCH MICROS
     # via unix_micros — computed JVM-side from the internal UTC instant,
     # so the sidecar value is session-timezone-free and directly
@@ -1209,53 +1124,33 @@ def analyze_stats(
     def _write_sidecar(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
         fpath = key[0]
         pdf = pdf.sort_values("offset")
-        file_cols = {}
-        for i, c in enumerate(cols):
-            mns = [x for x in (_decode(c, i, v) for v in pdf[f"__min_{i}"])
-                   if x is not None]
-            mxs = [x for x in (_decode(c, i, v) for v in pdf[f"__max_{i}"])
-                   if x is not None]
-            file_cols[c] = {
-                "min": _zone_min(mns),
-                "max": _zone_max(mxs),
-                "nulls": int(pdf[f"__nulls_{i}"].sum()),
-            }
-        meta = {
-            "version": 2,
-            "size": os.path.getsize(fpath),
+        spans = {
+            c: [
+                (_decode(c, i, mn), _decode(c, i, mx), int(n))
+                for mn, mx, n in zip(
+                    pdf[f"__min_{i}"], pdf[f"__max_{i}"], pdf[f"__nulls_{i}"]
+                )
+            ]
+            for i, c in enumerate(cols)
+        }
+        fields = {
             "rows": int(pdf["__rows"].sum()),
-            "columns": file_cols,
+            "columns": {c: zone_merge(spans[c]) for c in cols},
         }
         # bloom tiers sealed by analyze_bloom for the SAME bytes stay
         # valid — re-ANALYZE of min/max must not drop either of them
-        try:
-            with open(fpath + STATS_SUFFIX) as f:
-                old = _json.load(f)
-            if old.get("size") == meta["size"]:
-                if isinstance(old.get("bloom"), dict):
-                    meta["bloom"] = old["bloom"]
-                if isinstance(old.get("bloom_blocks"), dict):
-                    meta["bloom_blocks"] = old["bloom_blocks"]
-        except (OSError, ValueError):
-            pass
+        old = _load_zone_sidecar(fpath) or {}
+        for tier in ("bloom", "bloom_blocks"):
+            if isinstance(old.get(tier), dict):
+                fields[tier] = old[tier]
         if want_blocks:
-            meta["blocks"] = [
-                {
-                    "o": int(r["offset"]),
-                    "c": {
-                        c: [
-                            _decode(c, i, r[f"__min_{i}"]),
-                            _decode(c, i, r[f"__max_{i}"]),
-                            int(r[f"__nulls_{i}"]),
-                        ]
-                        for i, c in enumerate(cols)
-                    },
-                }
-                for _, r in pdf.iterrows()
+            fields["blocks"] = [
+                {"o": int(o), "c": {c: list(spans[c][j]) for c in cols}}
+                for j, o in enumerate(pdf["offset"])
             ]
-        write_atomic(fpath + STATS_SUFFIX, _json.dumps(meta))
+        seal_sidecar(fpath, fields)
         return pd.DataFrame(
-            {"file": [fpath], "rows": [int(pdf["__rows"].sum())],
+            {"file": [fpath], "rows": [fields["rows"]],
              "n_blocks": [len(pdf)]}
         )
 
@@ -1338,15 +1233,12 @@ def analyze_bloom(
     blooms by offset remap with the same seam rule as zone maps, so
     steady-state needs no re-ANALYZE.
     """
-    import json as _json
-
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    from fourmc_spark.sources.datasource import _parse_flat_ddl, seal_bloom_spec
-
-    from fourmc_spark.sources.datasource import validate_bloom_geometry
+    from fourmc_spark.sources.datasource import (
+        _parse_flat_ddl, validate_bloom_geometry,
+    )
 
     validate_bloom_geometry(bits, k, "analyze_bloom")
     bk = block_k if block_k is not None else k
@@ -1359,22 +1251,17 @@ def analyze_bloom(
     cols = list(columns)
     if not cols:
         raise ValueError("analyze_bloom: at least one column required")
+    fams = {}
     for c in cols:
         if c not in types:
             raise ValueError(f"analyze_bloom: column {c!r} not in schema")
-        if not isinstance(
-            types[c],
-            (T.LongType, T.IntegerType, T.ShortType, T.StringType),
-        ):
+        fams[c] = bloom_family(types[c])
+        if fams[c] is None:
             raise ValueError(
                 f"analyze_bloom: column {c!r} has type {types[c].simpleString()};"
                 f" only {_BLOOM_ELIGIBLE} columns are bloom-eligible"
                 " (their CAST AS STRING matches the probe's str())"
             )
-    fams = {
-        c: "str" if isinstance(types[c], T.StringType) else "int"
-        for c in cols
-    }
 
     src = _analyze_src(spark, path, schema_ddl, record_format)
     # one pass: every row fans out to k (column, block, bit-position)
@@ -1525,17 +1412,8 @@ def analyze_bloom(
 
     def _amend(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         fpath = key[0]
-        meta = None
-        try:
-            with open(fpath + STATS_SUFFIX) as f:
-                meta = _json.load(f)
-            if meta.get("size") != os.path.getsize(fpath):
-                meta = None  # stale: data rewritten after the last ANALYZE
-        except (OSError, ValueError):
-            meta = None
-        if meta is None:
-            meta = {"version": 2, "size": os.path.getsize(fpath)}
-        import base64 as _b64
+        # a copy: the loader's dict is its cache entry
+        meta = dict(_load_zone_sidecar(fpath) or {})
 
         def _merge(sub: "pd.DataFrame", n_bits: int) -> "np.ndarray":
             bm = np.zeros(n_bits // 8, dtype=np.uint8)
@@ -1549,7 +1427,8 @@ def analyze_bloom(
                     _or_bit_positions(bm, p)
             return bm
 
-        blooms = meta.setdefault("bloom", {})
+        old = meta.get("bloom")
+        blooms = dict(old) if isinstance(old, dict) else {}
         set_bits = 0
         data = pdf[pdf["col_name"].notna()]
         ftier = data[data["block"] == -1]
@@ -1557,42 +1436,23 @@ def analyze_bloom(
             bm = _merge(ftier[ftier["col_name"] == c], bits)
             blooms[c] = seal_bloom_spec(bm.tobytes(), bits, k, fams[c])
             set_bits += int(np.unpackbits(bm).sum())
+        meta["bloom"] = blooms
         if block_bits is not None:
-            from fourmc_spark.sources.datasource import (
-                seal_bloom_blocks_header,
-            )
-
             # ONE grouped pass over the block-tier rows (a per-offset
             # boolean filter would rescan the frame O(blocks) times —
             # quadratic exactly when blocks are many, the tier's
-            # target shape)
+            # target shape); seed rows give every block offset a group
             btier = pdf[pdf["block"] != -1]
-            grouped: dict[int, dict[str, "np.ndarray"]] = {}
+            grouped = {int(o): {} for o in btier["block"].unique()}
             for (off, cname), sub in btier[
                 btier["col_name"].notna()
             ].groupby(["block", "col_name"], sort=False):
-                grouped.setdefault(int(off), {})[cname] = _merge(
-                    sub, block_bits
-                )
-            # seed rows guarantee every block offset appears in pdf
-            all_offs = sorted(int(o) for o in btier["block"].unique())
-            zero = np.zeros(block_bits // 8, dtype=np.uint8)
-            entries = [
-                {
-                    "o": off,
-                    "c": {
-                        c: _b64.b64encode(
-                            grouped.get(off, {}).get(c, zero).tobytes()
-                        ).decode("ascii")
-                        for c in cols
-                    },
-                }
-                for off in all_offs
-            ]
+                grouped[int(off)][cname] = _merge(sub, block_bits)
             meta["bloom_blocks"] = seal_bloom_blocks_header(
-                block_bits, bk, fams, entries
+                block_bits, bk, fams,
+                _bloom_block_entries(grouped, cols, block_bits),
             )
-        write_atomic(fpath + STATS_SUFFIX, _json.dumps(meta))
+        seal_sidecar(fpath, meta)
         return pd.DataFrame({"file": [fpath], "set_bits": [set_bits]})
 
     summaries = (

@@ -34,6 +34,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from fourmc_spark.session import _scoped_conf
+
 __all__ = ["runtime_bloom_filters"]
 
 _CONFS = {
@@ -55,18 +57,5 @@ def runtime_bloom_filters(spark: SparkSession, enabled: bool = True):
     overrides = dict(_CONFS)
     if not enabled:
         overrides["spark.sql.optimizer.runtime.bloomFilter.enabled"] = "false"
-    saved: dict[str, str | None] = {}
-    for k, v in overrides.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with _scoped_conf(spark, overrides):
         yield spark
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -8,6 +8,7 @@ bench share this builder so plans are comparable.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +66,25 @@ def get_spark(
     spark = b.getOrCreate()
     register_fourmc(spark)
     return spark
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set the session conf *confs* for the ``with`` body only; on exit
+    each key gets back the value it had set, or is unset if it had none.
+    Session-global while it lasts: a query planned concurrently on the
+    same session sees the scoped values too."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def register_fourmc(spark: SparkSession) -> None:

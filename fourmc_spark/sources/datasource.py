@@ -323,17 +323,14 @@ class FourMcDataSourceReader(DataSourceReader):
         # COMPRESSED BYTE offsets against record values
         self.offset_is_pseudo = self.json_schema is None
         # value zone-map constraints apply to the typed scan's declared
-        # fields; bloom probes to its int and string ones (analyze_bloom's
-        # eligibility: the column's CAST AS STRING must equal the
-        # probe's str())
+        # fields; bloom probes to the ones with a bloom family (the rule
+        # every builder seals under)
         typed = self.json_schema.fields if self.json_schema is not None else []
-        families = {}
-        for f in typed:
-            if isinstance(f.dataType, (LongType, IntegerType, ShortType)):
-                families[f.name] = "int"
-            elif isinstance(f.dataType, StringType):
-                families[f.name] = "str"
-        self._init_pruning_state(options, [f.name for f in typed], families)
+        families = {f.name: bloom_family(f.dataType) for f in typed}
+        self._init_pruning_state(
+            options, [f.name for f in typed],
+            {c: fam for c, fam in families.items() if fam},
+        )
 
     def _init_split_options(self, options, cores: int | None) -> None:
         """The options every 4mc reader (this one and the protobuf
@@ -1154,7 +1151,7 @@ class _TypedCsvParser:
             ) from e
 
 
-# per-file zone-map sidecar written by operators/maintenance.analyze_stats
+# per-file pruning sidecar; its layout and builders: seal_sidecar
 STATS_SUFFIX = ".stats.json"
 
 
@@ -1266,9 +1263,12 @@ def _sidecar_fingerprint(f, size: int) -> bytes:
 
 
 def _load_zone_sidecar(path: str):
-    """The file's analyze_stats sidecar, or None when missing,
-    unreadable, or STALE (recorded size != current size — the data was
-    rewritten after ANALYZE)."""
+    """The file's sidecar, or None when missing, unreadable, not a JSON
+    object, or STALE (recorded size != current size — the data was
+    rewritten after it was sealed). The one validity rule: the planner,
+    ``sidecar_health``, compaction and the builders that amend or keep
+    a sidecar's tiers all read through it. The dict returned is the
+    cache's own — copy it before changing it."""
     import json
 
     sc = path + STATS_SUFFIX
@@ -1291,7 +1291,7 @@ def _load_zone_sidecar(path: str):
         with open(sc, "rb") as f:
             raw = f.read()
         meta = json.loads(raw)
-        if meta.get("size") != data_size:
+        if not isinstance(meta, dict) or meta.get("size") != data_size:
             meta = _STALE
     except (OSError, ValueError):
         return None
@@ -1433,6 +1433,112 @@ def validate_bloom_geometry(
         )
     if not 1 <= k <= 16:
         raise ValueError(f"{what}: k must be in [1, 16], got {k}")
+
+
+def _bloom_block_entries(blocks: dict, cols, bits: int) -> list:
+    """The ``blocks`` list of a ``bloom_blocks`` header: offset -> {col:
+    packed ``uint8`` bitmap} in offset order, each column base64-encoded;
+    a column a block holds no bitmap for seals all-zero (no value)."""
+    import base64
+
+    zero = bytes(bits // 8)
+    return [
+        {"o": o, "c": {
+            c: base64.b64encode(
+                blocks[o][c].tobytes() if c in blocks[o] else zero
+            ).decode("ascii")
+            for c in cols
+        }}
+        for o in sorted(blocks)
+    ]
+
+
+def bloom_family(dtype) -> str | None:
+    """The Spark type -> bloom type family rule every builder seals under
+    and the reader probes with: 'int' for long/int/short, 'str' for
+    string, None for the types no bloom is built for. Their CAST AS
+    STRING is the text Python's str() gives a probe value, so build and
+    probe hash the same bytes."""
+    if isinstance(dtype, (LongType, IntegerType, ShortType)):
+        return "int"
+    return "str" if isinstance(dtype, StringType) else None
+
+
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
+#: a span whose every value is NaN, as :func:`zone_merge` takes it
+_NAN_SPAN = (float("nan"), float("nan"), 0)
+
+
+def zone_merge(spans) -> dict:
+    """The zone-map merge every builder seals min/max/nulls with: spans
+    of ``(min, max, nulls)`` -> ``{"min", "max", "nulls"}`` under Spark's
+    ordering, where NaN is greater than every double (``x >= k`` matches
+    a NaN row): a NaN max wins, and NaN is the min only when every min
+    is NaN. Python's bare min/max depend on argument order around NaN
+    ([nan, 1] -> nan but [1, nan] -> 1). A None min/max is a span with
+    no value; both are None when no span holds one. A None nulls is
+    unknown, and so is the merged count then."""
+    mns, mxs, nulls = [], [], 0
+    for mn, mx, n in spans:
+        if mn is not None:
+            mns.append(mn)
+        if mx is not None:
+            mxs.append(mx)
+        nulls = None if n is None or nulls is None else nulls + int(n)
+    real = [v for v in mns if not _is_nan(v)]
+    return {
+        "min": min(real) if real else (float("nan") if mns else None),
+        "max": float("nan") if any(map(_is_nan, mxs))
+        else max(mxs, default=None),
+        "nulls": nulls,
+    }
+
+
+def seal_sidecar(path: str, fields: dict) -> None:
+    """The one sidecar writer: ``<path>.stats.json`` for data file *path*
+    is ``{"version": 2, "size": <path's byte size>}`` followed by
+    *fields* in the caller's order, written whole or not at all.
+
+    The v2 layout. Every key after ``size`` is optional, and the reader
+    (:func:`_load_zone_sidecar` -> :func:`_summaries`) skips what it
+    cannot use:
+
+    * ``version`` int: 2.
+    * ``size`` int: the data file's byte size when sealed. A sidecar
+      whose size is not the file's is stale and never read.
+    * ``rows`` int: the file's row count.
+    * ``columns`` ``{col: {"min", "max", "nulls"}}``: the file-tier zone
+      map, merged by :func:`zone_merge`. min/max: long/int/short and
+      double/float as JSON numbers (NaN as the token ``NaN``), timestamp
+      as epoch micros, timestamp_ntz as ``"YYYY-MM-DD HH:MM:SS[.ffffff]"``,
+      date as ``"YYYY-MM-DD"``, string as itself; both null when the
+      column holds no non-null value. ``nulls`` int, null if unknown.
+    * ``blocks`` ``[{"o": offset, "c": {col: [min, max, nulls]}}]``: the
+      block-tier zone map, keyed by each block's compressed file offset
+      (the scan's ``offset`` column), values as in ``columns``.
+    * ``bloom`` ``{col: spec}``: file-tier blooms, each spec from
+      :func:`seal_bloom_spec`.
+    * ``bloom_blocks``: block-tier blooms, a :func:`seal_bloom_blocks_header`
+      over :func:`_bloom_block_entries`.
+    * ``carried`` true: compaction merged the file tier from its inputs.
+
+    Which builder writes which keys:
+
+    * the sink (``statsschema``, ``bloomcolumns``): rows, columns, bloom;
+    * ``analyze_stats``: rows, columns, blocks, keeping the bloom and
+      bloom_blocks of the file's valid sidecar;
+    * ``analyze_stats_proto``: rows, columns, bloom, bloom_blocks, blocks;
+    * ``analyze_bloom``: bloom and bloom_blocks, amending a copy of the
+      file's valid sidecar (else a bare envelope);
+    * compaction's raw block copy (the carry): rows, columns, blocks,
+      carried, bloom, bloom_blocks. A recompressing compaction seals
+      none."""
+    meta = {"version": 2, "size": os.path.getsize(path)}
+    meta.update(fields)
+    write_atomic(path + STATS_SUFFIX, _json.dumps(meta))
 
 
 class _Summary(NamedTuple):
@@ -1871,24 +1977,21 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
             validate_bloom_geometry(
                 self.bloom_bits, self.bloom_k, "fourmc sink bloomcolumns"
             )
-            from pyspark.sql import types as _T
-
-            types = {f.name: f.dataType for f in self.stats_schema.fields}
-            for c in self.bloom_cols:
-                if c not in types:
-                    raise ValueError(
-                        f"fourmc sink: bloomcolumns field {c!r} not in "
-                        "statsschema"
-                    )
-                if not isinstance(
-                    types[c],
-                    (_T.LongType, _T.IntegerType, _T.ShortType, _T.StringType),
-                ):
-                    raise ValueError(
-                        f"fourmc sink: bloomcolumns field {c!r} has type "
-                        f"{types[c].simpleString()}; only long/int/short/"
-                        "string fields are bloom-eligible"
-                    )
+        types = {f.name: f.dataType for f in self.stats_schema or ()}
+        self.bloom_fams: dict[str, str] = {}  # col -> family, sealed per spec
+        for c in self.bloom_cols:
+            if c not in types:
+                raise ValueError(
+                    f"fourmc sink: bloomcolumns field {c!r} not in "
+                    "statsschema"
+                )
+            self.bloom_fams[c] = bloom_family(types[c])
+            if self.bloom_fams[c] is None:
+                raise ValueError(
+                    f"fourmc sink: bloomcolumns field {c!r} has type "
+                    f"{types[c].simpleString()}; only long/int/short/"
+                    "string fields are bloom-eligible"
+                )
         # pick the string column to serialize as lines
         data_names = [n for n in names if n not in self.partition_cols]
         if "value" in data_names:
@@ -1975,10 +2078,10 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     f, codec=codec, level=self.level, block_size=self.block_size
                 )
             acc = (
-                # per column: [min, max, nulls, has_nan]; bloom: packed
-                # bitmap per bloomcolumns field
+                # per column: the zone_merge of every batch so far; bloom:
+                # packed bitmap per bloomcolumns field
                 {"rows": 0,
-                 "cols": {c: [None, None, 0, False] for c in stat_cols},
+                 "cols": {c: zone_merge(()) for c in stat_cols},
                  "bloom": {c: np.zeros(self.bloom_bits // 8, np.uint8)
                            for c in self.bloom_cols}}
                 if self.stats_schema is not None else None
@@ -2011,31 +2114,24 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
             arrays = stats_parser.arrays(nd)
             acc["rows"] += len(strs)
             for c, col in zip(stat_cols, arrays):
-                st = acc["cols"][c]
-                st[2] += col.null_count
+                z = acc["cols"][c]
+                spans = [(z["min"], z["max"], z["nulls"] + col.null_count)]
                 n_valid = len(col) - col.null_count
                 if pa.types.is_floating(col.type) and n_valid:
                     # Arrow min_max SKIPS NaN (all-NaN spans return the
-                    # +inf/-inf identities) but Spark's SQL ordering
+                    # +inf/-inf identities), but Spark's SQL ordering
                     # puts NaN ABOVE everything — x >= 0 matches a NaN
-                    # row. Track NaN presence so the sealed max can be
-                    # widened to NaN (comparisons against NaN are all
-                    # false, so such spans never prune — conservative
-                    # AND semantically exact, NaN being Spark's max).
+                    # row — so NaN joins the merge as a span of its own
                     n_nan = pc.sum(
                         pc.is_nan(col), min_count=0
                     ).as_py() or 0
                     if n_nan:
-                        st[3] = True
+                        spans.append(_NAN_SPAN)
                     n_valid -= n_nan
                 if n_valid:
                     mm = pc.min_max(col)
-                    mn = mm["min"].as_py()
-                    mx = mm["max"].as_py()
-                    if st[0] is None or mn < st[0]:
-                        st[0] = mn
-                    if st[1] is None or mx > st[1]:
-                        st[1] = mx
+                    spans.append((mm["min"].as_py(), mm["max"].as_py(), 0))
+                acc["cols"][c] = zone_merge(spans)
                 if c in acc["bloom"]:
                     uniq = pc.unique(pc.drop_null(col.cast(pa.string())))
                     bloom_set_bits(
@@ -2043,7 +2139,7 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                         self.bloom_k, self.bloom_bits,
                     )
 
-        def _seal_sidecar(f, staged: str, acc) -> None:
+        def _seal_sidecar(staged: str, acc) -> None:
             if acc is None:
                 return
             import datetime
@@ -2071,43 +2167,28 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     return v.isoformat()
                 return v
 
-            def _col_meta(c, st):
-                mn, mx = _jv(c, st[0]), _jv(c, st[1])
-                if st[3]:  # NaN present: NaN is Spark's greatest double
-                    mx = float("nan")
-                    if mn is None:  # every valid value was NaN
-                        mn = float("nan")
-                return {"min": mn, "max": mx, "nulls": st[2]}
-
-            meta = {
-                "version": 2,
-                "size": os.path.getsize(staged),
+            fields = {
                 "rows": acc["rows"],
                 "columns": {
-                    c: _col_meta(c, st) for c, st in acc["cols"].items()
+                    c: dict(z, min=_jv(c, z["min"]), max=_jv(c, z["max"]))
+                    for c, z in acc["cols"].items()
                 },
             }
             if self.bloom_cols:
-                fams = {
-                    f2.name: "str"
-                    if isinstance(f2.dataType, T.StringType) else "int"
-                    for f2 in self.stats_schema.fields
-                }
-                meta["bloom"] = {
+                fields["bloom"] = {
                     c: seal_bloom_spec(
                         acc["bloom"][c].tobytes(), self.bloom_bits,
-                        self.bloom_k, fams[c],
+                        self.bloom_k, fam,
                     )
-                    for c in self.bloom_cols
+                    for c, fam in self.bloom_fams.items()
                 }
-            with open(staged + STATS_SUFFIX, "w") as sf:
-                _json.dump(meta, sf)
+            seal_sidecar(staged, fields)
 
         def _close_stream(reldir: str) -> None:
             f, w, staged, acc = streams.pop(reldir)
             w.close()
             f.close()
-            _seal_sidecar(f, staged, acc)
+            _seal_sidecar(staged, acc)
 
         def _roll_if_needed(reldir: str) -> None:
             if self.max_file_bytes <= 0 or reldir not in streams:

@@ -64,12 +64,14 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     normalizes ts to a microsecond TIMESTAMP column."""
     import os
 
-    from fourmc_spark.events import normalize_events_ts
+    from fourmc_spark.events import NANOS_AS_LONG, normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # FileStreamSource needs an explicit schema; one driver-side footer
     # read of the static path gives the physical schema in either era.
-    schema = spark.read.parquet(path).schema
+    # The legacy flag is read only while inferring it (micro-batches
+    # read with this schema), so it is scoped to this read.
+    with _scoped_conf(spark, {NANOS_AS_LONG: "true"}):
+        schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if os.path.isfile(path):
         # FileStreamSource requires a directory basePath: stream the
@@ -405,6 +407,8 @@ def sessionize_stateful(events: DataFrame, gap_minutes: int = 15) -> DataFrame:
 
 from contextlib import contextmanager
 
+from fourmc_spark.session import _scoped_conf
+
 
 @contextmanager
 def pinned_shuffle_width(spark: SparkSession, width):
@@ -437,12 +441,8 @@ def pinned_shuffle_width(spark: SparkSession, width):
             "integer (check FOURMC_STREAM_SHUFFLE_PARTITIONS / "
             "FOURMC_HH_STATE_PARTITIONS overrides)"
         )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(w))
-    try:
+    with _scoped_conf(spark, {"spark.sql.shuffle.partitions": str(w)}):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 #: bytes of drained input per reduce partition for the bounded-drain

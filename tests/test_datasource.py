@@ -1578,6 +1578,54 @@ def test_zone_ts_conservative_on_wall_clock_string_sidecar(spark, tmp_path):
     assert len(_tzm_planned(d, [LessThan(("ts",), feb)])) == 1  # kept
 
 
+def test_sink_and_analyze_stats_zone_maps_agree(spark, tmp_path):
+    """The sink's write-time zone maps (Arrow parse) and analyze_stats'
+    JVM aggregation describe the same rows of the same files, so their
+    file tiers must be identical: ints, strings, doubles with NaN (and a
+    file whose doubles are all NaN), zone-suffixed timestamps,
+    timestamp_ntz, dates, null fields, a column with no non-null value
+    and a NULL value line."""
+    import json as _json
+
+    from fourmc_spark.operators.maintenance import analyze_stats
+
+    ddl = _TZM_DDL + ", s string"
+    _write_tzm_tree(spark, str(tmp_path / "src"))
+    cols = ("ts", "tsn", "d", "x", "k", "s")
+    tzm = (spark.read.format("fourmc").option("jsonschema", _TZM_DDL)
+           .load(str(tmp_path / "src"))
+           .withColumn("s", F.concat(F.lit("s"), F.col("k").cast("string"))))
+    nan_only = spark.sql("""select * from values
+      (timestamp'2024-03-01 00:00:00.5', null, date'2024-03-02',
+       cast('NaN' as double), null, 'zeta'),
+      (null, timestamp_ntz'2024-03-03 01:02:03.000004', null,
+       cast('NaN' as double), 9L, 'ünï ✓'),
+      (null, null, null, cast('NaN' as double), null, null)
+      as t(ts, tsn, d, x, k, s)""")
+    sparse = spark.sql("""select * from values
+      (null, null, null, -0.5, -7L, '')
+      as t(ts, tsn, d, x, k, s)""")
+    d = str(tmp_path / "agree")
+    for i, df in enumerate((tzm, nan_only, sparse)):
+        lines = df.select(F.to_json(F.struct(*cols)).alias("value"))
+        if df is sparse:  # a NULL value writes an empty line
+            lines = lines.unionByName(
+                spark.sql("select cast(null as string) as value")
+            )
+        (lines.coalesce(1).write.format("fourmc").option("codec", "zstd")
+         .option("statsschema", ddl)
+         .mode("append" if i else "overwrite").save(d))
+    paths = sorted(glob.glob(f"{d}/*.stats.json"))
+    sink = {p: _json.load(open(p)) for p in paths}
+    assert len(sink) == 3 and sum(m["rows"] for m in sink.values()) == 9
+    analyze_stats(spark, d, ddl, blocks=False)
+    for p in paths:
+        jvm = _json.load(open(p))
+        for key in ("rows", "columns"):
+            assert _json.dumps(sink[p][key], sort_keys=True) == \
+                _json.dumps(jvm[key], sort_keys=True), (p, key)
+
+
 def test_zone_nan_double_never_prunes_matching_rows(spark, tmp_path):
     """Spark orders NaN ABOVE every double, so x >= k MATCHES NaN rows:
     a span containing NaN must never be pruned by a lower bound — for

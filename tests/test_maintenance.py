@@ -483,6 +483,47 @@ def test_carried_merge_skips_incomparable_columns(tmp_path):
     assert sc["columns"]["v"] == {"min": 1, "max": 4, "nulls": 0}
 
 
+def test_carried_unknown_null_count_stays_unknown(tmp_path):
+    """An input whose sidecar states no null count (unknown) must not
+    carry as 0 nulls: an IsNull filter would then prune an output file
+    that holds nulls. The merged count is unknown, which never prunes."""
+    import json as _json
+
+    from fourmc_spark.operators.maintenance import _write_carried_sidecar
+    from fourmc_spark.sources.datasource import (
+        STATS_SUFFIX, _sidecar_dropped,
+    )
+
+    outf = str(tmp_path / "m.4mz")
+    write_file(outf, b"x\n", codec="zstd")
+    metas = [
+        {"rows": 1, "columns": {"v": {"min": 1, "max": 2, "nulls": 0}}},
+        {"rows": 1, "columns": {"v": {"min": 3, "max": 4}}},
+    ]
+    _write_carried_sidecar(outf, metas, [])
+    sc = _json.load(open(outf + STATS_SUFFIX))
+    assert sc["columns"]["v"] == {"min": 1, "max": 4, "nulls": None}
+    assert _sidecar_dropped(sc, {}, {"v": {"null"}}, {}) == frozenset()
+
+
+def test_non_object_sidecar_is_ignored(tmp_path):
+    """A sidecar holding valid JSON that is not an object is unusable:
+    the loader every reader and builder shares treats it as stale
+    instead of raising, so planning and sidecar_health go on."""
+    from fourmc_spark.operators.maintenance import sidecar_health
+    from fourmc_spark.sources.datasource import (
+        STATS_SUFFIX, _load_zone_sidecar,
+    )
+
+    f = str(tmp_path / "a.4mz")
+    write_file(f, b'{"k": 1}\n', codec="zstd")
+    with open(f + STATS_SUFFIX, "w") as fh:
+        fh.write("[1, 2]")
+    assert _load_zone_sidecar(f) is None
+    health = sidecar_health(str(tmp_path))
+    assert (health["stale"], health["with_sidecar"]) == (1, 0)
+
+
 def test_sidecar_health_report(spark, tmp_path):
     """sidecar_health: valid/stale/missing accounting and tier flags,
     metadata-only."""

@@ -476,3 +476,90 @@ def test_bloom_set_bits_matches_scalar_positions(hashes, k, bits):
     got = np.zeros(bits // 8, np.uint8)
     bloom_set_bits(got, np.array(hashes, dtype=np.uint64), k, bits)
     assert got.tobytes() == bytes(want)
+
+
+def _nan_last(v):
+    """Sort key of Spark's ordering: NaN above every other value."""
+    return (v != v, 0 if v != v else v)
+
+
+def _same(a, b) -> bool:
+    return a == b or (a != a and b != b)
+
+
+_ZM_FLOAT = st.one_of(
+    st.floats(allow_nan=False, width=64), st.just(float("nan"))
+)
+
+
+@given(
+    groups=st.one_of(
+        st.lists(st.lists(st.integers(-9, 9), max_size=4), max_size=5),
+        st.lists(st.lists(st.text("abc", max_size=3), max_size=4), max_size=5),
+        st.lists(st.lists(_ZM_FLOAT, max_size=4), max_size=5),
+    ),
+    nulls=st.lists(st.one_of(st.none(), st.integers(0, 5)), min_size=5,
+                   max_size=5),
+)
+@settings(max_examples=400, deadline=None)
+def test_zone_merge_matches_brute_force(groups, nulls):
+    """zone_merge over spans (each one group's sorted ends, or no value
+    for an empty group) equals sorting every value with NaN greatest:
+    min first, max last, None for no values; null counts add up, and
+    any unknown (None) count makes the total unknown. The same holds for
+    the builders' form of a span, non-NaN ends plus _NAN_SPAN."""
+    from fourmc_spark.sources.datasource import _NAN_SPAN, zone_merge
+
+    ns = nulls[:len(groups)]
+    spans, builder_spans = [], []
+    for g, n in zip(groups, ns):
+        s = sorted(g, key=_nan_last)
+        spans.append((s[0], s[-1], n) if s else (None, None, n))
+        real = [v for v in g if v == v]
+        builder_spans.append(
+            (min(real), max(real), n) if real else (None, None, n)
+        )
+        if len(real) < len(g):
+            builder_spans.append(_NAN_SPAN)
+    every = sorted((v for g in groups for v in g), key=_nan_last)
+    want_nulls = None if None in ns else sum(ns)
+    for got in (zone_merge(spans), zone_merge(builder_spans)):
+        assert list(got) == ["min", "max", "nulls"]
+        if every:
+            assert _same(got["min"], every[0])
+            assert _same(got["max"], every[-1])
+        else:
+            assert got["min"] is None and got["max"] is None
+        assert got["nulls"] == want_nulls
+
+
+#: every type name the flat DDL parser accepts -> its bloom family
+_DDL_FAMILIES = {
+    "bigint": "int", "long": "int", "int": "int", "integer": "int",
+    "smallint": "int", "short": "int", "string": "str", "varchar": "str",
+    "double": None, "float": None, "real": None, "boolean": None,
+    "bool": None, "date": None, "timestamp": None, "timestamp_ntz": None,
+}
+
+
+@given(names=st.lists(st.sampled_from(sorted(_DDL_FAMILIES)), min_size=1,
+                      max_size=8))
+@settings(max_examples=100, deadline=None)
+def test_bloom_family_is_the_readers_probe_map(names):
+    """The family every builder seals a bloom under is the one the typed
+    reader probes with, for every flat-DDL type: a drift would hash one
+    canonical text at build time and another at probe time."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSourceReader, _parse_flat_ddl, bloom_family,
+    )
+
+    ddl = ", ".join(f"c{i} {t}" for i, t in enumerate(names))
+    st_ = _parse_flat_ddl(ddl)
+    want = {f"c{i}": _DDL_FAMILIES[t] for i, t in enumerate(names)}
+    assert {f.name: bloom_family(f.dataType) for f in st_.fields} == want
+    rd = FourMcDataSourceReader(
+        CaseInsensitiveDict({"path": "/nonexistent", "jsonschema": ddl}), st_
+    )
+    assert rd._bloom_typemap == {c: f for c, f in want.items() if f}

@@ -1494,6 +1494,60 @@ def test_pinned_shuffle_width_validates_and_restores(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+def test_conf_helpers_leave_session_conf_as_found(spark, tmp_path):
+    """Every helper that sets session conf gives it back on exit:
+    runtime_bloom_filters, pinned_shuffle_width, and the nanosAsLong flag
+    that load_events and read_events_stream set only while Spark infers
+    the parquet schema. A TIMESTAMP(NANOS) file inferred under the flag
+    still scans, batch and streaming, once it is unset."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fourmc_spark.events import NANOS_AS_LONG, load_events
+    from fourmc_spark.plans import runtime_bloom_filters
+    from fourmc_spark.plans.runtime_filters import _CONFS
+    from fourmc_spark.streaming import pinned_shuffle_width
+
+    keys = [NANOS_AS_LONG, "spark.sql.shuffle.partitions", *_CONFS]
+
+    def conf():
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    before = conf()
+    for enabled in (True, False):
+        with runtime_bloom_filters(spark, enabled=enabled):
+            assert spark.conf.get(
+                "spark.sql.optimizer.runtime.bloomFilter.enabled"
+            ) == str(enabled).lower()
+        assert conf() == before
+    with pinned_shuffle_width(spark, "3"):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert conf() == before
+
+    d = tmp_path / "nanos"
+    d.mkdir()
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2], pa.int64()),
+                  "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(d / "ev.parquet"), version="2.6",
+    )
+    want = [n // 1000 for n in ns]
+    ev = load_events(spark, str(d / "ev.parquet"))
+    assert conf() == before
+    got = ev.orderBy("event_id").select(F.unix_micros("ts")).collect()
+    assert [r[0] for r in got] == want
+    stream = read_events_stream(spark, str(d / "ev.parquet"))
+    assert conf() == before
+    q = (stream.select("event_id", F.unix_micros("ts").alias("us"))
+         .writeStream.format("memory").queryName("nanos_events")
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    got = spark.table("nanos_events").orderBy("event_id").collect()
+    assert [r["us"] for r in got] == want
+    assert conf() == before
+
+
 def test_drain_width_scales_with_volume_and_clamps(spark):
     """drain_width (r11) replaces run_to_memory's fixture-tuned constant
     8: ~4 MiB of source bytes per reduce partition, floor 4, clamped to

@@ -204,12 +204,12 @@ if xxh32 is None:  # pragma: no cover
     xxh32 = xxh32_py
 
 # ---------------------------------------------------------------------------
-# XXH64 — the hash behind Spark's JVM-side `xxhash64` expression (seed 42),
-# verified bit-identical in tests/test_bloom.py. The bloom sidecar tier
-# (operators/maintenance.analyze_bloom) builds bitmaps with the JVM
-# expression at scan speed; the Python builders (the sink's bloomcolumns,
-# analyze_stats_proto) hash whole Arrow arrays with `xxh64_array`, and the
-# planner (sources/datasource.py) hashes its few probe values with `xxh64`.
+# XXH64 — the hash behind Spark's `xxhash64` expression (seed 42), verified
+# bit-identical in tests/test_bloom.py. Every bloom builder (the sink's
+# bloomcolumns, analyze_stats_proto, analyze_bloom) hashes whole Arrow
+# arrays with `xxh64_array` through `sources.datasource.bloom_hashes`, and
+# the planner (sources/datasource.py) hashes its few probe values with
+# `xxh64`.
 # ---------------------------------------------------------------------------
 
 _P64_1 = 0x9E3779B185EBCA87

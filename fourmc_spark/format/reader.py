@@ -274,18 +274,9 @@ def iter_lines_zst(f: BinaryIO, chunk_size: int = 1 << 20) -> Iterator[tuple[int
                 return
             yield c
 
-    pos = 0  # decompressed offset of the next unemitted line's first byte
-    carry = bytearray()
-    for chunk in zstd_stream_decompress_chunks(_compressed_chunks()):
-        carry.extend(chunk)
-        for line, adv in _consume_terminated_lines(carry, at_eof=False):
-            yield pos, line
-            pos += adv
-    for line, adv in _consume_terminated_lines(carry, at_eof=True):
-        yield pos, line
-        pos += adv
-    if carry:
-        yield pos, bytes(carry)
+    yield from _iter_stream_lines(
+        zstd_stream_decompress_chunks(_compressed_chunks())
+    )
 
 
 def iter_lines_hadoop(
@@ -299,10 +290,17 @@ def iter_lines_hadoop(
     semantics)."""
     from fourmc_spark.format.hadoop_stream import iter_hadoop_blocks
 
-    pos = 0
+    yield from _iter_stream_lines(iter_hadoop_blocks(f, codec))
+
+
+def _iter_stream_lines(chunks) -> Iterator[tuple[int, bytes]]:
+    """Yield (decompressed_offset, line_bytes) for every line of a stream
+    of decompressed byte *chunks*: lines may straddle chunks (carried
+    over), and the final unterminated line is emitted at EOF."""
+    pos = 0  # decompressed offset of the next unemitted line's first byte
     carry = bytearray()
-    for block in iter_hadoop_blocks(f, codec):
-        carry.extend(block)
+    for chunk in chunks:
+        carry.extend(chunk)
         for line, adv in _consume_terminated_lines(carry, at_eof=False):
             yield pos, line
             pos += adv

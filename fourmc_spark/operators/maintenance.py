@@ -450,13 +450,10 @@ def compact_group(
 def _or_bit_positions(bm, positions) -> None:
     """OR bit ``positions`` into little-bit-order bitmap ``bm`` in place.
 
-    The ONE definition of the within-byte bit layout shared by the
-    partial-bitmap encoder and the sparse-wire decoder in
-    :func:`analyze_bloom` (and matched by the ``unpackbits``
-    ``bitorder="little"`` extraction): byte ``p >> 3``, bit ``p & 7``.
-    Encoder and decoder drifting apart here would silently corrupt
-    every merged bloom sidecar, so neither site may inline its own
-    copy."""
+    The sparse-wire decoder of :func:`analyze_bloom`'s partials: the
+    encoder lists a partial's set bits with ``unpackbits(...,
+    bitorder="little")``, whose layout (byte ``p >> 3``, bit ``p & 7``)
+    this inverts — the layout :func:`bloom_set_bits` writes."""
     import numpy as np
 
     np.bitwise_or.at(
@@ -806,9 +803,8 @@ def analyze_stats_proto(
         import numpy as np
         import pyarrow as pa
 
-        from fourmc_spark.format.native import xxh64_array
         from fourmc_spark.format.protobuf import iter_eb_records_for_split
-        from fourmc_spark.sources.datasource import BLOOM_SEED, bloom_set_bits
+        from fourmc_spark.sources.datasource import bloom_hashes, bloom_set_bits
 
         if codec is None:  # whole file: resolve the footer executor-side
             from fourmc_spark.format.reader import scan_file_info
@@ -824,7 +820,7 @@ def analyze_stats_proto(
             # one block's non-null str(value)s: hashed once, set into the
             # file bitmap and the block bitmap from the same hashes
             for c, vals in by_col.items():
-                h = xxh64_array(pa.array(vals, pa.string()), BLOOM_SEED)
+                h = bloom_hashes(pa.array(vals, pa.string()))
                 bloom_set_bits(bl[c], h, bloom_k, bloom_bits)
                 if bloom_block_bits is not None:
                     bm = bl_blocks.setdefault(owner, {}).setdefault(
@@ -1199,11 +1195,21 @@ def analyze_bloom(
     only cost a scan Spark's re-applied filters empty out; false
     negatives are impossible for the values the file actually holds.
 
-    Hashing happens JVM-SIDE (``F.xxhash64`` on ``CAST(col AS
-    STRING)``, verified bit-identical to libxxhash XXH64 seed 42 in
-    tests/test_native.py), so the analyze pass runs at scan speed; the
-    planner reproduces the hash in Python (format/native.xxh64) per
-    probed value — O(k) bit tests per (file, value), no data I/O.
+    The JVM casts each value to its canonical text (``CAST AS
+    STRING``); the Python side hashes each batch's distinct texts in one
+    XXH64 call (``bloom_hashes``) and sets their k positions with
+    ``bloom_set_bits`` — the kernel and bit setter the sink and
+    :func:`analyze_stats_proto` build with. The planner hashes each
+    probed value with the scalar ``format/native.xxh64`` — O(k) bit
+    tests per (file, value), no data I/O. Pins: Spark's ``xxhash64`` of
+    the cast equals ``xxh64``
+    (``tests/test_bloom.py::test_xxh64_matches_spark_expression``), the
+    array kernel equals libxxhash
+    (``tests/test_properties.py::test_xxh64_array_matches_libxxhash``),
+    sink and ANALYZE seal the same bitmaps
+    (``::test_sink_blooms_equal_analyze_bloom_bitmaps``), and every
+    bitmap equals a one-value-at-a-time build
+    (``::test_analyze_bloom_matches_scalar_build``).
 
     Eligibility is long/int/short/string columns: their CAST AS STRING
     is the same canonical text Python's ``str()`` produces, so build
@@ -1211,17 +1217,17 @@ def analyze_bloom(
     semantics on those are hazard-prone; ranges already have zone
     maps).
 
-    100 TB shape: one distributed scan and ONE exchange; each scan
-    partition folds its rows into per-(file, column, block) partials
-    locally (bitmaps are OR-mergeable) and ships each in whichever
-    encoding is smaller — dense bitmap or sparse sorted set-position
-    list — so the shuffle carries, per scan SPLIT, columns × (1 +
-    blocks-in-split) rows of min(``bits``/8, 4 × distinct-positions)
-    bytes, regardless of row count: never more than the deduplicated
-    position rows a low-NDV split would have shipped, and capped at
-    the bitmap size for high-NDV splits. Sidecars are amended
+    100 TB shape: one distributed scan and ONE exchange. Each record
+    crosses into Python once, as one row of its file, block offset and
+    one text per bloom column; each scan partition folds its rows into
+    per-(file, column, block) bitmaps locally (bitmaps are OR-mergeable)
+    and ships each in whichever encoding is smaller — dense bitmap or
+    sparse sorted set-position list — so the shuffle carries, per scan
+    SPLIT, columns × (1 + blocks-in-split) rows of min(``bits``/8, 4 ×
+    set-positions) bytes, regardless of row count. Sidecars are amended
     EXECUTOR-SIDE (applyInPandas per file, OR-merging the partials);
-    the driver sees one summary row per file. Sizing: false-positive rate ≈ (1 - e^(-k·n/bits))^k
+    the driver sees one summary row per file. Sizing: false-positive
+    rate ≈ (1 - e^(-k·n/bits))^k
     for n distinct values per span; the 2^20-bit file default (128 KiB
     bitmap) holds ~100k NDV per file at ~1%; size ``block_bits`` for
     the ~4 MiB-block NDV (the 2^13 suggestion = 1 KiB per (block, col)
@@ -1235,9 +1241,11 @@ def analyze_bloom(
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from fourmc_spark.sources.datasource import (
-        _parse_flat_ddl, validate_bloom_geometry,
+        _parse_flat_ddl, bloom_hashes, bloom_set_bits,
+        validate_bloom_geometry,
     )
 
     validate_bloom_geometry(bits, k, "analyze_bloom")
@@ -1263,87 +1271,27 @@ def analyze_bloom(
                 " (their CAST AS STRING matches the probe's str())"
             )
 
-    src = _analyze_src(spark, path, schema_ddl, record_format)
-    # one pass: every row fans out to k (column, block, bit-position)
-    # structs per non-null bloom column — block -1 is the file tier, the
-    # owning block's compressed offset keys the block tier — flattened
-    # into a single explode
-    def _pos_fn(c, h1, h2, n_bits, block_expr):
-        def inner(i):
-            return F.struct(
-                F.lit(c).alias("col_name"),
-                block_expr.alias("block"),
-                F.pmod(h1 + i.cast("long") * h2, F.lit(n_bits))
-                .cast("int")
-                .alias("pos"),
-            )
-
-        return inner
-
-    per_col = []
-    for c in cols:
-        fc = F.col("_r").getField(c)
-        h = F.xxhash64(fc.cast("string"))  # Spark's fixed seed 42
-        h1 = h.bitwiseAND(F.lit(4294967295))
-        h2 = F.shiftrightunsigned(h, 32).bitwiseOR(F.lit(1))
-        tiers = [(k, bits, F.lit(-1).cast("long"))]
-        if block_bits is not None:
-            tiers.append((bk, block_bits, F.col("offset")))
-        for t_k, t_bits, block_expr in tiers:
-            positions = F.transform(
-                F.sequence(F.lit(0), F.lit(t_k - 1)),
-                _pos_fn(c, h1, h2, t_bits, block_expr),
-            )
-            # NULL values never match equality: rows where the column is
-            # null contribute nothing (NULL arrays filtered pre-flatten)
-            per_col.append(F.when(fc.isNotNull(), positions))
-    # a SEED struct rides every row's fan-out so each (file, block) seen
-    # by the scan reaches the group output even when its bloom columns
-    # are ALL NULL there (those bitmaps must seal EMPTY — all-zero
-    # prunes every probe, which is exact: equality never matches NULL).
-    # Inlining it keeps the pass to ONE scan; map-side partial dedup
-    # collapses the per-row copies before the shuffle.
-    seed_struct = F.array(
-        F.struct(
-            F.lit(None).cast("string").alias("col_name"),
-            F.col("offset").alias("block"),
-            F.lit(None).cast("int").alias("pos"),
-        )
-    )
-    flat = F.flatten(
-        F.filter(F.array(*per_col, seed_struct), lambda x: x.isNotNull())
-    )
-    all_rows = (
-        src.select("_file", F.explode(flat).alias("e"))
-        .select(
-            "_file",
-            F.col("e.col_name").alias("col_name"),
-            F.col("e.block").alias("block"),
-            F.col("e.pos").alias("pos"),
-        )
+    # the canonical text is cast JVM-side (CAST AS STRING, the text the
+    # probe's str() gives), so only (file, block, text per column) rows
+    # cross into Python; hashing and bit setting happen in the partial
+    texts = _analyze_src(spark, path, schema_ddl, record_format).select(
+        "_file", "offset",
+        *(F.col("_r").getField(c).cast("string").alias(f"c{j}")
+          for j, c in enumerate(cols)),
     )
 
-    # PARTIAL BITMAP AGGREGATION before the pass's only exchange (r10
-    # optimization, guide §2.3/§2.4): bloom bitmaps are mergeable by
-    # bitwise OR, so each scan partition folds its position rows into
-    # per-(file, column, block) partials locally and ships THOSE. Each
-    # partial is emitted in whichever encoding is smaller — the DENSE
-    # ``n_bits``/8-byte bitmap, or the SPARSE sorted uint32 list of its
-    # set positions — so the shuffle carries, per scan split, at most
-    # splits-in-file × columns × (1 + blocks) rows of
-    # min(n_bits/8, 4 × set-positions) bytes: never worse than the old
-    # deduplicated position rows (sparse = exactly those, binary-packed)
-    # AND capped at the bitmap size for high-NDV splits. This replaces
-    # the former exact ``dropDuplicates``, whose reduce-side Exchange +
-    # final aggregate only removed duplicates the bitmap OR makes
-    # redundant anyway (a duplicate position sets the same bit). Seed
-    # rows (``col_name`` NULL) survive as payload-less rows so every
-    # (file, block) the scan saw still reaches its group even when its
-    # bloom columns are all NULL there.
+    # PARTIAL BITMAP AGGREGATION before the pass's only exchange: bloom
+    # bitmaps are mergeable by bitwise OR, so each scan partition folds
+    # its rows into per-(file, column, block) bitmaps locally (block -1
+    # is the file tier, the owning block's compressed offset keys the
+    # block tier) and ships THOSE, each in whichever encoding is smaller
+    # — the DENSE ``n_bits``/8-byte bitmap, or the SPARSE sorted uint32
+    # list of its set positions. Every (file, block) the partition sees
+    # gets its entries even when its bloom columns are all NULL there,
+    # so that block still seals (all-zero: equality never matches NULL,
+    # so every probe provably misses).
 
-    def _partial(
-        it: "Iterator[pd.DataFrame]",
-    ) -> "Iterator[pd.DataFrame]":
+    def _partial(batches: "Iterator[pa.RecordBatch]"):
         # per-byte popcount table (built once per task, 256 entries):
         # lets the flush below count set bits without unpacking bitmaps
         _POPCNT8 = (
@@ -1352,24 +1300,35 @@ def analyze_bloom(
             .astype(np.uint16)
         )
         acc: dict[tuple, "np.ndarray"] = {}
-        seeds: set[tuple] = set()
-        for pdf in it:
-            seed_mask = pdf["col_name"].isna()
-            for fp, blk in zip(
-                pdf["_file"][seed_mask], pdf["block"][seed_mask]
-            ):
-                seeds.add((fp, int(blk)))
-            data = pdf[~seed_mask]
-            for (fp, cname, blk), sub in data.groupby(
-                ["_file", "col_name", "block"], sort=False
-            ):
-                n_bits = bits if blk == -1 else block_bits
-                key = (fp, cname, int(blk))
-                bm = acc.get(key)
-                if bm is None:
-                    bm = acc[key] = np.zeros(n_bits // 8, dtype=np.uint8)
-                p = sub["pos"].to_numpy(dtype=np.int64)
-                _or_bit_positions(bm, p)
+
+        def _set(key: tuple, h: "np.ndarray", n_k: int, n_bits: int) -> None:
+            bm = acc.get(key)
+            if bm is None:
+                bm = acc[key] = np.zeros(n_bits // 8, dtype=np.uint8)
+            bloom_set_bits(bm, h, n_k, n_bits)
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            # runs of one file (and, with the block tier, one block): each
+            # value is hashed once, for both tiers
+            fenc = rb.column(0).dictionary_encode()
+            offs = rb.column(1).to_numpy()
+            keys = [fenc.indices.to_numpy()]
+            if block_bits is not None:
+                keys.append(offs)
+            change = np.zeros(rb.num_rows, dtype=bool)
+            change[0] = True
+            for a in keys:
+                change[1:] |= a[1:] != a[:-1]
+            bounds = np.append(np.flatnonzero(change), rb.num_rows)
+            for s0, s1 in zip(bounds[:-1], bounds[1:]):
+                fp = fenc.dictionary[keys[0][s0]].as_py()
+                for j, c in enumerate(cols):
+                    h = bloom_hashes(rb.column(2 + j).slice(s0, s1 - s0))
+                    _set((fp, c, -1), h, k, bits)
+                    if block_bits is not None:
+                        _set((fp, c, int(offs[s0])), h, bk, block_bits)
         files, names, blks, bms, dense = [], [], [], [], []
         for (fp, cname, blk), bm in acc.items():
             # popcount FIRST (256-entry table) to pick the encoding:
@@ -1389,23 +1348,14 @@ def analyze_bloom(
             else:
                 bms.append(bm.tobytes())
                 dense.append(True)
-        for fp, blk in seeds:
-            files.append(fp)
-            names.append(None)
-            blks.append(blk)
-            bms.append(None)
-            dense.append(True)
-        yield pd.DataFrame(
-            {
-                "_file": pd.Series(files, dtype="object"),
-                "col_name": pd.Series(names, dtype="object"),
-                "block": pd.Series(blks, dtype="int64"),
-                "bm": pd.Series(bms, dtype="object"),
-                "dense": pd.Series(dense, dtype="bool"),
-            }
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(files, pa.string()), pa.array(names, pa.string()),
+             pa.array(blks, pa.int64()), pa.array(bms, pa.binary()),
+             pa.array(dense, pa.bool_())],
+            names=["_file", "col_name", "block", "bm", "dense"],
         )
 
-    partials = all_rows.mapInPandas(
+    partials = texts.mapInArrow(
         _partial,
         "_file string, col_name string, block long, bm binary, dense boolean",
     )
@@ -1418,8 +1368,6 @@ def analyze_bloom(
         def _merge(sub: "pd.DataFrame", n_bits: int) -> "np.ndarray":
             bm = np.zeros(n_bits // 8, dtype=np.uint8)
             for part, is_dense in zip(sub["bm"], sub["dense"]):
-                if part is None:
-                    continue
                 if is_dense:
                     bm |= np.frombuffer(part, dtype=np.uint8)
                 else:
@@ -1430,8 +1378,7 @@ def analyze_bloom(
         old = meta.get("bloom")
         blooms = dict(old) if isinstance(old, dict) else {}
         set_bits = 0
-        data = pdf[pdf["col_name"].notna()]
-        ftier = data[data["block"] == -1]
+        ftier = pdf[pdf["block"] == -1]
         for c in cols:
             bm = _merge(ftier[ftier["col_name"] == c], bits)
             blooms[c] = seal_bloom_spec(bm.tobytes(), bits, k, fams[c])
@@ -1441,13 +1388,14 @@ def analyze_bloom(
             # ONE grouped pass over the block-tier rows (a per-offset
             # boolean filter would rescan the frame O(blocks) times —
             # quadratic exactly when blocks are many, the tier's
-            # target shape); seed rows give every block offset a group
-            btier = pdf[pdf["block"] != -1]
-            grouped = {int(o): {} for o in btier["block"].unique()}
-            for (off, cname), sub in btier[
-                btier["col_name"].notna()
-            ].groupby(["block", "col_name"], sort=False):
-                grouped[int(off)][cname] = _merge(sub, block_bits)
+            # target shape)
+            grouped: dict[int, dict] = {}
+            for (off, cname), sub in pdf[pdf["block"] != -1].groupby(
+                ["block", "col_name"], sort=False
+            ):
+                grouped.setdefault(int(off), {})[cname] = _merge(
+                    sub, block_bits
+                )
             meta["bloom_blocks"] = seal_bloom_blocks_header(
                 block_bits, bk, fams,
                 _bloom_block_entries(grouped, cols, block_bits),

@@ -682,20 +682,16 @@ class FourMcDataSourceReader(DataSourceReader):
         # inference (absent fields come back NULL). Column pruning
         # reaches the PARSER: only the requested fields enter the
         # explicit schema / include_columns. Built once per partition —
-        # never per batch. empty_line is the record model's all-null
-        # placeholder ('{}' for NDJSON, a line of bare commas for CSV).
+        # never per batch.
         if not typed:
             typed_parser = None
-            empty_line = "{}"
         elif self.typed_fmt == "csv":
             typed_parser = _TypedCsvParser(self.json_schema, want_typed)
-            empty_line = typed_parser.empty_line
         else:
             typed_parser = _TypedNdjsonParser(self.json_schema, want_typed)
-            empty_line = "{}"
 
-        def _typed_batch(buf, offs=None) -> "pa.RecordBatch":
-            arrays = typed_parser.arrays(buf)
+        def _typed_batch(lines: "pa.Array", offs) -> "pa.RecordBatch":
+            arrays = _parse_lines(typed_parser, lines)
             names = list(want_typed)
             if want_offset:
                 arrays = [pa.array(offs, type=pa.int64())] + arrays
@@ -724,14 +720,8 @@ class FourMcDataSourceReader(DataSourceReader):
 
                 def flush():
                     if typed:
-                        # empty lines (the sink writes NULL values that way)
-                        # must parse as all-null rows like from_json('') /
-                        # from_csv('') — Arrow's readers would skip or
-                        # reject them
-                        ph = empty_line.encode()
                         return _typed_batch(
-                            b"\n".join(ln if ln else ph for ln in lines),
-                            offs=list(offsets),
+                            pa.array(lines, type=pa.binary()), list(offsets)
                         )
                     arrays, names = [], []
                     if want_offset:
@@ -783,26 +773,7 @@ class FourMcDataSourceReader(DataSourceReader):
                         if len(lines_arr) == 0:
                             continue
                     if typed:
-                        # join the Arrow line array into one NDJSON buffer
-                        # (C-side: one-list binary_join), then parse — no
-                        # per-line Python. Empty lines become '{}' first so
-                        # they parse as all-null rows exactly like
-                        # from_json('') in value mode (Arrow's reader would
-                        # silently skip them, losing the NULL rows the sink
-                        # itself writes as empty lines)
-                        import pyarrow.compute as pc
-
-                        strs = lines_arr.cast(pa.string())
-                        strs = pc.if_else(
-                            pc.equal(pc.binary_length(strs), 0),
-                            pa.scalar(empty_line),
-                            strs,
-                        )
-                        la = pa.ListArray.from_arrays(
-                            pa.array([0, len(strs)], type=pa.int32()), strs
-                        )
-                        nd = pc.binary_join(la, "\n")[0].as_buffer()
-                        yield _typed_batch(nd, offs=offs_np)
+                        yield _typed_batch(lines_arr, offs_np)
                         continue
                     arrays, names = [], []
                     if want_offset:
@@ -965,6 +936,9 @@ class _TypedNdjsonParser:
     non-finite doubles as quoted strings), retries once after rewriting
     those tokens for the declared float columns; any other parse
     failure names the value-mode + from_json fallback."""
+
+    #: the record model's all-null line (see :func:`_parse_lines`)
+    empty_line = "{}"
 
     def __init__(self, st: StructType, want: list[str]) -> None:
         import pyarrow as pa
@@ -1151,6 +1125,30 @@ class _TypedCsvParser:
             ) from e
 
 
+def _parse_lines(parser, lines: "pa.Array") -> list:
+    """Final-typed arrays of ``parser``'s columns for an Arrow array of
+    record lines (binary or string). Empty and NULL lines become the
+    parser's ``empty_line`` first, so they parse as all-null rows like
+    from_json('') / from_csv('') — Arrow's readers would skip or reject
+    them, losing the NULL rows the sink writes as empty lines. The
+    lines are joined C-side (one-list binary_join), never per line in
+    Python."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    strs = lines.cast(pa.string())
+    if strs.null_count:
+        strs = pc.fill_null(strs, parser.empty_line)
+    strs = pc.if_else(
+        pc.equal(pc.binary_length(strs), 0), pa.scalar(parser.empty_line),
+        strs,
+    )
+    la = pa.ListArray.from_arrays(
+        pa.array([0, len(strs)], type=pa.int32()), strs
+    )
+    return parser.arrays(pc.binary_join(la, "\n")[0].as_buffer())
+
+
 # per-file pruning sidecar; its layout and builders: seal_sidecar
 STATS_SUFFIX = ".stats.json"
 
@@ -1324,13 +1322,13 @@ def _range_excluded(mn, mx, bound) -> bool:
     return False
 
 
-#: bloom sidecar hash contract (shared with operators/maintenance.
-#: analyze_bloom, which imports these): xxhash64(CAST(col AS STRING)
-#: UTF-8 bytes) with Spark's fixed seed 42, double-hashed into k
-#: positions (h1 + i*h2) mod bits where h1 = low 32 bits, h2 = high 32
-#: bits | 1; bit p sits at byte p >> 3, mask 1 << (p & 7). The probe
-#: recognizes exactly this tag — sidecars written under any future
-#: contract are ignored (conservative: the file is scanned).
+#: bloom sidecar hash contract: XXH64 of each value's canonical text
+#: (CAST AS STRING, UTF-8 — bloom_hashes) with Spark's xxhash64 seed 42,
+#: double-hashed into k positions (h1 + i*h2) mod bits where h1 = low
+#: 32 bits, h2 = high 32 bits | 1 (bloom_set_bits); bit p sits at byte
+#: p >> 3, mask 1 << (p & 7). The probe recognizes exactly this tag —
+#: sidecars written under any future contract are ignored
+#: (conservative: the file is scanned).
 BLOOM_ALGO = "xxh64-str"
 BLOOM_SEED = 42
 
@@ -1353,14 +1351,13 @@ def _next_prefix(v: str) -> str | None:
 
 
 def bloom_positions(h: int, k: int, bits: int):
-    """THE position derivation, walked by the probe per value (the
-    Python builders apply it to whole hash arrays through
-    :func:`bloom_set_bits`, and the JVM builder in analyze_bloom mirrors
-    it as SQL expressions, both pinned equivalent by tests): double
-    hashing with h1 = low 32 bits, h2 = high 32 bits | 1, position_i =
-    (h1 + i*h2) mod bits. Any drift between a builder and the probe
-    would silently mis-prune under the same contract tag — this helper
-    exists so there is exactly one derivation to drift."""
+    """THE position derivation, walked by the probe per value (every
+    builder applies it to whole hash arrays through
+    :func:`bloom_set_bits`, pinned equal to this by a property test):
+    double hashing with h1 = low 32 bits, h2 = high 32 bits | 1,
+    position_i = (h1 + i*h2) mod bits. Any drift between a builder and
+    the probe would silently mis-prune under the same contract tag —
+    this helper exists so there is exactly one derivation to drift."""
     h1 = h & 0xFFFFFFFF
     h2 = (h >> 32) | 1
     for i in range(k):
@@ -1386,6 +1383,21 @@ def bloom_set_bits(bitmap: "np.ndarray", hashes: "np.ndarray", k: int,
             bitmap, (p >> u(3)).astype(np.intp),
             np.left_shift(1, p & u(7)).astype(np.uint8),
         )
+
+
+def bloom_hashes(values: "pa.Array") -> "np.ndarray":
+    """The ``uint64`` bloom hashes of an Arrow array's distinct non-null
+    values: cast to their canonical text (Arrow's int -> string cast is
+    the decimal text of CAST AS STRING and of the probe's ``str()``),
+    then one XXH64 pass over the buffers. Every builder turns values
+    into bloom hashes here, and only here."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from fourmc_spark.format.native import xxh64_array
+
+    uniq = pc.unique(pc.drop_null(values.cast(pa.string())))
+    return xxh64_array(uniq, BLOOM_SEED)
 
 
 def seal_bloom_spec(bitmap: bytes, bits: int, k: int, fam: str) -> dict:
@@ -1955,12 +1967,10 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         # bloomcolumns=c1[,c2...]: ALSO seal write-time bloom bitmaps for
         # the named statsschema fields (int/string only — the same
         # eligibility as analyze_bloom, whose sidecars these match
-        # bit-for-bit, pinned by a test). Values canonicalize through
-        # Arrow's int->string cast (decimal text == the probe's str()),
-        # dedup per batch with pc.unique, hash in one numpy XXH64 call
-        # over the Arrow buffers (xxh64_array) and OR their k positions
-        # into one packed bitmap per column per open file
-        # (bloom_set_bits) — no per-value Python anywhere in the sink.
+        # bit-for-bit, pinned by a test). Each batch's distinct values
+        # hash in one call (bloom_hashes) and OR their k positions into
+        # one packed bitmap per column per open file (bloom_set_bits) —
+        # no per-value Python anywhere in the sink.
         # With statsschema + bloomcolumns a sealed log prunes ranges AND
         # point lookups with no ANALYZE job ever; compaction carries
         # both tiers.
@@ -2017,7 +2027,6 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         import pyarrow as pa  # noqa: F811
 
         from fourmc_spark.format.hadoop_stream import HADOOP_EXTS
-        from fourmc_spark.format.native import xxh64_array
         from fourmc_spark.format.writer import (
             FourMcWriter,
             HadoopBlockWriter,
@@ -2050,13 +2059,10 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         )
         if self.stats_schema is None:
             stats_parser = None
-            stats_empty = "{}"
         elif self.stats_format == "csv":
             stats_parser = _TypedCsvParser(self.stats_schema, stat_cols)
-            stats_empty = stats_parser.empty_line
         else:
             stats_parser = _TypedNdjsonParser(self.stats_schema, stat_cols)
-            stats_empty = "{}"
 
         def _writer_for(reldir: str):
             if reldir in streams:
@@ -2097,22 +2103,8 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
             import pyarrow.compute as pc
 
             acc = streams[reldir][3]
-            strs = values.cast(pa.string())
-            # NULL values write as empty lines; both read back as
-            # all-null rows, so both stat as the record model's all-null
-            # placeholder
-            strs = pc.fill_null(strs, stats_empty)
-            strs = pc.if_else(
-                pc.equal(pc.binary_length(strs), 0),
-                pa.scalar(stats_empty),
-                strs,
-            )
-            la = pa.ListArray.from_arrays(
-                pa.array([0, len(strs)], type=pa.int32()), strs
-            )
-            nd = pc.binary_join(la, "\n")[0].as_buffer()
-            arrays = stats_parser.arrays(nd)
-            acc["rows"] += len(strs)
+            arrays = _parse_lines(stats_parser, values)
+            acc["rows"] += len(values)
             for c, col in zip(stat_cols, arrays):
                 z = acc["cols"][c]
                 spans = [(z["min"], z["max"], z["nulls"] + col.null_count)]
@@ -2133,11 +2125,8 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     spans.append((mm["min"].as_py(), mm["max"].as_py(), 0))
                 acc["cols"][c] = zone_merge(spans)
                 if c in acc["bloom"]:
-                    uniq = pc.unique(pc.drop_null(col.cast(pa.string())))
-                    bloom_set_bits(
-                        acc["bloom"][c], xxh64_array(uniq, BLOOM_SEED),
-                        self.bloom_k, self.bloom_bits,
-                    )
+                    bloom_set_bits(acc["bloom"][c], bloom_hashes(col),
+                                   self.bloom_k, self.bloom_bits)
 
         def _seal_sidecar(staged: str, acc) -> None:
             if acc is None:

@@ -3,9 +3,10 @@ probe pruning, conservative-safety matrix, and compaction OR-merge carry.
 
 Zone maps (analyze_stats) prune ranges on the clustering key; blooms
 prune POINT predicates (EqualTo / In) on everything else. The contract
-under test: xxhash64(CAST(col AS STRING), seed 42) — verified here to
-be bit-identical between Spark's JVM expression and the Python probe —
-double-hashed into k positions of a per-file bitmap; a probe that tests
+under test: XXH64 of the value's CAST AS STRING text, seed 42 — Spark's
+xxhash64 expression, the builders' numpy array kernel and the probe's
+scalar hash verified bit-identical here — double-hashed into k
+positions of a per-file bitmap; a probe that tests
 negative for EVERY pushed point value proves the file empty for the
 conjunction and the planner skips it before any footer read.
 """
@@ -98,8 +99,8 @@ def test_xxh64_py_matches_native():
 
 def test_xxh64_matches_spark_expression(spark):
     """The probe's hash IS Spark's: xxhash64 over CAST AS STRING equals
-    XXH64(utf8 bytes, seed 42) for ints and strings — the bloom build
-    (JVM) and the bloom probe (Python) can never disagree."""
+    XXH64(utf8 bytes of str(v), seed 42) for ints and strings — so the
+    CAST AS STRING text analyze_bloom hashes is the probe's str() text."""
     from fourmc_spark.format.native import xxh64
 
     strs = ["", "abc", "hello world", "ünïcødé ✓", "a" * 100]
@@ -661,9 +662,9 @@ def test_sink_bloomcolumns_seals_and_prunes(spark, tmp_path):
 
 
 def test_sink_blooms_equal_analyze_bloom_bitmaps(spark, tmp_path):
-    """The sink's write-time bitmaps are bit-for-bit the ones the JVM
-    builder (analyze_bloom: xxhash64 over CAST AS STRING) computes over
-    the same files with the same geometry — negative ints, "", non-ASCII
+    """The sink's write-time bitmaps (Arrow's int -> string cast) are
+    bit-for-bit the ones analyze_bloom (Spark's CAST AS STRING) computes
+    over the same files with the same geometry — negative ints, "", non-ASCII
     text, values of 32+ bytes (the XXH64 stripe path) and NULLs, each
     file fed by several batches, with maxfilebytes rolling under
     partitionby."""
@@ -911,3 +912,146 @@ def test_partial_bitmap_merge_is_partitioning_invariant(spark, tmp_path):
     split = _seal_and_read(1)          # one block per split
     assert whole == split
     assert whole  # sanity: something was sealed
+
+
+def _scalar_blooms(path, fmt, names, cols, bits, k, block_bits, bk):
+    """The bloom bitmaps of one file built one value at a time: lines
+    split by ``iter_lines_for_split`` (whose owner offsets are the block
+    keys), parsed with ``json``/``csv``, each non-null value's ``str``
+    hashed with the scalar ``xxh64`` and set through ``bloom_positions``.
+    Returns ``({col: file bitmap}, {block offset: {col: bitmap}})``."""
+    import csv
+
+    from fourmc_spark.format.native import xxh64
+    from fourmc_spark.format.reader import iter_lines_for_split, scan_file_info
+    from fourmc_spark.sources.datasource import bloom_positions
+
+    def setbits(bm, h, n_k, n_bits):
+        for p in bloom_positions(h, n_k, n_bits):
+            bm[p >> 3] |= 1 << (p & 7)
+
+    codec, fsize, _ = scan_file_info(path)
+    files = {c: bytearray(bits // 8) for c in cols}
+    blocks: dict = {}
+    with open(path, "rb") as f:
+        for owner, line in iter_lines_for_split(f, codec, 0, fsize):
+            text = line.decode("utf-8")
+            if not text:
+                rec = {}  # a NULL record
+            elif fmt == "json":
+                rec = _json.loads(text)
+            else:
+                fields = next(csv.reader([text], escapechar="\\"))
+                rec = {n: (v or None) for n, v in zip(names, fields)}
+                if rec.get("k") is not None:
+                    rec["k"] = int(rec["k"])  # the declared bigint
+            blk = blocks.setdefault(
+                owner, {c: bytearray(block_bits // 8) for c in cols}
+            )
+            for c in cols:
+                if rec.get(c) is None:
+                    continue
+                h = xxh64(str(rec[c]).encode("utf-8"), BLOOM_SEED)
+                setbits(files[c], h, k, bits)
+                setbits(blk[c], h, bk, block_bits)
+    return files, blocks
+
+
+def test_analyze_bloom_matches_scalar_build(spark, tmp_path):
+    """Every file and block bitmap analyze_bloom seals equals a scalar
+    build over the same lines (:func:`_scalar_blooms`), for an NDJSON
+    and a CSV tree with both tiers at different k. One high-NDV file
+    (dense partials) spans several scan partitions and holds values of
+    32+ bytes, negative ints and ""; one low-NDV file (sparse partials)
+    holds a NULL record and a run of rows whose bloom columns are all
+    NULL, long enough to fill whole blocks — those blocks must seal
+    all-zero bitmaps, not be missing."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from fourmc_spark.format.reader import scan_file_info
+    from fourmc_spark.format.writer import write_file
+    from fourmc_spark.operators.maintenance import analyze_bloom
+
+    ddl = "k bigint, s string, v string"
+    names, cols = ["k", "s", "v"], ["k", "s"]
+    bits, k, block_bits, bk = 1 << 14, 5, 1 << 10, 3
+    pad = "p" * 60
+
+    def hi_row(i):
+        kv = None if i % 11 == 0 else (i - 3000) * 7919
+        if i % 13 == 0:
+            sv = None
+        elif i % 3 == 0:
+            sv = f"ünïcødé ✓ {i}"
+        else:
+            sv = "y" * 40 + str(i)
+        return kv, sv, pad[: i % 7]
+
+    def lo_row(i):
+        if 200 <= i < 400:  # whole blocks of all-NULL bloom columns
+            return None, None, pad
+        return i % 5, ("a", "b", "ünï")[i % 3], "x"
+
+    hi = [hi_row(i) for i in range(6000)]
+    lo = [lo_row(i) for i in range(500)]
+    for fmt in ("json", "csv"):
+        d = tmp_path / fmt
+        d.mkdir()
+        for name, rows, codec in (("part-hi.4mc", hi, "lz4"),
+                                  ("part-lo.4mz", lo, "zstd")):
+            lines = []
+            for row in rows:
+                if fmt == "json":
+                    lines.append(_json.dumps(
+                        {n: v for n, v in zip(names, row) if v is not None},
+                        ensure_ascii=False,
+                    ))
+                else:
+                    lines.append(",".join("" if v is None else str(v)
+                                          for v in row))
+            if name == "part-lo.4mz":
+                lines.insert(17, "")  # a NULL record
+            data = ("\n".join(lines) + "\n").encode("utf-8")
+            write_file(str(d / name), data, codec=codec, block_size=2048)
+        # the high-NDV file spans several scan partitions
+        hi_path = str(d / "part-hi.4mc")
+        assert len(scan_file_info(hi_path)[2]) > 2 * 64
+        rd = FourMcDataSourceReader(
+            CaseInsensitiveDict({"path": str(d)}),
+            _parse_flat_ddl("offset bigint, value string"),
+        )
+        parts = [[s.path for s in p.slices()] for p in rd.partitions()]
+        assert sum(hi_path in p for p in parts) >= 3
+
+        analyze_bloom(spark, str(d), ddl, cols, bits=bits, k=k,
+                      block_bits=block_bits, block_k=bk, record_format=fmt)
+        saw_null_block = False
+        for name, sparse in (("part-hi.4mc", False), ("part-lo.4mz", True)):
+            path = str(d / name)
+            want_files, want_blocks = _scalar_blooms(
+                path, fmt, names, cols, bits, k, block_bits, bk
+            )
+            meta = _json.load(open(path + ".stats.json"))
+            for c in cols:
+                got = base64.b64decode(meta["bloom"][c]["b64"])
+                assert got == bytes(want_files[c]), (fmt, name, c)
+                # the dense/sparse wire choice: a partial ships sparse
+                # when under 1/32 of its bits are set
+                n_set = int.from_bytes(got, "little").bit_count()
+                assert (32 * n_set < bits) == sparse, (fmt, name, n_set)
+            bb = meta["bloom_blocks"]
+            assert (bb["bits"], bb["k"]) == (block_bits, bk)
+            got_blocks = {
+                e["o"]: {c: base64.b64decode(e["c"][c]) for c in cols}
+                for e in bb["blocks"]
+            }
+            assert [e["o"] for e in bb["blocks"]] == sorted(want_blocks)
+            assert got_blocks == {
+                o: {c: bytes(bm) for c, bm in per.items()}
+                for o, per in want_blocks.items()
+            }, (fmt, name)
+            saw_null_block |= any(
+                not any(any(bm) for bm in per.values())
+                for per in want_blocks.values()
+            )
+        assert saw_null_block

@@ -207,6 +207,46 @@ def test_zst_multiframe(spark, tmp_path):
     assert got == ["first", "second", "third"]
 
 
+def _read_in_process(path, **opts):
+    """(offset, value) rows of every partition through ``read()``,
+    without Spark."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from fourmc_spark.sources.datasource import FourMcDataSource
+
+    ds = FourMcDataSource(CaseInsensitiveDict({"path": path, **opts}))
+    reader = ds.reader(ds.schema())
+    rows = []
+    for part in reader.partitions():
+        for batch in reader.read(part):
+            rows += zip(batch.column("offset").to_pylist(),
+                        batch.column("value").to_pylist())
+    return rows
+
+
+@pytest.mark.parametrize("ext", ["zst", "lz4_fast"])
+def test_skipfirstline_stream_codecs(tmp_path, ext):
+    """skipfirstline on the non-splittable stream codecs drops exactly
+    the file's first line; every other row keeps its decompressed-stream
+    offset."""
+    from fourmc_spark.format.hadoop_stream import write_hadoop_file
+    from fourmc_spark.format.writer import write_zst_file
+
+    data = b"hdr,a\r\n" + b"".join(
+        b"row%d\r\n" % i if i % 7 == 0 else b"row%d\n" % i
+        for i in range(3000)
+    ) + b"\ntail"
+    p = str(tmp_path / f"h.{ext}")
+    if ext == "zst":
+        write_zst_file(p, data)
+    else:
+        write_hadoop_file(p, data, "lz4", block_size=1000)
+    whole = _read_in_process(p)
+    assert whole[0] == (0, "hdr,a") and whole[-1][1] == "tail"
+    assert len(whole) == 3003
+    assert _read_in_process(p, skipfirstline="true") == whole[1:]
+
+
 def test_glob_paths(spark, tmp_path):
     """Hadoop-style glob paths expand at planning (S2 parity)."""
     from fourmc_spark.format.writer import write_file

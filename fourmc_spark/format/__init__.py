@@ -13,6 +13,7 @@ from .parallel import decompress_file_parallel, iter_decoded_windows
 from .reader import (
     decompress_file,
     iter_block_payloads,
+    iter_line_batches,
     iter_lines_for_split,
     read_index,
     scan_file_info,
@@ -36,6 +37,7 @@ __all__ = [
     "decompress_file_parallel",
     "iter_decoded_windows",
     "iter_block_payloads",
+    "iter_line_batches",
     "iter_lines_for_split",
     "read_index",
     "scan_file_info",

@@ -26,13 +26,16 @@ import struct
 from typing import BinaryIO, Iterator
 
 from . import core
-from .native import lz4_decompress, zstd_decompress
+from .hadoop_stream import iter_hadoop_blocks
+from .native import lz4_decompress, zstd_decompress, zstd_stream_decompress_chunks
 
 __all__ = [
     "read_index",
     "iter_block_payloads",
     "decompress_file",
     "iter_lines_for_split",
+    "iter_line_batches",
+    "iter_stream_line_batches",
     "scan_file_info",
 ]
 
@@ -206,12 +209,9 @@ def iter_lines_for_split(
     for boff, payload in iter_block_payloads(f, codec, split_start, verify=verify):
         if owner >= split_end:
             return
-        payload, owner = _normalize_terminators(payload, prev_cr, owner, boff)
-        if b"\r" in payload:  # rare: LF-only payloads skip two copy passes
-            prev_cr = payload.endswith(b"\r")
-            payload = payload.replace(b"\r\n", b"\n").replace(b"\r", b"\n")
-        else:
-            prev_cr = False
+        lead, payload, prev_cr = _normalize_terminators(payload, prev_cr)
+        if lead:
+            owner = boff
         parts = payload.split(b"\n")
         n_complete = len(parts) - 1
         for k in range(n_complete):
@@ -239,104 +239,148 @@ def iter_lines_for_split(
 
 
 def _normalize_terminators(
-    payload: bytes, prev_cr: bool, owner: int, boff: int
-) -> tuple[bytes, int]:
-    """Cross-block CRLF resolution for the LF|CRLF|CR terminator rule.
+    raw: bytes, prev_cr: bool
+) -> tuple[int, bytes, bool]:
+    """The LF|CRLF|CR terminator rule for one chunk of a line stream:
+    returns ``(lead, payload, ends_cr)`` with every terminator of *raw*
+    rewritten to a single LF.
 
-    When the previous block ended with ``\\r`` and this one starts with
-    ``\\n``, that LF is the second half of an already-handled CRLF (the
-    ``\\r`` was normalized to a terminator when its block was processed) —
-    drop it, and move ownership of the next line to THIS block, because the
-    terminator's last byte lives here.  A split starting at this block sees
-    the same LF as an empty "line" owned by the previous (foreign) block
-    and skips it, so the two readers agree: no duplicate, no loss.
+    When the previous chunk ended with ``\\r`` (*prev_cr*) and this one
+    starts with ``\\n``, that LF is the second half of an already-handled
+    CRLF (the ``\\r`` was normalized to a terminator with its chunk): it is
+    dropped and ``lead`` is 1, so the next line starts after it — for 4mc
+    it is owned by THIS block, because the terminator's last byte lives
+    here.  A split starting at this block sees the same LF as an empty
+    "line" owned by the previous (foreign) block and skips it, so the two
+    readers agree: no duplicate, no loss.  ``ends_cr`` is the next chunk's
+    *prev_cr*.
     """
-    if prev_cr and payload[:1] == b"\n":
-        return payload[1:], boff
-    return payload, owner
+    lead = 1 if prev_cr and raw[:1] == b"\n" else 0
+    payload = raw[lead:] if lead else raw
+    if b"\r" not in payload:  # common: LF-only payloads skip two copy passes
+        return lead, payload, False
+    ends_cr = payload.endswith(b"\r")
+    return lead, payload.replace(b"\r\n", b"\n").replace(b"\r", b"\n"), ends_cr
 
 
-def iter_lines_zst(f: BinaryIO, chunk_size: int = 1 << 20) -> Iterator[tuple[int, bytes]]:
-    """Yield (decompressed_offset, line_bytes) from a standard ``.zst``
-    streaming file (reference: ZstCodec.java:47-169 — single zstd frame,
-    NOT the 4mz block format).
+def _iter_chunk_lines(chunks):
+    """The one chunk splitter behind every codec's line batches.
 
-    Non-splittable by nature (no internal index), so one partition reads
-    the whole stream; offsets are positions in the decompressed stream,
-    matching Hadoop's LineRecordReader over a compression codec.
+    *chunks* yields ``(key, raw)`` decompressed chunks in stream order
+    (``key`` is a 4mc block's compressed offset, or a stream position).
+    Lines straddle chunks through a carry.  Per chunk this yields
+    ``(key, lead, raw, head, mid)``: ``lead`` as in
+    :func:`_normalize_terminators`; ``head`` the line the chunk's first
+    terminator ends, carry included, or None when the chunk has no
+    terminator (all of it joins the carry); ``mid`` the LF-joined complete
+    lines after ``head``, or None.  At EOF a last ``(None, 0, b"", tail,
+    None)`` carries the unterminated final line, if there is one.
     """
-    from fourmc_spark.format.native import zstd_stream_decompress_chunks
-
-    def _compressed_chunks():
-        while True:
-            c = f.read(chunk_size)
-            if not c:
-                return
-            yield c
-
-    yield from _iter_stream_lines(
-        zstd_stream_decompress_chunks(_compressed_chunks())
-    )
-
-
-def iter_lines_hadoop(
-    f: BinaryIO, codec: str
-) -> Iterator[tuple[int, bytes]]:
-    """Yield (decompressed_offset, line_bytes) from a Hadoop
-    BlockCompressorStream file (reference Lz4Codec/ZstdCodec intermediate
-    format, ``format/hadoop_stream.py``). Like ``.zst``: no internal
-    index, so one partition reads the whole stream and offsets are
-    decompressed-stream positions (Hadoop LineRecordReader-over-codec
-    semantics)."""
-    from fourmc_spark.format.hadoop_stream import iter_hadoop_blocks
-
-    yield from _iter_stream_lines(iter_hadoop_blocks(f, codec))
-
-
-def _iter_stream_lines(chunks) -> Iterator[tuple[int, bytes]]:
-    """Yield (decompressed_offset, line_bytes) for every line of a stream
-    of decompressed byte *chunks*: lines may straddle chunks (carried
-    over), and the final unterminated line is emitted at EOF."""
-    pos = 0  # decompressed offset of the next unemitted line's first byte
     carry = bytearray()
-    for chunk in chunks:
-        carry.extend(chunk)
-        for line, adv in _consume_terminated_lines(carry, at_eof=False):
-            yield pos, line
-            pos += adv
-    for line, adv in _consume_terminated_lines(carry, at_eof=True):
-        yield pos, line
-        pos += adv
+    prev_cr = False
+    for key, raw in chunks:
+        if not raw:
+            continue  # an empty chunk must not reset a pending CR
+        lead, payload, prev_cr = _normalize_terminators(raw, prev_cr)
+        nl = payload.find(b"\n")
+        if nl < 0:
+            carry += payload
+            yield key, lead, raw, None, None
+            continue
+        head = (bytes(carry) + payload[:nl]) if carry else payload[:nl]
+        last_nl = payload.rfind(b"\n")
+        carry = bytearray(payload[last_nl + 1 :])
+        mid = payload[nl + 1 : last_nl] if last_nl > nl else None
+        yield key, lead, raw, head, mid
     if carry:
-        yield pos, bytes(carry)
+        yield None, 0, b"", bytes(carry), None
 
 
-def _consume_terminated_lines(buf: bytearray, at_eof: bool):
-    """Yield ``(line, advance)`` for each LF / CRLF / bare-CR terminated
-    line at the front of *buf*, consuming them; ``advance`` is the exact
-    original byte count (line + terminator), so stream offsets stay true.
-    A trailing ``\\r`` is kept pending unless ``at_eof`` (it may be half a
-    CRLF whose LF arrives in the next chunk)."""
-    start = 0
-    n = len(buf)
-    while start < n:
-        i_n = buf.find(b"\n", start)
-        i_r = buf.find(b"\r", start)
-        if i_n == -1 and i_r == -1:
-            break
-        if i_r == -1 or (0 <= i_n < i_r):
-            yield bytes(buf[start:i_n]), i_n - start + 1
-            start = i_n + 1
-        else:
-            if i_r == n - 1 and not at_eof:
-                break  # CR at buffer edge: CRLF split not yet resolvable
-            if i_r + 1 < n and buf[i_r + 1] == 0x0A:
-                yield bytes(buf[start:i_r]), i_r - start + 2
-                start = i_r + 2
-            else:
-                yield bytes(buf[start:i_r]), i_r - start + 1
-                start = i_r + 1
-    del buf[:start]
+def _lines_array(head: bytes | None, mid: bytes | None):
+    """One ``large_binary`` array of *head* followed by the lines of the
+    LF-joined *mid* (either may be None), split by Arrow's kernel —
+    terminators were normalized to LF, so it covers LF / CRLF / bare CR."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = []
+    if head is not None:
+        parts.append(pa.array([head], type=pa.large_binary()))
+    if mid is not None:
+        parts.append(
+            pc.split_pattern(
+                pa.array([mid], type=pa.large_binary()), pattern=b"\n"
+            ).values
+        )
+    return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+
+
+def iter_line_batches(
+    f: BinaryIO,
+    codec: str,
+    start: int,
+    end: int,
+    verify: bool = True,
+):
+    """Yield ``(offsets, lines)`` batches — offsets as ``numpy.int64``,
+    lines as a ``pyarrow`` large_binary array — for one slice of a file in
+    any codec: ``lz4``/``zstd`` (4mc/4mz), ``zst`` or ``hadoop-<codec>``.
+
+    Every codec splits lines through :func:`_iter_chunk_lines` with Arrow
+    kernels, never a per-line Python loop; only the offsets differ.  A
+    4mc/4mz line carries its owning block's compressed offset
+    (:func:`iter_line_batches_for_split`, over the block-aligned
+    [start, end)).  The stream codecs have no internal index, so their
+    slice is the whole file and a line carries the decompressed-stream
+    position of its first byte (:func:`iter_stream_line_batches`).
+    """
+    if codec == "zst":
+        # reference ZstCodec.java:47-169: standard zstd frames, not 4mz
+        compressed = iter(lambda: f.read(1 << 20), b"")
+        yield from iter_stream_line_batches(
+            zstd_stream_decompress_chunks(compressed)
+        )
+    elif codec.startswith("hadoop-"):
+        yield from iter_stream_line_batches(
+            iter_hadoop_blocks(f, codec[len("hadoop-") :])
+        )
+    else:
+        yield from iter_line_batches_for_split(f, codec, start, end, verify)
+
+
+def iter_stream_line_batches(chunks):
+    """Yield ``(offsets, lines)`` for every line of an iterable of
+    decompressed byte *chunks* (any chunking): each offset is the
+    decompressed-stream position of the line's first byte, matching
+    Hadoop's LineRecordReader over a compression codec."""
+    import numpy as np
+
+    def positioned():
+        pos = 0
+        for raw in chunks:
+            yield pos, raw
+            pos += len(raw)
+
+    owner = 0  # stream position of the carried line's first byte
+    for pos, lead, raw, head, mid in _iter_chunk_lines(positioned()):
+        if lead:
+            owner = pos + 1
+        if head is None:
+            continue
+        if pos is None:  # EOF: the unterminated final line
+            yield np.array([owner], dtype=np.int64), _lines_array(head, None)
+            return
+        # the stream position just past each of the chunk's terminators
+        a = np.frombuffer(raw, dtype=np.uint8)[lead:]
+        lf = a == 10
+        cr = a == 13
+        cr[:-1] &= ~lf[1:]  # a CRLF ends at its LF
+        starts = np.flatnonzero(lf | cr) + (pos + lead + 1)
+        offs = np.empty(len(starts), dtype=np.int64)
+        offs[0] = owner
+        offs[1:] = starts[:-1]
+        owner = int(starts[-1])
+        yield offs, _lines_array(head, mid)
 
 
 def iter_line_batches_for_split(
@@ -346,73 +390,44 @@ def iter_line_batches_for_split(
     split_end: int,
     verify: bool = True,
 ):
-    """Vectorized twin of :func:`iter_lines_for_split`: yields
-    ``(offsets, lines)`` per block — offsets as ``numpy.int64`` and lines
-    as a ``pyarrow`` binary array — with line splitting done by Arrow
-    compute kernels instead of a per-line Python loop (~5x faster scan).
+    """The 4mc/4mz side of :func:`iter_line_batches`: yields the lines of
+    one block-aligned split per block, exactly what
+    :func:`iter_lines_for_split` yields (the scalar oracle).
 
-    Ownership semantics are identical: a line belongs to this split iff
-    the byte preceding it lies in a block within [split_start, split_end).
-    Within one block every line after the first is owned by that block,
-    so ownership checks collapse to two block-level decisions.
+    Ownership: a line belongs to this split iff the byte preceding it lies
+    in a block within [split_start, split_end).  Within one block every
+    line after the first is owned by that block, so ownership checks
+    collapse to two block-level decisions.
     """
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     first_block = core.HEADER_SIZE
     if split_start < first_block:
         split_start = first_block
     owner = first_block if split_start == first_block else -1
-    carry = bytearray()
-    prev_cr = False
-
-    for boff, payload in iter_block_payloads(f, codec, split_start, verify=verify):
+    blocks = iter_block_payloads(f, codec, split_start, verify=verify)
+    for boff, lead, _, head, mid in _iter_chunk_lines(blocks):
         if owner >= split_end:
             return
-        payload, owner = _normalize_terminators(payload, prev_cr, owner, boff)
-        if b"\r" in payload:  # rare: LF-only payloads skip two copy passes
-            prev_cr = payload.endswith(b"\r")
-            payload = payload.replace(b"\r\n", b"\n").replace(b"\r", b"\n")
-        else:
-            prev_cr = False
-        nl = payload.find(b"\n")
-        if nl < 0:
-            carry.extend(payload)
+        if boff is None:  # EOF: the unterminated final line
+            if split_start <= owner:
+                yield np.array([owner], dtype=np.int64), _lines_array(head, None)
+            return
+        if lead:
+            owner = boff
+        if head is None:
             continue
-        head_owner = owner
-        head = (bytes(carry) + payload[:nl]) if carry else payload[:nl]
-        carry.clear()
-        last_nl = payload.rfind(b"\n")
-        mid = payload[nl + 1 : last_nl] if last_nl > nl else None
-        carry = bytearray(payload[last_nl + 1 :])
-        owner = boff
-
+        head_owner, owner = owner, boff
         emit_head = split_start <= head_owner < split_end
         emit_mid = mid is not None and split_start <= boff < split_end
-
-        offs_parts = []
-        line_parts = []
-        if emit_head:
-            offs_parts.append(np.array([head_owner], dtype=np.int64))
-            line_parts.append(pa.array([head], type=pa.large_binary()))
-        if emit_mid:
-            # terminators were normalized to LF above, so one split kernel
-            # covers LF / CRLF / bare-CR alike
-            arr = pc.split_pattern(
-                pa.array([mid], type=pa.large_binary()), pattern=b"\n"
-            ).values
-            offs_parts.append(np.full(len(arr), boff, dtype=np.int64))
-            line_parts.append(arr)
-        if line_parts:
-            offs = np.concatenate(offs_parts) if len(offs_parts) > 1 else offs_parts[0]
-            lines = pa.concat_arrays(line_parts) if len(line_parts) > 1 else line_parts[0]
+        if emit_head or emit_mid:
+            lines = _lines_array(
+                head if emit_head else None, mid if emit_mid else None
+            )
+            offs = np.full(len(lines), boff, dtype=np.int64)
+            if emit_head:
+                offs[0] = head_owner
             yield offs, lines
         if boff >= split_end:
             # every further line is owned by a block past the split
             return
-    if carry and split_start <= owner < split_end:
-        yield (
-            np.array([owner], dtype=np.int64),
-            pa.array([bytes(carry)], type=pa.large_binary()),
-        )

@@ -1117,7 +1117,7 @@ def analyze_stats(
                 v = float(v)  # parses "NaN"/"Infinity"/"-Infinity" too
         return v
 
-    def _write_sidecar(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _write_sidecar(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         fpath = key[0]
         pdf = pdf.sort_values("offset")
         spans = {

@@ -692,7 +692,7 @@ def cosine_pairs(embeddings: DataFrame, threshold: float,
         F.greatest("_g", "_p").alias("_gj"),
     )
 
-    def score(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def score(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         gi, gj = key[-2], key[-1]
         left = pdf[pdf["_g"] == gi]
         right = pdf[pdf["_g"] == gj]

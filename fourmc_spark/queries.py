@@ -3217,7 +3217,7 @@ def sql_4mc_pruned_scan_q(spark, sf):
     # event_id through ONE writer, with blocksize 4096 = 128 lines — the
     # sink packs bytes to exactly blocksize (format/writer.py write).
     # Ownership is Hadoop-convention: a line belongs to the block
-    # holding its PRECEDING byte (iter_line_batches_for_split), so a
+    # holding its PRECEDING byte (iter_line_batches), so a
     # line starting exactly at a block boundary is owned by the previous
     # block — block j owns lines (128j, 128j+128]. Filtering
     # offset >= offsets[skip//128] therefore equals event_id > skip,

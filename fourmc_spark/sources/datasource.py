@@ -78,7 +78,8 @@ _HADOOP_EXTS = (
     ".lz4_fast", ".lz4_mc", ".lz4_hc", ".lz4_uc",
     ".zstd_fast", ".zstd_mc", ".zstd_hc", ".zstd_uc",
 )
-_EXTS = (".4mc", ".4mz", ".zst") + _HADOOP_EXTS
+_STREAM_EXTS = (".zst",) + _HADOOP_EXTS
+_EXTS = (".4mc", ".4mz") + _STREAM_EXTS
 
 
 def _list_files(path: str) -> list[str]:
@@ -550,6 +551,7 @@ class FourMcDataSourceReader(DataSourceReader):
         and per block, offset bisect, then block grouping."""
         # driver-side planning: one footer read per file (S1/X6)
         from fourmc_spark.format import core
+        from fourmc_spark.format.hadoop_stream import hadoop_ext_info
         from fourmc_spark.format.reader import scan_file_info
 
         sized: list[tuple[Slice, int]] = []
@@ -573,20 +575,14 @@ class FourMcDataSourceReader(DataSourceReader):
                     )
                     if dropped_blocks is None:
                         continue  # the file summary is excluded
-            if path.endswith(".zst"):
+            if path.endswith(_STREAM_EXTS):
+                # non-splittable: one slice reads the whole stream
                 fsize = os.path.getsize(path)
                 if fsize:
-                    sized.append((Slice(path, "zst", 0, fsize, True), 1))
-                continue
-            if path.endswith(_HADOOP_EXTS):
-                from fourmc_spark.format.hadoop_stream import hadoop_ext_info
-
-                fsize = os.path.getsize(path)
-                if fsize:
-                    hcodec = hadoop_ext_info(path)[0]
-                    sized.append(
-                        (Slice(path, f"hadoop-{hcodec}", 0, fsize, True), 1)
+                    codec = "zst" if path.endswith(".zst") else (
+                        "hadoop-" + hadoop_ext_info(path)[0]
                     )
+                    sized.append((Slice(path, codec, 0, fsize, True), 1))
                 continue
             codec, fsize, offsets = scan_file_info(path)
             if not offsets:
@@ -707,64 +703,13 @@ class FourMcDataSourceReader(DataSourceReader):
                 )
 
         def _slice_batches(sl: Slice):
-            if sl.codec == "zst" or sl.codec.startswith("hadoop-"):
-                # non-splittable streaming codecs: row iterator + batch buffer
-                from fourmc_spark.format.reader import (
-                    iter_lines_hadoop,
-                    iter_lines_zst,
-                )
-
-                batch_rows = 16384
-                offsets: list[int] = []
-                lines: list[bytes] = []
-
-                def flush():
-                    if typed:
-                        return _typed_batch(
-                            pa.array(lines, type=pa.binary()), list(offsets)
-                        )
-                    arrays, names = [], []
-                    if want_offset:
-                        arrays.append(pa.array(offsets, type=pa.int64()))
-                        names.append("offset")
-                    if want_value:
-                        arrays.append(
-                            _cast_lines(pa.array(lines, type=pa.binary()))
-                        )
-                        names.append("value")
-                    return pa.RecordBatch.from_arrays(arrays, names=names)
-
-                drop_first = self.skip_first and sl.head
-                with open(sl.path, "rb") as f:
-                    if sl.codec.startswith("hadoop-"):
-                        it = iter_lines_hadoop(
-                            f, sl.codec.split("-", 1)[1]
-                        )
-                    else:
-                        it = iter_lines_zst(f)
-                    for owner, line in it:
-                        if drop_first:
-                            drop_first = False
-                            continue
-                        offsets.append(owner)
-                        lines.append(line)
-                        if len(lines) >= batch_rows:
-                            yield flush()
-                            offsets.clear()
-                            lines.clear()
-                if lines or offsets:
-                    yield flush()
-                return
-
-            # 4mc/4mz: vectorized per-block batches — line splitting runs in
-            # Arrow compute kernels, never a per-line Python loop
-            from fourmc_spark.format.reader import iter_line_batches_for_split
+            # every codec: Arrow line batches, never a per-line Python loop
+            from fourmc_spark.format.reader import iter_line_batches
 
             drop_first = self.skip_first and sl.head
             with open(sl.path, "rb") as f:
-                for offs_np, lines_arr in iter_line_batches_for_split(
-                    f, sl.codec, sl.start, sl.end,
-                    verify=self.verify,
+                for offs_np, lines_arr in iter_line_batches(
+                    f, sl.codec, sl.start, sl.end, verify=self.verify
                 ):
                     if drop_first and len(lines_arr) > 0:
                         drop_first = False

@@ -9,6 +9,8 @@ assign_to_centroids: hand-built vectors with known nearest prototypes;
 argmin ties break toward the smaller label.
 """
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,7 +113,12 @@ def test_cosine_pairs_block_decomposition_exact(spark):
         (r["a_id"], r["b_id"])
         for r in similarity.cosine_pairs(df, 0.5, block_rows=10_000).collect()
     }
-    blocked_rows = similarity.cosine_pairs(df, 0.5, block_rows=7).collect()
+    with warnings.catch_warnings():
+        # a partially annotated applyInPandas function makes Spark warn
+        # that it cannot infer the eval type
+        warnings.simplefilter("error", UserWarning)
+        blocked_df = similarity.cosine_pairs(df, 0.5, block_rows=7)
+    blocked_rows = blocked_df.collect()
     blocked = {(r["a_id"], r["b_id"]) for r in blocked_rows}
     assert blocked == single and len(blocked_rows) == len(blocked)
     assert all(a < b for a, b in blocked)

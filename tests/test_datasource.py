@@ -3,6 +3,7 @@ multi-partition split planning, and value equality with spark.read.text."""
 
 import glob
 import os
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -659,7 +660,11 @@ def test_analyze_stats_sidecars_and_zone_pruning(spark, tmp_path):
 
     d = str(tmp_path / "zm")
     _write_zm_tree(spark, d, n_files=4, rows=400)  # k ranges ~100/file
-    res = analyze_stats(spark, d, _ZM_DDL)
+    with warnings.catch_warnings():
+        # a partially annotated applyInPandas function makes Spark warn
+        # that it cannot infer the eval type
+        warnings.simplefilter("error", UserWarning)
+        res = analyze_stats(spark, d, _ZM_DDL)
     assert res["files"] == 4
     import glob as _glob
     import json as _json

@@ -334,13 +334,15 @@ def test_terminator_straddles_block_boundary(tmp_path):
 def test_zst_cr_offsets_exact(tmp_path):
     import pyarrow as pa
 
-    from fourmc_spark.format.reader import iter_lines_zst
+    from fourmc_spark.format.reader import iter_line_batches
 
     p = str(tmp_path / "cr.zst")
     data = b"aa\r\nbb\rcc\ndd"
     with open(p, "wb") as f:
         f.write(pa.Codec("zstd", 1).compress(data).to_pybytes())
     with open(p, "rb") as f:
-        got = list(iter_lines_zst(f))
+        got = [(int(o), v.as_py())
+               for offs, lines in iter_line_batches(f, "zst", 0, len(data))
+               for o, v in zip(offs, lines)]
     # offsets are true decompressed positions of each line start
     assert got == [(0, b"aa"), (4, b"bb"), (7, b"cc"), (10, b"dd")]

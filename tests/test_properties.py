@@ -6,8 +6,9 @@ shrinks failures to minimal counterexamples instead).
 
 import io
 import os
+import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from fourmc_spark.format import FourMcWriter, compress_bytes, decompress_file
 from fourmc_spark.format.writer import ZstWriter
@@ -98,6 +99,55 @@ def test_line_roundtrip_via_split_reader(tmp_path_factory, lines, codec):
         got = [ln.decode("utf-8")
                for _, ln in iter_lines_for_split(f, codec, 0, size)]
     assert got == lines
+
+
+# a line is its bytes up to LF, CRLF or bare CR, or an unterminated tail
+_LINE_RE = re.compile(rb"([^\r\n]*)(?:\r\n|\r|\n)|([^\r\n]+)\Z")
+
+
+def _flat(batches):
+    return [(int(o), v.as_py()) for offs, lines in batches
+            for o, v in zip(offs, lines)]
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    data=st.lists(st.sampled_from(b"ab\r\n"), max_size=80).map(bytes),
+    cuts=st.lists(st.integers(0, 80), max_size=8),
+    block_size=st.integers(1, 16),
+)
+@example(data=b"a\r\nb\r", cuts=[2], block_size=2)   # CRLF split, CR at EOF
+@example(data=b"ab\r\r\n\nb", cuts=[3, 3], block_size=3)  # CR at chunk edge
+@example(data=b"\n\na\n", cuts=[], block_size=1)     # empty lines, trailing LF
+def test_stream_line_batches_match_regex_oracle(
+    tmp_path_factory, data, cuts, block_size
+):
+    """Stream-codec line batches equal a regex over the decompressed
+    bytes, offset = the line's first byte, for any chunking (empty chunks
+    included) and for multi-block Hadoop containers; the lines equal the
+    scalar 4mc oracle's for the same bytes."""
+    from fourmc_spark.format.hadoop_stream import write_hadoop_file
+    from fourmc_spark.format.reader import (
+        iter_line_batches,
+        iter_lines_for_split,
+        iter_stream_line_batches,
+    )
+
+    want = [(m.start(), m.group(1) if m.group(2) is None else m.group(2))
+            for m in _LINE_RE.finditer(data)]
+    bounds = [0] + sorted(min(c, len(data)) for c in cuts) + [len(data)]
+    chunks = [data[a:b] for a, b in zip(bounds, bounds[1:])]
+    assert _flat(iter_stream_line_batches(iter(chunks))) == want
+
+    p = str(tmp_path_factory.mktemp("lines") / "h.lz4_fast")
+    write_hadoop_file(p, data, "lz4", block_size=block_size)
+    with open(p, "rb") as f:
+        assert _flat(iter_line_batches(f, "hadoop-lz4", 0, 0)) == want
+
+    blob = compress_bytes(data, codec="lz4", block_size=block_size)
+    oracle = list(iter_lines_for_split(io.BytesIO(blob), "lz4", 0, len(blob)))
+    assert [ln for _, ln in oracle] == [ln for _, ln in want]
+    assert _flat(iter_line_batches(io.BytesIO(blob), "lz4", 0, len(blob))) == oracle
 
 
 @settings(max_examples=40, deadline=None)

@@ -18,7 +18,7 @@ import subprocess
 import pytest
 
 from fourmc_spark.format.native import zstd_stream_decompress_chunks
-from fourmc_spark.format.reader import iter_lines_zst
+from fourmc_spark.format.reader import iter_line_batches
 
 pytestmark = pytest.mark.skipif(
     shutil.which("zstd") is None, reason="stock zstd CLI not available"
@@ -71,7 +71,9 @@ def test_line_iteration_offsets_over_cli_frame(tmp_path):
     p = tmp_path / "cli.zst"
     p.write_bytes(_cli(DATA, "-3", "--long=27"))
     with open(p, "rb") as f:
-        got = list(iter_lines_zst(f))
+        got = [(int(o), v.as_py())
+               for offs, lines in iter_line_batches(f, "zst", 0, 0)
+               for o, v in zip(offs, lines)]
     assert [ln for _, ln in got] == LINES
     # offsets are exact decompressed positions of each line start
     pos = 0

@@ -30,7 +30,6 @@ the CLI streams, it never loads whole files; ``-p`` bounds memory at
 from __future__ import annotations
 
 import os
-import struct
 import sys
 
 from fourmc_spark.format import core
@@ -144,10 +143,9 @@ def _default_output(inp: str, mode: str, codec: str) -> str | None:
     if inp == "-":
         return None  # stdout
     if mode == "compress":
-        return inp + (".4mc" if codec == "lz4" else ".4mz")
-    for ext in (".4mc", ".4mz"):
-        if inp.endswith(ext):
-            return inp[: -len(ext)]
+        return inp + core.extension_for_codec(codec)
+    if core.is_indexed_path(inp):
+        return inp[: inp.rfind(".")]
     raise CliError(f"cannot derive output name from {inp!r}; pass one explicitly")
 
 
@@ -199,9 +197,7 @@ def main(argv: list[str] | None = None) -> int:
     if mode is None:
         # reference default: "-d : decompression (default for .4mc and
         # .4mz exts)" (native/4mccli.c:145) — infer from the input name
-        mode = (
-            "decompress" if inp.endswith((".4mc", ".4mz")) else "compress"
-        )
+        mode = "decompress" if core.is_indexed_path(inp) else "compress"
     del verbose  # parity flag: output is already one summary line
 
     try:

@@ -1,4 +1,5 @@
-"""4mc/4mz container format: constants, framing, and the block index.
+"""File containers: the extension table, and the 4mc/4mz format's
+constants, framing and block index.
 
 Byte layout re-implemented from the public format specs
 (`/root/reference/4mc-format-spec`, `4mz-format-spec`) and pinned against
@@ -21,6 +22,7 @@ from __future__ import annotations
 import struct
 from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
+from typing import BinaryIO
 
 from .native import xxh32
 
@@ -31,6 +33,8 @@ __all__ = [
     "HEADER_SIZE",
     "BLOCK_HEADER_SIZE",
     "MAX_BLOCK_SIZE",
+    "CONTAINERS",
+    "Container",
     "FourMcFormatError",
     "BadHeaderError",
     "BadFooterError",
@@ -40,11 +44,16 @@ __all__ = [
     "encode_header",
     "decode_header",
     "encode_block",
+    "decode_block_header",
+    "read_block",
     "encode_eos",
     "encode_footer",
     "decode_footer",
     "codec_for_magic",
+    "container_for_codec",
+    "container_for_path",
     "extension_for_codec",
+    "is_indexed_path",
 ]
 
 MAGIC_4MC = 0x344D4300  # "4MC\0"  (FourMcCodec.java:84)
@@ -57,6 +66,7 @@ MAX_BLOCK_SIZE = 4 * 1024 * 1024  # FourMcCodec.java:86
 NOT_FOUND = -1
 
 _U32 = struct.Struct(">I")
+_BLOCK_HEADER = struct.Struct(">III")
 
 
 class FourMcFormatError(ValueError):
@@ -75,16 +85,101 @@ class BadBlockError(FourMcFormatError):
     pass
 
 
+# ---------------------------------------------------------------------------
+# the container table
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Container:
+    """One file container, keyed by its extension in :data:`CONTAINERS`.
+
+    ``kind`` is ``"4mc"`` (this module's footer-indexed framing, split at
+    block boundaries), ``"zst"`` (one standard zstd stream, the
+    reference's ``ZstCodec.java:47-169``) or ``"hadoop"`` (Hadoop's
+    BlockCompressorStream, :mod:`.hadoop_stream`).  ``codec`` is lz4 or
+    zstd; ``level`` is the level a Hadoop extension fixes, else None.
+    """
+
+    ext: str
+    kind: str
+    codec: str
+    level: str | None = None
+
+    @property
+    def indexed(self) -> bool:
+        """Footer-indexed (4mc/4mz): splittable, and the only kind the
+        raw block copy, the protobuf source and the CLI handle.  The
+        other kinds have no index and are read whole, one slice a file."""
+        return self.kind == "4mc"
+
+    @property
+    def slice_codec(self) -> str:
+        """The codec a scan slice hands ``reader.iter_line_batches``."""
+        return {"4mc": self.codec, "zst": "zst"}.get(
+            self.kind, "hadoop-" + self.codec
+        )
+
+
+# Every container the engine lists, reads and writes.  The Hadoop block
+# codecs' extensions are the reference's ``getDefaultExtension``s
+# (``Lz4Codec.java:163`` / ``ZstdCodec.java``): <codec>_<level suffix>.
+CONTAINERS: dict[str, Container] = {
+    c.ext: c
+    for c in (
+        Container(".4mc", "4mc", "lz4"),
+        Container(".4mz", "4mc", "zstd"),
+        Container(".zst", "zst", "zstd"),
+        *(
+            Container(f".{codec}_{sfx}", "hadoop", codec, level)
+            for codec in ("lz4", "zstd")
+            for sfx, level in (
+                ("fast", "fast"), ("mc", "medium"), ("hc", "high"),
+                ("uc", "ultra"),
+            )
+        ),
+    )
+}
+_INDEXED = {c.codec: c for c in CONTAINERS.values() if c.indexed}
+
+
+def container_for_path(path: str) -> Container | None:
+    """The container *path*'s extension names, or None.  (With no dot the
+    slice is the last character, which no extension matches.)"""
+    return CONTAINERS.get(path[path.rfind(".") :])
+
+
+def is_indexed_path(path: str) -> bool:
+    """True when *path*'s extension names a footer-indexed container."""
+    c = container_for_path(path)
+    return c is not None and c.indexed
+
+
+def container_for_codec(name: str) -> Container:
+    """The container a ``codec`` option names, in any case: a
+    footer-indexed one by its codec (lz4, zstd), or any one by its
+    extension without the dot (4mc, 4mz, zst, lz4_fast, ...)."""
+    n = name.lower()
+    c = _INDEXED.get(n) or CONTAINERS.get("." + n)
+    if c is None:
+        raise ValueError(
+            f"unknown codec {name!r} (expected one of "
+            f"{', '.join([*_INDEXED, *(e[1:] for e in CONTAINERS)])})"
+        )
+    return c
+
+
+def extension_for_codec(codec: str) -> str:
+    """The footer-indexed container's extension for *codec* (lz4|zstd)."""
+    return _INDEXED[codec].ext
+
+
 def codec_for_magic(magic: int) -> str:
     if magic == MAGIC_4MC:
         return "lz4"
     if magic == MAGIC_4MZ:
         return "zstd"
     raise BadHeaderError(f"unknown magic 0x{magic:08X}")
-
-
-def extension_for_codec(codec: str) -> str:
-    return ".4mc" if codec == "lz4" else ".4mz"
 
 
 def magic_for_codec(codec: str) -> int:
@@ -123,11 +218,38 @@ def encode_block(uncompressed_size: int, payload: bytes, compressed: bool) -> by
     """Frame one block. *payload* is the stored bytes (compressed or raw)."""
     stored_size = len(payload) if compressed else uncompressed_size
     return (
-        _U32.pack(uncompressed_size)
-        + _U32.pack(stored_size)
-        + _U32.pack(xxh32(payload))
+        _BLOCK_HEADER.pack(uncompressed_size, stored_size, xxh32(payload))
         + payload
     )
+
+
+def decode_block_header(buf, pos: int = 0) -> tuple[int, int, int] | None:
+    """``(uncompressed_size, stored_size, checksum)`` of the block header
+    at *pos* in *buf*, or None for the EOS marker.  Fewer than 12 bytes
+    left, or a size over the 4 MiB cap, is a :class:`BadBlockError`."""
+    if len(buf) - pos < BLOCK_HEADER_SIZE:
+        raise BadBlockError("truncated block header (missing EOS marker?)")
+    usize, csize, checksum = _BLOCK_HEADER.unpack_from(buf, pos)
+    if usize == 0 and csize == 0 and checksum == 0:
+        return None
+    if usize > MAX_BLOCK_SIZE:
+        raise BadBlockError(f"block uncompressed size {usize} exceeds 4 MiB cap")
+    if csize > MAX_BLOCK_SIZE:
+        raise BadBlockError(f"block compressed size {csize} exceeds cap")
+    return usize, csize, checksum
+
+
+def read_block(f: BinaryIO) -> tuple[bytes, int, int, int, bytes] | None:
+    """The next framed block of *f*: ``(header, uncompressed_size,
+    stored_size, checksum, payload)``, or None at the EOS marker."""
+    header = f.read(BLOCK_HEADER_SIZE)
+    fields = decode_block_header(header)
+    if fields is None:
+        return None
+    payload = f.read(fields[1])
+    if len(payload) != fields[1]:
+        raise BadBlockError("truncated block payload")
+    return (header, *fields, payload)
 
 
 def encode_eos() -> bytes:

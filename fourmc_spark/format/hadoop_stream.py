@@ -35,42 +35,25 @@ from __future__ import annotations
 import struct
 from typing import BinaryIO, Iterator
 
-from .native import (
-    LZ4_LEVELS,
-    ZSTD_LEVELS,
-    lz4_compress_raw,
-    lz4_decompress_raw,
-    zstd_compress_raw,
-    zstd_decompress_raw,
-)
+from .core import CONTAINERS, container_for_path
+from .native import lz4_decompress_raw, zstd_decompress_raw
 
 __all__ = [
     "HADOOP_EXTS",
-    "hadoop_ext_info",
     "iter_hadoop_blocks",
     "read_hadoop_file",
     "write_hadoop_file",
 ]
 
-# extension (no dot) -> (codec, level-name)
+# extension (no dot) -> (codec, level-name): the Hadoop rows of the one
+# container table, core.CONTAINERS
 HADOOP_EXTS: dict[str, tuple[str, str]] = {
-    "lz4_fast": ("lz4", "fast"),
-    "lz4_mc": ("lz4", "medium"),
-    "lz4_hc": ("lz4", "high"),
-    "lz4_uc": ("lz4", "ultra"),
-    "zstd_fast": ("zstd", "fast"),
-    "zstd_mc": ("zstd", "medium"),
-    "zstd_hc": ("zstd", "high"),
-    "zstd_uc": ("zstd", "ultra"),
+    c.ext[1:]: (c.codec, c.level)
+    for c in CONTAINERS.values()
+    if c.kind == "hadoop"
 }
 
 BLOCK_SIZE = 4 * 1024 * 1024  # LZ4_BUFFER_SIZE / ZSTD_BUFFER_SIZE
-
-
-def hadoop_ext_info(path: str) -> tuple[str, str] | None:
-    """(codec, level) for a straight-block-codec path, else None."""
-    ext = path.rsplit(".", 1)[-1] if "." in path else ""
-    return HADOOP_EXTS.get(ext)
 
 
 def write_hadoop_file(
@@ -79,19 +62,12 @@ def write_hadoop_file(
 ) -> None:
     """Write *data* as a Hadoop block-compressor file (one chunk per
     block, exactly what the reference's 4 MiB-buffer compressors emit)."""
-    if codec == "lz4":
-        comp, lvl = lz4_compress_raw, LZ4_LEVELS[level]
-    elif codec == "zstd":
-        comp, lvl = zstd_compress_raw, ZSTD_LEVELS[level]
-    else:
-        raise ValueError(f"unknown hadoop block codec {codec!r}")
-    with open(path, "wb") as f:
-        for off in range(0, len(data), block_size):
-            block = data[off : off + block_size]
-            payload = comp(block, lvl)
-            f.write(struct.pack(">i", len(block)))
-            f.write(struct.pack(">i", len(payload)))
-            f.write(payload)
+    from .writer import HadoopBlockWriter
+
+    with open(path, "wb") as f, HadoopBlockWriter(
+        f, codec, level, block_size
+    ) as w:
+        w.write(data)
 
 
 def iter_hadoop_blocks(
@@ -141,9 +117,9 @@ def iter_hadoop_blocks(
 def read_hadoop_file(path: str, codec: str | None = None) -> bytes:
     """Whole-file decode; codec inferred from the extension if omitted."""
     if codec is None:
-        info = hadoop_ext_info(path)
-        if info is None:
+        c = container_for_path(path)
+        if c is None or c.kind != "hadoop":
             raise ValueError(f"cannot infer hadoop block codec from {path!r}")
-        codec = info[0]
+        codec = c.codec
     with open(path, "rb") as f:
         return b"".join(iter_hadoop_blocks(f, codec))

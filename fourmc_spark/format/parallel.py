@@ -16,9 +16,10 @@ writes its slice in place via the zero-copy ``*_at`` bindings in
 from __future__ import annotations
 
 import os
-import struct
 from concurrent.futures import ThreadPoolExecutor
 from typing import BinaryIO, Iterator
+
+import numpy as np
 
 from . import core
 from .native import lz4_decompress_at, xxh32_at, zstd_decompress_at
@@ -61,13 +62,12 @@ def _parse_blocks(
     blocks = []
     for off, end in zip(offsets, ends):
         rel = off - base
-        usize, csize, checksum = struct.unpack_from(">III", buf, rel)
-        if usize > core.MAX_BLOCK_SIZE:
-            raise core.BadBlockError(
-                f"block uncompressed size {usize} exceeds 4 MiB cap"
+        fields = core.decode_block_header(buf, rel)
+        if fields is None:
+            raise core.BadFooterError(
+                f"the footer index places a block at {off}, an EOS marker"
             )
-        if csize > core.MAX_BLOCK_SIZE:
-            raise core.BadBlockError(f"block compressed size {csize} exceeds cap")
+        usize, csize, checksum = fields
         if off + core.BLOCK_HEADER_SIZE + csize != end:
             raise core.BadFooterError(
                 f"block at {off} frames {csize} payload bytes but the footer "
@@ -77,7 +77,7 @@ def _parse_blocks(
     return blocks
 
 
-def _alloc_output(blocks) -> tuple[object, list[int]]:
+def _alloc_output(blocks) -> tuple[np.ndarray, list[int]]:
     """The output buffer for *blocks* and each block's offset in it.
 
     Uninitialized: every byte is written by exactly one block decode, so
@@ -89,18 +89,7 @@ def _alloc_output(blocks) -> tuple[object, list[int]]:
     for b in blocks:
         out_offs.append(total)
         total += b[1]
-    try:
-        import numpy as _np
-
-        return _np.empty(total, dtype=_np.uint8), out_offs
-    except ImportError:  # pragma: no cover
-        return bytearray(total), out_offs
-
-
-def _as_result(out):
-    # memoryview: bytes-like (len/slice/== bytes) without copying; callers
-    # needing an owned copy take bytes(result)
-    return out if isinstance(out, bytearray) else memoryview(out)
+    return np.empty(total, dtype=np.uint8), out_offs
 
 
 def _decode_blocks_into(
@@ -142,7 +131,7 @@ def _decode_blocks_into(
 
 def decompress_file_parallel(
     path: str, threads: int | None = None, verify: bool = True
-) -> bytearray:
+) -> memoryview:
     """Whole-file decode on *threads* cores (default: all).
 
     Single-shot: reads the compressed file once, preallocates the exact
@@ -170,7 +159,9 @@ def decompress_file_parallel(
     else:
         with ThreadPoolExecutor(max_workers=min(threads, len(blocks))) as pool:
             _decode_blocks_into(data, blocks, out, out_offs, codec, pool, verify)
-    return _as_result(out)
+    # bytes-like (len/slice/== bytes) without a copy; callers needing an
+    # owned copy take bytes(result)
+    return memoryview(out)
 
 
 def iter_decoded_windows(
@@ -178,7 +169,7 @@ def iter_decoded_windows(
     threads: int | None = None,
     verify: bool = True,
     window_bytes: int = _DEFAULT_WINDOW,
-) -> Iterator[bytearray]:
+) -> Iterator[memoryview]:
     """Bounded-memory parallel decode: yields decompressed spans in file
     order, reading at most ~*window_bytes* of compressed data at a time.
 
@@ -212,5 +203,5 @@ def iter_decoded_windows(
             blocks = _parse_blocks(buf, offsets[i:j], ends[i:j], base=start)
             out, out_offs = _alloc_output(blocks)
             _decode_blocks_into(buf, blocks, out, out_offs, codec, pool, verify)
-            yield _as_result(out)
+            yield memoryview(out)
             i = j

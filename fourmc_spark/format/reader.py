@@ -95,30 +95,17 @@ def iter_block_payloads(
     """
     f.seek(start_offset)
     pos = start_offset
-    while True:
-        hdr = f.read(core.BLOCK_HEADER_SIZE)
-        if len(hdr) < core.BLOCK_HEADER_SIZE:
-            raise core.BadBlockError("truncated block header (missing EOS marker?)")
-        usize, csize, checksum = struct.unpack(">III", hdr)
-        if usize == 0 and csize == 0 and checksum == 0:
-            return  # EOS
-        if usize > core.MAX_BLOCK_SIZE:
-            raise core.BadBlockError(
-                f"block uncompressed size {usize} exceeds 4 MiB cap"
-            )
-        if csize > core.MAX_BLOCK_SIZE:
-            raise core.BadBlockError(f"block compressed size {csize} exceeds cap")
-        payload = f.read(csize)
-        if len(payload) != csize:
-            raise core.BadBlockError("truncated block payload")
-        data = _decode_payload(codec, payload, usize, csize == usize, verify, checksum)
-        yield pos, data
+    while (block := core.read_block(f)) is not None:
+        _, usize, csize, checksum, payload = block
+        yield pos, _decode_payload(
+            codec, payload, usize, csize == usize, verify, checksum
+        )
         pos += core.BLOCK_HEADER_SIZE + csize
 
 
 def decompress_file(
     path: str, verify: bool = True, threads: int | None = None
-) -> "bytes | bytearray | memoryview":
+) -> memoryview:
     """Whole-file decompression (CLI / verification path).
 
     ``threads > 1`` decodes the independent blocks on a thread pool

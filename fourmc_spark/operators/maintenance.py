@@ -54,7 +54,6 @@ from __future__ import annotations
 
 import math
 import os
-import struct
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -81,20 +80,20 @@ __all__ = [
 
 
 def layout_stats(path: str) -> dict:
-    """File-layout health of a 4mc/4mz/zst dataset directory: counts,
-    bytes, and block counts straight from the footers (one ranged read per
-    file — the same metadata the split planner touches, no data bytes)."""
-    from fourmc_spark.format import scan_file_info
-
+    """File-layout health of a dataset directory in any container:
+    counts, bytes, and block counts straight from the footers (one ranged
+    read per file — the same metadata the split planner touches, no data
+    bytes). A container without a footer index counts as one block: the
+    planner reads it as one slice."""
     files = _list_files(path)
     sizes = [os.path.getsize(f) for f in files]
     blocks = 0
     for f in files:
-        if f.endswith(".zst"):
-            blocks += 1  # no index; planned as one partition
+        c = core.container_for_path(f)
+        if c is not None and not c.indexed:
+            blocks += 1
         else:
-            _, _, offsets = scan_file_info(f)
-            blocks += len(offsets)
+            blocks += len(scan_file_info(f)[2])
     return {
         "n_files": len(files),
         "total_bytes": sum(sizes),
@@ -258,16 +257,14 @@ class CompactionPlan:
     reldir: str = ""
 
 
-# raw block copy needs the 4mc framing + footer index; .zst and the
-# Hadoop block-codec containers have neither — they are skipped (and
-# reported) rather than crashing planning with a BadHeaderError
-_BLOCK_EXTS = (".4mc", ".4mz")
-
-
 def _split_compactable(in_dir: str) -> tuple[list[str], list[str]]:
+    """(footer-indexed files, the rest): raw block copy needs the 4mc
+    framing + footer index, which the other containers lack — they are
+    skipped (and reported) rather than crashing planning with a
+    BadHeaderError."""
     files = sorted(_list_files(in_dir))
-    ok = [f for f in files if f.endswith(_BLOCK_EXTS)]
-    return ok, [f for f in files if not f.endswith(_BLOCK_EXTS)]
+    ok = [f for f in files if core.is_indexed_path(f)]
+    return ok, [f for f in files if not core.is_indexed_path(f)]
 
 
 def plan_compaction(
@@ -315,19 +312,17 @@ def _append_raw_blocks(
         core.decode_header(f.read(core.HEADER_SIZE))
         while True:
             in_off = f.tell()
-            hdr = f.read(core.BLOCK_HEADER_SIZE)
-            if len(hdr) < core.BLOCK_HEADER_SIZE:
-                raise core.BadBlockError(f"{src}: truncated block header")
-            usize, csize, checksum = struct.unpack(">III", hdr)
-            if usize == 0 and csize == 0 and checksum == 0:
+            try:
+                block = core.read_block(f)
+            except core.BadBlockError as e:
+                raise core.BadBlockError(f"{src}: {e}") from e
+            if block is None:
                 return pairs  # EOS — footer follows; nothing left to copy
-            payload = f.read(csize)
-            if len(payload) != csize:
-                raise core.BadBlockError(f"{src}: truncated block payload")
+            header, *_, payload = block
             out_off = out_f.tell()
             offsets.append(out_off)
             pairs.append((in_off, out_off))
-            out_f.write(hdr)
+            out_f.write(header)
             out_f.write(payload)
 
 
@@ -785,8 +780,7 @@ def analyze_stats_proto(
                 )
             bl_fams[c] = bl_eligible[c]
     files = [
-        p for p in _list_files(path)
-        if p.endswith((".4mc", ".4mz")) and not p.endswith(STATS_SUFFIX)
+        p for p in _list_files(path) if core.is_indexed_path(p)
     ]
     if not files:
         return {"files": 0, "rows": 0, "columns": cols,

@@ -62,6 +62,8 @@ from pyspark.sql.types import (
     IntegerType, LongType, ShortType, StringType, StructField, StructType,
 )
 
+from fourmc_spark.format.core import CONTAINERS, container_for_codec
+
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 # Cap on blocks per split: bounds a partition's UNCOMPRESSED size at
 # maxblockspersplit * 4 MiB (the format's hard block cap, MAX_BLOCK_SIZE)
@@ -69,17 +71,9 @@ DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 # at scale: 128 MB of compressed highly-compressible text can be many GB
 # uncompressed — one task, one OOM. 64 blocks => <= 256 MiB per task.
 DEFAULT_MAX_BLOCKS_PER_SPLIT = 64
-# .zst = standard zstd streaming format (reference ZstCodec.java:47-169):
-# readable but non-splittable (no internal index) — one partition per file.
-# The .lz4_*/.zstd_* extensions are the reference's "straight" block
-# codecs (Hadoop BlockCompressorStream M/R intermediate files,
-# Lz4Codec.java:163 / ZstdCodec.java) — also non-splittable.
-_HADOOP_EXTS = (
-    ".lz4_fast", ".lz4_mc", ".lz4_hc", ".lz4_uc",
-    ".zstd_fast", ".zstd_mc", ".zstd_hc", ".zstd_uc",
-)
-_STREAM_EXTS = (".zst",) + _HADOOP_EXTS
-_EXTS = (".4mc", ".4mz") + _STREAM_EXTS
+# every container extension the scan lists (format.core.CONTAINERS); the
+# ones without a footer index are read whole, one partition per file
+_EXTS = tuple(CONTAINERS)
 
 
 def _list_files(path: str) -> list[str]:
@@ -277,6 +271,9 @@ class FourMcDataSource(DataSource):
 class FourMcDataSourceReader(DataSourceReader):
     #: the format name option errors report
     source_name = "fourmc"
+    #: whether the record model reads containers without a footer index
+    #: (text lines do; protobuf records live only in 4mc/4mz blocks)
+    reads_unindexed = True
 
     def __init__(
         self, options, schema: StructType, cores: int | None = None
@@ -551,7 +548,6 @@ class FourMcDataSourceReader(DataSourceReader):
         and per block, offset bisect, then block grouping."""
         # driver-side planning: one footer read per file (S1/X6)
         from fourmc_spark.format import core
-        from fourmc_spark.format.hadoop_stream import hadoop_ext_info
         from fourmc_spark.format.reader import scan_file_info
 
         sized: list[tuple[Slice, int]] = []
@@ -575,14 +571,20 @@ class FourMcDataSourceReader(DataSourceReader):
                     )
                     if dropped_blocks is None:
                         continue  # the file summary is excluded
-            if path.endswith(_STREAM_EXTS):
+            container = core.container_for_path(path)
+            if container is not None and not container.indexed:
+                if not self.reads_unindexed:
+                    indexed = [e for e, c in CONTAINERS.items() if c.indexed]
+                    raise ValueError(
+                        f"{self.source_name} reads only {'/'.join(indexed)} "
+                        f"files; {path} is a {container.ext} file"
+                    )
                 # non-splittable: one slice reads the whole stream
                 fsize = os.path.getsize(path)
                 if fsize:
-                    codec = "zst" if path.endswith(".zst") else (
-                        "hadoop-" + hadoop_ext_info(path)[0]
-                    )
-                    sized.append((Slice(path, codec, 0, fsize, True), 1))
+                    sized.append((Slice(
+                        path, container.slice_codec, 0, fsize, True
+                    ), 1))
                 continue
             codec, fsize, offsets = scan_file_info(path)
             if not offsets:
@@ -1853,7 +1855,11 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fourmc sink requires a path")
-        self.codec_raw = options.get("codec", "lz4")
+        # codec: lz4 | zstd (.4mc | .4mz, the splittable scale path), zst
+        # (one standard zstd frame per task file, reference C8) or a
+        # Hadoop block-codec extension such as lz4_fast (M/R interop);
+        # format.core.container_for_codec resolves it
+        self.container = container_for_codec(options.get("codec", "lz4"))
         self.level = options.get("level", "fast")
         self.block_size = int(options.get("blocksize", 4 * 1024 * 1024))
         # maxfilebytes: roll to a new file once the current one exceeds
@@ -1971,27 +1977,8 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         import numpy as np
         import pyarrow as pa  # noqa: F811
 
-        from fourmc_spark.format.hadoop_stream import HADOOP_EXTS
-        from fourmc_spark.format.writer import (
-            FourMcWriter,
-            HadoopBlockWriter,
-            ZstWriter,
-            normalize_codec,
-        )
+        from fourmc_spark.format.writer import writer_for
 
-        # codec=zst -> standard zstd streaming format (reference C8): one
-        # frame per task file, no block index — interop output, not the
-        # splittable scale path (that's 4mz). codec=lz4_fast/... (a
-        # straight-block-codec extension name) -> Hadoop
-        # BlockCompressorStream container for M/R interop.
-        hadoop_pair = HADOOP_EXTS.get(self.codec_raw.lower())
-        if hadoop_pair is not None:
-            codec, ext = "hadoop", f".{self.codec_raw.lower()}"
-        elif self.codec_raw.lower() == "zst":
-            codec, ext = "zst", ".zst"
-        else:
-            codec = normalize_codec(self.codec_raw)
-            ext = ".4mc" if codec == "lz4" else ".4mz"
         staging = os.path.join(self.path, "_temporary")
         os.makedirs(staging, exist_ok=True)
         task_id = uuid.uuid4().hex
@@ -2012,22 +1999,13 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         def _writer_for(reldir: str):
             if reldir in streams:
                 return streams[reldir][1]
-            fname = f"part-{task_id}-{len(files)}{ext}"
+            fname = f"part-{task_id}-{len(files)}{self.container.ext}"
             staged = os.path.join(staging, f"{len(files)}-{fname}")
             final = os.path.join(self.path, reldir, fname) if reldir else os.path.join(
                 self.path, fname
             )
             f = open(staged, "wb")
-            if codec == "hadoop":
-                w = HadoopBlockWriter(
-                    f, codec=hadoop_pair[0], level=hadoop_pair[1],
-                )
-            elif codec == "zst":
-                w = ZstWriter(f, level=self.level)
-            else:
-                w = FourMcWriter(
-                    f, codec=codec, level=self.level, block_size=self.block_size
-                )
+            w = writer_for(self.container, f, self.level, self.block_size)
             acc = (
                 # per column: the zone_merge of every batch so far; bloom:
                 # packed bitmap per bloomcolumns field

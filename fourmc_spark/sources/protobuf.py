@@ -86,6 +86,7 @@ class FourMcProtoReader(FourMcDataSourceReader):
     record loop differs: EB sync-marker resync instead of newline."""
 
     source_name = "fourmcproto"
+    reads_unindexed = False
 
     def __init__(
         self, options, schema: StructType, cores: int | None = None
@@ -204,12 +205,12 @@ class FourMcProtoWriter(DataSourceArrowWriter):
         self.existing = _snapshot(self.path) if overwrite else []
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
+        from fourmc_spark.format.core import extension_for_codec
         from fourmc_spark.format.protobuf import encode_eb_block, encode_message
         from fourmc_spark.format.writer import FourMcWriter, normalize_codec
 
         codec = normalize_codec(self.codec_raw)
-        ext = ".4mc" if codec == "lz4" else ".4mz"
-        fname = f"part-{uuid.uuid4().hex}{ext}"
+        fname = f"part-{uuid.uuid4().hex}{extension_for_codec(codec)}"
         staging = os.path.join(self.path, "_temporary")
         os.makedirs(staging, exist_ok=True)
         staged = os.path.join(staging, fname)

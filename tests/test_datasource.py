@@ -248,6 +248,68 @@ def test_skipfirstline_stream_codecs(tmp_path, ext):
     assert _read_in_process(p, skipfirstline="true") == whole[1:]
 
 
+def _container_ids():
+    from fourmc_spark.format.core import CONTAINERS
+
+    return sorted(CONTAINERS)
+
+
+@pytest.mark.parametrize("ext", _container_ids())
+def test_every_container_through_sink_and_reader(tmp_path, ext):
+    """Each entry of the container table reaches every consumer: the sink
+    task writes and commits the file under the entry's ``codec`` name,
+    the listing and the planner pick it up, ``read()`` returns exactly
+    the written lines and offsets with skipfirstline off and on, and
+    ``layout_stats`` counts its blocks."""
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from fourmc_spark.format.core import container_for_path
+    from fourmc_spark.format.reader import iter_lines_for_split, scan_file_info
+    from fourmc_spark.operators.maintenance import layout_stats
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSource, FourMcDataSourceWriter, _list_files,
+    )
+
+    lines = ["hdr,a"] + [f"row{i}" for i in range(20000)]
+    out = str(tmp_path / "t")
+    w = FourMcDataSourceWriter(
+        {"path": out, "codec": ext[1:].upper(), "blocksize": "65536"},
+        StructType([StructField("value", StringType())]), True,
+    )
+    batch = pa.RecordBatch.from_arrays([pa.array(lines)], ["value"])
+    w.commit([w.write(iter([batch]))])
+
+    (path,) = _list_files(out)
+    assert path.endswith(ext)
+    container = container_for_path(path)
+    data = ("\n".join(lines) + "\n").encode()
+    if container.indexed:
+        _, size, offsets = scan_file_info(path)
+        assert len(offsets) > 1
+        with open(path, "rb") as f:
+            want = [(o, v.decode()) for o, v in
+                    iter_lines_for_split(f, container.codec, 0, size)]
+        n_blocks = len(offsets)
+    else:
+        starts = [0]
+        for line in lines[:-1]:
+            starts.append(starts[-1] + len(line) + 1)
+        want = list(zip(starts, lines))
+        n_blocks = 1
+    assert [v for _, v in want] == lines and len(data) > 65536
+
+    opts = {"maxpartitionbytes": "1"}  # one slice per 4mc/4mz block
+    ds = FourMcDataSource({"path": out, **opts})
+    slices = list(iter_slices(ds.reader(ds.schema()).partitions()))
+    assert {s.codec for s in slices} == {container.slice_codec}
+    assert len(slices) == n_blocks
+    assert _read_in_process(out, **opts) == want
+    assert _read_in_process(out, skipfirstline="true", **opts) == want[1:]
+    stats = layout_stats(out)
+    assert (stats["n_files"], stats["n_blocks"]) == (1, n_blocks)
+
+
 def test_glob_paths(spark, tmp_path):
     """Hadoop-style glob paths expand at planning (S2 parity)."""
     from fourmc_spark.format.writer import write_file

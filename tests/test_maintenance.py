@@ -59,6 +59,26 @@ def test_compact_small_files(spark, tmp_path):
                 assert p.returncode == 0, p.stderr.decode()
 
 
+def test_layout_stats_counts_unindexed_containers(tmp_path):
+    """A .zst or Hadoop block-codec file has no footer index: layout_stats
+    counts it as one block (one planned slice) instead of reading a
+    footer it does not have."""
+    from fourmc_spark.format import write_file, write_zst_file
+    from fourmc_spark.format.hadoop_stream import write_hadoop_file
+    from fourmc_spark.operators.maintenance import layout_stats
+
+    d = tmp_path / "ds"
+    d.mkdir()
+    data = b"line\n" * 60_000
+    write_file(str(d / "a.4mc"), data, codec="lz4", block_size=65536)
+    write_hadoop_file(str(d / "b.lz4_fast"), data, "lz4", block_size=65536)
+    write_hadoop_file(str(d / "c.zstd_uc"), data, "zstd", "ultra")
+    write_zst_file(str(d / "d.zst"), data)
+    s = layout_stats(str(d))
+    # ceil(300000/65536) = 5 footer-indexed blocks, plus one per stream
+    assert (s["n_files"], s["n_blocks"]) == (4, 8)
+
+
 def test_layout_stats_counts_blocks(spark, tmp_path):
     from fourmc_spark.format import write_file
     from fourmc_spark.operators.maintenance import layout_stats
@@ -118,6 +138,25 @@ from fourmc_spark.operators.maintenance import (
     compact_protobuf,
     plan_compaction,
 )
+
+
+def test_raw_copy_applies_the_block_size_caps(tmp_path):
+    """The raw block copy checks block headers by the reader's rule: a
+    header claiming more than 4 MiB is a BadBlockError naming the input,
+    not a block copied into the compacted file."""
+    from fourmc_spark.format import core
+    from fourmc_spark.operators.maintenance import compact_group
+
+    d = str(tmp_path / "in")
+    os.makedirs(d)
+    src = os.path.join(d, "a.4mc")
+    write_file(src, b"row\n" * 2000, codec="lz4", block_size=1000)
+    with open(src, "r+b") as f:  # the second block's uncompressed size
+        f.seek(scan_file_info(src)[2][1])
+        f.write((core.MAX_BLOCK_SIZE + 1).to_bytes(4, "big"))
+    (plan,) = plan_compaction(d)
+    with pytest.raises(core.BadBlockError, match="a.4mc: .*exceeds 4 MiB"):
+        compact_group(plan, str(tmp_path / "out.4mc"))
 
 
 def _mk_text_tree(d: str, n: int = 12, codec: str = "zstd") -> list[bytes]:

@@ -295,6 +295,27 @@ def test_marker_straddles_container_blocks(tmp_path):
     assert [g["userId"] for g in got] == [u["userId"] for u in users]
 
 
+@pytest.mark.parametrize("ext", ["zst", "lz4_fast"])
+def test_proto_planning_rejects_unindexed_containers(tmp_path, ext):
+    """EB records live only in footer-indexed files: a .zst or Hadoop
+    container in the tree fails planning with a ValueError naming it,
+    instead of being planned and then decoded as 4mc blocks."""
+    from fourmc_spark.format.hadoop_stream import write_hadoop_file
+    from fourmc_spark.format.writer import write_zst_file
+
+    path, _ = _proto_file(tmp_path, n_users=200)
+    with open(path, "rb") as f:
+        blob = f.read()
+    other = str(tmp_path / f"users.{ext}")
+    if ext == "zst":
+        write_zst_file(other, blob)
+    else:
+        write_hadoop_file(other, blob, "lz4")
+    with pytest.raises(ValueError, match=r"reads only \.4mc/\.4mz") as e:
+        _proto_planned(str(tmp_path), [])
+    assert other in str(e.value)
+
+
 # ---------------------------------------------------------------------------
 # Proto zone maps (r10): analyze_stats_proto + value pushdown on the scan
 # ---------------------------------------------------------------------------

@@ -66,9 +66,18 @@ def _shared_pool(workers: int):
 
 
 def normalize_codec(codec: str) -> str:
-    """lz4 | zstd: the codec of the container *codec* names
-    (:func:`core.container_for_codec`)."""
-    return core.container_for_codec(codec).codec
+    """lz4 | zstd: the codec of the footer-indexed container *codec*
+    names (:func:`core.container_for_codec`). A container without a
+    footer index (.zst, the Hadoop block codecs) is a ValueError: the
+    callers write 4mc/4mz framing, and would silently write it under a
+    name that promises another container."""
+    c = core.container_for_codec(codec)
+    if not c.indexed:
+        raise ValueError(
+            f"codec {codec!r} names the {c.ext} container, which has no "
+            "footer index; expected lz4|zstd|4mc|4mz"
+        )
+    return c.codec
 
 
 def normalize_level(level: str | int) -> str:

@@ -62,7 +62,7 @@ from fourmc_spark.format import core
 from fourmc_spark.format.reader import iter_block_payloads, scan_file_info
 from fourmc_spark.format.writer import FourMcWriter, normalize_codec
 from fourmc_spark.sources.datasource import (
-    _NAN_SPAN, STATS_SUFFIX, _bloom_block_entries, _list_files,
+    STATS_SUFFIX, _bloom_block_entries, _list_files,
     _load_zone_sidecar, _zone_comparable, bloom_family, land, retire,
     seal_bloom_blocks_header, seal_bloom_spec, seal_sidecar, zone_merge,
 )
@@ -278,10 +278,18 @@ def plan_compaction(
     files stay roughly time-clustered — which is what downstream range
     filters prune on. Only footer-indexed containers (.4mc/.4mz) are
     planned; other extensions are left to the caller to report."""
+    ok, _skipped = _split_compactable(in_dir)
+    return _bin_compactable(in_dir, ok, target_bytes)
+
+
+def _bin_compactable(
+    in_dir: str, ok: list[str], target_bytes: int
+) -> list[CompactionPlan]:
+    """:func:`plan_compaction` over the footer-indexed files *ok* of
+    *in_dir*, already listed by :func:`_split_compactable`."""
     in_real = os.path.realpath(in_dir)
     bins: list[CompactionPlan] = []
     cur: dict[tuple[str, str], list] = {}  # (reldir, codec) -> [paths, bytes]
-    ok, _skipped = _split_compactable(in_dir)
     for path in ok:
         reldir = os.path.relpath(os.path.dirname(os.path.realpath(path)),
                                  in_real)
@@ -628,10 +636,10 @@ def compact_blocks(
             "in_dir (in-place compaction under a live stream would "
             "violate the orderednames contract)"
         )
-    plans = plan_compaction(in_dir, target_bytes)
-    _ok, skipped = _split_compactable(in_dir)
-    os.makedirs(out_dir, exist_ok=True)
     target_codec = normalize_codec(codec) if codec else None
+    ok, skipped = _split_compactable(in_dir)  # the tree's one listing
+    plans = _bin_compactable(in_dir, ok, target_bytes)
+    os.makedirs(out_dir, exist_ok=True)
     jobs = []
     for i, p in enumerate(plans):
         out_codec = target_codec or p.codec
@@ -718,10 +726,12 @@ def analyze_stats_proto(
     EB record's sync marker starts — exactly the ownership rule the
     proto split reader enforces (format/protobuf.py:
     iter_eb_records_for_split), so dropping a block removes precisely
-    the records its stats speak for. bool/bytes/repeated fields are
-    skipped (no shared ordering with the JSON sidecar primitives);
-    float/double spans containing NaN record max=NaN (Spark orders NaN
-    above every double — such spans never prune, conservatively).
+    the records its stats speak for. Each block's decoded values become
+    one typed Arrow array per column, whose zone comes from the
+    ``zone_spans`` kernel the sink and :func:`analyze_stats` use (so a
+    NaN makes max=NaN: Spark orders NaN above every double, and such
+    spans never prune a lower bound). bool/bytes/repeated fields are
+    skipped (no shared ordering with the JSON sidecar primitives).
 
     100 TB shape: files at or under ``split_bytes`` are one task each,
     footer read EXECUTOR-side (the driver pays no per-file pread — a
@@ -733,11 +743,10 @@ def analyze_stats_proto(
     reduceByKey (block keys are disjoint across ranges by the
     ownership rule) and the reducer task writes the sidecar; the
     driver sees one summary row per file."""
-    import math
-
     from fourmc_spark.format.protobuf import (
-        USER_SCHEMA, bloom_eligible_fields, zone_eligible_fields,
+        USER_SCHEMA, bloom_eligible_fields, spark_struct, zone_eligible_fields,
     )
+    from fourmc_spark.sources.datasource import _arrow_schema_for
 
     schema = tuple(fields) if fields else USER_SCHEMA
     eligible = zone_eligible_fields(schema)
@@ -746,9 +755,6 @@ def analyze_stats_proto(
         raise ValueError(
             "analyze_stats_proto: no scalar orderable fields to analyze"
         )
-    floats = {
-        f.name for f in schema if f.type in ("double", "float")
-    }
     unknown = [c for c in (columns or ()) if c not in eligible]
     if unknown:
         raise ValueError(
@@ -786,9 +792,15 @@ def analyze_stats_proto(
         return {"files": 0, "rows": 0, "columns": cols,
                 "block_stats": blocks}
     want_blocks = blocks
+    # the decoded columns' declared types: Spark's for the kernel, the
+    # Arrow twin for the per-block arrays
+    decoded = list(dict.fromkeys([*cols, *bl_cols]))
+    dst = spark_struct(tuple(f for f in schema if f.name in decoded))
+    spark_types = {f.name: f.dataType for f in dst}
+    arrow_types = {f.name: f.type for f in _arrow_schema_for(dst)[0]}
 
     def _range_stats(task) -> tuple:
-        """(file, (per-block stats, file bloom bitmaps, per-block bloom
+        """(file, (per-block zones, file bloom bitmaps, per-block bloom
         bitmaps)) for one block-aligned range — per-block ownership is
         the marker-start block, so ranges never share a block key; file
         bitmaps OR exactly across ranges."""
@@ -798,7 +810,9 @@ def analyze_stats_proto(
         import pyarrow as pa
 
         from fourmc_spark.format.protobuf import iter_eb_records_for_split
-        from fourmc_spark.sources.datasource import bloom_hashes, bloom_set_bits
+        from fourmc_spark.sources.datasource import (
+            bloom_hashes, bloom_set_bits, zone_spans,
+        )
 
         if codec is None:  # whole file: resolve the footer executor-side
             from fourmc_spark.format.reader import scan_file_info
@@ -810,11 +824,18 @@ def analyze_stats_proto(
         if start >= end:
             return fpath, (per_block, bl, bl_blocks)
 
-        def _hash_block(owner: int, by_col: dict) -> None:
-            # one block's non-null str(value)s: hashed once, set into the
-            # file bitmap and the block bitmap from the same hashes
-            for c, vals in by_col.items():
-                h = bloom_hashes(pa.array(vals, pa.string()))
+        def _fold_block(owner: int, vals: dict) -> None:
+            # one block's decoded values: one typed array per column, its
+            # zone from the zone_spans kernel, its bloom values hashed
+            # once into the file bitmap and the block bitmap
+            arrs = {c: pa.array(v, arrow_types[c]) for c, v in vals.items()}
+            per_block[owner] = {
+                "rows": len(vals[cols[0]]),
+                "c": {c: zone_merge(zone_spans(arrs[c], spark_types[c]))
+                      for c in cols},
+            }
+            for c in bl_cols:
+                h = bloom_hashes(arrs[c])
                 bloom_set_bits(bl[c], h, bloom_k, bloom_bits)
                 if bloom_block_bits is not None:
                     bm = bl_blocks.setdefault(owner, {}).setdefault(
@@ -822,41 +843,19 @@ def analyze_stats_proto(
                     )
                     bloom_set_bits(bm, h, bk, bloom_block_bits)
 
-        cur, texts = None, {}  # the block being decoded, its bloom values
+        cur, vals = None, {}  # the block being decoded, its values
         with open(fpath, "rb") as f:
             for owner, rec in iter_eb_records_for_split(
                 f, codec, start, end, schema
             ):
                 if owner != cur:
-                    _hash_block(cur, texts)
-                    cur, texts = owner, {c: [] for c in bl_cols}
-                b = per_block.get(owner)
-                if b is None:
-                    b = per_block[owner] = {
-                        "rows": 0,
-                        "c": {c: [None, None, 0, False] for c in cols},
-                    }
-                b["rows"] += 1
-                for c in cols:
-                    v = rec.get(c)
-                    st = b["c"][c]
-                    if v is None:
-                        st[2] += 1
-                        continue
-                    if c in floats:
-                        v = float(v)
-                        if math.isnan(v):
-                            st[3] = True
-                            continue
-                    if st[0] is None or v < st[0]:
-                        st[0] = v
-                    if st[1] is None or v > st[1]:
-                        st[1] = v
-                for c in bl_cols:
-                    v = rec.get(c)
-                    if v is not None:
-                        texts[c].append(str(v))
-        _hash_block(cur, texts)
+                    if cur is not None:
+                        _fold_block(cur, vals)
+                    cur, vals = owner, {c: [] for c in decoded}
+                for c in decoded:
+                    vals[c].append(rec.get(c))
+        if cur is not None:
+            _fold_block(cur, vals)
         return fpath, (per_block, bl, bl_blocks)
 
     def _merge_pb(a: tuple, b: tuple) -> tuple:
@@ -868,12 +867,7 @@ def analyze_stats_proto(
 
     def _finalize(kv) -> dict:
         fpath, (per_block, bl, bl_blocks) = kv
-        # per block: [min, max, nulls, NaN seen] -> its zone
-        zones = {
-            o: {c: zone_merge([st[:3]] + ([_NAN_SPAN] if st[3] else []))
-                for c, st in b["c"].items()}
-            for o, b in per_block.items()
-        }
+        zones = {o: b["c"] for o, b in per_block.items()}
         rows = sum(b["rows"] for b in per_block.values())
         fields = {
             "rows": rows,
@@ -946,25 +940,6 @@ def analyze_stats_proto(
     }
 
 
-def _json_stat_value(v):
-    import datetime
-    import decimal
-
-    import pandas as pd
-
-    if v is None:
-        return None
-    if not isinstance(v, (str, bytes, list, dict)) and pd.isna(v):
-        return None  # NaN/NaT from an all-null span
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat(sep=" ") if hasattr(v, "hour") else v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if type(v).__module__ == "numpy":
-        return v.item()
-    return v
-
-
 def _analyze_src(
     spark: SparkSession, path: str, schema_ddl: str, record_format: str
 ) -> DataFrame:
@@ -1030,15 +1005,21 @@ def analyze_stats(
     Safety: sidecars record the data file's byte size; the reader
     ignores a sidecar whose size mismatches (stale after rewrite), and
     Spark re-applies every filter post-scan, so pruning can only remove
-    provably-empty work. 100 TB shape: stats aggregate distributed
-    (one shuffle keyed by (file, block)); sidecars are WRITTEN
-    EXECUTOR-SIDE (applyInPandas per file), so the driver materializes
-    only one summary row per file — the O(files) it already pays to
-    plan splits.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
+    provably-empty work. The zone map comes from the ``zone_spans``
+    kernel the sink uses; a TimestampType column reaches it as
+    session-tagged instants whose int64 cast is the epoch micros, so the
+    values are those of Spark's own parse in any session timezone (for
+    zone-less timestamp text the ``jsonschema`` scan's UTC reading
+    differs; see the sink's ``statsschema`` note).
 
+    100 TB shape: one distributed scan and ONE exchange, shared with
+    :func:`analyze_bloom` (:func:`_analyze_pass`). Each scan partition
+    folds its rows into per-(file, block) zone spans through the kernel
+    and ships them as JSON text, one row per (file, block); sidecars
+    are WRITTEN EXECUTOR-SIDE (applyInPandas per file), so the driver
+    materializes only one summary row per file — the O(files) it
+    already pays to plan splits.
+    """
     from fourmc_spark.sources.datasource import _parse_flat_ddl
 
     st = _parse_flat_ddl(schema_ddl)  # same surface the typed scan takes
@@ -1048,106 +1029,8 @@ def analyze_stats(
             "analyze_stats: '_file' is the scan's provenance column and "
             "cannot also be a payload column"
         )
-    types = {f.name: f.dataType for f in st.fields}
-    # integral min/max travel as STRINGS through the pandas boundary:
-    # Arrow->pandas turns int64-with-nulls into float64, which silently
-    # rounds values above 2^53 — a zone map rounded DOWN can wrongly
-    # prune a file holding the true max (conservativeness violation)
-    integral = {c for c in cols if bloom_family(types.get(c)) == "int"}
-    # instant-typed (TimestampType) stats are recorded as EPOCH MICROS
-    # via unix_micros — computed JVM-side from the internal UTC instant,
-    # so the sidecar value is session-timezone-free and directly
-    # comparable against the micros the pushdown canonicalizes aware
-    # filter values to. (TimestampNTZ and date have no instant — their
-    # wall-clock ISO strings through the pandas boundary are already
-    # unambiguous, and _zone_pair parses them before comparing.)
-    ts_cols = {
-        c for c in cols if isinstance(types.get(c), T.TimestampType)
-    }
-    # float/double min/max ALSO travel as strings: Spark's SQL ordering
-    # puts NaN above every double (x >= 0 MATCHES a NaN row), but a NaN
-    # min/max through the pandas boundary is indistinguishable from
-    # null — which the reader treats as "no values: prune everything".
-    # The string "NaN" survives the boundary and decodes to float nan,
-    # whose comparisons are all false — such spans never prune.
-    floats = {
-        c for c in cols
-        if isinstance(types.get(c), (T.DoubleType, T.FloatType))
-    }
-    # the payload struct stays NESTED: expanding _r.* would collide
-    # with the scan's _file/offset pseudo-columns when the (JSON) DDL
-    # legally declares fields with those names
-    src = _analyze_src(spark, path, schema_ddl, record_format)
-    aggs = [F.count(F.lit(1)).cast("long").alias("__rows")]
-    for i, c in enumerate(cols):
-        fc = F.col("_r").getField(c)
-        mn, mx = F.min(fc), F.max(fc)
-        if c in ts_cols:
-            mn, mx = F.unix_micros(mn), F.unix_micros(mx)
-        if c in floats:
-            # widen float32 BEFORE the string cast: CAST(0.1f AS STRING)
-            # is the float32 shortest repr "0.1", which reparses to a
-            # double just BELOW the widened float value 0.100000001...
-            # — a bound sitting under the true max wrongly prunes.
-            # Doubles round-trip through their own shortest repr.
-            mn, mx = mn.cast("double"), mx.cast("double")
-        if c in integral or c in ts_cols or c in floats:
-            mn, mx = mn.cast("string"), mx.cast("string")
-        aggs.append(mn.alias(f"__min_{i}"))
-        aggs.append(mx.alias(f"__max_{i}"))
-        aggs.append(
-            F.sum(F.when(fc.isNull(), 1).otherwise(0))
-            .cast("long").alias(f"__nulls_{i}")
-        )
-    per_block = src.groupBy("_file", "offset").agg(*aggs)
-    want_blocks = blocks
-
-    def _decode(c: str, i: int, v):
-        v = _json_stat_value(v)
-        if v is not None:
-            if c in integral or c in ts_cols:
-                v = int(v)
-            elif c in floats:
-                v = float(v)  # parses "NaN"/"Infinity"/"-Infinity" too
-        return v
-
-    def _write_sidecar(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        fpath = key[0]
-        pdf = pdf.sort_values("offset")
-        spans = {
-            c: [
-                (_decode(c, i, mn), _decode(c, i, mx), int(n))
-                for mn, mx, n in zip(
-                    pdf[f"__min_{i}"], pdf[f"__max_{i}"], pdf[f"__nulls_{i}"]
-                )
-            ]
-            for i, c in enumerate(cols)
-        }
-        fields = {
-            "rows": int(pdf["__rows"].sum()),
-            "columns": {c: zone_merge(spans[c]) for c in cols},
-        }
-        # bloom tiers sealed by analyze_bloom for the SAME bytes stay
-        # valid — re-ANALYZE of min/max must not drop either of them
-        old = _load_zone_sidecar(fpath) or {}
-        for tier in ("bloom", "bloom_blocks"):
-            if isinstance(old.get(tier), dict):
-                fields[tier] = old[tier]
-        if want_blocks:
-            fields["blocks"] = [
-                {"o": int(o), "c": {c: list(spans[c][j]) for c in cols}}
-                for j, o in enumerate(pdf["offset"])
-            ]
-        seal_sidecar(fpath, fields)
-        return pd.DataFrame(
-            {"file": [fpath], "rows": [fields["rows"]],
-             "n_blocks": [len(pdf)]}
-        )
-
-    summaries = (
-        per_block.groupBy("_file")
-        .applyInPandas(_write_sidecar, "file string, rows long, n_blocks long")
-        .collect()
+    summaries = _analyze_pass(
+        spark, path, schema_ddl, record_format, zones=cols, blocks=blocks
     )
     return {
         "files": len(summaries),
@@ -1155,6 +1038,234 @@ def analyze_stats(
         "columns": cols,
         "block_stats": blocks,
     }
+
+
+def _analyze_pass(
+    spark: SparkSession,
+    path: str,
+    schema_ddl: str,
+    record_format: str,
+    zones=(),
+    blocks: bool = False,
+    blooms=(),
+    bits: int = 0,
+    k: int = 0,
+    block_bits: int | None = None,
+    bk: int = 0,
+) -> list:
+    """The one pass behind :func:`analyze_stats` (*zones*, the block tier
+    with *blocks*) and :func:`analyze_bloom` (*blooms*): a ``mapInArrow``
+    partial over :func:`_analyze_src`, one exchange, and one sealer per
+    file (``groupBy("_file").applyInPandas``). Returns one row per
+    sealed file: ``file``, ``rows`` (0 unless *zones*), ``set_bits``
+    (file-tier bloom bits set).
+
+    The partial folds each scan partition's rows by (file, block): zone
+    columns arrive typed and go through ``zone_spans`` (the sink's
+    kernel), then cross the exchange as one JSON text per (file, block)
+    — sidecar-form values, so no typed min/max passes through pandas.
+    Bloom columns arrive as their JVM ``CAST AS STRING`` (the text the
+    probe's ``str()`` gives); each run's values are hashed once for
+    both tiers (``bloom_hashes`` + ``bloom_set_bits``) into per-(file,
+    column, block) bitmaps — block -1 is the file tier — that ship in
+    whichever encoding is smaller: the DENSE ``n_bits``/8-byte bitmap,
+    or the SPARSE sorted uint32 list of its set positions. Every (file,
+    block) a partition sees gets its bitmaps even when its bloom
+    columns are all NULL there, so that block still seals (all-zero:
+    equality never matches NULL, so every probe provably misses).
+
+    The sealer keeps the tiers the call does not build from the file's
+    valid sidecar: a zone build keeps ``bloom``/``bloom_blocks`` and
+    rewrites the rest; a bloom-only build amends a copy of the whole
+    sidecar (else a bare envelope)."""
+    import json
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from fourmc_spark.sources.datasource import (
+        _parse_flat_ddl, bloom_hashes, bloom_set_bits, zone_spans,
+    )
+
+    # the payload struct stays NESTED until here: expanding _r.* would
+    # collide with the scan's _file/offset pseudo-columns when the (JSON)
+    # DDL legally declares fields with those names
+    src = _analyze_src(spark, path, schema_ddl, record_format).select(
+        "_file", "offset",
+        *(F.col("_r").getField(c).alias(f"z{j}")
+          for j, c in enumerate(zones)),
+        *(F.col("_r").getField(c).cast("string").alias(f"b{j}")
+          for j, c in enumerate(blooms)),
+    )
+    types = {f.name: f.dataType for f in _parse_flat_ddl(schema_ddl).fields}
+    fams = {c: bloom_family(types[c]) for c in blooms}
+    by_block = bool(zones) or block_bits is not None
+
+    def _partial(batches: "Iterator[pa.RecordBatch]"):
+        # per-byte popcount table (built once per task, 256 entries):
+        # lets the flush below count set bits without unpacking bitmaps
+        _POPCNT8 = (
+            np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
+            .sum(axis=1)
+            .astype(np.uint16)
+        )
+        acc: dict[tuple, "np.ndarray"] = {}  # (file, col, block) -> bitmap
+        zacc: dict[tuple, list] = {}  # (file, block) -> [rows, {col: zone}]
+
+        def _set(key: tuple, h: "np.ndarray", n_k: int, n_bits: int) -> None:
+            bm = acc.get(key)
+            if bm is None:
+                bm = acc[key] = np.zeros(n_bits // 8, dtype=np.uint8)
+            bloom_set_bits(bm, h, n_k, n_bits)
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            # runs of one file (and, per block, one block): each run's
+            # values go through the kernels once, for every tier
+            fenc = rb.column(0).dictionary_encode()
+            offs = rb.column(1).to_numpy()
+            keys = [fenc.indices.to_numpy()]
+            if by_block:
+                keys.append(offs)
+            change = np.zeros(rb.num_rows, dtype=bool)
+            change[0] = True
+            for a in keys:
+                change[1:] |= a[1:] != a[:-1]
+            bounds = np.append(np.flatnonzero(change), rb.num_rows)
+            for s0, s1 in zip(bounds[:-1], bounds[1:]):
+                fp = fenc.dictionary[keys[0][s0]].as_py()
+                off = int(offs[s0])
+                if zones:
+                    z = zacc.setdefault(
+                        (fp, off), [0, {c: zone_merge(()) for c in zones}]
+                    )
+                    z[0] += int(s1 - s0)
+                    for j, c in enumerate(zones):
+                        run = rb.column(2 + j).slice(s0, s1 - s0)
+                        z[1][c] = zone_merge([
+                            tuple(z[1][c].values()),
+                            *zone_spans(run, types[c]),
+                        ])
+                for j, c in enumerate(blooms):
+                    run = rb.column(2 + len(zones) + j).slice(s0, s1 - s0)
+                    h = bloom_hashes(run)
+                    _set((fp, c, -1), h, k, bits)
+                    if block_bits is not None:
+                        _set((fp, c, off), h, bk, block_bits)
+        # one row per (file, block) zone map and per (file, column,
+        # block) bitmap, the other kind's fields null
+        out = [
+            (fp, off, n,
+             json.dumps({c: list(z.values()) for c, z in zs.items()}),
+             None, None, None)
+            for (fp, off), (n, zs) in zacc.items()
+        ]
+        for (fp, cname, blk), bm in acc.items():
+            # popcount FIRST (256-entry table) to pick the encoding:
+            # unpackbits materializes 8x the bitmap (a transient ~128 MB
+            # at the max 2^27-bit geometry) and is only needed when the
+            # sparse branch actually wins (ADVICE r10)
+            if 4 * int(_POPCNT8[bm].sum()) < len(bm):
+                set_pos = np.flatnonzero(
+                    np.unpackbits(bm, bitorder="little")
+                )
+                out.append((fp, blk, 0, None, cname,
+                            set_pos.astype("<u4").tobytes(), False))
+            else:
+                out.append((fp, blk, 0, None, cname, bm.tobytes(), True))
+        cols_out = list(zip(*out)) or [()] * 7
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(v, t) for v, t in zip(cols_out, (
+                pa.string(), pa.int64(), pa.int64(), pa.string(),
+                pa.string(), pa.binary(), pa.bool_(),
+            ))],
+            names=["_file", "block", "rows", "zone", "col_name", "bm",
+                   "dense"],
+        )
+
+    def _seal(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
+        fpath = key[0]
+        # a copy: the loader's dict is its cache entry
+        old = dict(_load_zone_sidecar(fpath) or {})
+        rows = set_bits = 0
+        fields = old
+        if zones:
+            zr = pdf[pdf["zone"].notna()]
+            parts: dict[int, list] = {}  # block offset -> its zone rows
+            for off, zj in zip(zr["block"], zr["zone"]):
+                parts.setdefault(int(off), []).append(json.loads(zj))
+            zmap = {  # block offset -> {col: [min, max, nulls]}
+                o: {c: list(zone_merge(p[c] for p in ps).values())
+                    for c in zones}
+                for o, ps in parts.items()
+            }
+            rows = int(zr["rows"].sum())
+            fields = {"rows": rows, "columns": {
+                c: zone_merge(z[c] for z in zmap.values()) for c in zones
+            }}
+            # bloom tiers sealed by analyze_bloom for the SAME bytes stay
+            # valid — re-ANALYZE of min/max must not drop either of them
+            for tier in ("bloom", "bloom_blocks"):
+                if isinstance(old.get(tier), dict):
+                    fields[tier] = old[tier]
+            if blocks:
+                fields["blocks"] = [
+                    {"o": o, "c": zmap[o]} for o in sorted(zmap)
+                ]
+        if blooms:
+            br = pdf[pdf["zone"].isna()]
+
+            def _merge(sub: "pd.DataFrame", n_bits: int) -> "np.ndarray":
+                bm = np.zeros(n_bits // 8, dtype=np.uint8)
+                for part, is_dense in zip(sub["bm"], sub["dense"]):
+                    if is_dense:
+                        bm |= np.frombuffer(part, dtype=np.uint8)
+                    else:
+                        p = np.frombuffer(part, dtype="<u4").astype(np.int64)
+                        _or_bit_positions(bm, p)
+                return bm
+
+            prev = fields.get("bloom")
+            specs = dict(prev) if isinstance(prev, dict) else {}
+            ftier = br[br["block"] == -1]
+            for c in blooms:
+                bm = _merge(ftier[ftier["col_name"] == c], bits)
+                specs[c] = seal_bloom_spec(bm.tobytes(), bits, k, fams[c])
+                set_bits += int(np.unpackbits(bm).sum())
+            fields["bloom"] = specs
+            if block_bits is not None:
+                # ONE grouped pass over the block-tier rows (a per-offset
+                # boolean filter would rescan the frame O(blocks) times —
+                # quadratic exactly when blocks are many, the tier's
+                # target shape)
+                grouped: dict[int, dict] = {}
+                for (off, cname), sub in br[br["block"] != -1].groupby(
+                    ["block", "col_name"], sort=False
+                ):
+                    grouped.setdefault(int(off), {})[cname] = _merge(
+                        sub, block_bits
+                    )
+                fields["bloom_blocks"] = seal_bloom_blocks_header(
+                    block_bits, bk, fams,
+                    _bloom_block_entries(grouped, blooms, block_bits),
+                )
+        seal_sidecar(fpath, fields)
+        return pd.DataFrame(
+            {"file": [fpath], "rows": [rows], "set_bits": [set_bits]}
+        )
+
+    return (
+        src.mapInArrow(
+            _partial,
+            "_file string, block long, rows long, zone string, "
+            "col_name string, bm binary, dense boolean",
+        )
+        .groupBy("_file")
+        .applyInPandas(_seal, "file string, rows long, set_bits long")
+        .collect()
+    )
 
 
 _BLOOM_ELIGIBLE = "long/int/short/string"
@@ -1211,7 +1322,8 @@ def analyze_bloom(
     semantics on those are hazard-prone; ranges already have zone
     maps).
 
-    100 TB shape: one distributed scan and ONE exchange. Each record
+    100 TB shape: one distributed scan and ONE exchange, the same pass
+    :func:`analyze_stats` runs (:func:`_analyze_pass`). Each record
     crosses into Python once, as one row of its file, block offset and
     one text per bloom column; each scan partition folds its rows into
     per-(file, column, block) bitmaps locally (bitmaps are OR-mergeable)
@@ -1233,13 +1345,8 @@ def analyze_bloom(
     blooms by offset remap with the same seam rule as zone maps, so
     steady-state needs no re-ANALYZE.
     """
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
     from fourmc_spark.sources.datasource import (
-        _parse_flat_ddl, bloom_hashes, bloom_set_bits,
-        validate_bloom_geometry,
+        _parse_flat_ddl, validate_bloom_geometry,
     )
 
     validate_bloom_geometry(bits, k, "analyze_bloom")
@@ -1253,154 +1360,19 @@ def analyze_bloom(
     cols = list(columns)
     if not cols:
         raise ValueError("analyze_bloom: at least one column required")
-    fams = {}
     for c in cols:
         if c not in types:
             raise ValueError(f"analyze_bloom: column {c!r} not in schema")
-        fams[c] = bloom_family(types[c])
-        if fams[c] is None:
+        if bloom_family(types[c]) is None:
             raise ValueError(
                 f"analyze_bloom: column {c!r} has type {types[c].simpleString()};"
                 f" only {_BLOOM_ELIGIBLE} columns are bloom-eligible"
                 " (their CAST AS STRING matches the probe's str())"
             )
 
-    # the canonical text is cast JVM-side (CAST AS STRING, the text the
-    # probe's str() gives), so only (file, block, text per column) rows
-    # cross into Python; hashing and bit setting happen in the partial
-    texts = _analyze_src(spark, path, schema_ddl, record_format).select(
-        "_file", "offset",
-        *(F.col("_r").getField(c).cast("string").alias(f"c{j}")
-          for j, c in enumerate(cols)),
-    )
-
-    # PARTIAL BITMAP AGGREGATION before the pass's only exchange: bloom
-    # bitmaps are mergeable by bitwise OR, so each scan partition folds
-    # its rows into per-(file, column, block) bitmaps locally (block -1
-    # is the file tier, the owning block's compressed offset keys the
-    # block tier) and ships THOSE, each in whichever encoding is smaller
-    # — the DENSE ``n_bits``/8-byte bitmap, or the SPARSE sorted uint32
-    # list of its set positions. Every (file, block) the partition sees
-    # gets its entries even when its bloom columns are all NULL there,
-    # so that block still seals (all-zero: equality never matches NULL,
-    # so every probe provably misses).
-
-    def _partial(batches: "Iterator[pa.RecordBatch]"):
-        # per-byte popcount table (built once per task, 256 entries):
-        # lets the flush below count set bits without unpacking bitmaps
-        _POPCNT8 = (
-            np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
-            .sum(axis=1)
-            .astype(np.uint16)
-        )
-        acc: dict[tuple, "np.ndarray"] = {}
-
-        def _set(key: tuple, h: "np.ndarray", n_k: int, n_bits: int) -> None:
-            bm = acc.get(key)
-            if bm is None:
-                bm = acc[key] = np.zeros(n_bits // 8, dtype=np.uint8)
-            bloom_set_bits(bm, h, n_k, n_bits)
-
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            # runs of one file (and, with the block tier, one block): each
-            # value is hashed once, for both tiers
-            fenc = rb.column(0).dictionary_encode()
-            offs = rb.column(1).to_numpy()
-            keys = [fenc.indices.to_numpy()]
-            if block_bits is not None:
-                keys.append(offs)
-            change = np.zeros(rb.num_rows, dtype=bool)
-            change[0] = True
-            for a in keys:
-                change[1:] |= a[1:] != a[:-1]
-            bounds = np.append(np.flatnonzero(change), rb.num_rows)
-            for s0, s1 in zip(bounds[:-1], bounds[1:]):
-                fp = fenc.dictionary[keys[0][s0]].as_py()
-                for j, c in enumerate(cols):
-                    h = bloom_hashes(rb.column(2 + j).slice(s0, s1 - s0))
-                    _set((fp, c, -1), h, k, bits)
-                    if block_bits is not None:
-                        _set((fp, c, int(offs[s0])), h, bk, block_bits)
-        files, names, blks, bms, dense = [], [], [], [], []
-        for (fp, cname, blk), bm in acc.items():
-            # popcount FIRST (256-entry table) to pick the encoding:
-            # unpackbits materializes 8x the bitmap (a transient ~128 MB
-            # at the max 2^27-bit geometry) and is only needed when the
-            # sparse branch actually wins (ADVICE r10)
-            n_set = int(_POPCNT8[bm].sum())
-            files.append(fp)
-            names.append(cname)
-            blks.append(blk)
-            if 4 * n_set < len(bm):
-                set_pos = np.flatnonzero(
-                    np.unpackbits(bm, bitorder="little")
-                )
-                bms.append(set_pos.astype("<u4").tobytes())
-                dense.append(False)
-            else:
-                bms.append(bm.tobytes())
-                dense.append(True)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(files, pa.string()), pa.array(names, pa.string()),
-             pa.array(blks, pa.int64()), pa.array(bms, pa.binary()),
-             pa.array(dense, pa.bool_())],
-            names=["_file", "col_name", "block", "bm", "dense"],
-        )
-
-    partials = texts.mapInArrow(
-        _partial,
-        "_file string, col_name string, block long, bm binary, dense boolean",
-    )
-
-    def _amend(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        fpath = key[0]
-        # a copy: the loader's dict is its cache entry
-        meta = dict(_load_zone_sidecar(fpath) or {})
-
-        def _merge(sub: "pd.DataFrame", n_bits: int) -> "np.ndarray":
-            bm = np.zeros(n_bits // 8, dtype=np.uint8)
-            for part, is_dense in zip(sub["bm"], sub["dense"]):
-                if is_dense:
-                    bm |= np.frombuffer(part, dtype=np.uint8)
-                else:
-                    p = np.frombuffer(part, dtype="<u4").astype(np.int64)
-                    _or_bit_positions(bm, p)
-            return bm
-
-        old = meta.get("bloom")
-        blooms = dict(old) if isinstance(old, dict) else {}
-        set_bits = 0
-        ftier = pdf[pdf["block"] == -1]
-        for c in cols:
-            bm = _merge(ftier[ftier["col_name"] == c], bits)
-            blooms[c] = seal_bloom_spec(bm.tobytes(), bits, k, fams[c])
-            set_bits += int(np.unpackbits(bm).sum())
-        meta["bloom"] = blooms
-        if block_bits is not None:
-            # ONE grouped pass over the block-tier rows (a per-offset
-            # boolean filter would rescan the frame O(blocks) times —
-            # quadratic exactly when blocks are many, the tier's
-            # target shape)
-            grouped: dict[int, dict] = {}
-            for (off, cname), sub in pdf[pdf["block"] != -1].groupby(
-                ["block", "col_name"], sort=False
-            ):
-                grouped.setdefault(int(off), {})[cname] = _merge(
-                    sub, block_bits
-                )
-            meta["bloom_blocks"] = seal_bloom_blocks_header(
-                block_bits, bk, fams,
-                _bloom_block_entries(grouped, cols, block_bits),
-            )
-        seal_sidecar(fpath, meta)
-        return pd.DataFrame({"file": [fpath], "set_bits": [set_bits]})
-
-    summaries = (
-        partials.groupBy("_file")
-        .applyInPandas(_amend, "file string, set_bits long")
-        .collect()
+    summaries = _analyze_pass(
+        spark, path, schema_ddl, record_format, blooms=cols, bits=bits, k=k,
+        block_bits=block_bits, bk=bk,
     )
     return {
         "files": len(summaries),

@@ -60,6 +60,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import (
     IntegerType, LongType, ShortType, StringType, StructField, StructType,
+    TimestampType,
 )
 
 from fourmc_spark.format.core import CONTAINERS, container_for_codec
@@ -1456,6 +1457,42 @@ def zone_merge(spans) -> dict:
     }
 
 
+def zone_spans(col: "pa.Array", dtype) -> list:
+    """The zone-map kernel every builder computes min/max/nulls with: one
+    Arrow array of a column declared *dtype* -> its ``(min, max, nulls)``
+    spans for :func:`zone_merge`, values already in sidecar form. The
+    one type -> sidecar value rule: TimestampType is epoch micros from
+    the array's int64 cast (the instant, whatever timezone the array is
+    tagged with), timestamp_ntz and date are ISO text, everything else
+    is its Python value (float32 widened exactly). Arrow's min_max skips
+    NaN but Spark orders NaN above every double, so NaN is a span of
+    its own (:data:`_NAN_SPAN`). No per-value Python: one min_max, plus
+    one is_nan sum on floats and one zero-copy cast on timestamps."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spans = []
+    n = len(col) - col.null_count
+    if isinstance(dtype, TimestampType):
+        col = col.cast(pa.int64())
+    elif n and pa.types.is_floating(col.type):
+        n_nan = pc.sum(pc.is_nan(col)).as_py() or 0
+        if n_nan:
+            spans.append(_NAN_SPAN)
+            n -= n_nan
+    mn = mx = None
+    if n:
+        mm = pc.min_max(col)
+        mn, mx = (_sidecar_value(mm[e].as_py()) for e in ("min", "max"))
+    return [(mn, mx, col.null_count), *spans]
+
+
+def _sidecar_value(v):
+    if isinstance(v, _dt.datetime):
+        return v.isoformat(sep=" ")
+    return v.isoformat() if isinstance(v, _dt.date) else v
+
+
 def seal_sidecar(path: str, fields: dict) -> None:
     """The one sidecar writer: ``<path>.stats.json`` for data file *path*
     is ``{"version": 2, "size": <path's byte size>}`` followed by
@@ -1470,11 +1507,12 @@ def seal_sidecar(path: str, fields: dict) -> None:
       whose size is not the file's is stale and never read.
     * ``rows`` int: the file's row count.
     * ``columns`` ``{col: {"min", "max", "nulls"}}``: the file-tier zone
-      map, merged by :func:`zone_merge`. min/max: long/int/short and
-      double/float as JSON numbers (NaN as the token ``NaN``), timestamp
-      as epoch micros, timestamp_ntz as ``"YYYY-MM-DD HH:MM:SS[.ffffff]"``,
-      date as ``"YYYY-MM-DD"``, string as itself; both null when the
-      column holds no non-null value. ``nulls`` int, null if unknown.
+      map, from :func:`zone_spans` merged by :func:`zone_merge`.
+      min/max: long/int/short and double/float as JSON numbers (NaN as
+      the token ``NaN``), timestamp as epoch micros, timestamp_ntz as
+      ``"YYYY-MM-DD HH:MM:SS[.ffffff]"``, date as ``"YYYY-MM-DD"``,
+      string as itself; both null when the column holds no non-null
+      value. ``nulls`` int, null if unknown.
     * ``blocks`` ``[{"o": offset, "c": {col: [min, max, nulls]}}]``: the
       block-tier zone map, keyed by each block's compressed file offset
       (the scan's ``offset`` column), values as in ``columns``.
@@ -1484,7 +1522,11 @@ def seal_sidecar(path: str, fields: dict) -> None:
       over :func:`_bloom_block_entries`.
     * ``carried`` true: compaction merged the file tier from its inputs.
 
-    Which builder writes which keys:
+    Which builder writes which keys. Every builder computes its zone
+    maps with :func:`zone_spans` and merges them with :func:`zone_merge`;
+    ``analyze_stats`` and ``analyze_bloom`` are two calls into one
+    ``mapInArrow`` partial and one per-file sealer
+    (``operators/maintenance._analyze_pass``):
 
     * the sink (``statsschema``, ``bloomcolumns``): rows, columns, bloom;
     * ``analyze_stats``: rows, columns, blocks, keeping the bloom and
@@ -1886,7 +1928,8 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         self.existing = _snapshot(self.path) if overwrite else []
         # statsschema=<flat ddl>: the task computes file-tier zone maps
         # (min/max/null-count per declared column) from the NDJSON value
-        # lines WHILE writing, and seals a .stats.json sidecar next to
+        # lines WHILE writing, through the zone_spans kernel the ANALYZE
+        # zone builders also use, and seals a .stats.json sidecar next to
         # each file — fresh ingest prunes immediately, no ANALYZE lag.
         # Requires the value lines to be valid NDJSON for the declared
         # fields (the to_json(struct(...)) pipeline); Arrow-parsed per
@@ -1895,14 +1938,14 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         # TimestampType stats are epoch micros computed from the parsed
         # wall clock — exact for zone-suffixed text (to_json always
         # writes Z-suffixed UTC) under ANY session timezone, but
-        # ZONE-LESS timestamp text is assumed UTC, so under a non-UTC
-        # spark.sql.session.timeZone its sidecar micros would be offset
-        # from the instants the session reads back, and pruning could
-        # go wrong. The writer cannot see the session timezone (Python
-        # DataSource workers get options only) and Arrow's parse cannot
-        # flag zone-less text (it silently assumes UTC). For zone-less
-        # timestamp text under a non-UTC session, use analyze_stats()
-        # instead — its unix_micros aggregation is session-tz-exact.
+        # ZONE-LESS timestamp text is assumed UTC. The writer cannot see
+        # the session timezone (Python DataSource workers get options
+        # only) and Arrow's parse cannot flag zone-less text. The
+        # jsonschema scan parses the same way, so these sidecars agree
+        # with its rows; analyze_stats() instead parses with from_json
+        # under the session timezone (exact for value-mode reads), so
+        # under a non-UTC session its micros for zone-less text are
+        # offset from the jsonschema scan's rows.
         ss = options.get("statsschema")
         self.stats_schema: StructType | None = (
             _parse_flat_ddl(ss) if ss else None
@@ -1975,7 +2018,6 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> FourMcCommitMessage:
         import numpy as np
-        import pyarrow as pa  # noqa: F811
 
         from fourmc_spark.format.writer import writer_for
 
@@ -1985,10 +2027,8 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
 
         streams: dict[str, tuple] = {}  # reldir -> (fileobj, writer, staged, acc)
         files: list[tuple[str, str]] = []
-        stat_cols = (
-            [f.name for f in self.stats_schema.fields]
-            if self.stats_schema is not None else []
-        )
+        stat_types = {f.name: f.dataType for f in self.stats_schema or ()}
+        stat_cols = list(stat_types)
         if self.stats_schema is None:
             stats_parser = None
         elif self.stats_format == "csv":
@@ -2021,32 +2061,16 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
 
         def _accumulate_stats(reldir: str, values: "pa.Array") -> None:
             # file-tier zone map from the exact lines this file receives:
-            # one Arrow JSON parse per batch (C-side), typed min_max —
-            # int64 stays exact (no pandas float64 boundary)
-            import pyarrow.compute as pc
-
+            # one Arrow JSON parse per batch (C-side), then the zone_spans
+            # kernel per column, merged into the file's running zone
             acc = streams[reldir][3]
             arrays = _parse_lines(stats_parser, values)
             acc["rows"] += len(values)
             for c, col in zip(stat_cols, arrays):
                 z = acc["cols"][c]
-                spans = [(z["min"], z["max"], z["nulls"] + col.null_count)]
-                n_valid = len(col) - col.null_count
-                if pa.types.is_floating(col.type) and n_valid:
-                    # Arrow min_max SKIPS NaN (all-NaN spans return the
-                    # +inf/-inf identities), but Spark's SQL ordering
-                    # puts NaN ABOVE everything — x >= 0 matches a NaN
-                    # row — so NaN joins the merge as a span of its own
-                    n_nan = pc.sum(
-                        pc.is_nan(col), min_count=0
-                    ).as_py() or 0
-                    if n_nan:
-                        spans.append(_NAN_SPAN)
-                    n_valid -= n_nan
-                if n_valid:
-                    mm = pc.min_max(col)
-                    spans.append((mm["min"].as_py(), mm["max"].as_py(), 0))
-                acc["cols"][c] = zone_merge(spans)
+                acc["cols"][c] = zone_merge(
+                    [tuple(z.values()), *zone_spans(col, stat_types[c])]
+                )
                 if c in acc["bloom"]:
                     bloom_set_bits(acc["bloom"][c], bloom_hashes(col),
                                    self.bloom_k, self.bloom_bits)
@@ -2054,38 +2078,7 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         def _seal_sidecar(staged: str, acc) -> None:
             if acc is None:
                 return
-            import datetime
-
-            from pyspark.sql import types as T
-
-            # TimestampType stats travel as EPOCH MICROS ints — the one
-            # representation the pushdown can compare against an
-            # instant-typed filter value without knowing the session
-            # timezone (the Arrow parse normalized zone-suffixed text
-            # to the UTC wall clock, so naive-epoch arithmetic is exact)
-            ts_cols = {
-                f2.name for f2 in self.stats_schema.fields
-                if isinstance(f2.dataType, T.TimestampType)
-            }
-            _EPOCH = datetime.datetime(1970, 1, 1)
-            _US = datetime.timedelta(microseconds=1)
-
-            def _jv(c, v):
-                if isinstance(v, datetime.datetime):
-                    if c in ts_cols:
-                        return (v.replace(tzinfo=None) - _EPOCH) // _US
-                    return v.isoformat(sep=" ")
-                if isinstance(v, datetime.date):
-                    return v.isoformat()
-                return v
-
-            fields = {
-                "rows": acc["rows"],
-                "columns": {
-                    c: dict(z, min=_jv(c, z["min"]), max=_jv(c, z["max"]))
-                    for c, z in acc["cols"].items()
-                },
-            }
+            fields = {"rows": acc["rows"], "columns": acc["cols"]}
             if self.bloom_cols:
                 fields["bloom"] = {
                     c: seal_bloom_spec(

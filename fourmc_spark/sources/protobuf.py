@@ -189,7 +189,11 @@ class FourMcProtoWriter(DataSourceArrowWriter):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fourmcproto sink requires a path")
-        self.codec_raw = options.get("codec", "lz4")
+        from fourmc_spark.format.writer import normalize_codec
+
+        # resolved here, driver side: a container the EB writer cannot
+        # frame fails the job before any task writes a file
+        self.codec = normalize_codec(options.get("codec", "lz4"))
         self.level = options.get("level", "fast")
         self.class_name = options.get("classname", DEFAULT_CLASS_NAME)
         self.records_per_block = int(
@@ -207,17 +211,16 @@ class FourMcProtoWriter(DataSourceArrowWriter):
     def write(self, iterator: Iterator) -> WriterCommitMessage:
         from fourmc_spark.format.core import extension_for_codec
         from fourmc_spark.format.protobuf import encode_eb_block, encode_message
-        from fourmc_spark.format.writer import FourMcWriter, normalize_codec
+        from fourmc_spark.format.writer import FourMcWriter
 
-        codec = normalize_codec(self.codec_raw)
-        fname = f"part-{uuid.uuid4().hex}{extension_for_codec(codec)}"
+        fname = f"part-{uuid.uuid4().hex}{extension_for_codec(self.codec)}"
         staging = os.path.join(self.path, "_temporary")
         os.makedirs(staging, exist_ok=True)
         staged = os.path.join(staging, fname)
         final = os.path.join(self.path, fname)
         pending: list[bytes] = []
         with open(staged, "wb") as f, FourMcWriter(
-            f, codec=codec, level=self.level, block_size=self.block_size
+            f, codec=self.codec, level=self.level, block_size=self.block_size
         ) as w:
             for batch in iterator:
                 for row in batch.to_pylist():

@@ -1733,6 +1733,79 @@ def test_sink_and_analyze_stats_zone_maps_agree(spark, tmp_path):
                 _json.dumps(jvm[key], sort_keys=True), (p, key)
 
 
+def test_analyze_stats_exact_under_non_utc_session(spark, tmp_path):
+    """analyze_stats parses JVM-side under the session timezone and its
+    kernel takes a TimestampType's instant from the int64 cast of the
+    session-tagged Arrow array. Under America/Los_Angeles, zone-less
+    timestamp text in two files: every file- and block-tier ts min/max
+    equals unix_micros of Spark's typed rows (from_json, the parse
+    analyze_stats aggregates; a kernel that went through as_py() and
+    dropped the zone would be off by the session offset), and a ts >=
+    instant filter keeps exactly the right rows, the other file pruned.
+    (The jsonschema scan reads zone-less text as UTC, hours from the
+    session's reading; the two files lie months apart.)"""
+    import datetime as dt
+    import json as _json
+
+    from pyspark.sql.datasource import CaseInsensitiveDict, GreaterThanOrEqual
+
+    from fourmc_spark.format.writer import write_file
+    from fourmc_spark.operators.maintenance import analyze_stats
+    from fourmc_spark.sources.datasource import FourMcDataSourceReader
+
+    ddl = "ts timestamp, k bigint"
+    d = str(tmp_path / "la")
+    os.makedirs(d)
+    for name, month, ks in (("jan.4mz", 1, range(1, 7)),
+                            ("jun.4mz", 6, range(7, 11))):
+        lines = [_json.dumps({"ts": f"2024-{month:02d}-{k:02d} "
+                                    f"{k:02d}:04:05.{k:03d}", "k": k})
+                 for k in ks]
+        write_file(os.path.join(d, name), ("\n".join(lines) + "\n").encode(),
+                   codec="zstd", block_size=128)
+    tz_key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/Los_Angeles")
+    try:
+        analyze_stats(spark, d, ddl)
+        rows = (
+            spark.read.format("fourmc").option("withfilename", "true").load(d)
+            .select("_file", "offset",
+                    F.unix_micros(F.from_json("value", ddl)["ts"]).alias("us"))
+            .collect()
+        )
+        typed = (spark.read.format("fourmc").option("jsonschema", ddl)
+                 .load(d))
+        late = typed.filter(
+            F.col("ts") >= F.lit("2024-03-01 00:00:00").cast("timestamp")
+        ).collect()
+    finally:
+        spark.conf.set(tz_key, prev)
+    by_file, by_block = {}, {}
+    for r in rows:
+        by_file.setdefault(r["_file"], []).append(r["us"])
+        by_block.setdefault((r["_file"], r["offset"]), []).append(r["us"])
+    assert len(by_file) == 2 and len(by_block) > 2
+    for f, us in by_file.items():
+        meta = _json.load(open(f + ".stats.json"))
+        z = meta["columns"]["ts"]
+        assert (z["min"], z["max"], z["nulls"]) == (min(us), max(us), 0)
+        for e in meta["blocks"]:
+            bus = by_block[(f, e["o"])]
+            assert e["c"]["ts"] == [min(bus), max(bus), 0]
+    # 2024-01-01 01:04:05.001 in Los Angeles is 09:04:05.001 UTC
+    assert min(min(us) for us in by_file.values()) == 1704099845001000
+    assert sorted(r["k"] for r in late) == [7, 8, 9, 10]
+    rd = FourMcDataSourceReader(
+        CaseInsensitiveDict({"path": d, "jsonschema": ddl}),
+        typed.schema,
+    )
+    mar = dt.datetime(2024, 3, 1, 8, tzinfo=dt.timezone.utc)
+    list(rd.pushFilters([GreaterThanOrEqual(("ts",), mar)]))
+    kept = {p.path for p in iter_slices(rd.partitions()) if p.path}
+    assert {os.path.basename(p) for p in kept} == {"jun.4mz"}
+
+
 def test_zone_nan_double_never_prunes_matching_rows(spark, tmp_path):
     """Spark orders NaN ABOVE every double, so x >= k MATCHES NaN rows:
     a span containing NaN must never be pruned by a lower bound — for

@@ -128,6 +128,7 @@ def test_compact_partitioned_preserves_layout(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 import glob
+import io
 
 import pytest
 
@@ -607,3 +608,56 @@ def test_sidecar_health_report(spark, tmp_path):
     h2 = sidecar_health(d)
     assert h2["stale"] == 1 and h2["with_sidecar"] == 2
     assert h2["orphan_sidecars"] == 1
+
+
+@pytest.mark.parametrize("codec", ["zst", "lz4_fast"])
+def test_compact_blocks_rejects_unindexed_codec_before_writing(
+    spark, tmp_path, codec
+):
+    """compact_blocks writes 4mc/4mz framing only: a codec naming a
+    container without a footer index raises, naming the codec, before
+    the output tree is created, instead of silently resealing as the
+    footer-indexed container of the same codec."""
+    from fourmc_spark.format.writer import FourMcWriter
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    _mk_text_tree(src, n=2)
+    with pytest.raises(ValueError, match=rf"'{codec}'.*lz4\|zstd\|4mc\|4mz"):
+        compact_blocks(spark, src, out, codec=codec)
+    assert not os.path.exists(out)
+    with pytest.raises(ValueError, match="footer index"):
+        FourMcWriter(io.BytesIO(), codec=codec)
+
+
+def test_compact_blocks_lists_the_input_tree_once(spark, tmp_path,
+                                                   monkeypatch):
+    """compact_blocks plans its bins and reports its skipped files from
+    ONE listing of the input tree; its outputs follow plan_compaction's
+    bins, and the skipped list names the tree's non-indexed file."""
+    import fourmc_spark.operators.maintenance as M
+    from fourmc_spark.format import write_zst_file
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    _mk_text_tree(src, n=5)
+    write_zst_file(os.path.join(src, "z.zst"), b"a\nb\n")
+    want_plans = plan_compaction(src, 450)
+    calls = []
+
+    def counting(path):
+        calls.append(path)
+        return real(path)
+
+    real = M._list_files
+    monkeypatch.setattr(M, "_list_files", counting)
+    stats = compact_blocks(spark, src, out, target_bytes=450)
+    assert calls == [src]
+    assert len(want_plans) > 1
+    assert stats["skipped"] == [os.path.join(src, "z.zst")]
+    assert [f["inputs"] for f in stats["files"]] == [
+        len(p.inputs) for p in want_plans
+    ]
+    assert sum(p.est_bytes for p in want_plans) == sum(
+        os.path.getsize(p) for p in glob.glob(f"{src}/*.4mz")
+    )

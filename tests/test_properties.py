@@ -613,3 +613,101 @@ def test_bloom_family_is_the_readers_probe_map(names):
         CaseInsensitiveDict({"path": "/nonexistent", "jsonschema": ddl}), st_
     )
     assert rd._bloom_typemap == {c: f for c, f in want.items() if f}
+
+
+def _kernel_cases():
+    """(declared DDL type, Arrow type, value strategy) for every type the
+    zone kernel sees: int64 at its ends and around 2^53, floats with NaN,
+    ±inf and -0.0, non-ASCII strings, dates, timestamps."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    big = st.sampled_from(
+        [2**63 - 1, -(2**63), 2**53, 2**53 + 1, -(2**53) - 1]
+    )
+    nan = st.just(float("nan"))
+    return {
+        "bigint": (pa.int64(),
+                   st.one_of(st.integers(-(2**63), 2**63 - 1), big)),
+        "int": (pa.int32(), st.integers(-(2**31), 2**31 - 1)),
+        "smallint": (pa.int16(), st.integers(-(2**15), 2**15 - 1)),
+        "double": (pa.float64(), st.one_of(st.floats(width=64), nan,
+                                           st.just(-0.0))),
+        "float": (pa.float32(), st.one_of(st.floats(width=32), nan)),
+        "string": (pa.string(), st.text(max_size=5)),
+        "boolean": (pa.bool_(), st.booleans()),
+        "date": (pa.date32(), st.dates()),
+        "timestamp_ntz": (pa.timestamp("us"), st.datetimes()),
+        # instants, tagged with a non-UTC zone as mapInArrow tags them
+        # under such a session
+        "timestamp": (pa.timestamp("us", tz="America/Los_Angeles"),
+                      st.datetimes(timezones=st.just(dt.timezone.utc))),
+    }
+
+
+_KERNEL = _kernel_cases()
+
+
+def _kernel_values(t):
+    """Values of DDL type *t*, nulls mixed in; all-null arrays, and for
+    floats all-NaN ones, drawn on purpose."""
+    shapes = [
+        st.lists(st.one_of(st.none(), _KERNEL[t][1]), max_size=40),
+        st.lists(st.none(), max_size=5),
+    ]
+    if t in ("double", "float"):
+        shapes.append(st.lists(st.sampled_from([float("nan"), None]),
+                               min_size=1, max_size=5))
+    return st.tuples(st.just(t), st.one_of(*shapes))
+
+
+@given(
+    case=st.sampled_from(sorted(_KERNEL)).flatmap(_kernel_values),
+    cuts=st.lists(st.integers(0, 40), max_size=4),
+)
+@settings(max_examples=400, deadline=None)
+def test_zone_spans_chunking_matches_scalar_oracle(case, cuts):
+    """zone_merge over the zone_spans of any chunking of an array equals
+    a one-shot scalar oracle under Spark's ordering (NaN above every
+    double): min/max of the non-null values, converted to sidecar form
+    after comparing (epoch micros of the instant, ISO text for
+    timestamp_ntz and date), and the null count. Chunking invariance is
+    what lets a scan partition's batches, a block's runs and a file's
+    blocks be folded in any grouping."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from fourmc_spark.sources.datasource import (
+        _parse_flat_ddl, zone_merge, zone_spans,
+    )
+
+    ddl_type, values = case
+    arrow_t = _KERNEL[ddl_type][0]
+    dtype = _parse_flat_ddl(f"c {ddl_type}").fields[0].dataType
+    arr = pa.array(values, arrow_t)
+    bounds = sorted({0, len(values), *(c for c in cuts if c <= len(values))})
+    spans = [
+        s
+        for a, b in zip(bounds[:-1], bounds[1:])
+        for s in zone_spans(arr.slice(a, b - a), dtype)
+    ]
+    got = zone_merge(spans)
+
+    def sidecar(v):
+        if ddl_type == "timestamp":
+            epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+            return (v - epoch) // dt.timedelta(microseconds=1)
+        if ddl_type == "timestamp_ntz":
+            return v.isoformat(sep=" ")
+        return v.isoformat() if ddl_type == "date" else v
+
+    real = sorted((v for v in values if v is not None), key=_nan_last)
+    assert got["nulls"] == values.count(None)
+    if not real:
+        assert got["min"] is None and got["max"] is None
+        return
+    for key, want in (("min", real[0]), ("max", real[-1])):
+        assert _same(got[key], sidecar(want)), (key, got, real)
+        assert type(got[key]) is type(sidecar(want))

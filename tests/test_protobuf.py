@@ -581,3 +581,86 @@ def test_proto_analyze_split_ranges_identical_sidecar(spark, tmp_path):
     multi = _json.load(open(sc_path))
     assert multi == single
     assert res2["rows"] == res1["rows"] == 1500
+
+
+@pytest.mark.parametrize("ext", ["zst", "lz4_fast"])
+def test_proto_sink_rejects_unindexed_codec(spark, tmp_path, ext):
+    """The proto sink frames EB records in 4mc/4mz only: a codec naming a
+    container without a footer index fails the write on the driver,
+    naming the codec, and leaves no file, instead of writing a .4mz or
+    .4mc file for a .zst or Hadoop request."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from fourmc_spark.format.protobuf import spark_struct
+    from fourmc_spark.sources.protobuf import FourMcProtoWriter
+
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match=rf"'{ext}'.*lz4\|zstd\|4mc\|4mz"):
+        FourMcProtoWriter(CaseInsensitiveDict({"path": out, "codec": ext}),
+                          spark_struct(USER_SCHEMA), False)
+    df = spark.createDataFrame(
+        [("u1", "n", "t", 1, ["a"])],
+        "userId string, name string, type string, birthDate long, "
+        "tags array<string>",
+    )
+    with pytest.raises(Exception, match="footer index"):
+        df.write.format("fourmcproto").option("codec", ext) \
+          .mode("overwrite").save(out)
+    assert [f for _, _, fs in os.walk(out) for f in fs] == []
+
+
+def test_analyze_stats_proto_zones_equal_kernel_on_typed_scan(spark,
+                                                              tmp_path):
+    """analyze_stats_proto's file tier is the zone_spans kernel over the
+    typed proto scan's columns of the same file: int64 past 2^53,
+    doubles with NaN and ±inf, float32, non-ASCII strings, a field that
+    is always absent (all null) and a block whose doubles are all NaN."""
+    import json as _json
+
+    from fourmc_spark.format.protobuf import ProtoField, spark_struct
+    from fourmc_spark.operators.maintenance import analyze_stats_proto
+    from fourmc_spark.sources.datasource import zone_merge, zone_spans
+
+    fields = (ProtoField(1, "id", "int64"), ProtoField(2, "name", "string"),
+              ProtoField(3, "score", "double"),
+              ProtoField(4, "ratio", "float"), ProtoField(5, "n", "int32"),
+              ProtoField(6, "gone", "string"))
+    fjson = _json.dumps([{"number": f.number, "name": f.name,
+                          "type": f.type} for f in fields])
+    d = str(tmp_path / "pk")
+    os.makedirs(d)
+    for fi in range(2):
+        path = os.path.join(d, f"p{fi}.4mz")
+        with open(path, "wb") as f, FourMcWriter(
+            f, codec="zstd", level="fast", block_size=1024
+        ) as w:
+            for b in range(12):
+                recs = []
+                for i in range(b * 25, b * 25 + 25):
+                    r = {"id": [2**53 + 1, 2**63 - 1, -(2**63), i][i % 4],
+                         "name": [None, "ünï ✓", "", f"n{i}"][i % 4],
+                         "score": [float("nan"), 1.5, -float("inf"),
+                                   None][i % 4] if b != 5 else float("nan"),
+                         "ratio": [0.1, None, 2.5][i % 3],
+                         "n": [None, -(2**31), 2**31 - 1, i][(i + fi) % 4]}
+                    recs.append(encode_message(
+                        {k: v for k, v in r.items() if v is not None}, fields
+                    ))
+                w.write(encode_eb_block(recs, "X"))
+    analyze_stats_proto(spark, d, fields=fields)
+    types = {f.name: f.dataType for f in spark_struct(fields)}
+    for path in sorted(glob.glob(f"{d}/*.4mz")):
+        tbl = (spark.read.format("fourmcproto").option("fields", fjson)
+               .load(path).toArrow())
+        assert tbl.num_rows == 300
+        meta = _json.load(open(path + ".stats.json"))
+        want = {c: zone_merge(zone_spans(tbl.column(c).combine_chunks(),
+                                         types[c]))
+                for c in types}
+        assert meta["rows"] == 300
+        assert _json.dumps(meta["columns"]) == _json.dumps(want), path
+        assert meta["columns"]["id"]["max"] == 2**63 - 1
+        assert meta["columns"]["ratio"]["min"] == 0.10000000149011612
+        assert meta["columns"]["gone"] == {"min": None, "max": None,
+                                           "nulls": 300}
+        assert len(meta["blocks"]) > 1

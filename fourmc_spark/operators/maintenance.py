@@ -52,11 +52,12 @@ one job shape where the RDD API is the honest tool. No shuffle.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from fourmc_spark.format import core
 from fourmc_spark.format.reader import iter_block_payloads, scan_file_info
@@ -702,51 +703,45 @@ def analyze_stats_proto(
     bloom_block_k: int | None = None,
 ) -> dict:
     """ANALYZE twin of :func:`analyze_stats` for ElephantBird-protobuf
-    4mc/4mz trees (the ``fourmcproto`` source): one pass per file
-    computes the two-tier zone map — per-FILE and per-BLOCK row count +
-    min/max/null-count per scalar field — and writes the same
-    ``<file>.stats.json`` sidecar the typed scans prune against.
+    4mc/4mz trees (the ``fourmcproto`` source): the two-tier zone map —
+    per-FILE and per-BLOCK row count + min/max/null-count per scalar
+    field — in the same ``<file>.stats.json`` sidecar the typed scans
+    prune against.
 
     ``bloom_columns`` additionally seals a per-file bloom bitmap per
-    named int/string field IN THE SAME DECODE PASS (no second read):
-    each non-null value hashes through the shared contract
-    (xxh64(str(value)) seed 42 — identical bytes to the NDJSON tier's
-    JVM ``CAST AS STRING`` path) into ``bloom_bits``/``bloom_k``
-    positions; the ``fourmcproto`` reader probes EqualTo/In point
-    predicates against them at planning time, pruning point lookups on
-    unclustered fields the zone tier cannot touch. Each block's values
-    hash in one array call; range merges OR the bitmaps (exact — same
-    rows, same hashes).
-    ``bloom_block_bits`` additionally seals the per-BLOCK bloom tier
-    (keyed by the sync-marker-owner block offset — the same ownership
-    rule the proto split reader enforces), so point probes inside kept
-    files scan only the blocks that may hold the value.
+    named int/string field in the same read (no second pass): each
+    non-null value hashes through the shared contract (xxh64 of its
+    canonical text, seed 42) into ``bloom_bits``/``bloom_k`` positions;
+    the ``fourmcproto`` reader probes EqualTo/In point predicates
+    against them at planning time, pruning point lookups on unclustered
+    fields the zone tier cannot touch. ``bloom_block_bits`` additionally
+    seals the per-BLOCK bloom tier, so point probes inside kept files
+    scan only the blocks that may hold the value. Without
+    ``bloom_columns``, the bloom tiers of the file's valid sidecar are
+    kept, as :func:`analyze_stats` keeps them.
 
-    The block key is the compressed offset of the block in which each
-    EB record's sync marker starts — exactly the ownership rule the
-    proto split reader enforces (format/protobuf.py:
-    iter_eb_records_for_split), so dropping a block removes precisely
-    the records its stats speak for. Each block's decoded values become
-    one typed Arrow array per column, whose zone comes from the
-    ``zone_spans`` kernel the sink and :func:`analyze_stats` use (so a
-    NaN makes max=NaN: Spark orders NaN above every double, and such
-    spans never prune a lower bound). bool/bytes/repeated fields are
-    skipped (no shared ordering with the JSON sidecar primitives).
+    The records are read by the ``fourmcproto`` scan's own reader
+    (``FourMcProtoReader.slice_reader``), and the block key is the
+    compressed offset of the block in which each EB record's sync marker
+    starts — the ownership rule its split reader enforces, so dropping a
+    block removes precisely the records its stats speak for. The zone
+    map comes from the ``zone_spans`` kernel (so a NaN makes max=NaN:
+    Spark orders NaN above every double, and such spans never prune a
+    lower bound). bool/bytes/repeated fields are skipped (no shared
+    ordering with the JSON sidecar primitives).
 
-    100 TB shape: files at or under ``split_bytes`` are one task each,
-    footer read EXECUTOR-side (the driver pays no per-file pread — a
-    100 TB tree of sealed 128-256 MB files is ~500k independent tasks
-    planned from the listing alone); files LARGER than ``split_bytes``
-    split into block-aligned ranges, each closing at the first block
-    boundary at or past ``split_bytes`` (so a range overshoots by at
-    most one block). Per-file block stats merge executor-side via
-    reduceByKey (block keys are disjoint across ranges by the
-    ownership rule) and the reducer task writes the sidecar; the
-    driver sees one summary row per file."""
+    One pass, :func:`_analyze_pass`, planned as a ``fourmcproto`` scan
+    with ``split_bytes`` as its ``maxpartitionbytes``: one task per
+    packed partition (the ``tasks`` key). Only 4mc/4mz files are
+    analyzed; other containers in the tree are skipped."""
+    from dataclasses import asdict
+
     from fourmc_spark.format.protobuf import (
         USER_SCHEMA, bloom_eligible_fields, spark_struct, zone_eligible_fields,
     )
-    from fourmc_spark.sources.datasource import _arrow_schema_for
+    from fourmc_spark.session import default_parallelism
+    from fourmc_spark.sources.datasource import validate_bloom_geometry
+    from fourmc_spark.sources.protobuf import FourMcProtoReader
 
     schema = tuple(fields) if fields else USER_SCHEMA
     eligible = zone_eligible_fields(schema)
@@ -762,15 +757,12 @@ def analyze_stats_proto(
             f"orderable fields of the schema (eligible: {eligible})"
         )
     bl_cols = list(bloom_columns or [])
-    bl_fams: dict[str, str] = {}
     bk = bloom_block_k if bloom_block_k is not None else bloom_k
     if bloom_block_bits is not None and not bl_cols:
         raise ValueError(
             "analyze_stats_proto: bloom_block_bits requires bloom_columns"
         )
     if bl_cols:
-        from fourmc_spark.sources.datasource import validate_bloom_geometry
-
         validate_bloom_geometry(bloom_bits, bloom_k, "analyze_stats_proto")
         if bloom_block_bits is not None:
             validate_bloom_geometry(
@@ -784,151 +776,18 @@ def analyze_stats_proto(
                     f"analyze_stats_proto: field {c!r} is not bloom-eligible"
                     " (scalar int32/int64/string only)"
                 )
-            bl_fams[c] = bl_eligible[c]
-    files = [
-        p for p in _list_files(path) if core.is_indexed_path(p)
-    ]
-    if not files:
-        return {"files": 0, "rows": 0, "columns": cols,
-                "block_stats": blocks}
-    want_blocks = blocks
-    # the decoded columns' declared types: Spark's for the kernel, the
-    # Arrow twin for the per-block arrays
-    decoded = list(dict.fromkeys([*cols, *bl_cols]))
-    dst = spark_struct(tuple(f for f in schema if f.name in decoded))
-    spark_types = {f.name: f.dataType for f in dst}
-    arrow_types = {f.name: f.type for f in _arrow_schema_for(dst)[0]}
-
-    def _range_stats(task) -> tuple:
-        """(file, (per-block zones, file bloom bitmaps, per-block bloom
-        bitmaps)) for one block-aligned range — per-block ownership is
-        the marker-start block, so ranges never share a block key; file
-        bitmaps OR exactly across ranges."""
-        fpath, codec, start, end = task
-
-        import numpy as np
-        import pyarrow as pa
-
-        from fourmc_spark.format.protobuf import iter_eb_records_for_split
-        from fourmc_spark.sources.datasource import (
-            bloom_hashes, bloom_set_bits, zone_spans,
-        )
-
-        if codec is None:  # whole file: resolve the footer executor-side
-            from fourmc_spark.format.reader import scan_file_info
-
-            codec, end, _offs = scan_file_info(fpath)
-        per_block: dict[int, dict] = {}
-        bl = {c: np.zeros(bloom_bits // 8, np.uint8) for c in bl_cols}
-        bl_blocks: dict[int, dict[str, np.ndarray]] = {}
-        if start >= end:
-            return fpath, (per_block, bl, bl_blocks)
-
-        def _fold_block(owner: int, vals: dict) -> None:
-            # one block's decoded values: one typed array per column, its
-            # zone from the zone_spans kernel, its bloom values hashed
-            # once into the file bitmap and the block bitmap
-            arrs = {c: pa.array(v, arrow_types[c]) for c, v in vals.items()}
-            per_block[owner] = {
-                "rows": len(vals[cols[0]]),
-                "c": {c: zone_merge(zone_spans(arrs[c], spark_types[c]))
-                      for c in cols},
-            }
-            for c in bl_cols:
-                h = bloom_hashes(arrs[c])
-                bloom_set_bits(bl[c], h, bloom_k, bloom_bits)
-                if bloom_block_bits is not None:
-                    bm = bl_blocks.setdefault(owner, {}).setdefault(
-                        c, np.zeros(bloom_block_bits // 8, np.uint8)
-                    )
-                    bloom_set_bits(bm, h, bk, bloom_block_bits)
-
-        cur, vals = None, {}  # the block being decoded, its values
-        with open(fpath, "rb") as f:
-            for owner, rec in iter_eb_records_for_split(
-                f, codec, start, end, schema
-            ):
-                if owner != cur:
-                    if cur is not None:
-                        _fold_block(cur, vals)
-                    cur, vals = owner, {c: [] for c in decoded}
-                for c in decoded:
-                    vals[c].append(rec.get(c))
-        if cur is not None:
-            _fold_block(cur, vals)
-        return fpath, (per_block, bl, bl_blocks)
-
-    def _merge_pb(a: tuple, b: tuple) -> tuple:
-        a[0].update(b[0])  # block keys disjoint across ranges
-        for c, bm in b[1].items():
-            a[1][c] |= bm  # bloom bitmaps OR exactly
-        a[2].update(b[2])  # block-bloom keys disjoint too
-        return a
-
-    def _finalize(kv) -> dict:
-        fpath, (per_block, bl, bl_blocks) = kv
-        zones = {o: b["c"] for o, b in per_block.items()}
-        rows = sum(b["rows"] for b in per_block.values())
-        fields = {
-            "rows": rows,
-            "columns": {
-                c: zone_merge(tuple(z[c].values()) for z in zones.values())
-                for c in cols
-            },
-        }
-        if bl_cols:
-            fields["bloom"] = {
-                c: seal_bloom_spec(
-                    bl[c].tobytes(), bloom_bits, bloom_k, bl_fams[c],
-                )
-                for c in bl_cols
-            }
-            if bloom_block_bits is not None:
-                fields["bloom_blocks"] = seal_bloom_blocks_header(
-                    bloom_block_bits, bk, bl_fams,
-                    _bloom_block_entries(bl_blocks, bl_cols, bloom_block_bits),
-                )
-        if want_blocks:
-            fields["blocks"] = [
-                {"o": o, "c": {c: list(zones[o][c].values()) for c in cols}}
-                for o in sorted(zones)
-            ]
-        seal_sidecar(fpath, fields)
-        return {"file": fpath, "rows": rows, "n_blocks": len(per_block)}
-
-    # plan tasks: files at or under split_bytes (the common sealed-log
-    # case) are one whole-file task each whose footer is read
-    # EXECUTOR-side — the driver pays only the os.stat the listing
-    # already did, never 500k serial footer preads; only files LARGER
-    # than split_bytes get a driver-side footer read to plan
-    # block-aligned ranges (codec None = resolve executor-side)
-    from fourmc_spark.format.reader import scan_file_info
-
-    tasks: list[tuple] = []
-    for fpath in files:
-        if os.path.getsize(fpath) <= split_bytes:
-            tasks.append((fpath, None, 0, -1))  # whole file
-            continue
-        codec, fsize, offsets = scan_file_info(fpath)
-        if not offsets:
-            tasks.append((fpath, codec, 0, 0))  # empty: rows-0 sidecar
-            continue
-        i, n = 0, len(offsets)
-        while i < n:
-            j = i + 1
-            while j < n and offsets[j] - offsets[i] < split_bytes:
-                j += 1
-            tasks.append(
-                (fpath, codec, offsets[i], offsets[j] if j < n else fsize)
-            )
-            i = j
-    sc = spark.sparkContext
-    summaries = (
-        sc.parallelize(tasks, len(tasks))
-        .map(_range_stats)
-        .reduceByKey(_merge_pb)
-        .map(_finalize)
-        .collect()
+    st = spark_struct(schema)
+    reader = FourMcProtoReader(
+        {"path": path, "maxpartitionbytes": split_bytes,
+         "fields": json.dumps([asdict(f) for f in schema])},
+        st, default_parallelism(spark),
+    )
+    parts = reader.plan(
+        [p for p in _list_files(path) if core.is_indexed_path(p)]
+    )
+    summaries = _analyze_pass(
+        spark, reader, parts, st, zones=cols, blocks=blocks, blooms=bl_cols,
+        bits=bloom_bits, k=bloom_k, block_bits=bloom_block_bits, bk=bk,
     )
     return {
         "files": len(summaries),
@@ -936,47 +795,29 @@ def analyze_stats_proto(
         "columns": cols,
         "block_stats": blocks,
         "bloom_columns": bl_cols,
-        "tasks": len(tasks),
+        "tasks": sum(1 for p in parts if p.path),
     }
 
 
-def _analyze_src(
-    spark: SparkSession, path: str, schema_ddl: str, record_format: str
-) -> DataFrame:
-    """The ``(_file, offset, _r struct)`` source the ANALYZE passes
-    aggregate over. NDJSON parses JVM-side with from_json (pinned equal
-    to the jsonschema scan row for row); CSV reads THROUGH the typed
-    scan itself (``csvschema`` + ``withoffset`` provenance), so sidecar
-    stats and bloom hashes are built from exactly the values the scan
-    yields — from_csv's unquoted-escape divergence from Arrow's CSV
-    parse can therefore never poison pruning (the sidecars and their
-    only consumer always agree). Consequence: a CSV DDL may not declare
-    fields named ``offset``/``_file`` (the provenance pseudo-columns) —
-    such data stays in value mode."""
-    if record_format == "json":
-        return (
-            spark.read.format("fourmc")
-            .option("withfilename", "true")
-            .load(path)
-            .select(
-                "_file", "offset", F.from_json("value", schema_ddl).alias("_r")
-            )
-        )
-    if record_format == "csv":
-        from fourmc_spark.sources.datasource import _parse_flat_ddl
-
-        cols = [f.name for f in _parse_flat_ddl(schema_ddl).fields]
-        return (
-            spark.read.format("fourmc")
-            .option("csvschema", schema_ddl)
-            .option("withoffset", "true")
-            .option("withfilename", "true")
-            .load(path)
-            .select("_file", "offset", F.struct(*cols).alias("_r"))
-        )
-    raise ValueError(
-        f"record_format must be 'json' or 'csv', got {record_format!r}"
+def _typed_reader(spark: SparkSession, path: str, schema_ddl: str,
+                  record_format: str):
+    """The ``jsonschema`` (NDJSON) or ``csvschema`` (CSV) scan reader the
+    text ANALYZE passes plan and read with, and its planned partitions."""
+    from fourmc_spark.session import default_parallelism
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSourceReader, _parse_flat_ddl,
     )
+
+    opt = {"json": "jsonschema", "csv": "csvschema"}.get(record_format)
+    if opt is None:
+        raise ValueError(
+            f"record_format must be 'json' or 'csv', got {record_format!r}"
+        )
+    reader = FourMcDataSourceReader(
+        {"path": path, opt: schema_ddl}, _parse_flat_ddl(schema_ddl),
+        default_parallelism(spark),
+    )
+    return reader, reader.partitions()
 
 
 def analyze_stats(
@@ -988,49 +829,53 @@ def analyze_stats(
     record_format: str = "json",
 ) -> dict:
     """ANALYZE for NDJSON (or, with ``record_format='csv'``, CSV-line)
-    4mc/4mz trees: one distributed scan computes a TWO-TIER zone map —
-    per-FILE and (``blocks=True``) per-BLOCK row count +
-    min/max/null-count per column — and writes it to a
-    ``<file>.stats.json`` sidecar next to each data file.
+    trees: one distributed read computes a TWO-TIER zone map — per-FILE
+    and (``blocks=True``) per-BLOCK row count + min/max/null-count per
+    column — and writes it to a ``<file>.stats.json`` sidecar next to
+    each data file.
 
-    The typed scan (``jsonschema`` option, sources/datasource.py) then
-    prunes whole files whose [min, max] provably excludes a pushed
-    predicate, and within kept files skips the non-matching BLOCKS —
-    the Iceberg-manifest + parquet-row-group economics for data whose
-    natural clustering (time-ordered ingest, range-compacted output)
-    makes ranges narrow. The block key is the compressed block offset
-    the scan's ``offset`` column already exposes, so block stats group
-    lines exactly by the ownership rule the split reader enforces.
+    The typed scan (``jsonschema``/``csvschema`` option,
+    sources/datasource.py) then prunes whole files whose [min, max]
+    provably excludes a pushed predicate, and within kept files skips
+    the non-matching BLOCKS — the Iceberg-manifest + parquet-row-group
+    economics for data whose natural clustering (time-ordered ingest,
+    range-compacted output) makes ranges narrow. The block key is the
+    compressed block offset the scan's ``offset`` column exposes, so
+    block stats group lines exactly by the ownership rule the split
+    reader enforces. A container without a footer index (``.zst``,
+    Hadoop block streams) is read whole and gets the file tier only.
+
+    The records are read by that typed scan's own reader
+    (``FourMcDataSourceReader.slice_reader``), so the sidecar holds
+    exactly the values the pruning scan parses: zone-less timestamp
+    text is read as UTC whatever the session timezone (as the scan and
+    the sink read it), a line the scan cannot parse fails the ANALYZE
+    with the scan's ``ValueError`` and seals nothing, and the DDL may
+    declare fields named ``offset`` or ``_file``.
 
     Safety: sidecars record the data file's byte size; the reader
     ignores a sidecar whose size mismatches (stale after rewrite), and
     Spark re-applies every filter post-scan, so pruning can only remove
     provably-empty work. The zone map comes from the ``zone_spans``
-    kernel the sink uses; a TimestampType column reaches it as
-    session-tagged instants whose int64 cast is the epoch micros, so the
-    values are those of Spark's own parse in any session timezone (for
-    zone-less timestamp text the ``jsonschema`` scan's UTC reading
-    differs; see the sink's ``statsschema`` note).
+    kernel the sink uses. A re-ANALYZE keeps the bloom tiers of the
+    file's valid sidecar.
 
-    100 TB shape: one distributed scan and ONE exchange, shared with
-    :func:`analyze_bloom` (:func:`_analyze_pass`). Each scan partition
-    folds its rows into per-(file, block) zone spans through the kernel
-    and ships them as JSON text, one row per (file, block); sidecars
-    are WRITTEN EXECUTOR-SIDE (applyInPandas per file), so the driver
-    materializes only one summary row per file — the O(files) it
-    already pays to plan splits.
+    100 TB shape: one pass shared with :func:`analyze_bloom`
+    (:func:`_analyze_pass`): the driver plans as the scan does, each
+    task folds its slices into per-(file, block) zone spans and ships
+    them as JSON text over ONE exchange; sidecars are WRITTEN
+    EXECUTOR-SIDE (one sealer per file), so the driver materializes
+    only one summary row per file — the O(files) it already pays to
+    plan splits.
     """
-    from fourmc_spark.sources.datasource import _parse_flat_ddl
-
-    st = _parse_flat_ddl(schema_ddl)  # same surface the typed scan takes
-    cols = list(columns) if columns else [f.name for f in st.fields]
-    if "_file" in cols:
-        raise ValueError(
-            "analyze_stats: '_file' is the scan's provenance column and "
-            "cannot also be a payload column"
-        )
+    reader, parts = _typed_reader(spark, path, schema_ddl, record_format)
+    declared = [f.name for f in reader.json_schema.fields]
+    cols = list(columns) if columns else declared
+    unknown = [c for c in cols if c not in declared]
+    if unknown:
+        raise ValueError(f"analyze_stats: columns {unknown!r} not in schema")
     summaries = _analyze_pass(
-        spark, path, schema_ddl, record_format, zones=cols, blocks=blocks
+        spark, reader, parts, reader.json_schema, zones=cols, blocks=blocks,
     )
     return {
         "files": len(summaries),
@@ -1042,9 +887,9 @@ def analyze_stats(
 
 def _analyze_pass(
     spark: SparkSession,
-    path: str,
-    schema_ddl: str,
-    record_format: str,
+    reader,
+    parts: list,
+    schema,
     zones=(),
     blocks: bool = False,
     blooms=(),
@@ -1053,24 +898,28 @@ def _analyze_pass(
     block_bits: int | None = None,
     bk: int = 0,
 ) -> list:
-    """The one pass behind :func:`analyze_stats` (*zones*, the block tier
-    with *blocks*) and :func:`analyze_bloom` (*blooms*): a ``mapInArrow``
-    partial over :func:`_analyze_src`, one exchange, and one sealer per
-    file (``groupBy("_file").applyInPandas``). Returns one row per
+    """The one ANALYZE pass behind :func:`analyze_stats` (*zones*, the
+    block tier with *blocks*), :func:`analyze_bloom` (*blooms*) and
+    :func:`analyze_stats_proto` (both): *parts*, planned by the record
+    model's scan *reader* (whose declared *schema* gives each column's
+    type), run one task each; each task reads its slices through
+    ``reader.slice_reader`` — the iterator the scan's own ``read()``
+    uses, so no record crosses into the JVM — and folds them into
+    per-(file, block) partials; one exchange and one sealer per file
+    (``groupBy("_file").applyInPandas``) follow. Returns one row per
     sealed file: ``file``, ``rows`` (0 unless *zones*), ``set_bits``
     (file-tier bloom bits set).
 
-    The partial folds each scan partition's rows by (file, block): zone
-    columns arrive typed and go through ``zone_spans`` (the sink's
-    kernel), then cross the exchange as one JSON text per (file, block)
-    — sidecar-form values, so no typed min/max passes through pandas.
-    Bloom columns arrive as their JVM ``CAST AS STRING`` (the text the
-    probe's ``str()`` gives); each run's values are hashed once for
-    both tiers (``bloom_hashes`` + ``bloom_set_bits``) into per-(file,
-    column, block) bitmaps — block -1 is the file tier — that ship in
-    whichever encoding is smaller: the DENSE ``n_bits``/8-byte bitmap,
-    or the SPARSE sorted uint32 list of its set positions. Every (file,
-    block) a partition sees gets its bitmaps even when its bloom
+    The partial folds each slice by block (block -1 is the file tier,
+    and the only one a container without a footer index gets): zone
+    columns go through ``zone_spans`` (the sink's kernel), then cross
+    the exchange as one JSON text per (file, block) — sidecar-form
+    values, so no typed min/max passes through pandas. Each run of
+    bloom values is hashed once for both tiers (``bloom_hashes`` +
+    ``bloom_set_bits``) into per-(file, column, block) bitmaps that ship
+    in whichever encoding is smaller: the DENSE ``n_bits``/8-byte
+    bitmap, or the SPARSE sorted uint32 list of its set positions.
+    Every (file, block) a task sees gets its bitmaps even when its bloom
     columns are all NULL there, so that block still seals (all-zero:
     equality never matches NULL, so every probe provably misses).
 
@@ -1078,29 +927,23 @@ def _analyze_pass(
     valid sidecar: a zone build keeps ``bloom``/``bloom_blocks`` and
     rewrites the rest; a bloom-only build amends a copy of the whole
     sidecar (else a bare envelope)."""
-    import json
-
     import numpy as np
     import pandas as pd
     import pyarrow as pa
 
     from fourmc_spark.sources.datasource import (
-        _parse_flat_ddl, bloom_hashes, bloom_set_bits, zone_spans,
+        bloom_hashes, bloom_set_bits, zone_spans,
     )
 
-    # the payload struct stays NESTED until here: expanding _r.* would
-    # collide with the scan's _file/offset pseudo-columns when the (JSON)
-    # DDL legally declares fields with those names
-    src = _analyze_src(spark, path, schema_ddl, record_format).select(
-        "_file", "offset",
-        *(F.col("_r").getField(c).alias(f"z{j}")
-          for j, c in enumerate(zones)),
-        *(F.col("_r").getField(c).cast("string").alias(f"b{j}")
-          for j, c in enumerate(blooms)),
-    )
-    types = {f.name: f.dataType for f in _parse_flat_ddl(schema_ddl).fields}
+    parts = [p for p in parts if p.path]
+    if not parts:
+        return []
+    types = {f.name: f.dataType for f in schema.fields}
     fams = {c: bloom_family(types[c]) for c in blooms}
-    by_block = bool(zones) or block_bits is not None
+    names = list(dict.fromkeys([*zones, *blooms]))
+    zone_at = [names.index(c) for c in zones]
+    bloom_at = [names.index(c) for c in blooms]
+    want_blocks = blocks or block_bits is not None
 
     def _partial(batches: "Iterator[pa.RecordBatch]"):
         # per-byte popcount table (built once per task, 256 entries):
@@ -1112,6 +955,7 @@ def _analyze_pass(
         )
         acc: dict[tuple, "np.ndarray"] = {}  # (file, col, block) -> bitmap
         zacc: dict[tuple, list] = {}  # (file, block) -> [rows, {col: zone}]
+        read_slice = reader.slice_reader(names)
 
         def _set(key: tuple, h: "np.ndarray", n_k: int, n_bits: int) -> None:
             bm = acc.get(key)
@@ -1119,41 +963,42 @@ def _analyze_pass(
                 bm = acc[key] = np.zeros(n_bits // 8, dtype=np.uint8)
             bloom_set_bits(bm, h, n_k, n_bits)
 
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            # runs of one file (and, per block, one block): each run's
+        def _fold(fp: str, off: int, cols: list) -> None:
+            # one run of one block (or of the file tier, off -1): its
             # values go through the kernels once, for every tier
-            fenc = rb.column(0).dictionary_encode()
-            offs = rb.column(1).to_numpy()
-            keys = [fenc.indices.to_numpy()]
-            if by_block:
-                keys.append(offs)
-            change = np.zeros(rb.num_rows, dtype=bool)
-            change[0] = True
-            for a in keys:
-                change[1:] |= a[1:] != a[:-1]
-            bounds = np.append(np.flatnonzero(change), rb.num_rows)
-            for s0, s1 in zip(bounds[:-1], bounds[1:]):
-                fp = fenc.dictionary[keys[0][s0]].as_py()
-                off = int(offs[s0])
-                if zones:
-                    z = zacc.setdefault(
-                        (fp, off), [0, {c: zone_merge(()) for c in zones}]
-                    )
-                    z[0] += int(s1 - s0)
-                    for j, c in enumerate(zones):
-                        run = rb.column(2 + j).slice(s0, s1 - s0)
-                        z[1][c] = zone_merge([
-                            tuple(z[1][c].values()),
-                            *zone_spans(run, types[c]),
-                        ])
-                for j, c in enumerate(blooms):
-                    run = rb.column(2 + len(zones) + j).slice(s0, s1 - s0)
-                    h = bloom_hashes(run)
-                    _set((fp, c, -1), h, k, bits)
-                    if block_bits is not None:
-                        _set((fp, c, off), h, bk, block_bits)
+            if zones:
+                z = zacc.setdefault(
+                    (fp, off), [0, {c: zone_merge(()) for c in zones}]
+                )
+                z[0] += len(cols[0])
+                for j, c in zip(zone_at, zones):
+                    z[1][c] = zone_merge([
+                        tuple(z[1][c].values()),
+                        *zone_spans(cols[j], types[c]),
+                    ])
+            for j, c in zip(bloom_at, blooms):
+                h = bloom_hashes(cols[j])
+                _set((fp, c, -1), h, k, bits)
+                if off != -1 and block_bits is not None:
+                    _set((fp, c, off), h, bk, block_bits)
+
+        for rb in batches:
+            for i in rb.column(0).to_pylist():
+                for sl in parts[i].slices():
+                    # only a footer-indexed container has blocks; the
+                    # others' offsets are line positions in one stream
+                    by_block = want_blocks and core.is_indexed_path(sl.path)
+                    for offs, cols in read_slice(sl):
+                        if not len(offs):
+                            continue
+                        if not by_block:
+                            _fold(sl.path, -1, cols)
+                            continue
+                        bounds = [0, *(np.flatnonzero(offs[1:] != offs[:-1])
+                                       + 1).tolist(), len(offs)]
+                        for s0, s1 in zip(bounds[:-1], bounds[1:]):
+                            _fold(sl.path, int(offs[s0]),
+                                  [a.slice(s0, s1 - s0) for a in cols])
         # one row per (file, block) zone map and per (file, column,
         # block) bitmap, the other kind's fields null
         out = [
@@ -1166,7 +1011,7 @@ def _analyze_pass(
             # popcount FIRST (256-entry table) to pick the encoding:
             # unpackbits materializes 8x the bitmap (a transient ~128 MB
             # at the max 2^27-bit geometry) and is only needed when the
-            # sparse branch actually wins (ADVICE r10)
+            # sparse branch actually wins
             if 4 * int(_POPCNT8[bm].sum()) < len(bm):
                 set_pos = np.flatnonzero(
                     np.unpackbits(bm, bitorder="little")
@@ -1193,13 +1038,13 @@ def _analyze_pass(
         fields = old
         if zones:
             zr = pdf[pdf["zone"].notna()]
-            parts: dict[int, list] = {}  # block offset -> its zone rows
+            by_off: dict[int, list] = {}  # block offset -> its zone rows
             for off, zj in zip(zr["block"], zr["zone"]):
-                parts.setdefault(int(off), []).append(json.loads(zj))
+                by_off.setdefault(int(off), []).append(json.loads(zj))
             zmap = {  # block offset -> {col: [min, max, nulls]}
                 o: {c: list(zone_merge(p[c] for p in ps).values())
                     for c in zones}
-                for o, ps in parts.items()
+                for o, ps in by_off.items()
             }
             rows = int(zr["rows"].sum())
             fields = {"rows": rows, "columns": {
@@ -1210,7 +1055,7 @@ def _analyze_pass(
             for tier in ("bloom", "bloom_blocks"):
                 if isinstance(old.get(tier), dict):
                     fields[tier] = old[tier]
-            if blocks:
+            if blocks and -1 not in zmap:
                 fields["blocks"] = [
                     {"o": o, "c": zmap[o]} for o in sorted(zmap)
                 ]
@@ -1235,18 +1080,18 @@ def _analyze_pass(
                 specs[c] = seal_bloom_spec(bm.tobytes(), bits, k, fams[c])
                 set_bits += int(np.unpackbits(bm).sum())
             fields["bloom"] = specs
-            if block_bits is not None:
-                # ONE grouped pass over the block-tier rows (a per-offset
-                # boolean filter would rescan the frame O(blocks) times —
-                # quadratic exactly when blocks are many, the tier's
-                # target shape)
-                grouped: dict[int, dict] = {}
-                for (off, cname), sub in br[br["block"] != -1].groupby(
-                    ["block", "col_name"], sort=False
-                ):
-                    grouped.setdefault(int(off), {})[cname] = _merge(
-                        sub, block_bits
-                    )
+            # ONE grouped pass over the block-tier rows (a per-offset
+            # boolean filter would rescan the frame O(blocks) times —
+            # quadratic exactly when blocks are many, the tier's target
+            # shape); none without block_bits or a footer index
+            grouped: dict[int, dict] = {}
+            for (off, cname), sub in br[br["block"] != -1].groupby(
+                ["block", "col_name"], sort=False
+            ):
+                grouped.setdefault(int(off), {})[cname] = _merge(
+                    sub, block_bits
+                )
+            if grouped:
                 fields["bloom_blocks"] = seal_bloom_blocks_header(
                     block_bits, bk, fams,
                     _bloom_block_entries(grouped, blooms, block_bits),
@@ -1257,7 +1102,8 @@ def _analyze_pass(
         )
 
     return (
-        src.mapInArrow(
+        spark.range(len(parts), numPartitions=len(parts))
+        .mapInArrow(
             _partial,
             "_file string, block long, rows long, zone string, "
             "col_name string, bm binary, dense boolean",
@@ -1285,9 +1131,10 @@ def analyze_bloom(
     """ANALYZE ... FOR BLOOM: per-FILE bloom filters for point-predicate
     pruning on columns zone maps cannot help with — plus an optional
     per-BLOCK tier (``block_bits``) so a point probe inside a KEPT file
-    scans only the blocks that may hold the value.
-    ``record_format='csv'`` analyzes CSV-line trees (the ``csvschema``
-    typed scan) instead of NDJSON.
+    scans only the blocks that may hold the value (4mc/4mz files only:
+    a ``.zst`` or Hadoop container has no blocks and gets the file
+    tier). ``record_format='csv'`` analyzes CSV-line trees (the
+    ``csvschema`` typed scan) instead of NDJSON.
 
     Zone maps (analyze_stats) prune by [min, max] — decisive on the
     natural clustering key (time, monotonic ids) and useless on
@@ -1300,10 +1147,10 @@ def analyze_bloom(
     only cost a scan Spark's re-applied filters empty out; false
     negatives are impossible for the values the file actually holds.
 
-    The JVM casts each value to its canonical text (``CAST AS
-    STRING``); the Python side hashes each batch's distinct texts in one
-    XXH64 call (``bloom_hashes``) and sets their k positions with
-    ``bloom_set_bits`` — the kernel and bit setter the sink and
+    The values are those the typed scan's own reader parses;
+    ``bloom_hashes`` casts each run's distinct values to their canonical
+    text and hashes them in one XXH64 call, and ``bloom_set_bits`` sets
+    their k positions — the kernel and bit setter the sink and
     :func:`analyze_stats_proto` build with. The planner hashes each
     probed value with the scalar ``format/native.xxh64`` — O(k) bit
     tests per (file, value), no data I/O. Pins: Spark's ``xxhash64`` of
@@ -1316,21 +1163,21 @@ def analyze_bloom(
     bitmap equals a one-value-at-a-time build
     (``::test_analyze_bloom_matches_scalar_build``).
 
-    Eligibility is long/int/short/string columns: their CAST AS STRING
-    is the same canonical text Python's ``str()`` produces, so build
-    and probe agree exactly. Floats/timestamps are refused (equality
+    Eligibility is long/int/short/string columns: their canonical text
+    (Arrow's cast to string, equal to CAST AS STRING) is the text
+    Python's ``str()`` produces, so build and probe agree exactly. Floats/timestamps are refused (equality
     semantics on those are hazard-prone; ranges already have zone
     maps).
 
-    100 TB shape: one distributed scan and ONE exchange, the same pass
-    :func:`analyze_stats` runs (:func:`_analyze_pass`). Each record
-    crosses into Python once, as one row of its file, block offset and
-    one text per bloom column; each scan partition folds its rows into
-    per-(file, column, block) bitmaps locally (bitmaps are OR-mergeable)
-    and ships each in whichever encoding is smaller — dense bitmap or
-    sparse sorted set-position list — so the shuffle carries, per scan
-    SPLIT, columns × (1 + blocks-in-split) rows of min(``bits``/8, 4 ×
-    set-positions) bytes, regardless of row count. Sidecars are amended
+    100 TB shape: one distributed read and ONE exchange, the same pass
+    :func:`analyze_stats` runs (:func:`_analyze_pass`). No record
+    crosses into the JVM: each task reads its planned slices through
+    the scan's reader, folds them into per-(file, column, block) bitmaps
+    locally (bitmaps are OR-mergeable) and ships each in whichever
+    encoding is smaller — dense bitmap or sparse sorted set-position
+    list — so the shuffle carries, per task, columns × (1 +
+    blocks-in-task) rows of min(``bits``/8, 4 × set-positions) bytes,
+    regardless of row count. Sidecars are amended
     EXECUTOR-SIDE (applyInPandas per file, OR-merging the partials);
     the driver sees one summary row per file. Sizing: false-positive
     rate ≈ (1 - e^(-k·n/bits))^k
@@ -1345,9 +1192,7 @@ def analyze_bloom(
     blooms by offset remap with the same seam rule as zone maps, so
     steady-state needs no re-ANALYZE.
     """
-    from fourmc_spark.sources.datasource import (
-        _parse_flat_ddl, validate_bloom_geometry,
-    )
+    from fourmc_spark.sources.datasource import validate_bloom_geometry
 
     validate_bloom_geometry(bits, k, "analyze_bloom")
     bk = block_k if block_k is not None else k
@@ -1355,8 +1200,8 @@ def analyze_bloom(
         validate_bloom_geometry(
             block_bits, bk, "analyze_bloom (block tier)", max_bits=1 << 24
         )
-    st = _parse_flat_ddl(schema_ddl)
-    types = {f.name: f.dataType for f in st.fields}
+    reader, parts = _typed_reader(spark, path, schema_ddl, record_format)
+    types = {f.name: f.dataType for f in reader.json_schema.fields}
     cols = list(columns)
     if not cols:
         raise ValueError("analyze_bloom: at least one column required")
@@ -1371,8 +1216,8 @@ def analyze_bloom(
             )
 
     summaries = _analyze_pass(
-        spark, path, schema_ddl, record_format, blooms=cols, bits=bits, k=k,
-        block_bits=block_bits, bk=bk,
+        spark, reader, parts, reader.json_schema, blooms=cols, bits=bits,
+        k=k, block_bits=block_bits, bk=bk,
     )
     return {
         "files": len(summaries),

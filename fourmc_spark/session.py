@@ -87,6 +87,16 @@ def _scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+def default_parallelism(spark: SparkSession) -> int | None:
+    """The session's total task slots, which split packing aims at, or
+    None under Spark Connect (no SparkContext: the planner falls back to
+    the CPUs it may run on)."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except Exception:
+        return None
+
+
 def register_fourmc(spark: SparkSession) -> None:
     """Register the 'fourmc' and 'fourmcproto' DataSources.
 
@@ -123,12 +133,7 @@ def register_fourmc(spark: SparkSession) -> None:
         # without the flag) doesn't gate pushFilters() either
         pass
 
-    try:
-        cores = spark.sparkContext.defaultParallelism
-    except Exception:
-        # Spark Connect has no SparkContext: the planner falls back to
-        # the CPUs it may run on
-        cores = None
+    cores = default_parallelism(spark)
     for ds in (FourMcDataSource, FourMcProtoDataSource):
         # same name and module: cloudpickle ships this subclass (and its
         # parallelism) by value to the planning process

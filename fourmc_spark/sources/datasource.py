@@ -229,8 +229,8 @@ class FourMcDataSource(DataSource):
                 StructField("value", StringType(), nullable=True),
             ]
         # withoffset=true (typed mode): ALSO expose the owning block's
-        # compressed offset as a pseudo-column — the provenance key the
-        # ANALYZE passes group block stats by (value mode always has it)
+        # compressed offset as a pseudo-column — the key block stats are
+        # sealed under (value mode always has it)
         if js and str(
             self.options.get("withoffset", "false")
         ).lower() == "true":
@@ -640,62 +640,31 @@ class FourMcDataSourceReader(DataSourceReader):
                 i = j
         return sized
 
-    def read(self, partition: FourMcInputPartition):
+    def slice_reader(self, names: list[str]):
+        """The per-slice iterator the scan's :meth:`read` and the ANALYZE
+        pass (``operators/maintenance._analyze_pass``) both read through,
+        so sidecars hold exactly the values the scan yields: a function
+        from a :class:`Slice` to its ``(block offsets, columns)`` batches,
+        each line's owning block offset (``numpy.int64``; a stream
+        container's is the line's stream position) and one Arrow array
+        per name in *names*, typed columns of the declared schema in a
+        typed scan, else ``value`` (the line text).
+
+        Arrow's JSON/CSV kernels parse each micro-batch in C; explicit
+        schemas pin types so output never depends on inference (absent
+        fields come back NULL). Only *names* enter the parser's explicit
+        schema / include_columns, and the parser is built once here —
+        never per batch."""
         import pyarrow as pa
 
-        typed = self.json_schema is not None
-        want_offset = "offset" in self.columns and (
-            not typed or self.with_offset
-        )
-        want_value = (not typed) and "value" in self.columns
-        typed_names = (
-            [f.name for f in self.json_schema.fields] if typed else []
-        )
-        want_typed = [c for c in self.columns if c in typed_names]
-        # hive partition columns wanted in the output: constant per file
-        want_pcols = [c for c in self.pcols if c in self.columns]
-        want_file = self.with_file and "_file" in self.columns
+        from fourmc_spark.format.reader import iter_line_batches
 
-        def _with_pcols(batch: "pa.RecordBatch", path: str, pvals: dict):
-            if not want_pcols and not want_file:
-                return batch
-            arrays = list(batch.columns)
-            names = list(batch.schema.names)
-            for c in want_pcols:
-                v = pvals.get(c)
-                arrays.append(
-                    pa.nulls(len(batch), type=pa.string())
-                    if v is None
-                    else pa.array([v] * len(batch), type=pa.string())
-                )
-                names.append(c)
-            if want_file:
-                arrays.append(
-                    pa.array([path] * len(batch), type=pa.string())
-                )
-                names.append("_file")
-            return pa.RecordBatch.from_arrays(arrays, names=names)
-
-        # Arrow's JSON/CSV kernels parse each micro-batch in C;
-        # explicit schemas pin types so output never depends on
-        # inference (absent fields come back NULL). Column pruning
-        # reaches the PARSER: only the requested fields enter the
-        # explicit schema / include_columns. Built once per partition —
-        # never per batch.
-        if not typed:
-            typed_parser = None
+        if self.json_schema is None:
+            parser = None
         elif self.typed_fmt == "csv":
-            typed_parser = _TypedCsvParser(self.json_schema, want_typed)
+            parser = _TypedCsvParser(self.json_schema, names)
         else:
-            typed_parser = _TypedNdjsonParser(self.json_schema, want_typed)
-
-        def _typed_batch(lines: "pa.Array", offs) -> "pa.RecordBatch":
-            arrays = _parse_lines(typed_parser, lines)
-            names = list(want_typed)
-            if want_offset:
-                arrays = [pa.array(offs, type=pa.int64())] + arrays
-                names = ["offset"] + names
-            return pa.RecordBatch.from_arrays(arrays, names=names)
+            parser = _TypedNdjsonParser(self.json_schema, names)
 
         def _cast_lines(arr: "pa.Array") -> "pa.Array":
             try:
@@ -705,33 +674,42 @@ class FourMcDataSourceReader(DataSourceReader):
                     [v.as_py().decode("utf-8", "replace") for v in arr]
                 )
 
-        def _slice_batches(sl: Slice):
+        def batches(sl: Slice):
             # every codec: Arrow line batches, never a per-line Python loop
-            from fourmc_spark.format.reader import iter_line_batches
-
             drop_first = self.skip_first and sl.head
             with open(sl.path, "rb") as f:
-                for offs_np, lines_arr in iter_line_batches(
+                for offs, lines in iter_line_batches(
                     f, sl.codec, sl.start, sl.end, verify=self.verify
                 ):
-                    if drop_first and len(lines_arr) > 0:
+                    if drop_first and len(lines) > 0:
                         drop_first = False
-                        offs_np = offs_np[1:]
-                        lines_arr = lines_arr.slice(1)
-                        if len(lines_arr) == 0:
+                        offs = offs[1:]
+                        lines = lines.slice(1)
+                        if len(lines) == 0:
                             continue
-                    if typed:
-                        yield _typed_batch(lines_arr, offs_np)
-                        continue
-                    arrays, names = [], []
-                    if want_offset:
-                        arrays.append(pa.array(offs_np, type=pa.int64()))
-                        names.append("offset")
-                    if want_value:
-                        arrays.append(_cast_lines(lines_arr))
-                        names.append("value")
-                    yield pa.RecordBatch.from_arrays(arrays, names=names)
+                    if parser is not None:
+                        yield offs, _parse_lines(parser, lines)
+                    else:
+                        yield offs, [_cast_lines(lines)] if names else []
 
+        return batches
+
+    def read(self, partition: FourMcInputPartition):
+        import pyarrow as pa
+
+        typed = self.json_schema is not None
+        want_offset = "offset" in self.columns and (
+            not typed or self.with_offset
+        )
+        if typed:
+            declared = {f.name for f in self.json_schema.fields}
+            names = [c for c in self.columns if c in declared]
+        else:
+            names = [c for c in ("value",) if c in self.columns]
+        # hive partition columns wanted in the output: constant per file
+        want_pcols = [c for c in self.pcols if c in self.columns]
+        want_file = self.with_file and "_file" in self.columns
+        batches = self.slice_reader(names)
         # a packed partition spans files: the hive values, _file and the
         # skipfirstline head flag are per slice
         for sl in partition.slices():
@@ -740,8 +718,24 @@ class FourMcDataSourceReader(DataSourceReader):
                 if want_pcols
                 else {}
             )
-            for batch in _slice_batches(sl):
-                yield _with_pcols(batch, sl.path, pvals)
+            for offs, arrays in batches(sl):
+                n = len(offs)
+                cols, out = list(arrays), list(names)
+                if want_offset:
+                    cols.insert(0, pa.array(offs, type=pa.int64()))
+                    out.insert(0, "offset")
+                for c in want_pcols:
+                    v = pvals.get(c)
+                    cols.append(
+                        pa.nulls(n, type=pa.string())
+                        if v is None
+                        else pa.array([v] * n, type=pa.string())
+                    )
+                    out.append(c)
+                if want_file:
+                    cols.append(pa.array([sl.path] * n, type=pa.string()))
+                    out.append("_file")
+                yield pa.RecordBatch.from_arrays(cols, names=out)
 
 
 def _partition_col_opt(options) -> list[str]:
@@ -989,9 +983,9 @@ class _TypedCsvParser:
     UTC session convention the typed tier documents. KNOWN divergence:
     a ``\\`` in an UNQUOTED field is treated as an escape by Arrow but
     as a literal by from_csv — data with raw unquoted backslashes
-    should stay in value mode + from_csv (ANALYZE-CSV sidecars are
-    built THROUGH this parser, so pruning always agrees with the scan
-    either way). Embedded newlines cannot roundtrip in ANY CSV-line
+    should stay in value mode + from_csv (ANALYZE sidecars are built
+    THROUGH this parser, so pruning always agrees with the scan either
+    way). Embedded newlines cannot roundtrip in ANY CSV-line
     consumer of this container (the record model is LINES; to_csv
     quotes the newline but the line reader splits on it) — use the
     JSON record model for such data."""
@@ -1524,14 +1518,18 @@ def seal_sidecar(path: str, fields: dict) -> None:
 
     Which builder writes which keys. Every builder computes its zone
     maps with :func:`zone_spans` and merges them with :func:`zone_merge`;
-    ``analyze_stats`` and ``analyze_bloom`` are two calls into one
-    ``mapInArrow`` partial and one per-file sealer
-    (``operators/maintenance._analyze_pass``):
+    ``analyze_stats``, ``analyze_bloom`` and ``analyze_stats_proto`` are
+    three calls into one pass (``operators/maintenance._analyze_pass``)
+    that reads through the record model's scan reader and seals per
+    file. ``blocks`` and ``bloom_blocks`` are sealed only for 4mc/4mz
+    files (a container without a footer index has no blocks):
 
     * the sink (``statsschema``, ``bloomcolumns``): rows, columns, bloom;
     * ``analyze_stats``: rows, columns, blocks, keeping the bloom and
       bloom_blocks of the file's valid sidecar;
-    * ``analyze_stats_proto``: rows, columns, bloom, bloom_blocks, blocks;
+    * ``analyze_stats_proto``: rows, columns, blocks, and with
+      ``bloom_columns`` bloom and bloom_blocks, else keeping the file's
+      valid ones;
     * ``analyze_bloom``: bloom and bloom_blocks, amending a copy of the
       file's valid sidecar (else a bare envelope);
     * compaction's raw block copy (the carry): rows, columns, blocks,
@@ -1940,12 +1938,12 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         # writes Z-suffixed UTC) under ANY session timezone, but
         # ZONE-LESS timestamp text is assumed UTC. The writer cannot see
         # the session timezone (Python DataSource workers get options
-        # only) and Arrow's parse cannot flag zone-less text. The
-        # jsonschema scan parses the same way, so these sidecars agree
-        # with its rows; analyze_stats() instead parses with from_json
-        # under the session timezone (exact for value-mode reads), so
-        # under a non-UTC session its micros for zone-less text are
-        # offset from the jsonschema scan's rows.
+        # only) and Arrow's parse cannot flag zone-less text. Every
+        # sidecar builder reads that way: the jsonschema scan, this
+        # sink and analyze_stats() (which reads through the scan's own
+        # reader), so the sidecars always agree with the scan's rows;
+        # only a value-mode from_json read under a non-UTC session
+        # differs.
         ss = options.get("statsschema")
         self.stats_schema: StructType | None = (
             _parse_flat_ddl(ss) if ss else None

@@ -118,46 +118,54 @@ class FourMcProtoReader(FourMcDataSourceReader):
             bloom_eligible_fields(self.proto_schema),
         )
 
-    def read(self, partition: FourMcInputPartition):
+    def slice_reader(self, names: list[str]):
+        """The text reader's :meth:`slice_reader` over EB records: a
+        function from a slice to its ``(block offsets, columns)`` batches
+        of up to 8192 records, each record's owner block offset (the
+        block its sync marker starts in) and one Arrow array per field
+        in *names*."""
+        import numpy as np
         import pyarrow as pa
 
         from fourmc_spark.format.protobuf import iter_eb_records_for_split
 
-        wanted = [f for f in self.proto_schema if f.name in self.columns]
-        arrow_schema = _arrow_schema(wanted)
+        by_name = {f.name: f for f in self.proto_schema}
+        types = _arrow_schema([by_name[n] for n in names]).types
         batch_rows = 8192
-        cols: dict[str, list] = {f.name: [] for f in wanted}
 
-        def flush():
-            arrays = [
-                pa.array(cols[f.name], type=arrow_schema.field(f.name).type)
-                for f in wanted
+        def _batch(offs: list, cols: list) -> tuple:
+            return np.array(offs, np.int64), [
+                pa.array(c, t) for c, t in zip(cols, types)
             ]
-            return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-        n = 0
-        # a packed partition spans files; no proto column depends on the
-        # slice, so one batch may hold records of several
-        for sl in partition.slices():
+        def batches(sl):
+            offs: list[int] = []
+            cols: list[list] = [[] for _ in names]
             with open(sl.path, "rb") as f:
-                for _, rec in iter_eb_records_for_split(
-                    f,
-                    sl.codec,
-                    sl.start,
-                    sl.end,
-                    self.proto_schema,
+                for owner, rec in iter_eb_records_for_split(
+                    f, sl.codec, sl.start, sl.end, self.proto_schema,
                     verify=self.verify,
                 ):
-                    for fld in wanted:
-                        cols[fld.name].append(rec[fld.name])
-                    n += 1
-                    if n >= batch_rows:
-                        yield flush()
-                        n = 0
-                        for v in cols.values():
-                            v.clear()
-        if n:
-            yield flush()
+                    offs.append(owner)
+                    for n, col in zip(names, cols):
+                        col.append(rec[n])
+                    if len(offs) >= batch_rows:
+                        yield _batch(offs, cols)
+                        offs, cols = [], [[] for _ in names]
+            if offs:
+                yield _batch(offs, cols)
+
+        return batches
+
+    def read(self, partition: FourMcInputPartition):
+        import pyarrow as pa
+
+        wanted = [f for f in self.proto_schema if f.name in self.columns]
+        schema = _arrow_schema(wanted)
+        batches = self.slice_reader([f.name for f in wanted])
+        for sl in partition.slices():
+            for _, arrays in batches(sl):
+                yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def _arrow_schema(fields: tuple[ProtoField, ...] | list[ProtoField]):

@@ -31,7 +31,8 @@ from fourmc_spark.sources.datasource import (
 _DDL = "k bigint, name string, v double"
 
 
-def _write_unclustered(spark, d: str, n_files: int = 4, rows: int = 400):
+def _write_unclustered(spark, d: str, n_files: int = 4, rows: int = 400,
+                       blocksize: int | None = None):
     """Every file's k span covers the whole domain (hash spread), so the
     zone tier cannot prune a point probe — only blooms can."""
     df = spark.range(rows).select(
@@ -39,10 +40,12 @@ def _write_unclustered(spark, d: str, n_files: int = 4, rows: int = 400):
         F.concat(F.lit("n"), F.col("id") % 7).alias("name"),
         (F.col("id") * 0.5).alias("v"),
     )
-    (df.repartition(n_files)
-       .select(F.to_json(F.struct("k", "name", "v")).alias("value"))
-       .write.format("fourmc").option("codec", "zstd")
-       .mode("overwrite").save(d))
+    w = (df.repartition(n_files)
+         .select(F.to_json(F.struct("k", "name", "v")).alias("value"))
+         .write.format("fourmc").option("codec", "zstd"))
+    if blocksize:
+        w = w.option("blocksize", blocksize)
+    w.mode("overwrite").save(d)
 
 
 def _planned(d, filters):
@@ -860,44 +863,33 @@ def test_compact_blocks_carries_blooms(spark, tmp_path):
     assert _planned(out, [EqualTo(("k",), 10_000)]) == set()
 
 
-def test_partial_bitmap_merge_is_partitioning_invariant(spark, tmp_path):
+def test_partial_bitmap_merge_is_partitioning_invariant(
+    spark, tmp_path, monkeypatch
+):
     """r10 optimization pin: analyze_bloom's one-exchange partial-bitmap
-    aggregation (per-scan-partition OR folds merged per file) seals
-    byte-identical sidecars no matter how the scan splits the file —
-    forcing many tiny splits must change nothing, because bitmap OR is
+    aggregation (per-task OR folds merged per file) seals byte-identical
+    sidecars no matter how the planner splits the file — forcing one
+    block per task must change nothing, because bitmap OR is
     associative/commutative and duplicate positions set the same bit."""
+    import fourmc_spark.sources.datasource as D
     from fourmc_spark.operators.maintenance import analyze_bloom
 
     d = str(tmp_path / "pinv")
-    _write_unclustered(spark, d, n_files=2, rows=600)
+    # small blocks: one block per task must really split each file
+    _write_unclustered(spark, d, n_files=2, rows=600, blocksize=2048)
 
     def _seal_and_read(maxpb):
-        import fourmc_spark.operators.maintenance as M
-
-        orig = M._analyze_src
-
-        def tiny_src(spark_, path, ddl, fmt):
-            return (
-                spark_.read.format("fourmc")
-                .option("withfilename", "true")
-                .option("maxpartitionbytes", str(maxpb))
-                .option("maxblockspersplit", "1")
-                .load(path)
-                .select(
-                    "_file", "offset",
-                    F.from_json("value", ddl).alias("_r"),
-                )
-            )
-
         if maxpb:
-            M._analyze_src = tiny_src
+            # the planner's defaults, read when ANALYZE builds its reader
+            monkeypatch.setattr(D, "DEFAULT_MAX_PARTITION_BYTES", maxpb)
+            monkeypatch.setattr(D, "DEFAULT_MAX_BLOCKS_PER_SPLIT", 1)
         try:
             analyze_bloom(
                 spark, d, _DDL, ["k", "name"],
                 bits=1 << 12, k=4, block_bits=1 << 10,
             )
         finally:
-            M._analyze_src = orig
+            monkeypatch.undo()
         out = {}
         for sc in sorted(_glob.glob(f"{d}/*.stats.json")):
             with open(sc) as f:
@@ -912,6 +904,7 @@ def test_partial_bitmap_merge_is_partitioning_invariant(spark, tmp_path):
     split = _seal_and_read(1)          # one block per split
     assert whole == split
     assert whole  # sanity: something was sealed
+    assert all(len(bb["blocks"]) > 2 for _, bb in whole.values())
 
 
 def _scalar_blooms(path, fmt, names, cols, bits, k, block_bits, bk):

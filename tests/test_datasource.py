@@ -1351,7 +1351,7 @@ def test_analyze_stats_exact_above_2_53_and_offset_field(spark, tmp_path):
     the column (float64 coercion rounds above 2^53 and a rounded-down
     max wrongly prunes the file holding the true max); (2) a payload
     field named 'offset' must not collide with the scan pseudo-column
-    during analysis."""
+    during analysis — in NDJSON and in CSV."""
     import glob as _glob
     import json as _json
 
@@ -1359,22 +1359,25 @@ def test_analyze_stats_exact_above_2_53_and_offset_field(spark, tmp_path):
     from fourmc_spark.operators.maintenance import analyze_stats
 
     big = (1 << 53) + 1
-    d = str(tmp_path / "bigint")
-    os.makedirs(d)
-    # two blocks: one all-null for k (forces float64 coercion pre-fix)
-    write_file(os.path.join(d, "a.4mz"),
-               b'{"k": null, "offset": 1}\n' * 40
-               + b'{"k": %d, "offset": 2}\n' % big,
-               codec="zstd", block_size=256)
-    res = analyze_stats(spark, d, "k bigint, offset bigint")
-    assert res["files"] == 1
-    sc = _json.load(open(_glob.glob(f"{d}/*.stats.json")[0]))
-    assert sc["columns"]["k"]["max"] == big  # exact, not 2^53
-    assert sc["columns"]["offset"]["max"] == 2
-    # the zone map built this way never prunes the true-max row
-    t = (spark.read.format("fourmc")
-         .option("jsonschema", "k bigint, offset bigint").load(d))
-    assert t.filter(F.col("k") == big).count() == 1
+    ddl = "k bigint, offset bigint"
+    for fmt, opt, null_line, big_line in (
+        ("json", "jsonschema", b'{"k": null, "offset": 1}\n',
+         b'{"k": %d, "offset": 2}\n' % big),
+        ("csv", "csvschema", b",1\n", b"%d,2\n" % big),
+    ):
+        d = str(tmp_path / f"bigint_{fmt}")
+        os.makedirs(d)
+        # two blocks: one all-null for k (forces float64 coercion pre-fix)
+        write_file(os.path.join(d, "a.4mz"), null_line * 40 + big_line,
+                   codec="zstd", block_size=256)
+        res = analyze_stats(spark, d, ddl, record_format=fmt)
+        assert res["files"] == 1
+        sc = _json.load(open(_glob.glob(f"{d}/*.stats.json")[0]))
+        assert sc["columns"]["k"]["max"] == big, fmt  # exact, not 2^53
+        assert sc["columns"]["offset"]["max"] == 2, fmt
+        # the zone map built this way never prunes the true-max row
+        t = spark.read.format("fourmc").option(opt, ddl).load(d)
+        assert t.filter(F.col("k") == big).count() == 1, fmt
 
 
 def test_spark_readinfo_cache_hazard_characterized(spark, tmp_path):
@@ -1734,16 +1737,14 @@ def test_sink_and_analyze_stats_zone_maps_agree(spark, tmp_path):
 
 
 def test_analyze_stats_exact_under_non_utc_session(spark, tmp_path):
-    """analyze_stats parses JVM-side under the session timezone and its
-    kernel takes a TimestampType's instant from the int64 cast of the
-    session-tagged Arrow array. Under America/Los_Angeles, zone-less
-    timestamp text in two files: every file- and block-tier ts min/max
-    equals unix_micros of Spark's typed rows (from_json, the parse
-    analyze_stats aggregates; a kernel that went through as_py() and
-    dropped the zone would be off by the session offset), and a ts >=
-    instant filter keeps exactly the right rows, the other file pruned.
-    (The jsonschema scan reads zone-less text as UTC, hours from the
-    session's reading; the two files lie months apart.)"""
+    """analyze_stats reads through the jsonschema scan's own reader, so
+    under America/Los_Angeles, zone-less timestamp text in two files:
+    every file- and block-tier ts min/max equals unix_micros of the
+    jsonschema scan's rows (which read zone-less text as UTC, whatever
+    the session timezone; a partial that tagged the values with the
+    session timezone would be off by its offset), and a ts >= instant
+    filter keeps exactly the right rows, the other file pruned. (The
+    two files lie months apart.)"""
     import datetime as dt
     import json as _json
 
@@ -1769,9 +1770,10 @@ def test_analyze_stats_exact_under_non_utc_session(spark, tmp_path):
     try:
         analyze_stats(spark, d, ddl)
         rows = (
-            spark.read.format("fourmc").option("withfilename", "true").load(d)
-            .select("_file", "offset",
-                    F.unix_micros(F.from_json("value", ddl)["ts"]).alias("us"))
+            spark.read.format("fourmc").option("jsonschema", ddl)
+            .option("withoffset", "true").option("withfilename", "true")
+            .load(d)
+            .select("_file", "offset", F.unix_micros("ts").alias("us"))
             .collect()
         )
         typed = (spark.read.format("fourmc").option("jsonschema", ddl)
@@ -1793,8 +1795,8 @@ def test_analyze_stats_exact_under_non_utc_session(spark, tmp_path):
         for e in meta["blocks"]:
             bus = by_block[(f, e["o"])]
             assert e["c"]["ts"] == [min(bus), max(bus), 0]
-    # 2024-01-01 01:04:05.001 in Los Angeles is 09:04:05.001 UTC
-    assert min(min(us) for us in by_file.values()) == 1704099845001000
+    # the scan reads 2024-01-01 01:04:05.001 as UTC
+    assert min(min(us) for us in by_file.values()) == 1704071045001000
     assert sorted(r["k"] for r in late) == [7, 8, 9, 10]
     rd = FourMcDataSourceReader(
         CaseInsensitiveDict({"path": d, "jsonschema": ddl}),
@@ -1804,6 +1806,105 @@ def test_analyze_stats_exact_under_non_utc_session(spark, tmp_path):
     list(rd.pushFilters([GreaterThanOrEqual(("ts",), mar)]))
     kept = {p.path for p in iter_slices(rd.partitions()) if p.path}
     assert {os.path.basename(p) for p in kept} == {"jun.4mz"}
+
+
+def test_analyze_stats_keeps_zoneless_row_under_non_utc_session(
+    spark, tmp_path
+):
+    """The sidecar holds the jsonschema scan's reading of zone-less
+    timestamp text: under America/Los_Angeles, an upper bound that the
+    scan's row meets keeps returning it after analyze_stats, instead of
+    being pruned by a zone map sealed from the session's reading (hours
+    later)."""
+    from fourmc_spark.format.writer import write_file
+    from fourmc_spark.operators.maintenance import analyze_stats
+
+    ddl = "ts timestamp"
+    d = str(tmp_path / "la1")
+    os.makedirs(d)
+    write_file(os.path.join(d, "a.4mz"), b'{"ts": "2024-01-02 03:04:05"}\n',
+               codec="zstd")
+    tz_key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/Los_Angeles")
+
+    def _hits():
+        return (spark.read.format("fourmc").option("jsonschema", ddl).load(d)
+                .filter("ts <= timestamp'2024-01-01 20:00:00'").count())
+
+    try:
+        before = _hits()
+        analyze_stats(spark, d, ddl)
+        after = _hits()
+    finally:
+        spark.conf.set(tz_key, prev)
+    assert before == after == 1
+
+
+@pytest.mark.parametrize("ext", ["zst", "lz4_fast"])
+def test_analyze_seals_file_tier_only_for_unindexed_containers(
+    spark, tmp_path, ext
+):
+    """A container without a footer index is read whole, one slice a
+    file, and its lines' offsets are stream positions, not blocks: the
+    zone and bloom builds seal its file tier only (no one-line "blocks"
+    or "bloom_blocks" entries), and the scan still prunes by it."""
+    import json as _json
+
+    from pyspark.sql.datasource import CaseInsensitiveDict, EqualTo
+
+    from fourmc_spark.format.hadoop_stream import write_hadoop_file
+    from fourmc_spark.format.writer import write_zst_file
+    from fourmc_spark.operators.maintenance import analyze_bloom, analyze_stats
+    from fourmc_spark.sources.datasource import (
+        STATS_SUFFIX, FourMcDataSourceReader, _parse_flat_ddl,
+    )
+
+    d = str(tmp_path / "unindexed")
+    os.makedirs(d)
+    p = os.path.join(d, f"a.{ext}")
+    data = b"".join(b'{"k": %d}\n' % i for i in range(2000))
+    if ext == "zst":
+        write_zst_file(p, data)
+    else:
+        write_hadoop_file(p, data, "lz4", block_size=1000)
+    ddl = "k bigint"
+    assert analyze_stats(spark, d, ddl)["rows"] == 2000
+    analyze_bloom(spark, d, ddl, ["k"], bits=1 << 14, block_bits=1 << 10)
+    meta = _json.load(open(p + STATS_SUFFIX))
+    assert meta["columns"]["k"] == {"min": 0, "max": 1999, "nulls": 0}
+    assert "bloom" in meta
+    assert "blocks" not in meta and "bloom_blocks" not in meta
+    rd = FourMcDataSourceReader(
+        CaseInsensitiveDict({"path": d, "jsonschema": ddl}),
+        _parse_flat_ddl(ddl),
+    )
+    list(rd.pushFilters([EqualTo(("k",), 5000)]))
+    assert [p for p in iter_slices(rd.partitions()) if p.path] == []
+    typed = spark.read.format("fourmc").option("jsonschema", ddl).load(d)
+    assert typed.filter(F.col("k") == 1234).count() == 1
+
+
+def test_analyze_stats_malformed_line_raises_and_seals_nothing(
+    spark, tmp_path
+):
+    """A line the typed scan cannot parse fails analyze_stats with the
+    scan's own error, and no sidecar is sealed for data the pruning scan
+    cannot read."""
+    from fourmc_spark.format.writer import write_file
+    from fourmc_spark.operators.maintenance import analyze_stats
+
+    d = str(tmp_path / "bad")
+    os.makedirs(d)
+    write_file(os.path.join(d, "a.4mz"),
+               b'{"k": 1}\n{"k": 2\n{"k": 3}\n', codec="zstd")
+    # Arrow's ArrowInvalid (a ValueError), raised in the task
+    with pytest.raises(Exception, match="ArrowInvalid: JSON parse error"):
+        spark.read.format("fourmc").option("jsonschema", "k bigint") \
+            .load(d).collect()
+    with pytest.raises(Exception, match="ArrowInvalid: JSON parse error"):
+        analyze_stats(spark, d, "k bigint")
+    assert glob.glob(f"{d}/*.stats.json") == []
 
 
 def test_zone_nan_double_never_prunes_matching_rows(spark, tmp_path):

@@ -583,6 +583,38 @@ def test_proto_analyze_split_ranges_identical_sidecar(spark, tmp_path):
     assert res2["rows"] == res1["rows"] == 1500
 
 
+def test_proto_reanalyze_keeps_valid_bloom_tiers(spark, tmp_path):
+    """analyze_stats_proto without bloom_columns, over a file whose
+    sidecar holds valid bloom tiers, rebuilds the zone map and keeps
+    both bloom tiers — analyze_stats' rule — instead of dropping them."""
+    import json as _json
+
+    from fourmc_spark.operators.maintenance import analyze_stats_proto
+
+    d = str(tmp_path / "pkeep")
+    users = _users(600)
+    spark.createDataFrame(
+        [(u["userId"], u["name"], u["type"], u["birthDate"], u["tags"])
+         for u in users],
+        "userId string, name string, type string, birthDate long, "
+        "tags array<string>",
+    ).coalesce(1).write.format("fourmcproto") \
+     .option("recordsperblock", 20).option("blocksize", 2048) \
+     .mode("overwrite").save(d)
+    analyze_stats_proto(spark, d, bloom_columns=["userId"],
+                        bloom_bits=1 << 12, bloom_block_bits=1 << 10)
+    sc_path = glob.glob(f"{d}/*.stats.json")[0]
+    first = _json.load(open(sc_path))
+    assert first["bloom"]["userId"] and first["bloom_blocks"]["blocks"]
+    res = analyze_stats_proto(spark, d)
+    again = _json.load(open(sc_path))
+    assert res["rows"] == 600
+    assert again["bloom"] == first["bloom"]
+    assert again["bloom_blocks"] == first["bloom_blocks"]
+    assert again["columns"] == first["columns"]
+    assert again["blocks"] == first["blocks"]
+
+
 @pytest.mark.parametrize("ext", ["zst", "lz4_fast"])
 def test_proto_sink_rejects_unindexed_codec(spark, tmp_path, ext):
     """The proto sink frames EB records in 4mc/4mz only: a codec naming a

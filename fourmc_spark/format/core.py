@@ -24,7 +24,7 @@ from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
 from typing import BinaryIO
 
-from .native import xxh32
+from .native import decompress_at, xxh32, xxh32_at
 
 __all__ = [
     "MAGIC_4MC",
@@ -46,6 +46,7 @@ __all__ = [
     "encode_block",
     "decode_block_header",
     "read_block",
+    "decode_block",
     "encode_eos",
     "encode_footer",
     "decode_footer",
@@ -250,6 +251,38 @@ def read_block(f: BinaryIO) -> tuple[bytes, int, int, int, bytes] | None:
     if len(payload) != fields[1]:
         raise BadBlockError("truncated block payload")
     return (header, *fields, payload)
+
+
+def decode_block(
+    codec: str, src, off: int, csize: int, usize: int, checksum: int,
+    verify: bool = True, out=None, out_off: int = 0,
+):
+    """Decode the block payload ``src[off:off+csize]`` — the one 4mc
+    block-decode rule: the xxh32 check (when *verify*), stored-raw
+    passthrough when ``csize == usize`` (``native/4mc.c:305-331``), the
+    lz4/zstd decode, and any codec failure raised as a
+    :class:`BadBlockError`.
+
+    With *out*, the block decodes in place into
+    ``out[out_off:out_off+usize]`` and *out* is returned. Without, the
+    decoded block is returned: a fresh buffer, or, for a stored-raw
+    block, the payload itself (*src* when it is exactly the payload).
+    """
+    if verify and xxh32_at(src, off, csize) != checksum:
+        raise BadBlockError("block checksum mismatch")
+    if csize == usize:
+        if out is None:
+            return src[off:off + csize]
+        out[out_off:out_off + usize] = memoryview(src)[off:off + csize]
+        return out
+    if out is None:
+        out, out_off = bytearray(usize), 0
+    try:
+        decompress_at(codec, src, off, csize, out, out_off, usize)
+    except ValueError as e:
+        # codec-level failure (bad frame, size mismatch) = corrupt block
+        raise BadBlockError(str(e)) from e
+    return out
 
 
 def encode_eos() -> bytes:

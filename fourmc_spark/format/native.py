@@ -1,30 +1,24 @@
 """Native compression/hash primitives for the 4mc/4mz formats.
 
-Binds the *same* C libraries the reference uses through JNI
-(`/root/reference/native/jniCompressor.c`, `jniDecompressor.c`):
+Binds the *same* C libraries the reference binds through JNI
+(``native/jniCompressor.c``, ``jniDecompressor.c``), and nothing else.
+Like the reference's ``FourMcNativeCodeLoader`` there is no fallback:
+the three libraries are required.
 
-* LZ4 raw-block compress/decompress (``LZ4_compress_default`` /
-  ``LZ4_compress_HC`` / ``LZ4_decompress_safe``) via ``liblz4``.
-* ZSTD single-frame compress/decompress (``ZSTD_compress`` /
-  ``ZSTD_decompress``) via ``libzstd``.
-* XXH32 checksums via ``libxxhash`` (reference seed is always 0:
-  ``native/4mc.c:311``, ``FourMcOutputStream.java:74``).
+* ``liblz4``: raw LZ4 blocks (``LZ4_compress_default`` /
+  ``LZ4_compress_HC`` / ``LZ4_decompress_safe``).
+* ``libzstd``: ZSTD frames, one-shot (``ZSTD_compress`` /
+  ``ZSTD_decompress``) and streaming (the CStream/DStream API).
+* ``libxxhash``: XXH32 block checksums (the reference's seed is always
+  0: ``native/4mc.c:311``, ``FourMcOutputStream.java:74``) and the XXH64
+  behind bloom hashing.
 
-When a shared library is unavailable we fall back to ``pyarrow``
-codecs (``lz4_raw``/``zstd``) and pure-Python/numpy xxHash. The
-fallbacks are slower, and only decoding is interchangeable with the
-native path:
+Every C symbol is bound once, at import. A missing library raises
+:class:`ImportError` naming it; a library too old to export a symbol
+raises ctypes' :class:`AttributeError` naming the symbol.
 
-* decoding is cross-compatible — each side reads the other's output,
-  and the checksums are the same hashes;
-* the lz4 fallback ignores the level: pyarrow's ``lz4_raw`` has no HC
-  mode, so every level writes what ``fast`` writes;
-* the zstd fallback's output bytes differ from libzstd's at every
-  level (both are valid frames).
-
-Level semantics below are the native path's; they mirror
-``native/4mc.c:243-253`` and the zstd level table in
-``Readme.md:30-33``:
+Level semantics mirror ``native/4mc.c:243-253`` and the zstd level
+table in ``Readme.md:30-33``:
 
 * lz4:  fast = LZ4 default, medium = LZ4HC-2 (the reference's custom
   LZ4MC mode is an unreleased lz4 fork; reading is unaffected since
@@ -36,7 +30,6 @@ Level semantics below are the native path's; they mirror
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 import os
 import threading
 
@@ -45,18 +38,19 @@ __all__ = [
     "xxh32_at",
     "xxh64",
     "xxh64_array",
+    "decompress_at",
     "lz4_compress",
+    "lz4_compress_raw",
     "lz4_decompress",
-    "lz4_decompress_at",
+    "lz4_decompress_raw",
     "zstd_compress",
+    "zstd_compress_raw",
     "zstd_decompress",
-    "zstd_decompress_at",
+    "zstd_decompress_raw",
+    "zstd_stream_decompress_chunks",
     "ZstdStreamCompressor",
     "LZ4_LEVELS",
     "ZSTD_LEVELS",
-    "HAVE_NATIVE_XXHASH",
-    "HAVE_NATIVE_LZ4",
-    "HAVE_NATIVE_ZSTD",
 ]
 
 # codec level names -> native parameter (reference: native/4mc.c:243-253,
@@ -64,6 +58,61 @@ __all__ = [
 # / ZstdUltraCompressor.java:45)
 LZ4_LEVELS = {"fast": 0, "medium": 2, "high": 4, "ultra": 8}
 ZSTD_LEVELS = {"fast": 1, "medium": 3, "high": 6, "ultra": 12}
+
+
+def _load(lib: str, *names: str) -> ctypes.CDLL:
+    for n in names:
+        try:
+            return ctypes.CDLL(n)
+        except OSError:
+            continue
+    raise ImportError(
+        f"fourmc_spark needs the {lib} shared library (tried {', '.join(names)})"
+    )
+
+
+def _bind(lib: ctypes.CDLL, name: str, restype, *argtypes):
+    """C function *name* of *lib* with its signature set."""
+    fn = getattr(lib, name)
+    fn.restype, fn.argtypes = restype, list(argtypes)
+    return fn
+
+
+_xxh = _load("libxxhash", "libxxhash.so.0", "libxxhash.so", "libxxhash.dylib")
+_lz4 = _load("liblz4", "liblz4.so.1", "liblz4.so", "liblz4.dylib")
+_zstd = _load("libzstd", "libzstd.so.1", "libzstd.so", "libzstd.dylib")
+
+
+class _ZstdBuffer(ctypes.Structure):  # ZSTD_inBuffer / ZSTD_outBuffer
+    _fields_ = [
+        ("dst", ctypes.c_void_p),
+        ("size", ctypes.c_size_t),
+        ("pos", ctypes.c_size_t),
+    ]
+
+
+_P, _SZ, _INT = ctypes.c_void_p, ctypes.c_size_t, ctypes.c_int
+_BUF = ctypes.POINTER(_ZstdBuffer)
+
+_XXH32 = _bind(_xxh, "XXH32", ctypes.c_uint32, _P, _SZ, ctypes.c_uint32)
+_XXH64 = _bind(_xxh, "XXH64", ctypes.c_uint64, _P, _SZ, ctypes.c_uint64)
+_LZ4_compress_default = _bind(_lz4, "LZ4_compress_default", _INT, _P, _P, _INT, _INT)
+_LZ4_compress_HC = _bind(_lz4, "LZ4_compress_HC", _INT, _P, _P, _INT, _INT, _INT)
+_LZ4_decompress_safe = _bind(_lz4, "LZ4_decompress_safe", _INT, _P, _P, _INT, _INT)
+_ZSTD_compress = _bind(_zstd, "ZSTD_compress", _SZ, _P, _SZ, _P, _SZ, _INT)
+_ZSTD_decompress = _bind(_zstd, "ZSTD_decompress", _SZ, _P, _SZ, _P, _SZ)
+_ZSTD_isError = _bind(_zstd, "ZSTD_isError", ctypes.c_uint, _SZ)
+_ZSTD_getErrorCode = _bind(_zstd, "ZSTD_getErrorCode", _INT, _SZ)
+_ZSTD_getErrorName = _bind(_zstd, "ZSTD_getErrorName", ctypes.c_char_p, _SZ)
+_ZSTD_createDStream = _bind(_zstd, "ZSTD_createDStream", _P)
+_ZSTD_freeDStream = _bind(_zstd, "ZSTD_freeDStream", _SZ, _P)
+_ZSTD_DCtx_setParameter = _bind(_zstd, "ZSTD_DCtx_setParameter", _SZ, _P, _INT, _INT)
+_ZSTD_decompressStream = _bind(_zstd, "ZSTD_decompressStream", _SZ, _P, _BUF, _BUF)
+_ZSTD_createCStream = _bind(_zstd, "ZSTD_createCStream", _P)
+_ZSTD_freeCStream = _bind(_zstd, "ZSTD_freeCStream", _SZ, _P)
+_ZSTD_initCStream = _bind(_zstd, "ZSTD_initCStream", _SZ, _P, _INT)
+_ZSTD_compressStream = _bind(_zstd, "ZSTD_compressStream", _SZ, _P, _BUF, _BUF)
+_ZSTD_endStream = _bind(_zstd, "ZSTD_endStream", _SZ, _P, _BUF)
 
 
 _tls = threading.local()
@@ -85,66 +134,39 @@ def _scratch(cap: int):
     return buf
 
 
-def _load(*names: str):
-    for n in names:
-        try:
-            return ctypes.CDLL(n)
-        except OSError:
-            continue
-    return None
-
-
-_xxh = _load("libxxhash.so.0", "libxxhash.so", "libxxhash.dylib")
-_lz4 = _load("liblz4.so.1", "liblz4.so", "liblz4.dylib")
-_zstd = _load("libzstd.so.1", "libzstd.so", "libzstd.dylib")
-
-HAVE_NATIVE_XXHASH = _xxh is not None
-HAVE_NATIVE_LZ4 = _lz4 is not None
-HAVE_NATIVE_ZSTD = _zstd is not None
-
-
 def _addr_at(buf, off: int) -> tuple[int, object]:
     """(address of buf[off], keep-alive object) without copying.
 
     `buf` is ``bytes`` (read-only OK — ``c_char_p`` shares the buffer) or a
-    writable buffer (``bytearray``/``memoryview``). The keep-alive object
-    must stay referenced until the C call returns.
+    writable buffer (``bytearray``/``memoryview``/numpy). The keep-alive
+    object must stay referenced until the C call returns.
     """
     if isinstance(buf, bytes):
         p = ctypes.c_char_p(buf)
         return ctypes.cast(p, ctypes.c_void_p).value + off, p
-    arr = (ctypes.c_char * 1).from_buffer(buf, off)
+    arr = (ctypes.c_char * 0).from_buffer(buf, off)
     return ctypes.addressof(arr), arr
 
 # ---------------------------------------------------------------------------
 # XXH32
 # ---------------------------------------------------------------------------
 
-if _xxh is not None:
-    _xxh.XXH32.restype = ctypes.c_uint32
-    _xxh.XXH32.argtypes = [ctypes.c_void_p, ctypes.c_size_t, ctypes.c_uint32]
 
-    def xxh32(data: bytes, seed: int = 0) -> int:
-        """32-bit xxHash of *data* (reference checksum primitive)."""
-        return int(_xxh.XXH32(bytes(data), len(data), seed))
+def xxh32(data: bytes, seed: int = 0) -> int:
+    """32-bit xxHash of *data* (reference checksum primitive)."""
+    return int(_XXH32(bytes(data), len(data), seed))
 
-    def xxh32_at(buf, off: int, n: int, seed: int = 0) -> int:
-        """Zero-copy XXH32 of ``buf[off:off+n]`` (bytes or writable buffer)."""
-        if n == 0:
-            return xxh32(b"", seed)
-        addr, keep = _addr_at(buf, off)
-        h = int(_xxh.XXH32(addr, n, seed))
-        del keep
-        return h
 
-else:  # pragma: no cover - exercised only without libxxhash
-    xxh32 = None  # assigned below after the pure-Python impl
+def xxh32_at(buf, off: int, n: int, seed: int = 0) -> int:
+    """Zero-copy XXH32 of ``buf[off:off+n]`` (bytes or writable buffer)."""
+    addr, keep = _addr_at(buf, off)
+    h = int(_XXH32(addr, n, seed))
+    del keep
+    return h
 
-    def xxh32_at(buf, off: int, n: int, seed: int = 0) -> int:
-        return xxh32(bytes(memoryview(buf)[off : off + n]), seed)
 
-# Pure-Python XXH32 (reference algorithm; kept for environments without
-# libxxhash and as a cross-check in tests).
+# Pure-Python XXH32: the reference algorithm, which the tests check
+# libxxhash against.
 _P1, _P2, _P3, _P4, _P5 = (
     2654435761,
     2246822519,
@@ -200,9 +222,6 @@ def xxh32_py(data: bytes, seed: int = 0) -> int:
     return h
 
 
-if xxh32 is None:  # pragma: no cover
-    xxh32 = xxh32_py
-
 # ---------------------------------------------------------------------------
 # XXH64 — the hash behind Spark's `xxhash64` expression (seed 42), verified
 # bit-identical in tests/test_bloom.py. Every bloom builder (the sink's
@@ -211,6 +230,12 @@ if xxh32 is None:  # pragma: no cover
 # the planner (sources/datasource.py) hashes its few probe values with
 # `xxh64`.
 # ---------------------------------------------------------------------------
+
+
+def xxh64(data: bytes, seed: int = 0) -> int:
+    """64-bit xxHash of *data* (unsigned)."""
+    return int(_XXH64(bytes(data), len(data), seed))
+
 
 _P64_1 = 0x9E3779B185EBCA87
 _P64_2 = 0xC2B2AE3D27D4EB4F
@@ -230,15 +255,15 @@ def xxh64_array(arr, seed: int = 0) -> "np.ndarray":
     single bytes and the avalanche. uint64 arithmetic wraps, exactly as
     the C reference's does."""
     import numpy as np
-    import pyarrow as pa
 
-    t = arr.type
-    if pa.types.is_large_string(t) or pa.types.is_large_binary(t):
-        off_dtype = np.int64
-    elif pa.types.is_string(t) or pa.types.is_binary(t):
-        off_dtype = np.int32
-    else:
-        raise TypeError(f"xxh64_array: string or binary array expected, got {t}")
+    off_dtype = {
+        "string": np.int32, "binary": np.int32,
+        "large_string": np.int64, "large_binary": np.int64,
+    }.get(str(arr.type))
+    if off_dtype is None:
+        raise TypeError(
+            f"xxh64_array: string or binary array expected, got {arr.type}"
+        )
     n = len(arr)
     if n == 0:
         return np.empty(0, dtype=np.uint64)
@@ -327,477 +352,89 @@ def xxh64_array(arr, seed: int = 0) -> "np.ndarray":
     return h
 
 
-if _xxh is not None:
-    _xxh.XXH64.restype = ctypes.c_uint64
-    _xxh.XXH64.argtypes = [ctypes.c_void_p, ctypes.c_size_t, ctypes.c_uint64]
-
-    def xxh64(data: bytes, seed: int = 0) -> int:
-        """64-bit xxHash of *data* (unsigned)."""
-        return int(_xxh.XXH64(bytes(data), len(data), seed))
-
-else:  # pragma: no cover - exercised only without libxxhash
-
-    def xxh64(data: bytes, seed: int = 0) -> int:
-        """64-bit xxHash of *data* (unsigned): the array kernel on a
-        one-element array."""
-        import pyarrow as pa
-
-        return int(xxh64_array(pa.array([bytes(data)], pa.binary()), seed)[0])
-
 # ---------------------------------------------------------------------------
-# LZ4 raw blocks
+# LZ4 blocks and ZSTD frames
 # ---------------------------------------------------------------------------
 
-if _lz4 is not None:
-    _lz4.LZ4_compress_default.restype = ctypes.c_int
-    _lz4.LZ4_compress_default.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_char_p,
-        ctypes.c_int,
-        ctypes.c_int,
-    ]
-    _lz4.LZ4_compress_HC.restype = ctypes.c_int
-    _lz4.LZ4_compress_HC.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_char_p,
-        ctypes.c_int,
-        ctypes.c_int,
-        ctypes.c_int,
-    ]
-    _lz4.LZ4_decompress_safe.restype = ctypes.c_int
-    _lz4.LZ4_decompress_safe.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_char_p,
-        ctypes.c_int,
-        ctypes.c_int,
-    ]
-    # second binding with pointer args for the zero-copy *_at path
-    _lz4_dec_ptr = ctypes.CFUNCTYPE(
-        ctypes.c_int,
-        ctypes.c_void_p,
-        ctypes.c_void_p,
-        ctypes.c_int,
-        ctypes.c_int,
-    )(("LZ4_decompress_safe", _lz4))
 
-    def lz4_compress(data: bytes, level: int = 0) -> bytes | None:
-        """Raw LZ4 block compress.
-
-        Returns ``None`` when the payload cannot be shrunk by at least one
-        byte — the caller then stores the block uncompressed, mirroring the
-        reference's passthrough rule (``native/4mc.c:305-331``,
-        ``FourMcOutputStream.java:204-215``).
-        """
-        if not data:
+def _compress(codec: str, data: bytes, level: int, cap: int) -> bytes | None:
+    """*data* as one LZ4 block or ZSTD frame of at most *cap* bytes, or
+    None when it does not fit."""
+    if cap <= 0:
+        return None
+    dst = _scratch(cap)
+    if codec == "zstd":
+        n = _ZSTD_compress(dst, cap, data, len(data), level)
+        if _ZSTD_isError(n):
             return None
-        cap = len(data) - 1
-        if cap <= 0:
-            return None
-        dst = _scratch(cap)
-        if level <= 0:
-            n = _lz4.LZ4_compress_default(data, dst, len(data), cap)
-        else:
-            n = _lz4.LZ4_compress_HC(data, dst, len(data), cap, level)
+    else:
+        n = (
+            _LZ4_compress_default(data, dst, len(data), cap)
+            if level <= 0
+            else _LZ4_compress_HC(data, dst, len(data), cap, level)
+        )
         if n <= 0:
             return None
-        return ctypes.string_at(ctypes.addressof(dst), n)
-
-    def lz4_decompress(data: bytes, uncompressed_size: int) -> bytes:
-        out = bytearray(uncompressed_size)
-        dst = (ctypes.c_char * uncompressed_size).from_buffer(out)
-        n = _lz4.LZ4_decompress_safe(data, dst, len(data), uncompressed_size)
-        del dst  # release the exported buffer before returning
-        if n != uncompressed_size:
-            raise ValueError(
-                f"corrupt LZ4 block: decoded {n} bytes, expected {uncompressed_size}"
-            )
-        return out
-
-    def lz4_decompress_at(src, src_off, csize, dst, dst_off, usize) -> None:
-        """Zero-copy decode of ``src[src_off:src_off+csize]`` into
-        ``dst[dst_off:dst_off+usize]`` (dst must be writable)."""
-        saddr, skeep = _addr_at(src, src_off)
-        daddr, dkeep = _addr_at(dst, dst_off)
-        n = _lz4_dec_ptr(saddr, daddr, csize, usize)
-        del skeep, dkeep
-        if n != usize:
-            raise ValueError(
-                f"corrupt LZ4 block: decoded {n} bytes, expected {usize}"
-            )
-
-else:  # pragma: no cover - pyarrow fallback
-    import pyarrow as _pa
-
-    _lz4_codec = _pa.Codec("lz4_raw")
-
-    def lz4_compress(data: bytes, level: int = 0) -> bytes | None:
-        if not data:
-            return None
-        out = _lz4_codec.compress(data).to_pybytes()
-        return out if len(out) < len(data) else None
-
-    def lz4_decompress(data: bytes, uncompressed_size: int) -> bytes:
-        out = _lz4_codec.decompress(data, uncompressed_size).to_pybytes()
-        if len(out) != uncompressed_size:
-            raise ValueError("corrupt LZ4 block")
-        return out
-
-    def lz4_decompress_at(src, src_off, csize, dst, dst_off, usize) -> None:
-        chunk = bytes(memoryview(src)[src_off : src_off + csize])
-        memoryview(dst)[dst_off : dst_off + usize] = lz4_decompress(chunk, usize)
+    return ctypes.string_at(ctypes.addressof(dst), n)
 
 
-# ---------------------------------------------------------------------------
-# ZSTD frames
-# ---------------------------------------------------------------------------
-
-if _zstd is not None:
-    _zstd.ZSTD_compress.restype = ctypes.c_size_t
-    _zstd.ZSTD_compress.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_size_t,
-        ctypes.c_char_p,
-        ctypes.c_size_t,
-        ctypes.c_int,
-    ]
-    _zstd.ZSTD_decompress.restype = ctypes.c_size_t
-    _zstd.ZSTD_decompress.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_size_t,
-        ctypes.c_char_p,
-        ctypes.c_size_t,
-    ]
-    _zstd.ZSTD_isError.restype = ctypes.c_uint
-    _zstd.ZSTD_isError.argtypes = [ctypes.c_size_t]
-    _zstd_dec_ptr = ctypes.CFUNCTYPE(
-        ctypes.c_size_t,
-        ctypes.c_void_p,
-        ctypes.c_size_t,
-        ctypes.c_void_p,
-        ctypes.c_size_t,
-    )(("ZSTD_decompress", _zstd))
-
-    def zstd_compress(data: bytes, level: int = 1) -> bytes | None:
-        """ZSTD frame compress; ``None`` when not shrinkable (passthrough)."""
-        if not data:
-            return None
-        cap = len(data) - 1
-        if cap <= 0:
-            return None
-        dst = _scratch(cap)
-        n = _zstd.ZSTD_compress(dst, cap, data, len(data), level)
-        if _zstd.ZSTD_isError(n):
-            return None  # dstSize_tooSmall -> store raw
-        return ctypes.string_at(ctypes.addressof(dst), n)
-
-    def zstd_decompress(data: bytes, uncompressed_size: int) -> bytes:
-        out = bytearray(uncompressed_size)
-        dst = (ctypes.c_char * uncompressed_size).from_buffer(out)
-        n = _zstd.ZSTD_decompress(dst, uncompressed_size, data, len(data))
-        del dst
-        if _zstd.ZSTD_isError(n) or n != uncompressed_size:
-            raise ValueError(
-                f"corrupt ZSTD block: expected {uncompressed_size} bytes"
-            )
-        return out
-
-    def zstd_decompress_at(src, src_off, csize, dst, dst_off, usize) -> None:
-        """Zero-copy decode of ``src[src_off:src_off+csize]`` into
-        ``dst[dst_off:dst_off+usize]`` (dst must be writable)."""
-        saddr, skeep = _addr_at(src, src_off)
-        daddr, dkeep = _addr_at(dst, dst_off)
-        n = _zstd_dec_ptr(daddr, usize, saddr, csize)
-        del skeep, dkeep
-        if _zstd.ZSTD_isError(n) or n != usize:
-            raise ValueError(
-                f"corrupt ZSTD block: expected {usize} bytes"
-            )
-
-else:  # pragma: no cover - pyarrow fallback
-    import pyarrow as _pa
-
-    def zstd_compress(data: bytes, level: int = 1) -> bytes | None:
-        if not data:
-            return None
-        out = _pa.Codec("zstd", compression_level=level).compress(data).to_pybytes()
-        return out if len(out) < len(data) else None
-
-    def zstd_decompress(data: bytes, uncompressed_size: int) -> bytes:
-        out = _pa.Codec("zstd").decompress(data, uncompressed_size).to_pybytes()
-        if len(out) != uncompressed_size:
-            raise ValueError("corrupt ZSTD block")
-        return out
-
-    def zstd_decompress_at(src, src_off, csize, dst, dst_off, usize) -> None:
-        chunk = bytes(memoryview(src)[src_off : src_off + csize])
-        memoryview(dst)[dst_off : dst_off + usize] = zstd_decompress(chunk, usize)
+def _decompress_into(codec: str, src, src_off: int, csize: int, dst,
+                     dst_off: int, cap: int) -> int:
+    """Decode ``src[src_off:src_off+csize]`` into at most *cap* bytes at
+    ``dst[dst_off:]`` with no copy of either (dst must be writable);
+    returns the decoded size. A codec error is a ValueError."""
+    saddr, skeep = _addr_at(src, src_off)
+    daddr, dkeep = _addr_at(dst, dst_off)
+    if codec == "zstd":
+        n = _ZSTD_decompress(daddr, cap, saddr, csize)
+        err = _zstd_errname(n) if _ZSTD_isError(n) else None
+    else:
+        n = _LZ4_decompress_safe(saddr, daddr, csize, cap)
+        err = f"rc={n}" if n < 0 else None
+    del skeep, dkeep
+    if err is not None:
+        raise ValueError(f"corrupt {codec.upper()} block ({err})")
+    return n
 
 
-# ---------------------------------------------------------------------------
-# Streaming ZSTD decode (standard .zst files, reference ZstCodec.java):
-# frames from streaming writers carry no content size, so one-shot
-# ZSTD_decompress cannot size its buffer — use the DStream API.
-# ---------------------------------------------------------------------------
-
-if _zstd is not None and hasattr(_zstd, "ZSTD_createDStream"):
-
-    class _ZstdBuffer(ctypes.Structure):
-        _fields_ = [
-            ("dst", ctypes.c_void_p),
-            ("size", ctypes.c_size_t),
-            ("pos", ctypes.c_size_t),
-        ]
-
-    _zstd.ZSTD_createDStream.restype = ctypes.c_void_p
-    _zstd.ZSTD_freeDStream.argtypes = [ctypes.c_void_p]
-    _zstd.ZSTD_decompressStream.restype = ctypes.c_size_t
-    _zstd.ZSTD_decompressStream.argtypes = [
-        ctypes.c_void_p,
-        ctypes.POINTER(_ZstdBuffer),
-        ctypes.POINTER(_ZstdBuffer),
-    ]
-    _HAS_DCTX_PARAM = hasattr(_zstd, "ZSTD_DCtx_setParameter")
-    if _HAS_DCTX_PARAM:
-        _zstd.ZSTD_DCtx_setParameter.restype = ctypes.c_size_t
-        _zstd.ZSTD_DCtx_setParameter.argtypes = [
-            ctypes.c_void_p, ctypes.c_int, ctypes.c_int,
-        ]
-    _ZSTD_D_WINDOWLOGMAX = 100  # enum ZSTD_d_windowLogMax (zstd.h)
-    # Frames from `zstd --long=N` piped input declare the FULL long-mode
-    # window (content size unknown), and libzstd's default decode limit
-    # (2^27) rejects them as if corrupt — the stock CLI needs an explicit
-    # --long on decode too. A cluster reader shouldn't: accept up to
-    # 2^30 (1 GiB window, an executor-sized bound against tiny frames
-    # demanding huge windows) by default, env-overridable — but grant it
-    # LAZILY: streams start at libzstd's own 2^27 limit, and only a
-    # frame that actually declares a larger window escalates the cap
-    # (header replay), so benign multi-stream readers never authorize
-    # 1 GiB allocations up front (ADVICE r6).
-    _WINDOW_LOG_MAX = int(os.environ.get("FOURMC_ZSTD_WINDOW_LOG_MAX", 30))
-    _WINDOW_LOG_DEFAULT = 27  # libzstd's built-in decode limit
-
-    if hasattr(_zstd, "ZSTD_getErrorCode"):
-        _zstd.ZSTD_getErrorCode.restype = ctypes.c_int
-        _zstd.ZSTD_getErrorCode.argtypes = [ctypes.c_size_t]
-    _ZSTD_ERROR_WINDOW_TOO_LARGE = 16  # zstd_errors.h, stable enum
-
-    def _zstd_errname(rc) -> str:
-        if hasattr(_zstd, "ZSTD_getErrorName"):
-            _zstd.ZSTD_getErrorName.restype = ctypes.c_char_p
-            return _zstd.ZSTD_getErrorName(rc).decode("ascii", "replace")
-        return ""
-
-    def _mk_dstream(window_log_max: int):
-        ds = _zstd.ZSTD_createDStream()
-        if not ds:
-            raise MemoryError("ZSTD_createDStream failed")
-        if _HAS_DCTX_PARAM:
-            rc = _zstd.ZSTD_DCtx_setParameter(
-                ds, _ZSTD_D_WINDOWLOGMAX, window_log_max
-            )
-            if _zstd.ZSTD_isError(rc):
-                # an out-of-range env override would otherwise silently
-                # leave the library default (2^27) in place — the
-                # opposite of what the knob promised
-                _zstd.ZSTD_freeDStream(ds)
-                raise ValueError(
-                    "FOURMC_ZSTD_WINDOW_LOG_MAX="
-                    f"{window_log_max} rejected by libzstd "
-                    "(valid range is 10..31)"
-                )
-        return ds
-
-    _max_validated: list = []  # last escalation target checked loudly
-
-    def _is_window_err(rc) -> bool:
-        if hasattr(_zstd, "ZSTD_getErrorCode"):
-            return (_zstd.ZSTD_getErrorCode(rc)
-                    == _ZSTD_ERROR_WINDOW_TOO_LARGE)
-        return "too much memory" in _zstd_errname(rc)
-
-    def zstd_stream_decompress_chunks(chunks) -> "Iterator[bytes]":
-        """Decode an iterable of compressed byte chunks into decompressed
-        chunks (handles multi-frame concatenation; O(chunk) memory)."""
-        cap = min(_WINDOW_LOG_DEFAULT, _WINDOW_LOG_MAX)
-        if (_WINDOW_LOG_MAX > _WINDOW_LOG_DEFAULT
-                and _max_validated != [_WINDOW_LOG_MAX]):
-            # validate the (possibly env-overridden) escalation target
-            # loudly at first open, not on first long-window frame
-            _zstd.ZSTD_freeDStream(_mk_dstream(_WINDOW_LOG_MAX))
-            _max_validated[:] = [_WINDOW_LOG_MAX]
-        ds = _mk_dstream(cap)
-        # consumed prefix of the current frame, kept while it could
-        # still be the (<= ~18 byte) header so a window-too-large
-        # escalation can replay it into a fresh context
-        hdr = bytearray()
-        try:
-            out_cap = 1 << 20
-            out_raw = ctypes.create_string_buffer(out_cap)
-            for chunk in chunks:
-                if not chunk:
-                    continue
-                src = ctypes.create_string_buffer(chunk, len(chunk))
-                inb = _ZstdBuffer(
-                    ctypes.cast(src, ctypes.c_void_p), len(chunk), 0
-                )
-                while inb.pos < inb.size:
-                    prev = inb.pos
-                    outb = _ZstdBuffer(
-                        ctypes.cast(out_raw, ctypes.c_void_p), out_cap, 0
-                    )
-                    rc = _zstd.ZSTD_decompressStream(
-                        ds, ctypes.byref(outb), ctypes.byref(inb)
-                    )
-                    if _zstd.ZSTD_isError(rc):
-                        if (cap < _WINDOW_LOG_MAX and _HAS_DCTX_PARAM
-                                and _is_window_err(rc)):
-                            # this frame really declares a long window:
-                            # escalate for THIS stream and replay the
-                            # frame header into a fresh context
-                            _zstd.ZSTD_freeDStream(ds)
-                            ds = None
-                            cap = _WINDOW_LOG_MAX
-                            ds = _mk_dstream(cap)
-                            chunk = bytes(hdr) + chunk[prev:]
-                            hdr.clear()
-                            src = ctypes.create_string_buffer(
-                                chunk, len(chunk))
-                            inb = _ZstdBuffer(
-                                ctypes.cast(src, ctypes.c_void_p),
-                                len(chunk), 0,
-                            )
-                            continue
-                        raise ValueError(
-                            "corrupt .zst stream (%s)" % _zstd_errname(rc))
-                    if inb.pos > prev and len(hdr) < 64:
-                        # keep only a header-sized prefix: escalation can
-                        # fire only while consumption is still inside the
-                        # <= ~18-byte frame header, so bytes past 64 can
-                        # never need replay (and an untruncated append
-                        # would pin up to a whole chunk per frame)
-                        hdr += chunk[prev:inb.pos][:64 - len(hdr)]
-                    if rc == 0:  # frame fully decoded: next bytes = header
-                        hdr.clear()
-                    if outb.pos:
-                        yield out_raw.raw[: outb.pos]
-        finally:
-            if ds is not None:
-                _zstd.ZSTD_freeDStream(ds)
-
-else:  # pragma: no cover - pyarrow fallback (frames with content size only)
-    def zstd_stream_decompress_chunks(chunks) -> "Iterator[bytes]":
-        import pyarrow as _pa2
-
-        data = b"".join(chunks)
-        if not data:
-            return
-        yield _pa2.Codec("zstd").decompress(data).to_pybytes()
+def decompress_at(codec: str, src, src_off: int, csize: int, dst,
+                  dst_off: int, usize: int) -> None:
+    """Zero-copy decode of the *codec* (``lz4``/``zstd``) block
+    ``src[src_off:src_off+csize]`` into ``dst[dst_off:dst_off+usize]``
+    (dst must be writable); any other decoded size is a ValueError."""
+    n = _decompress_into(codec, src, src_off, csize, dst, dst_off, usize)
+    if n != usize:
+        raise ValueError(
+            f"corrupt {codec.upper()} block: decoded {n} bytes, expected {usize}"
+        )
 
 
-# ---------------------------------------------------------------------------
-# Streaming ZSTD encode (standard .zst sink, reference ZstCodec.java:47-169 +
-# ZstdStreamCompressor.java:41-331): one frame for the whole stream, bounded
-# buffers, level clamped like the reference (invalid conf level -> 3,
-# ZstCodec.java:118-122).
-# ---------------------------------------------------------------------------
+def lz4_compress(data: bytes, level: int = 0) -> bytes | None:
+    """Raw LZ4 block compress.
 
-if _zstd is not None and hasattr(_zstd, "ZSTD_createCStream"):
-    _zstd.ZSTD_createCStream.restype = ctypes.c_void_p
-    _zstd.ZSTD_freeCStream.argtypes = [ctypes.c_void_p]
-    _zstd.ZSTD_initCStream.restype = ctypes.c_size_t
-    _zstd.ZSTD_initCStream.argtypes = [ctypes.c_void_p, ctypes.c_int]
-    _zstd.ZSTD_compressStream.restype = ctypes.c_size_t
-    _zstd.ZSTD_compressStream.argtypes = [
-        ctypes.c_void_p,
-        ctypes.POINTER(_ZstdBuffer),
-        ctypes.POINTER(_ZstdBuffer),
-    ]
-    _zstd.ZSTD_endStream.restype = ctypes.c_size_t
-    _zstd.ZSTD_endStream.argtypes = [
-        ctypes.c_void_p,
-        ctypes.POINTER(_ZstdBuffer),
-    ]
+    Returns ``None`` when the payload cannot be shrunk by at least one
+    byte — the caller then stores the block uncompressed, mirroring the
+    reference's passthrough rule (``native/4mc.c:305-331``,
+    ``FourMcOutputStream.java:204-215``).
+    """
+    return _compress("lz4", data, level, len(data) - 1)
 
-    class ZstdStreamCompressor:
-        """Incremental single-frame zstd encoder (CStream API).
 
-        ``compress(data)`` returns whatever compressed bytes are ready
-        (possibly empty — zstd buffers internally); ``finish()`` flushes
-        the epilogue. O(buffer) memory for streams of any length.
-        """
+def zstd_compress(data: bytes, level: int = 1) -> bytes | None:
+    """ZSTD frame compress; ``None`` when not shrinkable (passthrough)."""
+    return _compress("zstd", data, level, len(data) - 1)
 
-        def __init__(self, level: int = 1) -> None:
-            self._cs = _zstd.ZSTD_createCStream()
-            if not self._cs:
-                raise MemoryError("ZSTD_createCStream failed")
-            rc = _zstd.ZSTD_initCStream(self._cs, int(level))
-            if _zstd.ZSTD_isError(rc):
-                raise ValueError(f"bad zstd level {level}")
-            self._out_cap = 1 << 19  # 512 KiB output granule
-            self._out_raw = ctypes.create_string_buffer(self._out_cap)
-            self._done = False
 
-        def compress(self, data: bytes) -> bytes:
-            if self._done:
-                raise ValueError("compressor finished")
-            if not data:
-                return b""
-            src = ctypes.create_string_buffer(data, len(data))
-            inb = _ZstdBuffer(ctypes.cast(src, ctypes.c_void_p), len(data), 0)
-            parts = []
-            while inb.pos < inb.size:
-                outb = _ZstdBuffer(
-                    ctypes.cast(self._out_raw, ctypes.c_void_p), self._out_cap, 0
-                )
-                rc = _zstd.ZSTD_compressStream(
-                    self._cs, ctypes.byref(outb), ctypes.byref(inb)
-                )
-                if _zstd.ZSTD_isError(rc):
-                    raise ValueError("zstd stream compress failed")
-                if outb.pos:
-                    parts.append(self._out_raw.raw[: outb.pos])
-            return b"".join(parts)
+def lz4_decompress(data: bytes, uncompressed_size: int) -> bytearray:
+    out = bytearray(uncompressed_size)
+    decompress_at("lz4", data, 0, len(data), out, 0, uncompressed_size)
+    return out
 
-        def finish(self) -> bytes:
-            if self._done:
-                return b""
-            parts = []
-            while True:
-                outb = _ZstdBuffer(
-                    ctypes.cast(self._out_raw, ctypes.c_void_p), self._out_cap, 0
-                )
-                rc = _zstd.ZSTD_endStream(self._cs, ctypes.byref(outb))
-                if _zstd.ZSTD_isError(rc):
-                    raise ValueError("zstd stream finish failed")
-                if outb.pos:
-                    parts.append(self._out_raw.raw[: outb.pos])
-                if rc == 0:
-                    break
-            self._done = True
-            _zstd.ZSTD_freeCStream(self._cs)
-            self._cs = None
-            return b"".join(parts)
 
-else:  # pragma: no cover - pyarrow fallback (buffers the whole stream)
-    class ZstdStreamCompressor:  # type: ignore[no-redef]
-        def __init__(self, level: int = 1) -> None:
-            self._level = int(level)
-            self._buf = bytearray()
-            self._done = False
-
-        def compress(self, data: bytes) -> bytes:
-            if self._done:
-                raise ValueError("compressor finished")
-            self._buf.extend(data)
-            return b""
-
-        def finish(self) -> bytes:
-            import pyarrow as _pa3
-
-            self._done = True
-            return _pa3.Codec("zstd", self._level).compress(
-                bytes(self._buf)
-            ).to_pybytes()
+def zstd_decompress(data: bytes, uncompressed_size: int) -> bytearray:
+    out = bytearray(uncompressed_size)
+    decompress_at("zstd", data, 0, len(data), out, 0, uncompressed_size)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -809,94 +446,214 @@ else:  # pragma: no cover - pyarrow fallback (buffers the whole stream)
 # yield AT MOST the caller's bound (the block's remaining original size).
 # ---------------------------------------------------------------------------
 
-if _lz4 is not None:
 
-    def lz4_compress_raw(data: bytes, level: int = 0) -> bytes:
-        """LZ4 block compress at full compressBound capacity (never None)."""
-        cap = len(data) + len(data) // 255 + 16
-        dst = _scratch(cap)
-        if level <= 0:
-            n = _lz4.LZ4_compress_default(data, dst, len(data), cap)
-        else:
-            n = _lz4.LZ4_compress_HC(data, dst, len(data), cap, level)
-        if n <= 0:
-            raise ValueError("LZ4 compress failed")
-        return ctypes.string_at(ctypes.addressof(dst), n)
-
-    def lz4_decompress_raw(data: bytes, max_size: int) -> bytes:
-        """Decode into a *max_size*-capacity buffer; returns the actual
-        decoded bytes (may be fewer — multi-chunk Hadoop blocks)."""
-        out = bytearray(max_size)
-        dst = (ctypes.c_char * max_size).from_buffer(out) if max_size else None
-        n = _lz4.LZ4_decompress_safe(data, dst, len(data), max_size)
-        del dst
-        if n < 0:
-            raise ValueError(f"corrupt LZ4 chunk (rc={n})")
-        return bytes(out[:n])
-
-else:  # pragma: no cover - pyarrow fallback
-
-    def lz4_compress_raw(data: bytes, level: int = 0) -> bytes:
-        import pyarrow as _pa4
-
-        return _pa4.Codec("lz4_raw").compress(data).to_pybytes()
-
-    def lz4_decompress_raw(data: bytes, max_size: int) -> bytes:
-        # pyarrow needs the exact decompressed size; Hadoop blocks our
-        # writer (and the reference's 4 MiB-buffer compressors) produce
-        # are single-chunk, so max_size is exact for them. Multi-chunk
-        # blocks (one write larger than the buffer) decode to LESS than
-        # the remaining-block bound — surface a clear error instead of
-        # pyarrow's, since only native liblz4 can size those chunks.
-        import pyarrow as _pa4
-
-        try:
-            return _pa4.Codec("lz4_raw").decompress(data, max_size).to_pybytes()
-        except Exception as e:
-            raise ValueError(
-                "LZ4 chunk did not decode to the expected size; multi-chunk "
-                "Hadoop blocks need native liblz4 (pyarrow fallback cannot "
-                f"decode chunks of unknown size): {e}"
-            ) from e
+def _compress_raw(codec: str, data: bytes, level: int, cap: int) -> bytes:
+    out = _compress(codec, data, level, cap)
+    if out is None:
+        raise ValueError(f"{codec.upper()} compress failed")
+    return out
 
 
-if _zstd is not None:
-
-    def zstd_compress_raw(data: bytes, level: int = 1) -> bytes:
-        cap = len(data) + len(data) // 100 + 1024
-        dst = _scratch(cap)
-        n = _zstd.ZSTD_compress(dst, cap, data, len(data), level)
-        if _zstd.ZSTD_isError(n):
-            raise ValueError("ZSTD compress failed")
-        return ctypes.string_at(ctypes.addressof(dst), n)
-
-    def zstd_decompress_raw(data: bytes, max_size: int) -> bytes:
-        out = bytearray(max_size)
-        dst = (ctypes.c_char * max_size).from_buffer(out) if max_size else None
-        n = _zstd.ZSTD_decompress(dst, max_size, data, len(data))
-        del dst
-        if _zstd.ZSTD_isError(n):
-            raise ValueError("corrupt ZSTD chunk")
-        return bytes(out[:n])
-
-else:  # pragma: no cover - pyarrow fallback
-
-    def zstd_compress_raw(data: bytes, level: int = 1) -> bytes:
-        import pyarrow as _pa5
-
-        return _pa5.Codec("zstd", compression_level=level).compress(
-            data
-        ).to_pybytes()
-
-    def zstd_decompress_raw(data: bytes, max_size: int) -> bytes:
-        import pyarrow as _pa5
-
-        return _pa5.Codec("zstd").decompress(data, max_size).to_pybytes()
+def lz4_compress_raw(data: bytes, level: int = 0) -> bytes:
+    """LZ4 block compress at full compressBound capacity (never None)."""
+    return _compress_raw("lz4", data, level, len(data) + len(data) // 255 + 16)
 
 
-__all__ += [
-    "lz4_compress_raw",
-    "lz4_decompress_raw",
-    "zstd_compress_raw",
-    "zstd_decompress_raw",
-]
+def zstd_compress_raw(data: bytes, level: int = 1) -> bytes:
+    return _compress_raw("zstd", data, level, len(data) + len(data) // 100 + 1024)
+
+
+def _decompress_raw(codec: str, data: bytes, max_size: int) -> bytes:
+    """Decode into a *max_size*-capacity buffer; returns the actual
+    decoded bytes (may be fewer — multi-chunk Hadoop blocks)."""
+    out = bytearray(max_size)
+    n = _decompress_into(codec, data, 0, len(data), out, 0, max_size)
+    return bytes(memoryview(out)[:n])
+
+
+def lz4_decompress_raw(data: bytes, max_size: int) -> bytes:
+    return _decompress_raw("lz4", data, max_size)
+
+
+def zstd_decompress_raw(data: bytes, max_size: int) -> bytes:
+    return _decompress_raw("zstd", data, max_size)
+
+
+# ---------------------------------------------------------------------------
+# Streaming ZSTD decode (standard .zst files, reference ZstCodec.java):
+# frames from streaming writers carry no content size, so one-shot
+# ZSTD_decompress cannot size its buffer — use the DStream API.
+# ---------------------------------------------------------------------------
+
+_ZSTD_D_WINDOWLOGMAX = 100  # enum ZSTD_d_windowLogMax (zstd.h)
+_ZSTD_ERROR_WINDOW_TOO_LARGE = 16  # zstd_errors.h, stable enum
+# Frames from `zstd --long=N` piped input declare the FULL long-mode
+# window (content size unknown), and libzstd's default decode limit
+# (2^27) rejects them as if corrupt — the stock CLI needs an explicit
+# --long on decode too. A cluster reader shouldn't: accept up to
+# 2^30 (1 GiB window, an executor-sized bound against tiny frames
+# demanding huge windows) by default, env-overridable — but grant it
+# LAZILY: streams start at libzstd's own 2^27 limit, and only a
+# frame that actually declares a larger window escalates the cap
+# (header replay), so benign multi-stream readers never authorize
+# 1 GiB allocations up front (ADVICE r6).
+_WINDOW_LOG_MAX = int(os.environ.get("FOURMC_ZSTD_WINDOW_LOG_MAX", 30))
+_WINDOW_LOG_DEFAULT = 27  # libzstd's built-in decode limit
+
+
+def _zstd_errname(rc) -> str:
+    return _ZSTD_getErrorName(rc).decode("ascii", "replace")
+
+
+def _mk_dstream(window_log_max: int):
+    ds = _ZSTD_createDStream()
+    if not ds:
+        raise MemoryError("ZSTD_createDStream failed")
+    rc = _ZSTD_DCtx_setParameter(ds, _ZSTD_D_WINDOWLOGMAX, window_log_max)
+    if _ZSTD_isError(rc):
+        # an out-of-range env override would otherwise silently leave
+        # the library default (2^27) in place — the opposite of what
+        # the knob promised
+        _ZSTD_freeDStream(ds)
+        raise ValueError(
+            f"FOURMC_ZSTD_WINDOW_LOG_MAX={window_log_max} rejected by "
+            "libzstd (valid range is 10..31)"
+        )
+    return ds
+
+
+_max_validated: list = []  # last escalation target checked loudly
+
+
+def zstd_stream_decompress_chunks(chunks) -> "Iterator[bytes]":
+    """Decode an iterable of compressed byte chunks into decompressed
+    chunks (handles multi-frame concatenation; O(chunk) memory)."""
+    cap = min(_WINDOW_LOG_DEFAULT, _WINDOW_LOG_MAX)
+    if (_WINDOW_LOG_MAX > _WINDOW_LOG_DEFAULT
+            and _max_validated != [_WINDOW_LOG_MAX]):
+        # validate the (possibly env-overridden) escalation target
+        # loudly at first open, not on first long-window frame
+        _ZSTD_freeDStream(_mk_dstream(_WINDOW_LOG_MAX))
+        _max_validated[:] = [_WINDOW_LOG_MAX]
+    ds = _mk_dstream(cap)
+    # consumed prefix of the current frame, kept while it could
+    # still be the (<= ~18 byte) header so a window-too-large
+    # escalation can replay it into a fresh context
+    hdr = bytearray()
+    try:
+        out_cap = 1 << 20
+        out_raw = ctypes.create_string_buffer(out_cap)
+        for chunk in chunks:
+            if not chunk:
+                continue
+            src = ctypes.create_string_buffer(chunk, len(chunk))
+            inb = _ZstdBuffer(ctypes.cast(src, ctypes.c_void_p), len(chunk), 0)
+            while inb.pos < inb.size:
+                prev = inb.pos
+                outb = _ZstdBuffer(
+                    ctypes.cast(out_raw, ctypes.c_void_p), out_cap, 0
+                )
+                rc = _ZSTD_decompressStream(
+                    ds, ctypes.byref(outb), ctypes.byref(inb)
+                )
+                if _ZSTD_isError(rc):
+                    if (cap < _WINDOW_LOG_MAX and _ZSTD_getErrorCode(rc)
+                            == _ZSTD_ERROR_WINDOW_TOO_LARGE):
+                        # this frame really declares a long window:
+                        # escalate for THIS stream and replay the
+                        # frame header into a fresh context
+                        _ZSTD_freeDStream(ds)
+                        ds = None
+                        cap = _WINDOW_LOG_MAX
+                        ds = _mk_dstream(cap)
+                        chunk = bytes(hdr) + chunk[prev:]
+                        hdr.clear()
+                        src = ctypes.create_string_buffer(chunk, len(chunk))
+                        inb = _ZstdBuffer(
+                            ctypes.cast(src, ctypes.c_void_p), len(chunk), 0,
+                        )
+                        continue
+                    raise ValueError(
+                        "corrupt .zst stream (%s)" % _zstd_errname(rc))
+                if inb.pos > prev and len(hdr) < 64:
+                    # keep only a header-sized prefix: escalation can
+                    # fire only while consumption is still inside the
+                    # <= ~18-byte frame header, so bytes past 64 can
+                    # never need replay (and an untruncated append
+                    # would pin up to a whole chunk per frame)
+                    hdr += chunk[prev:inb.pos][:64 - len(hdr)]
+                if rc == 0:  # frame fully decoded: next bytes = header
+                    hdr.clear()
+                if outb.pos:
+                    yield out_raw.raw[: outb.pos]
+    finally:
+        if ds is not None:
+            _ZSTD_freeDStream(ds)
+
+
+# ---------------------------------------------------------------------------
+# Streaming ZSTD encode (standard .zst sink, reference ZstCodec.java:47-169 +
+# ZstdStreamCompressor.java:41-331): one frame for the whole stream, bounded
+# buffers, level clamped like the reference (invalid conf level -> 3,
+# ZstCodec.java:118-122).
+# ---------------------------------------------------------------------------
+
+
+class ZstdStreamCompressor:
+    """Incremental single-frame zstd encoder (CStream API).
+
+    ``compress(data)`` returns whatever compressed bytes are ready
+    (possibly empty — zstd buffers internally); ``finish()`` flushes
+    the epilogue. O(buffer) memory for streams of any length.
+    """
+
+    def __init__(self, level: int = 1) -> None:
+        self._cs = _ZSTD_createCStream()
+        if not self._cs:
+            raise MemoryError("ZSTD_createCStream failed")
+        rc = _ZSTD_initCStream(self._cs, int(level))
+        if _ZSTD_isError(rc):
+            raise ValueError(f"bad zstd level {level}")
+        self._out_cap = 1 << 19  # 512 KiB output granule
+        self._out_raw = ctypes.create_string_buffer(self._out_cap)
+        self._done = False
+
+    def _out(self) -> _ZstdBuffer:
+        return _ZstdBuffer(
+            ctypes.cast(self._out_raw, ctypes.c_void_p), self._out_cap, 0
+        )
+
+    def compress(self, data: bytes) -> bytes:
+        if self._done:
+            raise ValueError("compressor finished")
+        if not data:
+            return b""
+        src = ctypes.create_string_buffer(data, len(data))
+        inb = _ZstdBuffer(ctypes.cast(src, ctypes.c_void_p), len(data), 0)
+        parts = []
+        while inb.pos < inb.size:
+            outb = self._out()
+            rc = _ZSTD_compressStream(self._cs, ctypes.byref(outb), ctypes.byref(inb))
+            if _ZSTD_isError(rc):
+                raise ValueError("zstd stream compress failed")
+            if outb.pos:
+                parts.append(self._out_raw.raw[: outb.pos])
+        return b"".join(parts)
+
+    def finish(self) -> bytes:
+        if self._done:
+            return b""
+        parts = []
+        while True:
+            outb = self._out()
+            rc = _ZSTD_endStream(self._cs, ctypes.byref(outb))
+            if _ZSTD_isError(rc):
+                raise ValueError("zstd stream finish failed")
+            if outb.pos:
+                parts.append(self._out_raw.raw[: outb.pos])
+            if rc == 0:
+                break
+        self._done = True
+        _ZSTD_freeCStream(self._cs)
+        self._cs = None
+        return b"".join(parts)

@@ -9,8 +9,8 @@ this module is the multicore twin: identical bytes out, N× the speed.
 
 The C codec calls release the GIL (ctypes), so a plain thread pool scales
 near-linearly; the output buffer is preallocated once and every worker
-writes its slice in place via the zero-copy ``*_at`` bindings in
-:mod:`.native`.
+decodes its block in place through :func:`.core.decode_block`, the one
+block-decode rule the streaming scan also uses.
 """
 
 from __future__ import annotations
@@ -22,7 +22,6 @@ from typing import BinaryIO, Iterator
 import numpy as np
 
 from . import core
-from .native import lz4_decompress_at, xxh32_at, zstd_decompress_at
 
 __all__ = [
     "decompress_file_parallel",
@@ -51,10 +50,10 @@ def _block_extents(offsets: list[int], file_size: int) -> list[int]:
 
 def _parse_blocks(
     buf, offsets: list[int], ends: list[int], base: int
-) -> list[tuple[int, int, int, int, bool]]:
+) -> list[tuple[int, int, int, int]]:
     """Parse block headers inside *buf* (file bytes starting at *base*).
 
-    Returns ``(payload_off, usize, csize, checksum, stored_raw)`` per block
+    Returns ``(payload_off, usize, csize, checksum)`` per block
     and cross-checks each block's framed size against the footer-derived
     extent — the decoder's index/stream consistency check
     (`native/4mc.c:560-707`).
@@ -73,7 +72,7 @@ def _parse_blocks(
                 f"block at {off} frames {csize} payload bytes but the footer "
                 f"index places the next block at {end}"
             )
-        blocks.append((rel + core.BLOCK_HEADER_SIZE, usize, csize, checksum, csize == usize))
+        blocks.append((rel + core.BLOCK_HEADER_SIZE, usize, csize, checksum))
     return blocks
 
 
@@ -94,7 +93,7 @@ def _alloc_output(blocks) -> tuple[np.ndarray, list[int]]:
 
 def _decode_blocks_into(
     src,
-    blocks: list[tuple[int, int, int, int, bool]],
+    blocks: list[tuple[int, int, int, int]],
     out,
     out_offs: list[int],
     codec: str,
@@ -105,21 +104,9 @@ def _decode_blocks_into(
     plain loop when *pool* is None (no executor dispatch)."""
 
     def work(i: int) -> None:
-        poff, usize, csize, checksum, raw = blocks[i]
-        if verify and xxh32_at(src, poff, csize) != checksum:
-            raise core.BadBlockError("block checksum mismatch")
-        ooff = out_offs[i]
-        try:
-            if raw:
-                out[ooff : ooff + usize] = memoryview(src)[poff : poff + csize]
-            elif codec == "lz4":
-                lz4_decompress_at(src, poff, csize, out, ooff, usize)
-            else:
-                zstd_decompress_at(src, poff, csize, out, ooff, usize)
-        except core.FourMcFormatError:
-            raise
-        except ValueError as e:
-            raise core.BadBlockError(str(e)) from e
+        poff, usize, csize, checksum = blocks[i]
+        core.decode_block(codec, src, poff, csize, usize, checksum, verify,
+                          out, out_offs[i])
 
     if pool is None:
         for i in range(len(blocks)):

@@ -27,7 +27,7 @@ from typing import BinaryIO, Iterator
 
 from . import core
 from .hadoop_stream import iter_hadoop_blocks
-from .native import lz4_decompress, zstd_decompress, zstd_stream_decompress_chunks
+from .native import zstd_stream_decompress_chunks
 
 __all__ = [
     "read_index",
@@ -61,27 +61,6 @@ def read_index(f: BinaryIO, file_size: int | None = None) -> tuple[int, core.Blo
     return magic, core.BlockIndex(offsets)
 
 
-def _decode_payload(
-    codec: str, payload: bytes, uncompressed_size: int, stored_raw: bool, verify: bool,
-    checksum: int,
-) -> bytes:
-    from .native import xxh32
-
-    if verify and xxh32(payload) != checksum:
-        raise core.BadBlockError("block checksum mismatch")
-    if stored_raw:
-        return payload
-    try:
-        if codec == "lz4":
-            return lz4_decompress(payload, uncompressed_size)
-        return zstd_decompress(payload, uncompressed_size)
-    except core.FourMcFormatError:
-        raise
-    except ValueError as e:
-        # codec-level failure (bad frame, size mismatch) = corrupt block
-        raise core.BadBlockError(str(e)) from e
-
-
 def iter_block_payloads(
     f: BinaryIO,
     codec: str,
@@ -97,9 +76,7 @@ def iter_block_payloads(
     pos = start_offset
     while (block := core.read_block(f)) is not None:
         _, usize, csize, checksum, payload = block
-        yield pos, _decode_payload(
-            codec, payload, usize, csize == usize, verify, checksum
-        )
+        yield pos, core.decode_block(codec, payload, 0, csize, usize, checksum, verify)
         pos += core.BLOCK_HEADER_SIZE + csize
 
 

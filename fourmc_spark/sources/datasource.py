@@ -876,8 +876,9 @@ class _TypedNdjsonParser:
 
     On the quoted-NaN/Infinity ArrowInvalid (Spark's to_json serializes
     non-finite doubles as quoted strings), retries once after rewriting
-    those tokens for the declared float columns; any other parse
-    failure names the value-mode + from_json fallback."""
+    those tokens for the declared float columns; every parse failure
+    raises one ValueError naming the value-mode + from_json fallback,
+    whatever columns the schema declares."""
 
     #: the record model's all-null line (see :func:`_parse_lines`)
     empty_line = "{}"
@@ -924,9 +925,8 @@ class _TypedNdjsonParser:
             return pj.read_json(
                 pa.BufferReader(ndjson), parse_options=self.opts
             ), False
-        except pa.ArrowInvalid:
-            if not self.float_cols and self.date_retry_opts is None:
-                raise
+        except pa.ArrowInvalid as e:
+            err = e
         raw = ndjson if isinstance(ndjson, bytes) else ndjson.to_pybytes()
         attempts = []
         if self.float_cols:
@@ -936,7 +936,6 @@ class _TypedNdjsonParser:
             attempts.append((raw, self.date_retry_opts, True))
             if self.float_cols:
                 attempts.append((fixed, self.date_retry_opts, True))
-        err = None
         for buf, opts, native_dates in attempts:
             try:
                 return pj.read_json(
@@ -1715,10 +1714,14 @@ def _sanitize_pv(v) -> str:
 
 
 def _split_by_partition(batch, pcols: list[str]):
-    """Yield (reldir, sub_batch) per distinct partition-column combo.
+    """Yield (reldir, sub_batch) per distinct partition-column combo;
+    with no partition columns, the whole batch under reldir "".
 
     Partition columns are low-cardinality by contract, so per-batch
     distinct+filter (Arrow compute, no Python row loop) stays cheap."""
+    if not pcols:
+        yield "", batch
+        return
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -2115,26 +2118,13 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                 if len(full_batch) == 0:
                     continue
                 for batch in _sub_batches(full_batch):
-                    if not self.partition_cols:
-                        _writer_for("").write(
-                            _join_lines(batch.column(self.value_col))
-                        )
-                        if self.stats_schema is not None:
-                            _accumulate_stats(
-                                "", batch.column(self.value_col)
-                            )
-                        _roll_if_needed("")
-                        continue
                     for reldir, sub in _split_by_partition(
                         batch, self.partition_cols
                     ):
-                        _writer_for(reldir).write(
-                            _join_lines(sub.column(self.value_col))
-                        )
+                        values = sub.column(self.value_col)
+                        _writer_for(reldir).write(_join_lines(values))
                         if self.stats_schema is not None:
-                            _accumulate_stats(
-                                reldir, sub.column(self.value_col)
-                            )
+                            _accumulate_stats(reldir, values)
                         _roll_if_needed(reldir)
         finally:
             for reldir in list(streams):

@@ -1890,7 +1890,9 @@ def test_analyze_stats_malformed_line_raises_and_seals_nothing(
 ):
     """A line the typed scan cannot parse fails analyze_stats with the
     scan's own error, and no sidecar is sealed for data the pruning scan
-    cannot read."""
+    cannot read. The error is the same typed ValueError naming the
+    value-mode + from_json fallback whether or not the schema declares
+    a float column (which adds a quoted-NaN retry)."""
     from fourmc_spark.format.writer import write_file
     from fourmc_spark.operators.maintenance import analyze_stats
 
@@ -1898,13 +1900,15 @@ def test_analyze_stats_malformed_line_raises_and_seals_nothing(
     os.makedirs(d)
     write_file(os.path.join(d, "a.4mz"),
                b'{"k": 1}\n{"k": 2\n{"k": 3}\n', codec="zstd")
-    # Arrow's ArrowInvalid (a ValueError), raised in the task
-    with pytest.raises(Exception, match="ArrowInvalid: JSON parse error"):
-        spark.read.format("fourmc").option("jsonschema", "k bigint") \
-            .load(d).collect()
-    with pytest.raises(Exception, match="ArrowInvalid: JSON parse error"):
-        analyze_stats(spark, d, "k bigint")
-    assert glob.glob(f"{d}/*.stats.json") == []
+    # raised in the task, so Spark wraps it
+    err = r"ValueError: fourmc jsonschema: typed parse failed.*from_json"
+    for ddl in ("k bigint", "k bigint, x double"):
+        with pytest.raises(Exception, match=err):
+            spark.read.format("fourmc").option("jsonschema", ddl) \
+                .load(d).collect()
+        with pytest.raises(Exception, match=err):
+            analyze_stats(spark, d, ddl)
+        assert glob.glob(f"{d}/*.stats.json") == []
 
 
 def test_zone_nan_double_never_prunes_matching_rows(spark, tmp_path):

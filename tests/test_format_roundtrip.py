@@ -6,6 +6,9 @@ import io
 import os
 import random
 import struct
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -29,6 +32,38 @@ def test_xxh32_pure_python_matches_native(n):
     data = bytes(RNG.getrandbits(8) for _ in range(n))
     for seed in (0, 1, 0xDEADBEEF):
         assert native.xxh32_py(data, seed) == native.xxh32(data, seed)
+
+
+# A script that imports the codec module while ctypes refuses to load
+# one shared library (argv[1]); it prints the import's outcome.
+_REFUSE_LIB = textwrap.dedent("""
+    import ctypes, sys
+    lib, real = sys.argv[1], ctypes.CDLL
+    def refuse(name, *args, **kwargs):
+        if str(name).startswith(lib):
+            raise OSError(f"{name}: cannot open shared object file")
+        return real(name, *args, **kwargs)
+    ctypes.CDLL = refuse
+    try:
+        import fourmc_spark.format.native
+    except ImportError as e:
+        print(f"ImportError: {e}")
+    else:
+        print("imported")
+""")
+
+
+@pytest.mark.parametrize("lib", ["liblz4", "libzstd", "libxxhash"])
+def test_missing_codec_library_fails_import(lib):
+    # the codecs have no fallback: without one of the three libraries
+    # the import fails and names it
+    r = subprocess.run(
+        [sys.executable, "-c", _REFUSE_LIB, lib],
+        capture_output=True, text=True, timeout=120,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert r.returncode == 0, r.stderr
+    assert r.stdout.startswith("ImportError: ") and lib in r.stdout, r.stdout
 
 
 # ---------------------------------------------------------------------------

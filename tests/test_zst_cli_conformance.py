@@ -87,8 +87,6 @@ def test_out_of_range_window_knob_fails_loudly(monkeypatch):
     # silently keep the 2^27 default
     from fourmc_spark.format import native
 
-    if not getattr(native, "_HAS_DCTX_PARAM", False):
-        pytest.skip("libzstd without ZSTD_DCtx_setParameter")
     monkeypatch.setattr(native, "_WINDOW_LOG_MAX", 50)
     with pytest.raises(ValueError, match="FOURMC_ZSTD_WINDOW_LOG_MAX"):
         _read_all(_cli(DATA[:100], "-3"))
@@ -100,8 +98,6 @@ def test_window_beyond_cap_still_rejected(monkeypatch):
     # libzstd reason, not OOM the executor
     from fourmc_spark.format import native
 
-    if not getattr(native, "_HAS_DCTX_PARAM", False):
-        pytest.skip("libzstd without ZSTD_DCtx_setParameter")
     blob = _cli(DATA, "-3", "--long=30")
     monkeypatch.setattr(native, "_WINDOW_LOG_MAX", 27)
     with pytest.raises(ValueError, match="corrupt .zst stream"):

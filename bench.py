@@ -25,7 +25,10 @@ captures). Both the I/O pass and the query pass are bracketed by a
 hardware canary; the query pass always runs >=2 full rounds and
 publishes per-query minima, unhealthy passes are retried (bounded), and
 every pass's canary readings land in the "load" block so any capture is
-self-describing.
+self-describing. A canary is unhealthy below MIN_GFLOPS or below half
+the best reading on record (the previous BENCH_DETAIL.json's, or any of
+this capture's); "load" carries that best as ``canary_best`` and the
+worst reading's share of it as ``canary_rel``.
 """
 
 from __future__ import annotations
@@ -650,6 +653,8 @@ def _canary() -> dict:
     t0 = time.perf_counter()
     (a @ a).sum()
     gflops = round(2 * 1024 ** 3 / (time.perf_counter() - t0) / 1e9, 1)
+    global _canary_best
+    _canary_best = max(_canary_best or 0.0, gflops)
     return {"zlib1t_mbps": zlib_mbps, "blas_gflops": gflops}
 
 
@@ -662,10 +667,54 @@ def _loadavg1() -> float | None:
 
 
 MIN_GFLOPS = float(os.environ.get("SPARK_GRAFT_MIN_GFLOPS", 10))
+#: a reading below this share of the best canary on record is unhealthy:
+#: the absolute floor passes a steady steal of 23-40 GFLOPs on a host
+#: that does ~180
+MIN_CANARY_REL = 0.5
+#: the best BLAS reading on record: main() seeds it from the previous
+#: capture's BENCH_DETAIL.json, and every live _canary() raises it
+_canary_best: float | None = None
+
+
+def _recorded_canary_best(detail_path: str) -> float | None:
+    """The best canary of the capture that wrote *detail_path*: its
+    ``canary_best`` when recorded, else its largest ``blas_gflops``."""
+    try:
+        with open(detail_path) as f:
+            load = json.load(f).get("load", {})
+    except (OSError, ValueError):
+        return None
+    if isinstance(load.get("canary_best"), (int, float)):
+        return float(load["canary_best"])
+    found = []
+
+    def walk(v):
+        if isinstance(v, dict):
+            g = v.get("blas_gflops")
+            if isinstance(g, (int, float)):
+                found.append(float(g))
+            for x in v.values():
+                walk(x)
+        elif isinstance(v, list):
+            for x in v:
+                walk(x)
+
+    walk(load)
+    return max(found, default=None)
+
+
+def _canary_rel(canary: dict) -> float | None:
+    """*canary*'s BLAS reading as a share of the best on record."""
+    if not _canary_best:
+        return None
+    return round(canary["blas_gflops"] / _canary_best, 3)
 
 
 def _healthy(canary: dict) -> bool:
-    return canary["blas_gflops"] >= MIN_GFLOPS
+    rel = _canary_rel(canary)
+    return canary["blas_gflops"] >= MIN_GFLOPS and (
+        rel is None or rel >= MIN_CANARY_REL
+    )
 
 
 def _settle_canary(waited: float, budget: float) -> tuple[dict, dict, float]:
@@ -917,6 +966,10 @@ def main() -> None:
 
     from fourmc_spark.session import get_spark
 
+    global _canary_best
+    here = os.path.dirname(os.path.abspath(__file__))
+    detail_path = os.path.join(here, "BENCH_DETAIL.json")
+    _canary_best = _recorded_canary_best(detail_path)
     loadinfo = _settle_load()
     tmpdir = tempfile.mkdtemp(prefix="fourmc-bench-")
     try:
@@ -956,11 +1009,17 @@ def main() -> None:
         # regression diffs read this file); stdout gets ONE compact JSON
         # line — round 1's full dict overflowed the driver's line capture
         # and BENCH_r01 recorded parsed:null.
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
         loadinfo["loadavg_end"] = _loadavg1()
         loadinfo["canary_end"] = _canary()
+        # the worst reading of this capture against the best on record
+        # (the previous capture's best or any reading of this one)
+        readings = [loadinfo[k] for k in
+                    ("canary_first", "canary_start", "canary_end")] + [
+            m[k] for m in io_meta + q_meta
+            for k in ("canary_start", "canary_end")
+        ]
+        loadinfo["canary_best"] = _canary_best
+        loadinfo["canary_rel"] = min(_canary_rel(c) for c in readings)
         derived = _sessionize_floor(q_meta)
         with open(detail_path, "w") as f:
             json.dump(
@@ -1050,12 +1109,7 @@ def main() -> None:
         # to BENCH_DETAIL.json so a truncated stdout capture can always be
         # reconstructed (r9's round-over-round comparison died to exactly
         # that). stdout itself still carries ONE json line.
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH_LINE.json"
-            ),
-            "w",
-        ) as f:
+        with open(os.path.join(here, "BENCH_LINE.json"), "w") as f:
             f.write(line + "\n")
         print(line)
         spark.stop()

@@ -22,6 +22,7 @@ Re-implements the read path of the reference
 from __future__ import annotations
 
 import os
+import random
 import struct
 from typing import BinaryIO, Iterator
 
@@ -96,6 +97,23 @@ def decompress_file(
     return decompress_file_parallel(path, threads=threads or 1, verify=verify)
 
 
+def bounded_put(cache: dict, limit: int, key, value) -> None:
+    """``cache[key] = value``, first evicting a random sixteenth of
+    *cache* when it holds *limit* entries. A planner asks for a table's
+    files in the same order every plan, so clearing when full, or
+    evicting the oldest entry, misses on every file of a table larger
+    than *limit*: the next file asked for is always one just evicted.
+    Random victims keep most of such a table warm and still let the
+    next table in. Safe under concurrent planners: ``list`` and ``pop``
+    on a str-keyed dict each run under one hold of the interpreter
+    lock, and a victim another thread evicted first is skipped."""
+    if len(cache) >= limit:
+        keys = list(cache)
+        for k in random.sample(keys, min(len(keys), max(1, limit // 16))):
+            cache.pop(k, None)
+    cache[key] = value
+
+
 _SCAN_INFO_CACHE: dict[
     str, tuple[tuple[int, int], bytes, tuple[str, int, list[int]]]
 ] = {}
@@ -130,9 +148,7 @@ def scan_file_info(path: str) -> tuple[str, int, list[int]]:
         info = (core.codec_for_magic(magic), size, index.offsets)
         f.seek(max(0, size - _FP_BYTES))
         fp = f.read(_FP_BYTES)
-    if len(_SCAN_INFO_CACHE) >= _SCAN_INFO_CACHE_MAX:
-        _SCAN_INFO_CACHE.clear()  # simple bound; planning repopulates
-    _SCAN_INFO_CACHE[path] = (key, fp, info)
+    bounded_put(_SCAN_INFO_CACHE, _SCAN_INFO_CACHE_MAX, path, (key, fp, info))
     return info
 
 

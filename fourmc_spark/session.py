@@ -8,6 +8,8 @@ bench share this builder so plans are comparable.
 from __future__ import annotations
 
 import os
+import re
+import site
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -63,9 +65,33 @@ def get_spark(
         # bounded by the factory conf below (workers respawn on demand).
         .config("spark.python.factory.idleWorkerMaxPoolSize", "32")
     )
+    if _local_workers_import_package(master):
+        # task workers fork from a daemon that sheds the pyspark/py4j
+        # zips and the spark-core jar from sys.path, so the per-task
+        # importlib.invalidate_caches() stops re-reading their
+        # directories (fourmc_spark/_daemon.py)
+        b = b.config("spark.python.daemon.module", "fourmc_spark._daemon")
     spark = b.getOrCreate()
     register_fourmc(spark)
     return spark
+
+
+def _local_workers_import_package(master: str) -> bool:
+    """True iff *master* runs Python workers on this host, outside Spark
+    Connect, with this package's root on the path they start with: the
+    driver's working directory, ``PYTHONPATH`` or site-packages."""
+    if os.environ.get("SPARK_REMOTE") or os.environ.get(
+        "SPARK_CONNECT_MODE_ENABLED"
+    ):
+        return False
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return False
+    root = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    reach = [
+        os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(), site.getusersitepackages(),
+    ]
+    return any(p and os.path.realpath(p) == root for p in reach)
 
 
 @contextmanager

@@ -64,6 +64,7 @@ from pyspark.sql.types import (
 )
 
 from fourmc_spark.format.core import CONTAINERS, container_for_codec
+from fourmc_spark.format.reader import bounded_put
 
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 # Cap on blocks per split: bounds a partition's UNCOMPRESSED size at
@@ -1185,9 +1186,10 @@ def _tighten(bound: list, side: int, v, inclusive: bool) -> None:
 #: string dominates json.loads); the fingerprint pread is ~10 µs.
 #: Stale/invalid sidecars negative-cache (the _STALE sentinel) so a
 #: rewritten-but-not-re-ANALYZEd tree doesn't re-parse every fat
-#: sidecar on every plan. Bounded with the sibling cache's atomic
-#: clear (a fat sidecar parses to ~200 KB, so 2048 entries tops out
-#: ~400 MB on the driver — small next to the O(files) split plan).
+#: sidecar on every plan. Bounded like the sibling cache, by
+#: ``bounded_put``'s random eviction (a fat sidecar parses to ~200 KB,
+#: so 2048 entries tops out ~400 MB on the driver — small next to the
+#: O(files) split plan).
 _SIDECAR_CACHE: dict[str, tuple[tuple, bytes, object]] = {}
 _SIDECAR_CACHE_MAX = 2048
 _SIDECAR_FP_BYTES = 32
@@ -1238,9 +1240,7 @@ def _load_zone_sidecar(path: str):
         raw[:_SIDECAR_FP_BYTES]
         + raw[max(0, len(raw) - _SIDECAR_FP_BYTES):]
     )
-    if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-        _SIDECAR_CACHE.clear()  # atomic under concurrent planners
-    _SIDECAR_CACHE[path] = (key, fp, meta)
+    bounded_put(_SIDECAR_CACHE, _SIDECAR_CACHE_MAX, path, (key, fp, meta))
     return None if meta is _STALE else meta
 
 

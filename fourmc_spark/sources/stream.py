@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -41,6 +42,19 @@ from fourmc_spark.sources.datasource import (
     FourMcDataSourceReader, FourMcDataSourceWriter, _list_files,
     _staged_pairs, _sweep_staging, discard, land, retire, write_atomic,
 )
+
+#: the stream sink's commit markers under its output root (see
+#: FourMcStreamWriter) and the batch-scoped names it lands files under
+_SINK_HWB, _SINK_DONE = "_fourmc_sink_hwb", "_fourmc_sink_done"
+_SINK_NAME = re.compile(r"part-b(\d{10})-")
+
+
+def _read_marker(path: str) -> tuple[int, bool]:
+    try:
+        with open(path) as f:
+            return int(f.read().strip()), True
+    except (OSError, ValueError):
+        return -1, False  # no marker yet: first commit or a pre-marker tree
 
 
 class FourMcStreamReader(DataSourceStreamReader):
@@ -204,10 +218,28 @@ class FourMcStreamReader(DataSourceStreamReader):
             self._n_below = below
         return {"hwm": self._hwm_str, "n": self._n_below}
 
+    def _committed_list(self) -> list[str]:
+        """The listing minus our stream sink's batches above its
+        ``_fourmc_sink_done`` mark, read BEFORE the walk: the sink writes
+        that mark after the last rename of a batch, so every file at or
+        below it was in place when the walk began, while a batch still
+        landing (one file per hive directory, each visited at its own
+        moment of the walk) stays out until its commit finishes. Trees
+        without the mark list whole."""
+        done, known = _read_marker(os.path.join(self.path, _SINK_DONE))
+        files = self._list()
+        if not known:
+            return files
+        return [
+            f for f in files
+            if (m := _SINK_NAME.match(os.path.basename(f))) is None
+            or int(m.group(1)) <= done
+        ]
+
     def latestOffset(self) -> dict:
-        files = sorted(self._list())
         if self.ordered_names:
-            return self._latest_ordered(files)
+            return self._latest_ordered(self._committed_list())
+        files = sorted(self._list())
         if self._hwm is None:
             # first call on this instance: must be unbounded. The
             # engine's current offset (a restored checkpoint, or a prior
@@ -306,7 +338,9 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
     * ``_fourmc_sink_done`` — largest batchId whose commit FINISHED,
       written after the last rename.
 
-    A replayed batch at or below the DONE mark no-ops: the first
+    An ``orderednames`` reader of the same root lists no batch above
+    DONE, so it never takes an offset inside a commit that is still
+    landing. A replayed batch at or below the DONE mark no-ops: the first
     attempt's files stand untouched and the replay's staging is
     discarded. That matters beyond disk hygiene — sealed files are a
     live ordered-names consumer's offset domain, and re-renaming (or
@@ -343,14 +377,6 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
         # its own deterministic final names
         return self._w.write(iterator)
 
-    @staticmethod
-    def _read_marker(path: str) -> tuple[int, bool]:
-        try:
-            with open(path) as f:
-                return int(f.read().strip()), True
-        except (OSError, ValueError):
-            return -1, False  # no marker yet (first commit / pre-r9 output)
-
     def commit(self, messages, batchId: int) -> None:
         # See the class docstring for the marker protocol. Ordering per
         # commit: read markers -> (no-op | sweep) -> write HWB -> rename
@@ -358,14 +384,14 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
         # detectable; DONE after them makes a finished first attempt
         # immutable under replay (a live ordered-names consumer may
         # already hold its files as ingested offsets).
-        done_marker = os.path.join(self.path, "_fourmc_sink_done")
-        done, _ = self._read_marker(done_marker)
+        done_marker = os.path.join(self.path, _SINK_DONE)
+        done, _ = _read_marker(done_marker)
         if batchId <= done:
             # first attempt fully committed: it stands; discard replay
             discard(self.path, messages)
             return
-        marker = os.path.join(self.path, "_fourmc_sink_hwb")
-        last, known = self._read_marker(marker)
+        marker = os.path.join(self.path, _SINK_HWB)
+        last, known = _read_marker(marker)
         if not known or batchId <= last:
             # possible partial first attempt (crash mid-rename, or a
             # pre-marker output tree): supersede it. Deterministic

@@ -141,3 +141,31 @@ def test_bench_queries_robust_retries_until_healthy(monkeypatch):
     assert len(meta) == 3
     assert not any(m["healthy"] for m in meta)
     assert len(settles) == 2  # settled between passes, not after the last
+
+
+def test_healthy_uses_relative_floor_against_best_canary(monkeypatch):
+    # a steady steal of 23-40 GFLOPs on a host that does ~180 clears the
+    # absolute floor; the relative one catches it
+    monkeypatch.setattr(bench, "_canary_best", 180.0)
+    assert not bench._healthy({"blas_gflops": 40.0})
+    assert bench._healthy({"blas_gflops": 90.0})
+    assert bench._canary_rel({"blas_gflops": 45.0}) == 0.25
+    monkeypatch.setattr(bench, "_canary_best", None)
+    assert bench._healthy({"blas_gflops": 40.0})
+    assert bench._canary_rel({"blas_gflops": 40.0}) is None
+
+
+def test_recorded_canary_best_reads_previous_detail(tmp_path):
+    import json
+
+    p = tmp_path / "BENCH_DETAIL.json"
+    assert bench._recorded_canary_best(str(p)) is None  # no capture yet
+    p.write_text(json.dumps({"load": {
+        "canary_start": {"blas_gflops": 120.0},
+        "io_passes": [{"canary_end": {"blas_gflops": 181.5}}],
+    }}))
+    assert bench._recorded_canary_best(str(p)) == 181.5
+    p.write_text(json.dumps({"load": {
+        "canary_best": 200.0, "canary_start": {"blas_gflops": 120.0},
+    }}))
+    assert bench._recorded_canary_best(str(p)) == 200.0

@@ -557,6 +557,66 @@ def test_scan_info_cache_invalidates_on_rewrite(spark, tmp_path):
     assert size2 != size1 and len(offs2) > len(offs1)
 
 
+def test_planner_caches_stay_warm_above_their_bound(tmp_path, monkeypatch):
+    """A table with more files than the footer and sidecar caches hold
+    still plans warm the second time: clearing a full cache (or evicting
+    its oldest entry) misses on every file of such a table, plan after
+    plan, because the planner asks for files in the same order."""
+    import pyarrow as pa
+    from pyspark.sql.datasource import GreaterThanOrEqual
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from fourmc_spark.format import reader
+    from fourmc_spark.sources import datasource
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSourceReader, FourMcDataSourceWriter,
+    )
+
+    limit = 32
+    out = str(tmp_path / "t")
+    w = FourMcDataSourceWriter(
+        {"path": out, "codec": "lz4", "statsschema": "k bigint"},
+        StructType([StructField("value", StringType())]), True,
+    )
+    w.commit([
+        w.write(iter([pa.RecordBatch.from_arrays(
+            [pa.array([f'{{"k": {i}}}'])], ["value"]
+        )]))
+        for i in range(limit + 4)
+    ])
+
+    puts = {"footer": 0, "sidecar": 0}  # one put per cache miss
+    real_put = reader.bounded_put
+
+    def counting(name):
+        def put(cache, lim, key, value):
+            puts[name] += 1
+            real_put(cache, lim, key, value)
+        return put
+
+    for mod, name, cache in ((reader, "footer", "_SCAN_INFO_CACHE"),
+                             (datasource, "sidecar", "_SIDECAR_CACHE")):
+        monkeypatch.setattr(mod, cache, {})
+        monkeypatch.setattr(mod, cache + "_MAX", limit)
+        monkeypatch.setattr(mod, "bounded_put", counting(name))
+
+    def plan():
+        puts.update(footer=0, sidecar=0)
+        rd = FourMcDataSourceReader(
+            {"path": out, "jsonschema": "k bigint"},
+            StructType([StructField("k", LongType())]),
+        )
+        list(rd.pushFilters([GreaterThanOrEqual(("k",), 0)]))
+        rd.partitions()
+        return dict(puts)
+
+    assert plan() == {"footer": limit + 4, "sidecar": limit + 4}
+    assert len(reader._SCAN_INFO_CACHE) <= limit
+    assert len(datasource._SIDECAR_CACHE) <= limit
+    warm = {k: limit + 4 - v for k, v in plan().items()}
+    assert min(warm.values()) >= limit // 2, warm
+
+
 def test_read_4mc_csv_typed_with_header(spark, tmp_path):
     from fourmc_spark.format import write_file
     from fourmc_spark.sources import read_4mc_csv

@@ -924,6 +924,71 @@ def test_stream_source_ordered_names_composes_with_partitionby(tmp_path):
     assert new_dirs == {"0"}  # exactly the late batch's files
 
 
+def test_stream_source_ordered_names_skips_a_commit_still_landing(
+    tmp_path, monkeypatch
+):
+    """The sink lands one batch's files one hive dir at a time, and a
+    consumer walk can visit ``bucket=0`` before its ``…-000`` lands and
+    ``bucket=1`` after ``…-001`` does; the mark then jumps past
+    ``…-000`` and the next trigger raises the stray error. The offset
+    must cover whole commits only: one taken between two ``land`` calls
+    of batch 1 stays at batch 0's mark, and the next takes all of
+    batch 1."""
+    import pyarrow as pa
+    from pyspark.sql.datasource import CaseInsensitiveDict
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from fourmc_spark.sources import stream
+    from fourmc_spark.sources.stream import FourMcStreamReader, FourMcStreamWriter
+
+    out = str(tmp_path / "race_out")
+    os.makedirs(out)
+    wschema = StructType([
+        StructField("value", StringType()),
+        StructField("bucket", StringType()),
+    ])
+
+    def sink_batch(batch_id, rows):
+        w = FourMcStreamWriter(
+            CaseInsensitiveDict(
+                {"path": out, "codec": "zstd", "partitionby": "bucket"}
+            ),
+            wschema, overwrite=False,
+        )
+        msg = w.write(iter([pa.RecordBatch.from_pydict(
+            {"value": [r[0] for r in rows], "bucket": [r[1] for r in rows]}
+        )]))
+        w.commit([msg], batchId=batch_id)
+
+    r = FourMcStreamReader(
+        {"path": out, "orderednames": "true"},
+        StructType([StructField("offset", LongType()),
+                    StructField("value", StringType())]),
+    )
+    sink_batch(0, [("a0", "0"), ("a1", "1")])
+    first = r.latestOffset()
+    assert first == {"hwm": "part-b0000000000-00000-001.4mz", "n": 2}
+
+    mid = []
+    real_land = stream.land
+
+    def land(staged, final):
+        real_land(staged, final)
+        if not mid:  # the consumer's trigger fires between two lands
+            mid.append(r.latestOffset())
+
+    monkeypatch.setattr(stream, "land", land)
+    sink_batch(1, [("b0", "0"), ("b1", "1")])
+    assert mid == [first], "an offset took half of a landing commit"
+    end = r.latestOffset()
+    assert end == {"hwm": "part-b0000000001-00000-001.4mz", "n": 4}
+    got = sorted(
+        v for p in r.partitions(first, end)
+        for b in r.read(p) for v in b.column("value").to_pylist()
+    )
+    assert got == ["b0", "b1"]
+
+
 def test_cdc_apply_stream_merges_across_batches(spark, tmp_path):
     """3 changelog files drained one-per-trigger must compact to the same
     snapshot as a single batch latest-wins election over all rows."""

@@ -1,33 +1,40 @@
 """Multimodal column handling: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through Spark as `binary` columns with a metadata
-struct. The decode step is a Pandas-UDF `mapInPandas` pipeline — Arrow
-batches in, Arrow batches out — which is exactly the shape a real
-libjpeg/ffmpeg decode would take.
+struct. Every encode/decode kernel here is a per-row function under one
+runner, :func:`_map_rows`: a `mapInPandas` pipeline — Arrow batches in,
+Arrow batches out — which is exactly the shape a real libjpeg/ffmpeg
+decode would take.
 
 Decode is REAL for PPM/PGM/BMP, baseline JPEG, and PNG via the
 dependency-free codecs in :mod:`.imaging`, :mod:`.jpeg`, and :mod:`.png`
-(`decode_stub=False`, and the ``extract_image_features`` /
-``resize_image_stats`` operators): payload bytes are parsed as actual
-image files and pixels come back as numpy arrays inside the Arrow batch.
+(the ``extract_image_features`` / ``resize_image_stats`` operators and
+the codec round trips): payload bytes are parsed as actual image files
+and pixels come back as numpy arrays inside the Arrow batch.
 Progressive JPEG (SOF2) decodes too; only arithmetic/lossless/
-hierarchical JPEG still raises ``UnsupportedImageError``;
-the legacy `decode_stub=True` path keeps the deterministic fake
-dimensions for plumbing tests.
+hierarchical JPEG still raises ``UnsupportedImageError``.
+``resize_images`` and ``sample_frames`` never decode: they crop and
+slice the payload BYTES (md5-fingerprinted), the batch shapes of resize
+and 1→N frame fan-out over payloads no codec here parses.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+import struct
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from fourmc_spark.operators import av, imaging
+from fourmc_spark.operators.jpeg import decode_jpeg, encode_jpeg
+from fourmc_spark.operators.png import decode_png, encode_png
+
 __all__ = [
     "attach_binary_payload",
     "extract_audio_features",
-    "extract_features",
     "extract_image_features",
     "jpeg420_roundtrip_stats",
     "jpeg_cmyk_roundtrip_stats",
@@ -42,6 +49,76 @@ __all__ = [
     "synthesize_images",
     "synthesize_video",
 ]
+
+# Adobe APP14 segment, transform=2 (YCCK): jpeg_ycck_dispatch_stats
+# stamps it after SOI, since encode_jpeg never writes APP14
+_APP14_YCCK = (b"\xff\xee" + struct.pack(">H", 14) + b"Adobe"
+               + b"\x00\x64" + b"\x00\x00" + b"\x00\x00" + bytes([2]))
+
+
+def _map_rows(df: DataFrame, cols: list[str], out: str,
+              row: Callable[..., list[tuple]]) -> DataFrame:
+    """The one Arrow-batch loop under every operator here:
+    ``mapInPandas`` over ``df.select(*cols)``, calling ``row`` with each
+    input row's values. ``row`` returns that row's output tuples in the
+    column order of the ``out`` DDL — one for a 1→1 kernel, any number
+    for a 1→N fan-out — so the loop stays map-only, with no shuffle."""
+    names = [c.split()[0] for c in out.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = zip(*(pdf[c] for c in cols))
+            yield pd.DataFrame([t for vals in rows for t in row(*vals)],
+                               columns=names)
+
+    return df.select(*cols).mapInPandas(batches, schema=out)
+
+
+def _pix_sum(a: np.ndarray) -> int:
+    return int(a.sum(dtype=np.int64))
+
+
+def _lattice(d: int) -> np.ndarray:
+    """The closed-form RGB image of id ``d``: ``w = 4 + d % 13``,
+    ``h = 3 + d % 11``, ``v(x,y,c) = (3x + 7y + 11c + d) % 256``."""
+    x = np.arange(4 + d % 13, dtype=np.int64)[None, :, None]
+    y = np.arange(3 + d % 11, dtype=np.int64)[:, None, None]
+    c = np.arange(3, dtype=np.int64)[None, None, :]
+    return ((3 * x + 7 * y + 11 * c + d) % 256).astype(np.uint8)
+
+
+def _const(h: int, w: int, *px: int) -> np.ndarray:
+    """A constant (h, w, len(px)) image whose every pixel is ``px``."""
+    return np.full((h, w, len(px)), px, dtype=np.uint8)
+
+
+def _jfif(enc: bytes, dec: np.ndarray, ok: bool = True) -> tuple:
+    """The JPEG round trips' last two columns: ``pix_sum`` and
+    ``jpeg_bytes_ok`` (SOI + EOI framing, and the kernel's own ``ok``)."""
+    framed = enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"
+    return _pix_sum(dec), framed and ok
+
+
+def _encode_ycck(img: np.ndarray) -> bytes:
+    enc = encode_jpeg(img, quality=100)
+    return enc[:2] + _APP14_YCCK + enc[2:]
+
+
+def _roundtrip(df: DataFrame, id_col: str, image: Callable, encode: Callable,
+               decode: Callable, tail: Callable = _jfif,
+               out: str = "pix_sum long, jpeg_bytes_ok boolean") -> DataFrame:
+    """The one codec round trip: per id, ``encode(image(id))``, decode
+    those bytes with ``decode``, and report (id, width, height) of what
+    the DECODER saw plus ``tail(encoded, decoded)``, the columns of
+    ``out``. Balanced-id exchange (_balanced_ids), then map-only."""
+
+    def row(d):
+        enc = encode(image(d))
+        dec = decode(enc)
+        return [(d, dec.shape[1], dec.shape[0], *tail(enc, dec))]
+
+    return _map_rows(_balanced_ids(df, id_col), [id_col],
+                     f"{id_col} long, width long, height long, {out}", row)
 
 
 def _balanced_ids(df: DataFrame, id_col: str) -> DataFrame:
@@ -78,39 +155,18 @@ def synthesize_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     which makes every pixel statistic oracle-checkable in plain SQL.
     Output: (id, payload binary, fmt string).
     """
-    from fourmc_spark.operators import imaging
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, fmts = [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 4 + d % 13, 3 + d % 11
-                x = np.arange(w, dtype=np.int64)
-                y = np.arange(h, dtype=np.int64)
-                c = np.arange(3, dtype=np.int64)
-                v = (
-                    3 * x[None, :, None] + 7 * y[:, None, None]
-                    + 11 * c[None, None, :] + d
-                ) % 256
-                arr = v.astype(np.uint8)
-                if d % 2:
-                    payloads.append(imaging.encode_ppm(arr))
-                    fmts.append("ppm")
-                else:
-                    payloads.append(imaging.encode_bmp(arr))
-                    fmts.append("bmp")
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "fmt": fmts}
-            )
+    def row(d):
+        if d % 2:
+            return [(d, imaging.encode_ppm(_lattice(d)), "ppm")]
+        return [(d, imaging.encode_bmp(_lattice(d)), "bmp")]
 
     # NOT balanced: at ~0.1 ms/row this kernel is cheaper than the
     # 32-task Python stage setup an exchange costs (measured 0.9 s ->
     # 2.6 s at sf0.1); input splits parallelize it at cluster scale and
     # the whole synth->extract chain stays one fused map stage
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary, fmt string"
-    )
+    return _map_rows(df, [id_col],
+                     f"{id_col} long, payload binary, fmt string", row)
 
 
 def jpeg_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -138,38 +194,12 @@ def jpeg_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Output: (id, width, height, pix_sum, jpeg_bytes_ok).
     """
-    from fourmc_spark.operators.imaging import decode_image
-    from fourmc_spark.operators.jpeg import encode_jpeg
-
-    out_schema = (
-        f"{id_col} long, width long, height long, pix_sum long, "
-        "jpeg_bytes_ok boolean"
+    return _roundtrip(
+        df, id_col,
+        lambda d: np.full((4 + d % 11, 5 + d % 13), d % 256, np.uint8),
+        lambda img: encode_jpeg(img, quality=100),
+        imaging.decode_image,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, sums, oks = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h, v = 5 + d % 13, 4 + d % 11, d % 256
-                img = np.full((h, w), v, dtype=np.uint8)
-                enc = encode_jpeg(img, quality=100)
-                dec = decode_image(enc)
-                hs.append(dec.shape[0])
-                ws.append(dec.shape[1])
-                sums.append(int(dec.astype(np.int64).sum()))
-                oks.append(enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": np.asarray(ws, dtype=np.int64),
-                    "height": np.asarray(hs, dtype=np.int64),
-                    "pix_sum": np.asarray(sums, dtype=np.int64),
-                    "jpeg_bytes_ok": oks,
-                }
-            )
-
-    return _balanced_ids(df, id_col).mapInPandas(batches, schema=out_schema)
 
 
 def jpeg420_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -202,39 +232,13 @@ def jpeg420_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     covered by the gray and progressive roundtrip queries, whose
     chroma-free constructions are exact under BOTH arithmetic styles.
     """
-    from fourmc_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    out_schema = (
-        f"{id_col} long, width long, height long, pix_sum long, "
-        "jpeg_bytes_ok boolean"
+    return _roundtrip(
+        df, id_col,
+        lambda d: _const(9 + d % 17, 9 + d % 21,
+                         d % 256, d * 7 % 256, d * 13 % 256),
+        lambda img: encode_jpeg(img, quality=100, subsample=True),
+        decode_jpeg,  # pure-pinned, see docstring
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, sums, oks = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 9 + d % 21, 9 + d % 17
-                rgb = (d % 256, d * 7 % 256, d * 13 % 256)
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :] = rgb
-                enc = encode_jpeg(img, quality=100, subsample=True)
-                dec = decode_jpeg(enc)  # pure-pinned, see docstring
-                hs.append(dec.shape[0])
-                ws.append(dec.shape[1])
-                sums.append(int(dec.astype(np.int64).sum()))
-                oks.append(enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": np.asarray(ws, dtype=np.int64),
-                    "height": np.asarray(hs, dtype=np.int64),
-                    "pix_sum": np.asarray(sums, dtype=np.int64),
-                    "jpeg_bytes_ok": oks,
-                }
-            )
-
-    return _balanced_ids(df, id_col).mapInPandas(batches, schema=out_schema)
 
 
 def jpeg_progressive_roundtrip_stats(
@@ -269,42 +273,14 @@ def jpeg_progressive_roundtrip_stats(
     the other codec-roundtrip kernels (measured win for ~1 ms/row
     kernels).
     """
-    from fourmc_spark.operators.imaging import decode_image
-    from fourmc_spark.operators.jpeg import encode_jpeg
-
-    out_schema = (
-        f"{id_col} long, width long, height long, pix_sum long, "
-        "jpeg_bytes_ok boolean"
+    return _roundtrip(
+        df, id_col,
+        lambda d: _const(8 + d % 15, 8 + d % 19, *3 * [(7 * d + 3) % 256]),
+        lambda img: encode_jpeg(img, quality=100, subsample=True,
+                                progressive=True),
+        imaging.decode_image,
+        lambda enc, dec: _jfif(enc, dec, b"\xff\xc2" in enc),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, sums, oks = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 19, 8 + d % 15
-                v = (7 * d + 3) % 256
-                img = np.full((h, w, 3), v, dtype=np.uint8)
-                enc = encode_jpeg(img, quality=100, subsample=True,
-                                  progressive=True)
-                dec = decode_image(enc)
-                hs.append(dec.shape[0])
-                ws.append(dec.shape[1])
-                sums.append(int(dec.astype(np.int64).sum()))
-                oks.append(enc[:2] == b"\xff\xd8"
-                           and enc[-2:] == b"\xff\xd9"
-                           and b"\xff\xc2" in enc)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": np.asarray(ws, dtype=np.int64),
-                    "height": np.asarray(hs, dtype=np.int64),
-                    "pix_sum": np.asarray(sums, dtype=np.int64),
-                    "jpeg_bytes_ok": oks,
-                }
-            )
-
-    return _balanced_ids(df, id_col).mapInPandas(batches, schema=out_schema)
 
 
 def jpeg_cmyk_roundtrip_stats(
@@ -325,42 +301,15 @@ def jpeg_cmyk_roundtrip_stats(
     normalizes CMYK to RGB for display, while this query hashes the raw
     codec path. Scale shape: balanced-id exchange then map-only.
     """
-    from fourmc_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    out_schema = (
-        f"{id_col} long, width long, height long, pix_sum long, "
-        "jpeg_bytes_ok boolean"
+    return _roundtrip(
+        df, id_col,
+        lambda d: _const(6 + d % 13, 7 + d % 17,
+                         (d * 5 + 1) % 256, (d * 9 + 2) % 256,
+                         (d * 11 + 4) % 256, (d * 3 + 7) % 256),
+        lambda img: encode_jpeg(img, quality=100),
+        decode_jpeg,
+        lambda enc, dec: _jfif(enc, dec, dec.shape[2] == 4),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, sums, oks = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 7 + d % 17, 6 + d % 13
-                cmyk = ((d * 5 + 1) % 256, (d * 9 + 2) % 256,
-                        (d * 11 + 4) % 256, (d * 3 + 7) % 256)
-                img = np.empty((h, w, 4), dtype=np.uint8)
-                img[:, :] = cmyk
-                enc = encode_jpeg(img, quality=100)
-                dec = decode_jpeg(enc)
-                hs.append(dec.shape[0])
-                ws.append(dec.shape[1])
-                sums.append(int(dec.astype(np.int64).sum()))
-                oks.append(enc[:2] == b"\xff\xd8"
-                           and enc[-2:] == b"\xff\xd9"
-                           and dec.shape[2] == 4)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": np.asarray(ws, dtype=np.int64),
-                    "height": np.asarray(hs, dtype=np.int64),
-                    "pix_sum": np.asarray(sums, dtype=np.int64),
-                    "jpeg_bytes_ok": oks,
-                }
-            )
-
-    return _balanced_ids(df, id_col).mapInPandas(batches, schema=out_schema)
 
 
 def jpeg_ycck_dispatch_stats(
@@ -397,50 +346,15 @@ def jpeg_ycck_dispatch_stats(
     leaked raw 4-channel CMYK flips it false). Scale shape:
     balanced-id exchange then map-only, as the rest of the family.
     """
-    import struct as _struct
-
-    from fourmc_spark.operators.imaging import decode_image
-    from fourmc_spark.operators.jpeg import encode_jpeg
-
-    out_schema = (
-        f"{id_col} long, width long, height long, pix_sum long, "
-        "jpeg_bytes_ok boolean"
+    return _roundtrip(
+        df, id_col,
+        lambda d: _const(5 + d % 12, 6 + d % 16,
+                         (7 * d + 3) % 256, 128, 128, (3 * d + 7) % 256),
+        _encode_ycck,
+        imaging.decode_image,
+        lambda enc, dec: _jfif(enc, dec, b"\xff\xee" in enc
+                               and dec.ndim == 3 and dec.shape[2] == 3),
     )
-    app14 = (b"\xff\xee" + _struct.pack(">H", 14)
-             + b"Adobe" + b"\x00\x64" + b"\x00\x00" + b"\x00\x00"
-             + bytes([2]))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, sums, oks = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 6 + d % 16, 5 + d % 12
-                v = (7 * d + 3) % 256
-                k = (3 * d + 7) % 256
-                ycck = np.empty((h, w, 4), dtype=np.uint8)
-                ycck[:, :] = (v, 128, 128, k)
-                enc = encode_jpeg(ycck, quality=100)
-                enc = enc[:2] + app14 + enc[2:]
-                dec = decode_image(enc)
-                hs.append(dec.shape[0])
-                ws.append(dec.shape[1])
-                sums.append(int(dec.astype(np.int64).sum()))
-                oks.append(enc[:2] == b"\xff\xd8"
-                           and enc[-2:] == b"\xff\xd9"
-                           and b"\xff\xee" in enc
-                           and dec.ndim == 3 and dec.shape[2] == 3)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": np.asarray(ws, dtype=np.int64),
-                    "height": np.asarray(hs, dtype=np.int64),
-                    "pix_sum": np.asarray(sums, dtype=np.int64),
-                    "jpeg_bytes_ok": oks,
-                }
-            )
-
-    return _balanced_ids(df, id_col).mapInPandas(batches, schema=out_schema)
 
 
 def png_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -458,44 +372,11 @@ def png_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Output: (id, width, height, channels, pix_sum, png_bytes).
     """
-    from fourmc_spark.operators.png import decode_png, encode_png
-
-    out_schema = (
-        f"{id_col} long, width long, height long, channels long, "
-        "pix_sum long, png_bytes long"
+    return _roundtrip(
+        df, id_col, _lattice, encode_png, decode_png,
+        lambda enc, dec: (3, _pix_sum(dec), len(enc)),
+        "channels long, pix_sum long, png_bytes long",
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, sums, lens = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 4 + d % 13, 3 + d % 11
-                x = np.arange(w, dtype=np.int64)
-                y = np.arange(h, dtype=np.int64)
-                c = np.arange(3, dtype=np.int64)
-                v = (
-                    3 * x[None, :, None] + 7 * y[:, None, None]
-                    + 11 * c[None, None, :] + d
-                ) % 256
-                enc = encode_png(v.astype(np.uint8))
-                dec = decode_png(enc)
-                hs.append(dec.shape[0])
-                ws.append(dec.shape[1])
-                sums.append(int(dec.astype(np.int64).sum()))
-                lens.append(len(enc))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": np.asarray(ws, dtype=np.int64),
-                    "height": np.asarray(hs, dtype=np.int64),
-                    "channels": np.int64(3),
-                    "pix_sum": np.asarray(sums, dtype=np.int64),
-                    "png_bytes": np.asarray(lens, dtype=np.int64),
-                }
-            )
-
-    return _balanced_ids(df, id_col).mapInPandas(batches, schema=out_schema)
 
 
 def synthesize_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -504,26 +385,15 @@ def synthesize_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``rate = 8000 + 100 * (id % 9)``, with the closed-form sample lattice
     ``s(i, c) = ((7i + 11c + id) % 2048) - 1024`` — every sample
     statistic is SQL-recomputable. Output: (id, payload binary)."""
-    from fourmc_spark.operators import av
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                n, ch = 100 + d % 257, 1 + (d + 1) % 2
-                i = np.arange(n, dtype=np.int64)[:, None]
-                c = np.arange(ch, dtype=np.int64)[None, :]
-                s = ((7 * i + 11 * c + d) % 2048) - 1024
-                payloads.append(
-                    av.encode_wav(s.astype(np.int16), 8000 + 100 * (d % 9))
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def row(d):
+        i = np.arange(100 + d % 257, dtype=np.int64)[:, None]
+        c = np.arange(1 + (d + 1) % 2, dtype=np.int64)[None, :]
+        s = ((7 * i + 11 * c + d) % 2048) - 1024
+        return [(d, av.encode_wav(s.astype(np.int16), 8000 + 100 * (d % 9)))]
 
     # NOT balanced — same fused-chain reasoning as synthesize_images
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary"
-    )
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", row)
 
 
 def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -531,33 +401,17 @@ def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     integer-exact stats of the actual samples. Output:
     (id, n_samples, channels, sample_rate, amp_sum) where amp_sum =
     sum(|sample|) over all frames/channels."""
-    from fourmc_spark.operators import av
 
-    out_schema = (
-        f"{id_col} long, n_samples long, channels long, "
-        "sample_rate long, amp_sum long"
+    def row(d, payload):
+        arr, rate = av.decode_wav(bytes(payload))
+        amp = int(np.abs(arr.astype(np.int64)).sum())
+        return [(d, arr.shape[0], arr.shape[1], rate, amp)]
+
+    return _map_rows(
+        df, [id_col, "payload"],
+        f"{id_col} long, n_samples long, channels long, sample_rate long, "
+        "amp_sum long", row,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ns, chs, rates, amps = [], [], [], []
-            for payload in pdf["payload"]:
-                arr, rate = av.decode_wav(bytes(payload))
-                ns.append(arr.shape[0])
-                chs.append(arr.shape[1])
-                rates.append(rate)
-                amps.append(int(np.abs(arr.astype(np.int64)).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "channels": pd.Series(chs, dtype="int64"),
-                    "sample_rate": pd.Series(rates, dtype="int64"),
-                    "amp_sum": pd.Series(amps, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
 
 
 def synthesize_video(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -565,27 +419,16 @@ def synthesize_video(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``w = 4 + 2*(id % 7)`` x ``h = 2 + 2*(id % 5)`` 4:2:0 video with the
     luma lattice ``y(x, y, k) = (3x + 5y + 17k + id) % 256``.
     Output: (id, payload binary)."""
-    from fourmc_spark.operators import av
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 4 + 2 * (d % 7), 2 + 2 * (d % 5)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                frames = [
-                    ((3 * x + 5 * y + 17 * k + d) % 256).astype(np.uint8)
-                    for k in range(2 + d % 5)
-                ]
-                payloads.append(av.encode_y4m(frames))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def row(d):
+        x = np.arange(4 + 2 * (d % 7), dtype=np.int64)[None, :]
+        y = np.arange(2 + 2 * (d % 5), dtype=np.int64)[:, None]
+        frames = [((3 * x + 5 * y + 17 * k + d) % 256).astype(np.uint8)
+                  for k in range(2 + d % 5)]
+        return [(d, av.encode_y4m(frames))]
 
     # NOT balanced — same fused-chain reasoning as synthesize_images
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary"
-    )
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", row)
 
 
 def sample_video_frames(df: DataFrame, stride: int = 2,
@@ -595,35 +438,17 @@ def sample_video_frames(df: DataFrame, stride: int = 2,
     the 1-row-in/N-rows-out fan-out shape of ffmpeg frame extraction,
     with an actual demuxer. Output: (id, frame_idx, width, height,
     luma_sum). Fan-out happens inside the executor batch — no shuffle."""
-    from fourmc_spark.operators import av
 
-    out_schema = (
-        f"{id_col} long, frame_idx long, width long, height long, luma_sum long"
+    def row(d, payload):
+        return [(d, k, luma.shape[1], luma.shape[0], _pix_sum(luma))
+                for k, luma in av.iter_y4m_frames(bytes(payload))
+                if k % stride == 0]
+
+    return _map_rows(
+        df, [id_col, "payload"],
+        f"{id_col} long, frame_idx long, width long, height long, "
+        "luma_sum long", row,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ws, hs, sums = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                for k, luma in av.iter_y4m_frames(bytes(payload)):
-                    if k % stride:
-                        continue
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    hs.append(luma.shape[0])
-                    ws.append(luma.shape[1])
-                    sums.append(int(luma.sum(dtype=np.int64)))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "luma_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
 
 
 def extract_image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -631,33 +456,17 @@ def extract_image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return per-image (width, height, channels, pix_sum) from the actual
     pixel array. mapInPandas — decode runs executor-side on Arrow
     batches; only scalars surface."""
-    from fourmc_spark.operators import imaging
 
-    out_schema = (
-        f"{id_col} long, width long, height long, channels long, pix_sum long"
+    def row(d, payload):
+        arr = imaging.decode_image(bytes(payload))
+        h, w, ch = arr.shape
+        return [(d, w, h, ch, _pix_sum(arr))]
+
+    return _map_rows(
+        df, [id_col, "payload"],
+        f"{id_col} long, width long, height long, channels long, pix_sum long",
+        row,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, cs, sums = [], [], [], []
-            for payload in pdf["payload"]:
-                arr = imaging.decode_image(bytes(payload))
-                h, w, ch = arr.shape
-                ws.append(w)
-                hs.append(h)
-                cs.append(ch)
-                sums.append(int(arr.sum(dtype=np.int64)))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "channels": pd.Series(cs, dtype="int64"),
-                    "pix_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
 
 
 def resize_image_stats(df: DataFrame, target_w: int = 8, target_h: int = 6,
@@ -667,40 +476,23 @@ def resize_image_stats(df: DataFrame, target_w: int = 8, target_h: int = 6,
     image is also re-encoded (PPM) executor-side to prove the encode
     path; only its byte length surfaces. Output:
     (id, width, height, resized_pix_sum, resized_bytes)."""
-    from fourmc_spark.operators import imaging
 
-    out_schema = (
-        f"{id_col} long, width long, height long, "
-        "resized_pix_sum long, resized_bytes long"
+    def row(d, payload):
+        # drop_alpha: gray+alpha/RGBA (PNG) fold to gray/RGB before
+        # re-encoding — PPM/PGM carry no alpha plane
+        small = imaging.drop_alpha(imaging.resize_nearest(
+            imaging.decode_image(bytes(payload)), target_w, target_h))
+        if small.shape[2] == 3:
+            enc = imaging.encode_ppm(small)
+        else:
+            enc = imaging.encode_pgm(small[:, :, 0])
+        return [(d, target_w, target_h, _pix_sum(small), len(enc))]
+
+    return _map_rows(
+        df, [id_col, "payload"],
+        f"{id_col} long, width long, height long, resized_pix_sum long, "
+        "resized_bytes long", row,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sums, lens = [], []
-            for payload in pdf["payload"]:
-                arr = imaging.decode_image(bytes(payload))
-                # drop_alpha: gray+alpha/RGBA (PNG) fold to gray/RGB
-                # before re-encoding — PPM/PGM carry no alpha plane
-                small = imaging.drop_alpha(
-                    imaging.resize_nearest(arr, target_w, target_h)
-                )
-                sums.append(int(small.sum(dtype=np.int64)))
-                if small.shape[2] == 3:
-                    enc = imaging.encode_ppm(small)
-                else:
-                    enc = imaging.encode_pgm(small[:, :, 0])
-                lens.append(len(enc))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.Series([target_w] * len(pdf), dtype="int64"),
-                    "height": pd.Series([target_h] * len(pdf), dtype="int64"),
-                    "resized_pix_sum": pd.Series(sums, dtype="int64"),
-                    "resized_bytes": pd.Series(lens, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -716,140 +508,55 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def extract_features(df: DataFrame, id_col: str = "doc_id",
-                     decode_stub: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
-
-    Output: (id, n_bytes, width, height) — with the stub, width/height are
-    deterministic functions of the payload length so the result is
-    oracle-checkable; a real decoder would replace `_decode` only."""
-
-    out_schema = f"{id_col} long, n_bytes long, width long, height long"
-
-    def _decode(payload: bytes) -> tuple[int, int]:
-        if not decode_stub:
-            # real path: parse the payload as an actual image file
-            # (PPM/PGM/BMP/baseline JPEG/PNG; progressive JPEG raises
-            # UnsupportedImageError)
-            from fourmc_spark.operators import imaging
-
-            arr = imaging.decode_image(bytes(payload))
-            return arr.shape[1], arr.shape[0]
-        n = len(payload)
-        return (n % 640) + 1, (n % 480) + 1
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n_bytes = pdf["payload"].map(len)
-            dims = pdf["payload"].map(_decode)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "width": dims.map(lambda t: t[0]).astype("int64"),
-                    "height": dims.map(lambda t: t[1]).astype("int64"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
-
-
 def resize_images(df: DataFrame, target_w: int = 320, target_h: int = 240,
-                  id_col: str = "doc_id", decode_stub: bool = True) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """mapInPandas image resize over binary payloads (1 row in → 1 row out).
 
     Real shape: decode → resample to (target_w, target_h) → re-encode, all
-    inside one Arrow batch. The stub "resize" is a deterministic byte crop
-    to ``target_w*target_h`` bytes (oracle-checkable); a real implementation
-    replaces `_resize` only — schema, batching, and partitioning are real.
+    inside one Arrow batch. This operator never decodes: its "resize" is a
+    deterministic byte crop to ``target_w*target_h`` bytes
+    (oracle-checkable), so it serves payloads no codec here parses; the
+    decoding resize is :func:`resize_image_stats`.
     Output: (id, src_bytes, width, height, resized_bytes, resized_md5);
     the binary itself stays executor-side, only the fingerprint surfaces.
     """
-    import hashlib
-
-    out_schema = (
-        f"{id_col} long, src_bytes long, width long, height long, "
-        "resized_bytes long, resized_md5 string"
-    )
     cap = target_w * target_h
 
-    def _resize(payload: bytes) -> bytes:
-        if not decode_stub:
-            # real path: decode, nearest-neighbor resample, re-encode
-            from fourmc_spark.operators import imaging
+    def row(d, payload):
+        small = payload[:cap]
+        return [(d, len(payload), target_w, target_h, len(small),
+                 hashlib.md5(small).hexdigest())]
 
-            arr = imaging.decode_image(bytes(payload))
-            # drop_alpha: gray+alpha/RGBA (PNG) fold to gray/RGB before
-            # re-encoding — PPM/PGM carry no alpha plane
-            small = imaging.drop_alpha(
-                imaging.resize_nearest(arr, target_w, target_h)
-            )
-            if small.shape[2] == 3:
-                return imaging.encode_ppm(small)
-            return imaging.encode_pgm(small[:, :, 0])
-        return payload[:cap]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = pdf["payload"].map(_resize)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "src_bytes": pdf["payload"].map(len).astype("int64"),
-                    "width": target_w,
-                    "height": target_h,
-                    "resized_bytes": resized.map(len).astype("int64"),
-                    "resized_md5": resized.map(
-                        lambda b: hashlib.md5(b).hexdigest()
-                    ),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
+    return _map_rows(
+        df, [id_col, "payload"],
+        f"{id_col} long, src_bytes long, width long, height long, "
+        "resized_bytes long, resized_md5 string", row,
+    )
 
 
 def sample_frames(df: DataFrame, frame_bytes: int = 256, stride: int = 4,
-                  id_col: str = "doc_id", decode_stub: bool = True) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """mapInPandas frame sampling over binary payloads (1 row in → N out).
 
     Real shape: demux a video payload, keep every ``stride``-th frame —
     the fan-out batch shape (output rows ≠ input rows) that ffmpeg frame
-    extraction needs. The stub treats the payload as fixed-size
-    ``frame_bytes`` frames and slices deterministically; a real demuxer
-    replaces `_frames` only. Output: (id, frame_idx, frame_len, frame_md5).
+    extraction needs. This operator never demuxes: it treats the payload
+    as fixed-size ``frame_bytes`` frames and slices deterministically; the
+    demuxing twin is :func:`sample_video_frames`. Output: (id, frame_idx,
+    frame_len, frame_md5).
     Fan-out happens inside the executor batch — no shuffle, no driver data.
     """
-    import hashlib
 
-    out_schema = f"{id_col} long, frame_idx long, frame_len long, frame_md5 string"
-
-    def _frames(payload: bytes) -> list[tuple[int, bytes]]:
-        if not decode_stub:
-            raise NotImplementedError(
-                "real frame sampling requires ffmpeg (not in container)"
-            )
+    def row(d, payload):
         n_frames = -(-len(payload) // frame_bytes)  # ceil
-        return [
-            (i, payload[i * frame_bytes:(i + 1) * frame_bytes])
-            for i in range(0, n_frames, stride)
-        ]
+        out = []
+        for i in range(0, n_frames, stride):
+            frame = payload[i * frame_bytes:(i + 1) * frame_bytes]
+            out.append((d, i, len(frame), hashlib.md5(frame).hexdigest()))
+        return out
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, lens, md5s = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                for i, frame in _frames(payload):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    lens.append(len(frame))
-                    md5s.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_len": pd.Series(lens, dtype="int64"),
-                    "frame_md5": pd.Series(md5s, dtype="object"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
+    return _map_rows(
+        df, [id_col, "payload"],
+        f"{id_col} long, frame_idx long, frame_len long, frame_md5 string",
+        row,
+    )

@@ -45,6 +45,32 @@ from fourmc_spark.operators import (
     text,
     timeseries,
 )
+from fourmc_spark.operators.maintenance import (
+    analyze_bloom,
+    analyze_stats,
+    analyze_stats_proto,
+    compact_blocks,
+)
+from fourmc_spark.streaming import (
+    cdc_apply_stream,
+    dedup_ingest_stream,
+    dedup_within_watermark,
+    distinct_users_hourly,
+    drain_width,
+    enrich_with_dimension,
+    funnel_interval_join,
+    heavy_hitters_finalize,
+    heavy_hitters_sketch_stream,
+    pinned_shuffle_width,
+    read_cdc_state,
+    read_dedup_state,
+    read_events_stream,
+    run_to_memory,
+    session_counts,
+    sessionize_stateful,
+    sliding_counts,
+    tumbling_counts,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1258,8 +1284,6 @@ def text_fingerprint_q(spark, sf):
 
 
 def _repetition_oracle() -> str:
-    from fourmc_spark.functions import shingles_duck
-
     toks = tokens_duck("text")
     bi = shingles_duck(toks, 2)
     tri = shingles_duck(toks, 3)
@@ -1506,8 +1530,6 @@ def retrieval_hybrid_rrf_q(spark, sf):
 
 
 def _contamination_oracle() -> str:
-    from fourmc_spark.functions import shingles_duck
-
     sh = shingles_duck(tokens_duck("text"), 8)
     return f"""WITH bench AS (
   SELECT DISTINCT unnest({sh}) AS sh FROM documents WHERE doc_id % 50 = 0),
@@ -2324,19 +2346,14 @@ def _run_stream(
     path (file or directory); its on-disk size feeds run_to_memory's
     volume-derived drain width so the pin scales with the fixture
     instead of defaulting to the bounded-fixture constant."""
-    import os as _os
-    import uuid
-
-    from fourmc_spark.streaming import run_to_memory
-
     input_bytes = None
     if src is not None:
-        if _os.path.isdir(src):
+        if os.path.isdir(src):
             input_bytes = sum(
-                e.stat().st_size for e in _os.scandir(src) if e.is_file()
+                e.stat().st_size for e in os.scandir(src) if e.is_file()
             )
         else:
-            input_bytes = _os.path.getsize(src)
+            input_bytes = os.path.getsize(src)
     return run_to_memory(
         sdf, f"qstream_{uuid.uuid4().hex[:12]}", output_mode,
         input_bytes=input_bytes,
@@ -2563,8 +2580,6 @@ def _range_partition_fixture(
        FROM {EV} GROUP BY 1, 2 ORDER BY 1, 2""",
 )
 def stream_tumbling_q(spark, sf):
-    from fourmc_spark.streaming import read_events_stream, tumbling_counts
-
     sdf = tumbling_counts(
         read_events_stream(spark, f"{sf}/events.parquet"), window="1 hour"
     )
@@ -2594,8 +2609,6 @@ def stream_session_q(spark, sf):
     # Spark session_window: end = last event + gap; sessions merge while
     # consecutive events are STRICTLY closer than the gap. The oracle
     # reproduces both rules (>= starts a new session).
-    from fourmc_spark.streaming import read_events_stream, session_counts
-
     sdf = session_counts(read_events_stream(spark, f"{sf}/events.parquet"),
                          gap="15 minutes")
     return _run_stream(sdf, src=f"{sf}/events.parquet").orderBy(
@@ -2617,8 +2630,6 @@ def stream_sliding_q(spark, sf):
     # 1h windows sliding every 30m: each event lands in exactly 2 windows;
     # the oracle materializes both membership slots per event. Both engines
     # align 30m buckets on :00/:30 (epoch / 2000-01-01 origins agree mod 30m).
-    from fourmc_spark.streaming import read_events_stream, sliding_counts
-
     sdf = sliding_counts(
         read_events_stream(spark, f"{sf}/events.parquet"),
         window="1 hour", slide="30 minutes",
@@ -2635,8 +2646,6 @@ def stream_sliding_q(spark, sf):
     """SELECT DISTINCT user_id, event_type FROM {EV} ORDER BY 1, 2""",
 )
 def stream_dedup_q(spark, sf):
-    from fourmc_spark.streaming import dedup_within_watermark, read_events_stream
-
     sdf = dedup_within_watermark(
         read_events_stream(spark, f"{sf}/events.parquet"),
         keys=["user_id", "event_type"],
@@ -2660,11 +2669,6 @@ def stream_distinct_users_q(spark, sf):
     # far past the data advances the watermark and flushes every real
     # window; the sentinel's own window stays held back forever and never
     # appears in the result.
-    import os
-    import uuid
-
-    from fourmc_spark.streaming import distinct_users_hourly, read_events_stream
-
     with _scratch_dir(spark, "fourmc-musers-") as tmp:
         shutil.copy(f"{sf}/events.parquet", os.path.join(tmp, "part-0.parquet"))
         sdf = distinct_users_hourly(read_events_stream(spark, tmp))
@@ -2703,8 +2707,6 @@ def stream_interval_join_q(spark, sf):
     # stream-stream interval join (click -> purchase funnel within 30 min):
     # two independent stream reads of the same source; the event-time range
     # condition bounds both sides' join state (see funnel_interval_join)
-    from fourmc_spark.streaming import funnel_interval_join, read_events_stream
-
     sdf = funnel_interval_join(
         read_events_stream(spark, f"{sf}/events.parquet"),
         read_events_stream(spark, f"{sf}/events.parquet"),
@@ -2726,8 +2728,6 @@ def stream_static_join_q(spark, sf):
     # stream-static broadcast enrichment: the static customer dim joins
     # into each micro-batch with no join state; only the windowed agg
     # holds (watermark-bounded) state
-    from fourmc_spark.streaming import enrich_with_dimension, read_events_stream
-
     dim = _t(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     sdf = enrich_with_dimension(
         read_events_stream(spark, f"{sf}/events.parquet"),
@@ -2787,8 +2787,6 @@ FROM r WHERE rn > 1
 ORDER BY user_id, session_start_us""",
 )
 def stream_sessionize_q(spark, sf):
-    from fourmc_spark.streaming import read_events_stream, sessionize_stateful
-
     # timestamps round-trip through Arrow in the stateful fn; pin UTC so
     # the stateful processing is identical on ANY session, and restore
     # the caller's timezone after (the query must not permanently mutate
@@ -2934,8 +2932,6 @@ def _stream_events(spark, sf: str, root: str, proto: bool = False,
     sealed zstd files — JSON lines through fourmc, protobuf records
     through fourmcproto — drain with availableNow, and return the
     output dir (``root``/out; the checkpoint is ``root``/ckpt)."""
-    from fourmc_spark.streaming import read_events_stream
-
     sdf = read_events_stream(spark, f"{sf}/events.parquet").select(*_EV_COLS)
     if proto:
         w = sdf.writeStream.format("fourmcproto").option(
@@ -2957,7 +2953,6 @@ def _stream_events(spark, sf: str, root: str, proto: bool = False,
 def _analyze_proto(spark, path: str, **kw) -> None:
     """analyze_stats_proto over the fourmcproto event fields."""
     from fourmc_spark.format.protobuf import ProtoField
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
 
     analyze_stats_proto(
         spark, path,
@@ -2968,8 +2963,6 @@ def _analyze_proto(spark, path: str, **kw) -> None:
 def _compact(spark, staged: str, out: str, n: int) -> dict:
     """compact_blocks ``staged`` into ``out`` with a target of 1/n of the
     staged bytes per output; returns its stats."""
-    from fourmc_spark.operators.maintenance import compact_blocks
-
     total = sum(os.path.getsize(p) for p in glob.glob(f"{staged}/part-*.4mz"))
     return compact_blocks(spark, staged, out, target_bytes=max(1, total // n))
 
@@ -3361,8 +3354,6 @@ def sql_4mc_zonemap_scan_q(spark, sf):
     # succeeds iff the zone map excluded it before any footer read.
     # Conservative-safety twin pins live in
     # tests/test_datasource.py (stale/missing sidecars never prune).
-    from fourmc_spark.operators.maintenance import analyze_stats
-
     with _scratch_dir(spark, "fourmc-zonemap-") as d:
         _save(_lines(_id_ranges(spark, sf, 6)), d)
         analyze_stats(spark, d, _EV_DDL)
@@ -3395,8 +3386,6 @@ def sql_4mc_zonemap_blocks_scan_q(spark, sf):
     # complete (split spillover), and a line OWNED by a dropped block
     # must not survive via its spill bytes. Partition-count pins:
     # tests/test_datasource.py::test_block_zone_maps_prune_within_file.
-    from fourmc_spark.operators.maintenance import analyze_stats
-
     with _scratch_dir(spark, "fourmc-zonemap-blk-") as d:
         ev = _id_ranges(spark, sf, 2).sortWithinPartitions("event_id")
         _save(_lines(ev), d, blocksize=16 * 1024)
@@ -3717,15 +3706,6 @@ def stream_heavy_hitters_q(spark, sf):
     # lost anywhere in the chain (state dropped, version mixed, trailer
     # miscounted) would lose a heavy token and break the hash. Same phi
     # as text_heavy_hitters, the batch twin.
-    import glob as _glob
-    import os as _os
-    import uuid as _uuid
-
-    from fourmc_spark.streaming import (
-        heavy_hitters_finalize, heavy_hitters_sketch_stream,
-        pinned_shuffle_width,
-    )
-
     ddl = "doc_id bigint, text string"
     with _scratch_dir(spark, "fourmc-stream-hh-") as root:
         staged, live, ckpt = f"{root}/staged", f"{root}/live", f"{root}/ckpt"
@@ -3736,16 +3716,16 @@ def stream_heavy_hitters_q(spark, sf):
             .write.format("fourmc").option("codec", "zstd")
             .mode("overwrite").save(staged)
         )
-        files = sorted(_glob.glob(f"{staged}/part-*.4mz"))
-        total_staged = sum(_os.path.getsize(f) for f in files)
-        _os.makedirs(live)
-        _os.rename(files[0], f"{live}/{_os.path.basename(files[0])}")
+        files = sorted(glob.glob(f"{staged}/part-*.4mz"))
+        total_staged = sum(os.path.getsize(f) for f in files)
+        os.makedirs(live)
+        os.rename(files[0], f"{live}/{os.path.basename(files[0])}")
         sdf = (
             spark.readStream.format("fourmc")
             .option("maxfilespertrigger", "1").load(live)
             .select(F.from_json("value", ddl).alias("r")).select("r.*")
         )
-        name = f"qhh_{_uuid.uuid4().hex[:12]}"
+        name = f"qhh_{uuid.uuid4().hex[:12]}"
         # Streaming stateful shuffles get no AQE coalescing, so the state
         # op runs spark.sql.shuffle.partitions full tasks (python round
         # trip + state-store commit each) EVERY trigger regardless of
@@ -3759,9 +3739,7 @@ def stream_heavy_hitters_q(spark, sf):
         # hit pinned_shuffle_width's loud validation exactly like the
         # FOURMC_STREAM_SHUFFLE_PARTITIONS path, not silently fall
         # through to the computed width (ADVICE r10)
-        from fourmc_spark.streaming import drain_width
-
-        env_width = _os.environ.get("FOURMC_HH_STATE_PARTITIONS")
+        env_width = os.environ.get("FOURMC_HH_STATE_PARTITIONS")
         width = (
             env_width if env_width is not None
             else drain_width(spark, total_staged)
@@ -3776,7 +3754,7 @@ def stream_heavy_hitters_q(spark, sf):
             try:
                 q.processAllAvailable()  # batch 0: the seed file
                 for f in files[1:]:  # one micro-batch per late arrival
-                    _os.rename(f, f"{live}/{_os.path.basename(f)}")
+                    os.rename(f, f"{live}/{os.path.basename(f)}")
                 q.processAllAvailable()
             finally:
                 q.stop()
@@ -4766,10 +4744,6 @@ def stream_dedup_ingest_q(spark, sf):
     # banding against the SAME exhaustive-pairs oracle on the SAME table,
     # driver-green at sf0.01 since r01 — proves banding recovers every
     # true J>=0.8 pair on this corpus, so the gap cannot bite the gate.
-    import os
-
-    from fourmc_spark.streaming import dedup_ingest_stream, read_dedup_state
-
     path = f"{sf}/documents.parquet"
     schema = spark.read.parquet(path).schema
     sdf = (
@@ -4807,12 +4781,6 @@ def stream_cdc_apply_q(spark, sf):
     # must equal the batch latest-per-key election
     # (streaming/ops.cdc_apply_stream — micro-batch twin of
     # operators/timeseries.apply_changes).
-    from fourmc_spark.streaming import (
-        cdc_apply_stream,
-        read_cdc_state,
-        read_events_stream,
-    )
-
     ev = read_events_stream(spark, f"{sf}/events.parquet").select(
         "user_id", "ts", "event_id", "value",
         F.when(F.col("event_type") == "error", F.lit("delete"))
@@ -4853,8 +4821,6 @@ def stream_4mc_tumbling_q(spark, sf):
     # must equal the batch oracle exactly, proving the stream source
     # loses/duplicates nothing and the whole JSON+timestamp round trip
     # is value-exact.
-    from fourmc_spark.streaming import tumbling_counts
-
     with _scratch_dir(spark, "fourmc-stream4mc-") as d:
         _stage_events_4mz(spark, sf, d, n_files=3)
         sdf = _events_json_stream(spark, d)
@@ -4924,8 +4890,6 @@ def sql_4mc_zonemap_ts_scan_q(spark, sf):
     # any footer read. ts serializes at FULL microsecond precision
     # (date_format pattern, not to_json's millis default) so the
     # typed-scan values hash-match the parquet oracle exactly.
-    from fourmc_spark.operators.maintenance import analyze_stats
-
     ddl = ("ts timestamp, event_id bigint, user_id bigint, "
            "event_type string, value double")
     with _scratch_dir(spark, "fourmc-zonemap-ts-") as d:
@@ -4983,8 +4947,6 @@ def maintenance_compact_zonemap_q(spark, sf):
     # block offset, or an over-merged file tier breaks the hash. A
     # poison file (garbage bytes + valid out-of-range sidecar) planted
     # in the compacted dir proves file-tier pruning engages end-to-end.
-    from fourmc_spark.operators.maintenance import analyze_stats
-
     with _scratch_dir(spark, "fourmc-compact-zm-") as root:
         staged, out = f"{root}/staged", f"{root}/compact"
         ev = _id_ranges(spark, sf, 6).sortWithinPartitions("event_id")
@@ -5027,8 +4989,6 @@ def sql_4mc_bloom_scan_q(spark, sf):
     # red. Conservative-safety twins (missing/foreign-tagged blooms
     # never prune; type-mismatched values never prune) live in
     # tests/test_bloom.py.
-    from fourmc_spark.operators.maintenance import analyze_bloom
-
     bits, k = 1 << 18, 6
     with _scratch_dir(spark, "fourmc-bloom-") as d:
         # UNCLUSTERED: zone maps cannot prune this
@@ -5060,8 +5020,6 @@ def sql_4mc_csv_zonemap_scan_q(spark, sf):
     # Same in-gate poison proof: a garbage container with a valid
     # out-of-range sidecar is planted — green iff file pruning engaged
     # before any footer read.
-    from fourmc_spark.operators.maintenance import analyze_stats
-
     with _scratch_dir(spark, "fourmc-csv-zm-") as d:
         _save(_lines(_id_ranges(spark, sf, 6), F.to_csv), d)
         analyze_stats(spark, d, _EV_DDL, record_format="csv")
@@ -5091,8 +5049,6 @@ def sql_4mc_bloom_blocks_scan_q(spark, sf):
     # partition), so the oracle hash pins BOTH ownership seams across
     # many block boundaries on an UNCLUSTERED layout — the
     # parquet-page economics for point lookups, no clustering needed.
-    from fourmc_spark.operators.maintenance import analyze_bloom
-
     with _scratch_dir(spark, "fourmc-bloom-blocks-") as d:
         _save(_lines(_events(spark, sf).coalesce(1)), d, blocksize=16 * 1024)
         analyze_bloom(
@@ -5121,8 +5077,6 @@ def maintenance_compact_bloom_q(spark, sf):
     # bit (false absence) would lose a row and break the hash; a poison
     # file planted in the compacted dir (garbage bytes + all-zero
     # bloom) proves the probe path engages before any footer read.
-    from fourmc_spark.operators.maintenance import analyze_bloom
-
     bits, k = 1 << 18, 6
     with _scratch_dir(spark, "fourmc-compact-bloom-") as root:
         staged, out = f"{root}/staged", f"{root}/compact"
@@ -5156,8 +5110,6 @@ def stream_4mc_multibatch_q(spark, sf):
     # Trigger.AvailableNow, so this drains via processAllAvailable; the
     # >=6-batch structure itself is pinned in
     # tests/test_streaming.py::test_stream_4mc_multibatch_takes_n_batches.)
-    from fourmc_spark.streaming import tumbling_counts
-
     with _scratch_dir(spark, "fourmc-stream-mb-") as root:
         staged, live = f"{root}/staged", f"{root}/live"
         _stage_events_4mz(spark, sf, staged, n_files=6)
@@ -5239,8 +5191,6 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
     # aggregate must equal the batch oracle exactly: a file skipped below
     # the mark, double-ingested on hwm regression, or split across a
     # batch boundary breaks the hash.
-    from fourmc_spark.streaming import tumbling_counts
-
     with _scratch_dir(spark, "fourmc-stream-omb-") as root:
         staged, live_in = f"{root}/staged", f"{root}/in"
         sink_out, ckpt = f"{root}/out", f"{root}/ckpt"

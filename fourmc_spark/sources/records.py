@@ -5,7 +5,9 @@ The reference's record model is schema-on-read lines (SURVEY §1.2:
 side for the two ubiquitous line formats, expressed so the parse stays in
 whole-stage codegen (``from_csv`` / ``from_json`` are JVM expressions, not
 Python) and the scan keeps every 4mc property (block-aligned splits,
-checksum verification, offset/partition-column pushdown).
+checksum verification, offset/partition-column pushdown). Parsing is a
+map-only projection: it fuses into the scan stage, so an ingest is one
+pass with no shuffle.
 
 ``header=True`` rides the scan's ``skipfirstline`` option, which resolves
 per head-partition — so CSV headers die inside the scan no matter how the
@@ -34,6 +36,7 @@ def read_4mc_csv(
     schema: str,
     sep: str = ",",
     header: bool = False,
+    keep_offset: bool = False,
     **scan_options,
 ) -> DataFrame:
     """CSV lines inside .4mc/.4mz → typed columns via ``from_csv``.
@@ -41,24 +44,33 @@ def read_4mc_csv(
     ``schema`` is a DDL string (``"a INT, b STRING"``). Malformed lines
     surface as NULL fields (Spark's permissive mode), never as task
     failures — at 100 TB a single bad line must not kill a 10k-task job.
+    ``keep_offset=True`` puts the scan's ``offset`` column (the owning
+    block's byte offset in its file) first.
     """
     df = _scan(spark, path, header, scan_options)
-    return df.select(
-        F.from_csv(F.col("value"), schema, {"sep": sep}).alias("_r")
-    ).select("_r.*")
+    return _typed(df, F.from_csv(F.col("value"), schema, {"sep": sep}),
+                  keep_offset)
 
 
 def read_4mc_json(
     spark: SparkSession,
     path: str,
     schema: str,
+    keep_offset: bool = False,
     **scan_options,
 ) -> DataFrame:
-    """JSON-lines inside .4mc/.4mz → typed columns via ``from_json``."""
+    """JSON-lines inside .4mc/.4mz → typed columns via ``from_json``;
+    nested structs/arrays in the DDL work. ``keep_offset`` as in
+    :func:`read_4mc_csv`."""
     df = _scan(spark, path, header=False, options=scan_options)
-    return df.select(
-        F.from_json(F.col("value"), schema).alias("_r")
-    ).select("_r.*")
+    return _typed(df, F.from_json(F.col("value"), schema), keep_offset)
+
+
+def _typed(df: DataFrame, parsed, keep_offset: bool) -> DataFrame:
+    """The fields of the ``parsed`` struct as columns, after ``offset``
+    when ``keep_offset``."""
+    head = ["offset"] if keep_offset else []
+    return df.select(*head, parsed.alias("_r")).select(*head, "_r.*")
 
 
 def write_4mc_csv(

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from fourmc_spark.sources.datasource import write_atomic
+
 # Historical schema of events.parquet under nanosAsLong (ts = raw int64
 # nanoseconds). Current driver testdata stores plain micros TIMESTAMP;
 # read_events_stream infers the actual schema from the file footer.
@@ -603,11 +605,7 @@ def _commit_snapshot(state_dir: str, batch_id: int, df: DataFrame) -> None:
 
     new = f"v{batch_id}-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(os.path.join(state_dir, new))
-    ptr = os.path.join(state_dir, "_LATEST")
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(new)
-    os.replace(tmp, ptr)
+    write_atomic(os.path.join(state_dir, "_LATEST"), new)
     for d in os.listdir(state_dir):
         if d.startswith("v") and d != new:
             shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
@@ -949,19 +947,17 @@ def _manifest_swap(state_dir: str, names: list[str], max_seen: int,
     import json
     import os
 
-    p = os.path.join(state_dir, "_MANIFEST")
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
+    write_atomic(
+        os.path.join(state_dir, "_MANIFEST"),
+        json.dumps(
             {
                 "batches": names,
                 "max_seen": max_seen,
                 "id_parts": id_parts,
                 "sig_parts": sig_parts,
-            },
-            f,
-        )
-    os.replace(tmp, p)
+            }
+        ),
+    )
 
 
 def _manifest_gc(state_dir: str, names: list[str]) -> None:

@@ -39,7 +39,7 @@ def main() -> None:
     from fourmc_spark.operators.maintenance import analyze_bloom, analyze_stats
     from fourmc_spark.session import get_spark
     from fourmc_spark.sources.datasource import (
-        FourMcDataSourceReader, _parse_flat_ddl,
+        FourMcDataSourceReader, _parse_flat_ddl, iter_slices,
     )
 
     ddl = "k bigint, msg string"
@@ -66,7 +66,7 @@ def main() -> None:
         opts = CaseInsensitiveDict({"path": d, "jsonschema": ddl})
 
         def plan(filters, reps=3):
-            """(cold_first_rep, warm_min, kept_parts): the first rep
+            """(cold_first_rep, warm_min, kept_files): the first rep
             pays the sidecar JSON parse per file; later reps hit the
             parsed-sidecar cache (two os.stats per file)."""
             times = []
@@ -77,7 +77,8 @@ def main() -> None:
                 t = time.time()
                 parts = rd.partitions()
                 times.append(time.time() - t)
-                n = len([p for p in parts if p.path])
+                # a packed partition holds slices of many files
+                n = len({s.path for s in iter_slices(parts)})
             return times[0], min(times[1:]), n
 
         from fourmc_spark.sources import datasource as _ds
@@ -103,14 +104,14 @@ def main() -> None:
         us = 1e6 / n_files
         print(
             f"files={n_files} sidecar_bytes={sc_bytes}\n"
-            f"full plan          : cold {c_full*1000:7.1f} ms -> {n_full} parts\n"
+            f"full plan          : cold {c_full*1000:7.1f} ms -> {n_full} files\n"
             f"bloom probe (miss) : cold {c_pt*1000:7.1f} ms "
             f"({c_pt*us:.0f} us/file), warm {w_pt*1000:7.1f} ms "
-            f"({w_pt*us:.0f} us/file) -> {n_pt} parts\n"
+            f"({w_pt*us:.0f} us/file) -> {n_pt} files\n"
             f"zone range         : cold {c_zone*1000:7.1f} ms "
             f"({c_zone*us:.0f} us/file), warm {w_zone*1000:7.1f} ms "
-            f"({w_zone*us:.0f} us/file) -> {n_zone} parts\n"
-            f"no sidecars        : cold {c_none*1000:7.1f} ms -> {n_none} parts"
+            f"({w_zone*us:.0f} us/file) -> {n_zone} files\n"
+            f"no sidecars        : cold {c_none*1000:7.1f} ms -> {n_none} files"
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -35,7 +35,7 @@ def main() -> None:
     from fourmc_spark.operators.maintenance import analyze_stats
     from fourmc_spark.session import get_spark
     from fourmc_spark.sources.datasource import (
-        FourMcDataSourceReader, _parse_flat_ddl,
+        FourMcDataSourceReader, _parse_flat_ddl, iter_slices,
     )
 
     ddl = "k bigint, msg string"
@@ -60,10 +60,12 @@ def main() -> None:
         if filters:
             list(rd.pushFilters(filters))
         t0 = time.perf_counter()
-        parts = [p for p in rd.partitions() if p.path]
+        parts = rd.partitions()
         dt = time.perf_counter() - t0
+        # a packed partition holds slices of many files: count every slice
+        files = {s.path for s in iter_slices(parts)}
         print(f"{label:34s} {dt*1000:8.1f} ms  "
-              f"{len({p.path for p in parts}):5d} files planned")
+              f"{len(files):5d} files planned")
         return dt
 
     mid = (n_files // 2) * rows_per

@@ -1,7 +1,6 @@
 """Pure-numpy image codecs (operators/imaging) + the real-decode
 multimodal pipeline built on them."""
 
-import hashlib
 import struct
 
 import numpy as np
@@ -175,32 +174,6 @@ def test_resize_image_stats_matches_numpy(spark):
         assert (r["width"], r["height"]) == (8, 6)
         assert r["resized_pix_sum"] == int(small.sum(dtype=np.int64))
         assert r["resized_bytes"] == 11 + 8 * 6 * 3  # P6 header + raster
-
-
-def test_decode_stub_false_uses_real_decoder(spark):
-    # the legacy surface now REALLY decodes when decode_stub=False
-    df = spark.range(6).withColumnRenamed("id", "doc_id")
-    imgs = multimodal.synthesize_images(df)
-    feats = {
-        r["doc_id"]: r
-        for r in multimodal.extract_features(imgs, decode_stub=False).collect()
-    }
-    for d in range(6):
-        expect = _lattice(d)
-        assert (feats[d]["width"], feats[d]["height"]) == (
-            expect.shape[1], expect.shape[0],
-        )
-    resized = {
-        r["doc_id"]: r
-        for r in multimodal.resize_images(
-            imgs, target_w=5, target_h=4, decode_stub=False
-        ).collect()
-    }
-    for d in range(6):
-        small = imaging.resize_nearest(_lattice(d), 5, 4)
-        enc = imaging.encode_ppm(small)
-        assert resized[d]["resized_bytes"] == len(enc)
-        assert resized[d]["resized_md5"] == hashlib.md5(enc).hexdigest()
 
 
 def test_drop_alpha_folds_png_alpha_channels():

@@ -1,18 +1,19 @@
 """Deduplication operators for large-scale text corpora.
 
-Five strategies, each a composition of built-in DataFrame ops (JVM-side,
-whole-stage-codegen) — no Python UDFs in any hot path:
+Five strategies, built from DataFrame ops (JVM-side, whole-stage-codegen)
+plus two map-only per-row signature kernels under :func:`._rows._map_rows`:
 
 * exact        — md5 group (or dropDuplicates); one shuffle on the hash.
-* minhash      — k universal hashes over 3-word shingles; signatures via a
-                 single groupBy with k min() aggregates (one shuffle).
+* minhash      — k universal hashes over 3-word shingles; signatures
+                 map-only per doc, or, over a shared persisted shingle
+                 explosion, one groupBy with k min() aggregates.
 * minhash LSH  — band signatures, bucket self-join for candidates, exact
                  Jaccard confirm. At 100 TB the candidate join shuffles only
                  (band, bucket) keys; bucket skew is handled by AQE skew
                  splitting. Banding (k=16, bands of 2) gives detection prob
                  1-(1-J^2)^8 (≈1-1e-11 at J=0.9).
-* simhash      — 48-bit signature from per-bit majorities, computed with 48
-                 conditional aggregates (no row explosion); near-dup pairs
+* simhash      — 48-bit signature from per-bit majorities, computed map-only
+                 per doc (no row explosion); near-dup pairs
                  via 4x12-bit band join — pigeonhole guarantees recall 1.0
                  for hamming distance <= 3.
 * ngram-jaccard — exact pairwise Jaccard restricted to shingle-sharing
@@ -24,6 +25,9 @@ LLM-pipeline extensions mandated by BASELINE.json, designed Spark-first.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fourmc_spark.functions import (
@@ -33,6 +37,7 @@ from fourmc_spark.functions import (
     token_hash_spark,
     tokens_spark,
 )
+from fourmc_spark.operators._rows import _map_rows
 
 __all__ = [
     "exact_dedup",
@@ -47,6 +52,8 @@ __all__ = [
     "incremental_near_dedup",
     "incremental_near_dedup_presigned",
     "global_chunk_dedup",
+    "band_bucket_index",
+    "id_bucket",
 ]
 
 MINHASH_K = 16
@@ -166,9 +173,8 @@ def _token_hash_py(cache: dict, s: str) -> int:
     """Python twin of functions.token_hash_spark — md5-hex-prefix mod P,
     verified value-equal (same utf-8 bytes, same lowercase hex). Cached:
     corpus vocabulary repeats heavily, so unique md5s are computed once
-    per Arrow batch, dict hits serve the rest."""
-    import hashlib
-
+    per task (the kernel's closure holds ``cache``), dict hits serve the
+    rest."""
     v = cache.get(s)
     if v is None:
         v = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16) % HASH_PRIME
@@ -181,12 +187,13 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                        shingles: DataFrame | None = None) -> DataFrame:
     """k-permutation MinHash signature, one column per hash (mh00..).
 
-    Default path is MAP-ONLY ``mapInPandas``: each doc's distinct
-    shingle set, its hashes, and the k minima are computed locally in
-    one Arrow batch — the corpus is never exploded or shuffled at all
-    (signatures are ~100 bytes/doc; the explode+groupBy twin shuffled
-    every (id, shingle) pair). Docs with fewer than n tokens produce no
-    row, matching the aggregate-over-empty-set semantics.
+    Default path is MAP-ONLY, one per-row kernel under
+    :func:`_map_rows`: each doc's distinct shingle set, its hashes, and
+    the k minima are computed locally — the corpus is never exploded or
+    shuffled at all (signatures are ~100 bytes/doc; the explode+groupBy
+    form shuffles every (id, shingle) pair). Docs with fewer than 3
+    tokens produce no row, matching the aggregate-over-empty-set
+    semantics.
 
     Pass a prebuilt (persisted) *shingles* frame to share an explosion
     that other plan branches need anyway (the LSH confirm join) — that
@@ -201,49 +208,28 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         ]
         return shingles.groupBy(id_col).agg(*aggs)
 
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     params = minhash_params(k)
     A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    names = [f"mh{i:02d}" for i in range(k)]
+    cache: dict = {}
+
+    def row(did, text):
+        toks = ("" if text is None else text).split(" ")
+        if len(toks) < 3:
+            return []  # no shingles -> no signature row
+        sh = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        hs = np.fromiter((_token_hash_py(cache, s) for s in sh),
+                         dtype=np.int64, count=len(sh))
+        # a*h < 2^62: fits int64 exactly
+        sig = ((A * hs[None, :] + B) % HASH_PRIME).min(axis=1)
+        return [(did, *sig.tolist())]
+
     # follow the input id type (string/int/...) like cosine_pairs does —
     # the SQL twin never constrained it to long
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, " + ", ".join(f"{n} long" for n in names)
-
-    def batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        cache: dict = {}
-        for pdf in it:
-            ids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = ("" if text is None else text).split(" ")
-                if len(toks) < 3:
-                    continue  # no shingles -> no signature row
-                sh = {
-                    " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                }
-                hs = np.fromiter(
-                    (_token_hash_py(cache, s) for s in sh),
-                    dtype=np.int64, count=len(sh),
-                )
-                # a*h < 2^62: fits int64 exactly
-                sigs.append(((A * hs[None, :] + B) % HASH_PRIME).min(axis=1))
-                ids.append(did)
-            out = {id_col: pd.Series(ids, dtype=pdf[id_col].dtype)}
-            mat = (
-                np.stack(sigs) if sigs else np.empty((0, k), dtype=np.int64)
-            )
-            for i, n in enumerate(names):
-                out[n] = pd.Series(mat[:, i], dtype="int64")
-            yield pd.DataFrame(out)
-
-    return _fanout_rebalance(df, id_col).select(id_col, text_col).mapInPandas(
-        batches, schema=out_schema
-    )
+    return _map_rows(
+        _fanout_rebalance(df, id_col), [id_col, text_col],
+        f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+        + ", ".join(f"mh{i:02d} long" for i in range(k)), row)
 
 
 def jaccard_pairs(df: DataFrame, threshold: float, text_col: str = "text",
@@ -402,73 +388,34 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.8,
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = SIMHASH_BITS,
-                       arrow: bool = True) -> DataFrame:
+                       id_col: str = "doc_id",
+                       bits: int = SIMHASH_BITS) -> DataFrame:
     """SimHash over distinct tokens: bit b of the signature is the majority
     of bit b across token hashes.
 
-    ``arrow=True`` (default): MAP-ONLY ``mapInPandas`` — each doc's
+    Map-only, one per-row kernel under :func:`_map_rows`: each doc's
     distinct-token hash set and the 48 bit-majority votes happen locally
-    in one numpy matrix op per doc; nothing is exploded or shuffled
-    (the groupBy twin shuffled every (id, token) pair). ``arrow=False``:
-    the `bits` conditional aggregates in ONE groupBy (still no per-bit
-    row explosion). Identical signatures either way."""
-    if arrow:
-        from typing import Iterator
+    in one numpy matrix op per doc; nothing is exploded or shuffled (the
+    groupBy form it replaced shuffled every (id, token) pair). A NULL
+    text has no tokens and gets no row."""
+    shifts = np.arange(bits, dtype=np.int64)
+    weights = np.int64(1) << shifts
+    cache: dict = {}
 
-        import numpy as np
-        import pandas as pd
+    def row(did, text):
+        if text is None:
+            return []
+        toks = set(text.split(" "))
+        hs = np.fromiter((_token_hash_py(cache, t) for t in toks),
+                         dtype=np.int64, count=len(toks))
+        # bit-majority: count of set bits per position
+        counts = ((hs[:, None] >> shifts[None, :]) & 1).sum(axis=0)
+        return [(did, int(weights[2 * counts > len(hs)].sum()))]
 
-        shifts = np.arange(bits, dtype=np.int64)
-        weights = (np.int64(1) << shifts)
-
-        def batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            cache: dict = {}
-            for pdf in it:
-                ids, sigs = [], []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    if text is None:
-                        continue  # SQL twin: explode(split(NULL)) -> no row
-                    toks = set(text.split(" "))
-                    hs = np.fromiter(
-                        (_token_hash_py(cache, t) for t in toks),
-                        dtype=np.int64, count=len(toks),
-                    )
-                    n = len(hs)
-                    # bit-majority: count of set bits per position
-                    counts = ((hs[:, None] >> shifts[None, :]) & 1).sum(axis=0)
-                    sigs.append(int(weights[2 * counts > n].sum()))
-                    ids.append(did)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                        "simhash": pd.Series(sigs, dtype="int64"),
-                    }
-                )
-
-        id_t = df.schema[id_col].dataType.simpleString()
-        return _fanout_rebalance(df, id_col).select(
-            id_col, text_col
-        ).mapInPandas(batches, schema=f"{id_col} {id_t}, simhash long")
-
-    toks = tokens_spark(text_col)
-    th = token_hash_spark("tok")
-    exploded = (
-        _fanout_rebalance(df, id_col)
-        .select(F.col(id_col), F.explode(F.expr(toks)).alias("tok"))
-        .distinct()
-        .withColumn("th", F.expr(th))
-    )
-    bit_sums = [
-        F.sum(F.expr(f"shiftright(th, {b}) & 1")).alias(f"c{b}")
-        for b in range(bits)
-    ]
-    counted = exploded.groupBy(id_col).agg(F.count("*").alias("n_tok"), *bit_sums)
-    sig_expr = " + ".join(
-        f"CASE WHEN 2 * c{b} > n_tok THEN shiftleft(CAST(1 AS BIGINT), {b}) ELSE 0 END"
-        for b in range(bits)
-    )
-    return counted.select(F.col(id_col), F.expr(sig_expr).alias("simhash"))
+    return _map_rows(
+        _fanout_rebalance(df, id_col), [id_col, text_col],
+        f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+        "simhash long", row)
 
 
 def simhash_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "text",

@@ -22,13 +22,13 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from fourmc_spark.operators import av, imaging
+from fourmc_spark.operators._rows import _map_rows
 from fourmc_spark.operators.jpeg import decode_jpeg, encode_jpeg
 from fourmc_spark.operators.png import decode_png, encode_png
 
@@ -40,6 +40,7 @@ __all__ = [
     "jpeg_cmyk_roundtrip_stats",
     "jpeg_progressive_roundtrip_stats",
     "jpeg_roundtrip_stats",
+    "jpeg_ycck_dispatch_stats",
     "png_roundtrip_stats",
     "resize_image_stats",
     "resize_images",
@@ -54,24 +55,6 @@ __all__ = [
 # stamps it after SOI, since encode_jpeg never writes APP14
 _APP14_YCCK = (b"\xff\xee" + struct.pack(">H", 14) + b"Adobe"
                + b"\x00\x64" + b"\x00\x00" + b"\x00\x00" + bytes([2]))
-
-
-def _map_rows(df: DataFrame, cols: list[str], out: str,
-              row: Callable[..., list[tuple]]) -> DataFrame:
-    """The one Arrow-batch loop under every operator here:
-    ``mapInPandas`` over ``df.select(*cols)``, calling ``row`` with each
-    input row's values. ``row`` returns that row's output tuples in the
-    column order of the ``out`` DDL — one for a 1→1 kernel, any number
-    for a 1→N fan-out — so the loop stays map-only, with no shuffle."""
-    names = [c.split()[0] for c in out.split(",")]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = zip(*(pdf[c] for c in cols))
-            yield pd.DataFrame([t for vals in rows for t in row(*vals)],
-                               columns=names)
-
-    return df.select(*cols).mapInPandas(batches, schema=out)
 
 
 def _pix_sum(a: np.ndarray) -> int:

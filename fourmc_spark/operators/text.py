@@ -1,17 +1,23 @@
 """Text-analysis operators for training-data pipelines.
 
-Scoring/statistics operators are pure built-in column expressions
+Most scoring/statistics operators are built-in column expressions
 (JVM-side, codegen-friendly): language ID (stopword voting), quality
 scoring, token statistics, document fingerprinting (rolling polynomial
-hash), plus Arrow fast paths (mapInPandas) where dense per-doc compute
-earns it. The BPE tokenizer lifecycle (learn/encode) reduces the corpus
-to a vocab-sized model in one pass, then works driver-side/broadcast.
-Deterministic by construction so every operator is oracle-checkable in
-DuckDB.
+hash). Where dense per-doc compute earns Python, the operator is one
+per-row kernel under :func:`._rows._map_rows` (``repetition_stats``,
+``char_entropy``, ``bpe_encode``); ``heavy_hitters`` keeps a
+per-partition ``mapInPandas`` sketch. The BPE tokenizer lifecycle
+(learn/encode) reduces the corpus to a vocab-sized model in one pass,
+then works driver-side/broadcast. Deterministic by construction so
+every operator is oracle-checkable in DuckDB.
 """
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fourmc_spark.functions import (
@@ -20,6 +26,7 @@ from fourmc_spark.functions import (
     token_hash_spark,
     tokens_spark,
 )
+from fourmc_spark.operators._rows import _map_rows
 
 __all__ = [
     "STOPWORDS",
@@ -45,6 +52,7 @@ __all__ = [
     "bpe_learn",
     "bpe_encode",
     "heavy_hitters",
+    "mg_reduce",
 ]
 
 # tiny per-language stopword vocabularies (public common words)
@@ -163,252 +171,72 @@ def _round_half_up4(x: float) -> float:
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", arrow: bool = True) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Gopher-style repetition features: fraction of duplicate tokens /
     bigrams / trigrams, plus the most-frequent-token share. Map-only (no
-    shuffle); per-doc arrays are small so the O(distinct*n) top-token scan
-    stays cheap and fully deterministic.
+    shuffle), one per-row kernel under :func:`_map_rows`: hash-set
+    distinct counts are C-speed dict/set ops and every statistic is
+    integer-derived (no float-order hazards), measured ~4x the
+    interpreted higher-order-function plan it replaced."""
 
-    ``arrow=True`` (default) computes the stats in a ``mapInPandas``
-    batch — hash-set distinct counts are C-speed dict/set ops and every
-    statistic is integer-derived (no float-order hazards), measured ~4x
-    the interpreted higher-order-function plan. ``arrow=False`` keeps the
-    pure-JVM expression twin (useful where Python workers are scarce);
-    both produce identical rows."""
-    if arrow:
-        return _repetition_stats_arrow(df, text_col, id_col)
-    return _repetition_stats_sql(df, text_col, id_col)
+    def dup(n_items: int, n_distinct: int) -> float:
+        return _round_half_up4(1.0 - n_distinct / n_items) if n_items else 0.0
 
+    def row(did, text):
+        # split(' ') keeps empty tokens exactly like Spark's split(col, ' ')
+        # with its default -1 limit
+        toks = ("" if text is None else text).split(" ")
+        n = len(toks)
+        counts = Counter(toks)
+        top = max(counts.values())
+        bi = set(zip(toks, toks[1:]))
+        tri = set(zip(toks, toks[1:], toks[2:]))
+        return [(did, n, dup(n, len(counts)), dup(n - 1, len(bi)),
+                 dup(max(n - 2, 0), len(tri)), top,
+                 _round_half_up4(top / n))]
 
-def _repetition_stats_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from collections import Counter
-    from typing import Iterator
-
-    import pandas as pd
-
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_t}, n_tokens long, dup_token_frac double, "
+    return _map_rows(
+        df, [id_col, text_col],
+        f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+        "n_tokens long, dup_token_frac double, "
         "dup_bigram_frac double, dup_trigram_frac double, "
-        "top_token_count long, top_token_frac double"
-    )
-
-    def _dup(n_items: int, n_distinct: int) -> float:
-        if n_items <= 0:
-            return 0.0
-        return _round_half_up4(1.0 - n_distinct / n_items)
-
-    def batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in it:
-            n_tok, d_tok, d_bi, d_tri, tops, topf = [], [], [], [], [], []
-            for text in pdf[text_col]:
-                # split(' ') keeps empty tokens exactly like Spark's
-                # split(col, ' ') with its default -1 limit
-                toks = ("" if text is None else text).split(" ")
-                n = len(toks)
-                counts = Counter(toks)
-                top = max(counts.values())
-                nb = max(n - 1, 0)
-                nt = max(n - 2, 0)
-                bi = len(set(zip(toks, toks[1:]))) if nb else 0
-                tri = len(set(zip(toks, toks[1:], toks[2:]))) if nt else 0
-                n_tok.append(n)
-                d_tok.append(_dup(n, len(counts)))
-                d_bi.append(_dup(nb, bi))
-                d_tri.append(_dup(nt, tri))
-                tops.append(top)
-                topf.append(_round_half_up4(top / n) if n else 0.0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_tokens": pd.Series(n_tok, dtype="int64"),
-                    "dup_token_frac": d_tok,
-                    "dup_bigram_frac": d_bi,
-                    "dup_trigram_frac": d_tri,
-                    "top_token_count": pd.Series(tops, dtype="int64"),
-                    "top_token_frac": topf,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+        "top_token_count long, top_token_frac double", row)
 
 
-def _repetition_stats_sql(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-
-    # Bind every derived array to a lambda variable via one-element
-    # transform(array(x), v -> ...): whole-stage codegen's subexpression
-    # elimination does NOT cover higher-order functions, and Catalyst's
-    # project-collapse re-inlines aliases — either way a repeated
-    # split()/shingle expression re-evaluates per reference (quadratic
-    # per doc when it lands inside a lambda). Lambda binding guarantees
-    # one evaluation each for tokens, bigrams, and trigrams no matter
-    # how the plan is rewritten.
-    def _ndist(arr: str) -> str:
-        # distinct count = number of runs in the sorted array: O(n log n)
-        # instead of array_distinct's pairwise scan (quadratic in shingle
-        # count — measured 30% of this operator's runtime)
-        return (
-            f"aggregate(array_sort({arr}), "
-            f"struct(CAST(NULL AS STRING) AS prev, 0 AS d), "
-            f"(s, x) -> struct(x AS prev, "
-            f"s.d + CASE WHEN x <=> s.prev THEN 0 ELSE 1 END AS d), "
-            f"s -> s.d)"
-        )
-
-    def _dup(arr: str) -> str:
-        return (
-            f"CASE WHEN size({arr}) > 0 THEN round(1.0D - "
-            f"{_ndist(arr)} / size({arr}), 4) ELSE 0.0D END"
-        )
-
-    bi = shingles_spark("t", 2)
-    tri = shingles_spark("t", 3)
-    # most-frequent-token count as the longest run in the SORTED token
-    # array — one O(n log n) sort + O(n) fold, vs the O(distinct x n)
-    # count-per-distinct scan (same value: sorting groups equal tokens)
-    top = (
-        "aggregate(array_sort(t), "
-        "struct(CAST(NULL AS STRING) AS prev, 0 AS run, 0 AS best), "
-        "(s, x) -> struct(x AS prev, "
-        "CASE WHEN x <=> s.prev THEN s.run + 1 ELSE 1 END AS run, "
-        "greatest(s.best, CASE WHEN x <=> s.prev THEN s.run + 1 ELSE 1 END) "
-        "AS best), s -> s.best)"
-    )
-    # inline() (a Generate, not a Project) emits the packed struct's
-    # fields as columns in ONE evaluation — a plain struct projection
-    # would re-run the whole pipeline once per extracted field after
-    # project-collapse (measured 2x slower)
-    packed = (
-        f"inline(transform(array({tokens_spark(text_col)}), t -> "
-        f"transform(array({bi}), bg -> "
-        f"transform(array({tri}), tg -> "
-        f"transform(array({top}), tc -> struct("
-        f"size(t) AS n_tokens, "
-        f"{_dup('t')} AS dup_token_frac, "
-        f"{_dup('bg')} AS dup_bigram_frac, "
-        f"{_dup('tg')} AS dup_trigram_frac, "
-        f"tc AS top_token_count, "
-        f"CASE WHEN size(t) > 0 THEN round(tc / size(t), 4) "
-        f"ELSE 0.0D END AS top_token_frac"
-        f"))[0])[0])[0]))"
-    )
-    return df.select(F.col(id_col), F.expr(packed)).select(
-        id_col,
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "dup_token_frac",
-        "dup_bigram_frac",
-        "dup_trigram_frac",
-        F.col("top_token_count").cast("long").alias("top_token_count"),
-        "top_token_frac",
-    )
-
-
-def char_entropy(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    arrow: bool = True
-) -> DataFrame:
+def char_entropy(df: DataFrame, text_col: str = "text",
+                 id_col: str = "doc_id") -> DataFrame:
     """Shannon character entropy per document (bits/char) — the classic
     cheap gibberish/boilerplate signal (random bytes score high, repeated
     boilerplate scores low; fluent prose sits in a narrow band).
 
-    Map-only, no shuffle. ``arrow=True`` (default): ``mapInPandas`` with
-    a numpy ``bincount`` fast path for ASCII text (byte counts ARE
+    Map-only, no shuffle: one per-row kernel under :func:`_map_rows`,
+    with a numpy ``bincount`` fast path for ASCII text (byte counts ARE
     sorted-char counts) and the entropy fold running sequentially over
     ascending char codes — the same left-to-right summation order as the
-    SQL twin and the DuckDB oracle, so float drift can't flip the
-    rounding. ``arrow=False``: the pure-JVM higher-order-expression twin.
-    Both are O(distinct_chars x n) per doc, bounded by alphabet size.
+    DuckDB oracle's aggregate over the sorted distinct chars, so float
+    drift can't flip the rounding.
     """
-    if arrow:
-        return _char_entropy_arrow(df, text_col, id_col)
-    return _char_entropy_sql(df, text_col, id_col)
 
-
-def _char_entropy_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    import math
-    from collections import Counter
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_t}, n_chars long, n_distinct_chars long, "
-        "entropy_bits double"
-    )
-
-    def _entropy(counts, n: int) -> float:
-        # sequential fold in ascending char order (matches the SQL
-        # aggregate over array_sort(array_distinct(chars)))
+    def row(did, text):
+        s = "" if text is None else text
+        if not s:
+            return [(did, 0, 0, 0.0)]
+        if s.isascii():
+            c = np.bincount(np.frombuffer(s.encode("ascii"), dtype=np.uint8))
+            nz = c[c > 0].tolist()  # ascending byte value == sorted chars
+        else:
+            cnt = Counter(s)
+            nz = [cnt[ch] for ch in sorted(cnt)]
         acc = 0.0
-        for k in counts:
-            p = k / n
+        for k in nz:
+            p = k / len(s)
             acc -= p * math.log2(p)
-        return _round_half_up4(acc)
+        return [(did, len(s), len(nz), _round_half_up4(acc))]
 
-    def batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in it:
-            ns, ds, ents = [], [], []
-            for text in pdf[text_col]:
-                s = "" if text is None else text
-                n = len(s)
-                if n == 0:
-                    ns.append(0)
-                    ds.append(0)
-                    ents.append(0.0)
-                    continue
-                if s.isascii():
-                    c = np.bincount(
-                        np.frombuffer(s.encode("ascii"), dtype=np.uint8)
-                    )
-                    nz = c[c > 0]  # ascending byte value == sorted chars
-                else:
-                    cnt = Counter(s)
-                    nz = [cnt[ch] for ch in sorted(cnt)]
-                ns.append(n)
-                ds.append(len(nz))
-                ents.append(_entropy(nz, n))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_chars": pd.Series(ns, dtype="int64"),
-                    "n_distinct_chars": pd.Series(ds, dtype="int64"),
-                    "entropy_bits": ents,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
-
-
-def _char_entropy_sql(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    # Everything binds through lambda variables inside one inline() (see
-    # PLANS.md §3c): project-collapse would otherwise re-inline the
-    # regexp_extract_all per reference — the fold's per-char count then
-    # re-runs the regex over the document per distinct char (measured
-    # ~6x slower). The per-char count also binds to `k` so the entropy
-    # term evaluates it once, not twice.
-    chars = f"regexp_extract_all({text_col}, '[\\\\s\\\\S]', 0)"
-    term = "transform(array(CAST(size(filter(cs, x -> x = c)) AS DOUBLE)), " \
-           "k -> acc - (k / n) * log2(k / n))[0]"
-    ent = (
-        f"aggregate(array_sort(array_distinct(cs)), CAST(0.0 AS DOUBLE), "
-        f"(acc, c) -> {term})"
-    )
-    packed = (
-        f"inline(transform(array({chars}), cs -> "
-        f"transform(array(CAST(size(cs) AS DOUBLE)), n -> struct("
-        f"size(cs) AS n_chars, "
-        f"size(array_distinct(cs)) AS n_distinct_chars, "
-        f"CASE WHEN n > 0 THEN round({ent}, 4) ELSE 0.0D END "
-        f"AS entropy_bits))[0]))"
-    )
-    return df.select(F.col(id_col), F.expr(packed)).select(
-        id_col,
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_distinct_chars").cast("long").alias("n_distinct_chars"),
-        "entropy_bits",
-    )
+    return _map_rows(
+        df, [id_col, text_col],
+        f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+        "n_chars long, n_distinct_chars long, entropy_bits double", row)
 
 
 # public-pattern PII regexes (RE2-safe: run identically under Java regex
@@ -921,7 +749,7 @@ def bpe_learn(df: DataFrame, n_merges: int = 10, text_col: str = "text",
     ``tests/test_dedup.py`` pins it against an independent pure-Python
     reference implementation. Output: (rank, left, right, pair_count).
     """
-    from collections import Counter, defaultdict
+    from collections import defaultdict
 
     spark = df.sparkSession
     wdf = (
@@ -1007,59 +835,40 @@ def bpe_encode(df: DataFrame, merges, text_col: str = "text",
     ``merges`` is the frame :func:`bpe_learn` returns (or a list of
     ``(rank, left, right)``). The merge table is a model artifact —
     collected and BROADCAST (n_merges rows); encoding is a map-only
-    Arrow-batched ``mapInPandas`` with a per-batch word memo, so each
-    distinct word pays the merge chain once per partition and the
-    corpus never shuffles. Output: (id, tokens array<string>,
-    n_tokens) — one row per document with at least one non-empty word,
-    token order = word order x within-word symbol order.
+    per-row kernel under :func:`_map_rows` with a word memo that lives
+    for one task, so each distinct word pays the merge chain once per
+    partition and the corpus never shuffles. Output: (id, tokens
+    array<string>, n_tokens) — one row per document with at least one
+    non-empty word, token order = word order x within-word symbol order.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     if isinstance(merges, DataFrame):
         mrows = sorted(
             (int(r["rank"]), r["left"], r["right"]) for r in merges.collect()
         )
     else:
         mrows = sorted((int(a), b, c) for a, b, c in merges)
-    pairs = [(l, r) for _, l, r in mrows]
-    bc = df.sparkSession.sparkContext.broadcast(pairs)
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, tokens array<string>, n_tokens long"
+    bc = df.sparkSession.sparkContext.broadcast([(l, r) for _, l, r in mrows])
+    memo: dict[str, tuple] = {}
 
-    def batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        merge_list = bc.value
-        memo: dict[str, tuple] = {}
+    def enc_word(w: str) -> tuple:
+        t = memo.get(w)
+        if t is None:
+            syms = list(w) + [end_marker]
+            for left, right in bc.value:
+                syms = _apply_merge(syms, left, right)
+            t = memo[w] = tuple(syms)
+        return t
 
-        def enc_word(w: str) -> tuple:
-            t = memo.get(w)
-            if t is None:
-                syms = list(w) + [end_marker]
-                for left, right in merge_list:
-                    syms = _apply_merge(syms, left, right)
-                t = memo[w] = tuple(syms)
-            return t
+    def row(did, text):
+        doc = [t for w in ("" if text is None else text).split(" ") if w
+               for t in enc_word(w)]
+        # no non-empty word: no row, like the words-CTE inner join
+        return [(did, doc, len(doc))] if doc else []
 
-        for pdf in it:
-            ids, toks, ns = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = [w for w in ("" if text is None else text).split(" ") if w]
-                if not words:
-                    continue  # matches the words-CTE inner join semantics
-                doc = [t for w in words for t in enc_word(w)]
-                ids.append(did)
-                toks.append(doc)
-                ns.append(len(doc))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                    "tokens": toks,
-                    "n_tokens": pd.Series(ns, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+    return _map_rows(
+        df, [id_col, text_col],
+        f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+        "tokens array<string>, n_tokens long", row)
 
 
 #: merge fan-in for the distributed Misra-Gries reduction — a CONSTANT,
@@ -1183,7 +992,6 @@ def heavy_hitters(
     rows, so the only way to exceed it is an m (i.e. a phi) that was
     too aggressive to begin with.
     """
-    import math
     import os
     from typing import Iterator
 

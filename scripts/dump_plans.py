@@ -42,7 +42,7 @@ SHOWCASE = [
     "dedup_global_chunks",      # min(struct) election, partial agg before shuffle
     "ts_funnel_stages",         # user-key joins, shrinking frontier
     "text_inverted_index",      # capped postings inside term aggregate
-    "text_char_entropy",        # map-only higher-order fold
+    "text_char_entropy",        # map-only per-row Python kernel
     "curation_token_budget",    # histogram cutoffs broadcast, map-side filter
     "embedding_assign_centroid",  # broadcast prototypes, map-side scoring
     "dedup_embedding_pairs",    # blocked BLAS pairwise via applyInPandas

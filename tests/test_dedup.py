@@ -195,9 +195,8 @@ def test_simhash_null_text_dropped_both_paths(spark):
         [(1, "alpha beta gamma"), (2, None), (3, None), (4, "alpha beta delta")],
         schema,
     )
-    for arrow in (True, False):
-        rows = dedup.simhash_signatures(df, arrow=arrow).collect()
-        assert sorted(r["doc_id"] for r in rows) == [1, 4], f"arrow={arrow}"
+    rows = dedup.simhash_signatures(df).collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 4]
 
 
 def test_winnowing_overlap_guarantee(spark):
